@@ -1,13 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
-/** Round-6 optimization probes (guide §1.4: isolate computations with the
-  * noop sink / count actions; NOT part of the driver contract — the driver's
-  * bench is graft.Bench, unchanged). Stage budgets for the q52 curation
-  * chain and the similarity family at the driver's bench configuration.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+
+/** Plan-cost probe for the builder/dist queries (a side main; the query
+  * benchmark is graft.Bench). Decomposes a bench pass into
+  * (construct+analyze, optimize+physical-plan, execute), then recounts the
+  * same DataFrame instance with a task-time listener to split the repeated
+  * floor into executor task time vs driver time.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     sbt -batch "runMain graft.BenchExtra"
@@ -27,401 +33,109 @@ object BenchExtra {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def docs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
-    docs.count() // footer warm
-
-    // min-of-2 (steal): each timed body builds its frame fresh
-    def t(label: String)(body: => Any): Double = {
-      def once(): Double = {
-        spark.sparkContext.setJobDescription(label)
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+    // The round-3 adjudication says these queries' bench seconds are
+    // per-query plan/optimize/codegen of large fused expression trees, not
+    // execution — re-verify it on current code instead of carrying it.
+    val names = Seq("q30_training_examples", "q31_benchmark_items",
+      "q36_benchmark_v2", "q37_benchmark_v3", "q39_training_dist",
+      "q44_rl_training_v3", "q46_ug_training")
+    names.foreach { name =>
+      def pass(): (Double, Double, Double) = {
+        val t0 = System.nanoTime()
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.queryExecution.executedPlan // optimize + physical planning
+        val t2 = System.nanoTime()
+        df.count()
+        val t3 = System.nanoTime()
+        ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
       }
-      val s = math.min(once(), once())
-      println(f"[extra] $label%-52s $s%7.3f s")
-      s
-    }
-
-    val mode = sys.env.getOrElse("SPARK_GRAFT_EXTRA", "chain")
-
-    if (mode.contains("gen")) { // materialize the scaling corpus for probes
-      val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "20000").toLong
-      val dir = s"/tmp/graft_scaling_corpus_$n"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        graft.fixtures.SynthCorpus.docsRaw(spark, n, 64).toDF()
-          .write.mode("overwrite").parquet(dir)
-      println(s"[extra] corpus at $dir")
-    }
-
-    if (mode.contains("chain")) {
-      import graft.rules.Heuristics
-      // stage 0: scan + gopher keep-bit
-      def gophered0 = graft.functions.ComputeOnce(docs, "__g",
-        Heuristics.gopherStats(col("text")))
-        .withColumn("__keep", coalesce(col("__g.gopher_keep"), lit(false)))
-        .drop("__g")
-      t("gopher: keep-bit count")(gophered0.count())
-      t("gopher: localCheckpoint (materialize job)") {
-        val ck = gophered0.localCheckpoint()
-        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(ck)
-      }
-      val gophered = gophered0.localCheckpoint()
-      val gopherKept = gophered.filter(col("__keep"))
-      val id = col("doc_id"); val text = col("text")
-
-      // stage 2 exact dedup: window form (current) vs groupBy form
-      def exactLosersWin = gopherKept
-        .select(id, md5(text.cast("binary")).as("__fp"))
-        .withColumn("__keeper", min(id).over(Window.partitionBy("__fp")))
-        .filter(id =!= col("__keeper"))
-        .select(id, lit("exact_dup").as("stage"))
-      def fps = gopherKept.select(id, md5(text.cast("binary")).as("__fp"))
-      def exactLosersGrp = fps
-        .join(fps.groupBy("__fp")
-          .agg(min(id).as("__keeper"), count(lit(1)).as("__n"))
-          .filter(col("__n") > 1).select("__fp", "__keeper"), "__fp")
-        .filter(id =!= col("__keeper"))
-        .select(id, lit("exact_dup").as("stage"))
-      t("exact dedup: window form count")(exactLosersWin.count())
-      t("exact dedup: groupBy+join form count")(exactLosersGrp.count())
-
-      def exactKept = gopherKept.select(id, text)
-        .join(exactLosersWin.select(id), Seq("doc_id"), "left_anti")
-      t("exactKept count")(exactKept.count())
-
-      // stage 3: prefix-filtered pairs
-      def pairs = graft.dedup.Dedup.ngramJaccardPairs(exactKept,
-        "doc_id", "text", n = 3, minJaccard = 0.8, maxDf = 10000)
-      t("prefix pairs: count")(pairs.count())
-      t("components over pairs (incl. pair ckpt)") {
-        graft.dedup.Dedup.connectedComponents(pairs, "id_a", "id_b").count()
-      }
-
-      // the whole thing, both materialize settings, as the bench times it
-      t("q52 curationLog(materialize=true).count") {
-        graft.curate.Curate.curationLog(docs, "doc_id", "text",
-          materialize = true).count()
-      }
-      t("q52 curationLog(materialize=false).count") {
-        graft.curate.Curate.curationLog(docs, "doc_id", "text",
-          materialize = false).count()
-      }
-      t("q53 stages(materialize=true).count") {
-        graft.curate.Curate.curationLog(docs, "doc_id", "text",
-          materialize = true)
-          .groupBy("stage").agg(count(lit(1)).as("n")).count()
-      }
-      org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(gophered)
-    }
-
-    if (mode.contains("matab")) { // interleaved A/B: chain materialize knob
-      val ts = Array.fill(2)(scala.collection.mutable.ArrayBuffer.empty[Double])
-      (1 to 5).foreach { _ =>
-        for (m <- Seq(true, false)) {
-          spark.sparkContext.setJobDescription(s"q52 materialize=$m")
-          val t0 = System.nanoTime()
-          graft.curate.Curate.curationLog(docs, "doc_id", "text",
-            materialize = m).count()
-          ts(if (m) 0 else 1) += (System.nanoTime() - t0) / 1e9
-        }
-      }
-      println(f"[extra] q52 materialize=true  min ${ts(0).min}%.3f  all ${ts(0).map(t => f"$t%.2f").mkString(",")}")
-      println(f"[extra] q52 materialize=false min ${ts(1).min}%.3f  all ${ts(1).map(t => f"$t%.2f").mkString(",")}")
-    }
-
-    if (mode.contains("prefix")) {
-      import graft.rules.Heuristics
-      val gophered = graft.functions.ComputeOnce(docs, "__g",
-        Heuristics.gopherStats(col("text")))
-        .withColumn("__keep", coalesce(col("__g.gopher_keep"), lit(false)))
-        .drop("__g").localCheckpoint()
-      val id = col("doc_id"); val text = col("text")
-      val gopherKept = gophered.filter(col("__keep"))
-      val exactLosersWin = gopherKept
-        .select(id, md5(text.cast("binary")).as("__fp"))
-        .withColumn("__keeper", min(id).over(Window.partitionBy("__fp")))
-        .filter(id =!= col("__keeper")).select(id)
-      val exactKept = gopherKept.select(id, text)
-        .join(exactLosersWin, Seq("doc_id"), "left_anti")
-        .localCheckpoint() // isolate the prefix pipeline itself
-      println(s"[extra] exactKept rows = ${exactKept.count()}")
-
-      def toksPlain = graft.functions.ComputeOnce(
-        exactKept.select(col("doc_id").as("id"), col("text")),
-        "sh", graft.dedup.Dedup.shingles(col("text"), 3)).select("id", "sh")
-      t("toks (shingles) count over ckpt exactKept")(toksPlain.count())
-      val toks = toksPlain.localCheckpoint()
-      t("toks ckpt job") { // release the throwaway checkpoint each pass
-        val ck = toksPlain.localCheckpoint()
-        ck.count()
-        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(ck)
-      }
-
-      val tP = 0.8 - 1e-6
-      val wTok = Window.partitionBy("tok")
-      val wDoc = Window.partitionBy("id").orderBy("df", "tok")
-      def posts = toks
-        .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("tok"))
-        .withColumn("df", count(lit(1)).over(wTok))
-        .filter(col("df") <= 10000)
-      t("posts (df window) count")(posts.count())
-      def prefix = posts
-        .withColumn("rk", row_number().over(wDoc))
-        .filter(col("rk") <= col("sz") - ceil(lit(tP) * col("sz")) + lit(1))
-        .select("id", "sz", "tok", "rk")
-      t("prefix (rk window) count")(prefix.count())
-      val prefixCk = prefix.localCheckpoint()
-      // mirrors prefixFilteredPairs incl. the PPJoin positional filter
-      def cand = prefixCk.as("x").join(prefixCk.as("y"),
-          col("x.tok") === col("y.tok") && col("x.id") < col("y.id") &&
-            col("y.sz").cast("double") >= lit(tP) * col("x.sz") &&
-            col("x.sz").cast("double") >= lit(tP) * col("y.sz") &&
-            (lit(1.0) + least(col("x.sz") - col("x.rk"),
-              col("y.sz") - col("y.rk")).cast("double")) * lit(1.0 + tP) >=
-              lit(tP) * (col("x.sz") + col("y.sz")).cast("double"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-        .distinct()
-      t("cand join+distinct count (ckpt prefix)")(cand.count())
-      val candCk = cand.localCheckpoint()
-      println(s"[extra] cand rows = ${candCk.count()}")
-      t("verify joins (ckpt cand+toks)") {
-        candCk
-          .join(toks.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-          .join(toks.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-          .withColumn("inter",
-            size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-          .withColumn("jaccard",
-            round(col("inter").cast("double") /
-              (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"), 6))
-          .filter(col("jaccard") >= 0.8).count()
-      }
-      t("whole prefix path over ckpt exactKept") {
-        graft.dedup.Dedup.ngramJaccardPairs(exactKept, "doc_id", "text",
-          n = 3, minJaccard = 0.8, maxDf = 10000).count()
-      }
-      Seq(candCk, prefixCk, toks, exactKept, gophered).foreach(
-        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint)
-    }
-
-    if (mode.contains("pfxdf")) {
-      // A/B: document-frequency attachment for the PREFIX pair path —
-      // count window over partitionBy(tok) (materializes each token's
-      // full postings group in ONE task before the df<=maxDf filter can
-      // drop it) vs map-side-combinable groupBy(tok).count + join-back
-      // (the same fix family as the round's exact-dedup conversion; the
-      // full-join path's window rides the self-join's tok partitioning
-      // and stays). Interleaved min-of-N on the q52-shaped corpus plus a
-      // planted mega-df token flood.
-      import graft.rules.Heuristics
-      val gophered = graft.functions.ComputeOnce(docs, "__g",
-        Heuristics.gopherStats(col("text")))
-        .withColumn("__keep", coalesce(col("__g.gopher_keep"), lit(false)))
-        .drop("__g").localCheckpoint()
-      val exactKept = {
-        val id = col("doc_id"); val text = col("text")
-        val gopherKept = gophered.filter(col("__keep"))
-        val fps = gopherKept.select(id, md5(text.cast("binary")).as("__fp"))
-        val losers = fps.join(fps.groupBy("__fp")
-            .agg(min(id).as("__keeper"), count(lit(1)).as("__n"))
-            .filter(col("__n") > 1).select("__fp", "__keeper"), "__fp")
-          .filter(id =!= col("__keeper")).select(id)
-        gopherKept.select(id, text)
-          .join(losers, Seq("doc_id"), "left_anti").localCheckpoint()
-      }
-      val toks = graft.functions.ComputeOnce(
-        exactKept.select(col("doc_id").as("id"), col("text")),
-        "sh", graft.dedup.Dedup.hashedShingles(col("text"), 3))
-        .select("id", "sh").localCheckpoint()
-      val tP = 0.8 - 1e-6
-      val wTok = Window.partitionBy("tok")
-      val wDoc = Window.partitionBy("id").orderBy("df", "tok")
-      def posts0 = toks.select(col("id"), size(col("sh")).as("sz"),
-        explode(col("sh")).as("tok"))
-      def postsWin = posts0
-        .withColumn("df", count(lit(1)).over(wTok))
-        .filter(col("df") <= 10000)
-      def postsGrp = posts0
-        .join(posts0.groupBy("tok").agg(count(lit(1)).as("df")), "tok")
-        .filter(col("df") <= 10000)
-      def prefixOf(posts: => DataFrame) = posts
-        .withColumn("rk", row_number().over(wDoc))
-        .filter(col("rk") <= col("sz") - ceil(lit(tP) * col("sz")) + lit(1))
-        .select("id", "sz", "tok", "rk")
-      def candOf(posts: => DataFrame): DataFrame = {
-        val prefix = prefixOf(posts)
-        prefix.as("x").join(prefix.as("y"),
-            col("x.tok") === col("y.tok") && col("x.id") < col("y.id") &&
-              col("y.sz").cast("double") >= lit(tP) * col("x.sz") &&
-              col("x.sz").cast("double") >= lit(tP) * col("y.sz") &&
-              (lit(1.0) + least(col("x.sz") - col("x.rk"),
-                col("y.sz") - col("y.rk")).cast("double")) * lit(1.0 + tP) >=
-                lit(tP) * (col("x.sz") + col("y.sz")).cast("double"))
-          .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-          .distinct()
-      }
-      // parity first: identical candidate sets
-      val nWin = candOf(postsWin).count(); val nGrp = candOf(postsGrp).count()
-      println(s"[extra] cand parity: window=$nWin groupBy=$nGrp " +
-        (if (nWin == nGrp) "OK" else "MISMATCH"))
-      val ts = Array.fill(2)(scala.collection.mutable.ArrayBuffer.empty[Double])
-      (1 to 4).foreach { _ =>
-        spark.sparkContext.setJobDescription("pfxdf: window form")
-        var t0 = System.nanoTime(); candOf(postsWin).count()
-        ts(0) += (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.setJobDescription("pfxdf: groupBy form")
-        t0 = System.nanoTime(); candOf(postsGrp).count()
-        ts(1) += (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[extra] pfxdf window  min ${ts(0).min}%.3f  all ${ts(0).map(x => f"$x%.2f").mkString(",")}")
-      println(f"[extra] pfxdf groupBy min ${ts(1).min}%.3f  all ${ts(1).map(x => f"$x%.2f").mkString(",")}")
-
-      // variant: pre-filter the df table to df<=maxDf BEFORE the join —
-      // the capped token never attaches (inner-join drop), and the agg
-      // side is column-pruned to tok only
-      def postsGrp2 = posts0.join(
-        toks.select(explode(col("sh")).as("tok"))
-          .groupBy("tok").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= 10000), "tok")
-      val nGrp2 = candOf(postsGrp2).count()
-      println(s"[extra] cand parity v2: window=$nWin groupByPrefilter=$nGrp2 " +
-        (if (nWin == nGrp2) "OK" else "MISMATCH"))
-      val t2 = scala.collection.mutable.ArrayBuffer.empty[Double]
-      (1 to 4).foreach { _ =>
-        spark.sparkContext.setJobDescription("pfxdf: groupBy prefiltered form")
-        val t0 = System.nanoTime(); candOf(postsGrp2).count()
-        t2 += (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[extra] pfxdf groupByPre min ${t2.min}%.3f  all ${t2.map(x => f"$x%.2f").mkString(",")}")
-
-      // skew plant: one token flooded across every doc (df ≈ |docs|) —
-      // the window must co-locate the whole flood in one task to count
-      // it; the groupBy collapses it map-side. Both drop it via the cap.
-      val flood = toks.withColumn("sh",
-        concat(col("sh"), array(lit(0x5eedL)))).localCheckpoint()
-      def fposts0 = flood.select(col("id"), size(col("sh")).as("sz"),
-        explode(col("sh")).as("tok"))
-      def fWin = fposts0.withColumn("df", count(lit(1)).over(wTok))
-        .filter(col("df") <= 1000)
-      def fGrp = fposts0
-        .join(fposts0.groupBy("tok").agg(count(lit(1)).as("df")), "tok")
-        .filter(col("df") <= 1000)
-      val tf = Array.fill(2)(scala.collection.mutable.ArrayBuffer.empty[Double])
-      (1 to 3).foreach { _ =>
-        spark.sparkContext.setJobDescription("pfxdf flood: window form")
-        var t0 = System.nanoTime(); candOf(fWin).count()
-        tf(0) += (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.setJobDescription("pfxdf flood: groupBy form")
-        t0 = System.nanoTime(); candOf(fGrp).count()
-        tf(1) += (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[extra] pfxdf FLOOD window  min ${tf(0).min}%.3f  all ${tf(0).map(x => f"$x%.2f").mkString(",")}")
-      println(f"[extra] pfxdf FLOOD groupBy min ${tf(1).min}%.3f  all ${tf(1).map(x => f"$x%.2f").mkString(",")}")
-      Seq(flood, toks, exactKept, gophered).foreach(
-        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint)
-    }
-
-    if (mode.contains("pfxplan")) {
-      // write the PREFIX pair-generation plan (q52's stage 3, which
-      // executes into checkpoint blocks during chain construction and
-      // is therefore invisible in plans/r06/q52_*_after.txt) as a
-      // committed artifact: the judge can check the §6b df-aggregate
-      // claims (partial HashAggregate on tok, no tok window) against it
-      import graft.rules.Heuristics
-      val gophered = graft.functions.ComputeOnce(docs, "__g",
-        Heuristics.gopherStats(col("text")))
-        .withColumn("__keep", coalesce(col("__g.gopher_keep"), lit(false)))
-        .drop("__g")
-      val gopherKept = gophered.filter(col("__keep"))
-      val fps = gopherKept.select(col("doc_id"),
-        md5(col("text").cast("binary")).as("__fp"))
-      val losers = fps.join(fps.groupBy("__fp")
-          .agg(min(col("doc_id")).as("__keeper"), count(lit(1)).as("__n"))
-          .filter(col("__n") > 1).select("__fp", "__keeper"), "__fp")
-        .filter(col("doc_id") =!= col("__keeper")).select(col("doc_id"))
-      val exactKept = gopherKept.select(col("doc_id"), col("text"))
-        .join(losers, Seq("doc_id"), "left_anti")
-      val pairs = graft.dedup.Dedup.ngramJaccardPairs(exactKept,
-        "doc_id", "text", n = 3, minJaccard = 0.8, maxDf = 10000)
-      val txt = pairs.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val w = new java.io.PrintWriter("plans/r06/q52_pair_generation_after.txt")
-      try w.write(txt) finally w.close()
-      println(s"[extra] wrote plans/r06/q52_pair_generation_after.txt (${txt.length} chars)")
-    }
-
-    if (mode.contains("plancost")) {
-      // Decompose a bench pass for the builder/dist queries into
-      // (construct+analyze, optimize+physical-plan, execute): the
-      // round-3 adjudication says their bench seconds are per-query
-      // plan/optimize/codegen of large fused expression trees, not
-      // execution — re-verify it on current code instead of carrying it.
-      val names = Seq("q30_training_examples", "q31_benchmark_items",
-        "q36_benchmark_v2", "q37_benchmark_v3", "q39_training_dist",
-        "q44_rl_training_v3", "q46_ug_training")
-      names.foreach { name =>
-        def pass(): (Double, Double, Double) = {
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          val t1 = System.nanoTime()
-          df.queryExecution.executedPlan // optimize + physical planning
-          val t2 = System.nanoTime()
-          df.count()
-          val t3 = System.nanoTime()
-          ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
-        }
-        val ps = Seq(pass(), pass(), pass())
-        val a = ps.map(_._1).min; val b = ps.map(_._2).min
-        val c = ps.map(_._3).min
-        // same-INSTANCE recount with a task-time listener: splits the
-        // repeated floor into executor task time (per-task init / row
-        // work) vs driver time (fresh count() QueryExecution: analyze/
-        // optimize/codegen-source-gen of the fused tree per action)
-        val df2 = SparkEntry.queries(name)(spark, sfDir)
-        df2.count()
-        val taskNs = new java.util.concurrent.atomic.AtomicLong(0)
-        val nTasks = new java.util.concurrent.atomic.AtomicLong(0)
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            taskNs.addAndGet(e.taskInfo.duration * 1000000L)
-            nTasks.incrementAndGet()
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        val t0 = System.nanoTime(); df2.count()
-        val recount = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200) // let the listener bus drain
-        spark.sparkContext.removeSparkListener(listener)
-        println(f"[extra] $name%-24s construct $a%5.2f  plan $b%5.2f  " +
-          f"exec(count) $c%5.2f s  execs ${ps.map(p => f"${p._3}%.2f").mkString(",")}" +
-          f"  same-df recount $recount%5.2f (task-sum ${taskNs.get / 1e9}%5.2f s over ${nTasks.get} tasks)")
-      }
-    }
-
-    if (mode.contains("sim")) {
-      def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      emb.count()
-      t("q25 cosineNearDupPairs.count") {
-        graft.similarity.Ann.cosineNearDupPairs(emb, "vec_id", "embedding",
-          threshold = 0.35, numPlanes = 6).count()
-      }
-      t("q23 bruteForceTopK.count") {
-        graft.similarity.Ann.bruteForceTopK(emb,
-          emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3).count()
-      }
-      t("q40 ivfTopK.count") {
-        graft.similarity.Ivf.ivfTopK(emb, emb.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 3, nList = 8, nProbe = 8, iters = 3).count()
-      }
-      t("q20 ngramJaccard(n=1).count") {
-        graft.dedup.Dedup.ngramJaccardPairs(
-          docs.filter(col("doc_id") < 20), "doc_id", "text", n = 1).count()
-      }
-      t("q50 components(q25 pairs).count") {
-        graft.dedup.Dedup.connectedComponents(
-          graft.similarity.Ann.cosineNearDupPairs(emb, "vec_id", "embedding",
-            threshold = 0.35, numPlanes = 6), "id_a", "id_b").count()
-      }
+      val ps = Seq(pass(), pass(), pass())
+      val a = ps.map(_._1).min; val b = ps.map(_._2).min
+      val c = ps.map(_._3).min
+      // same-INSTANCE recount: executor task time (per-task init / row
+      // work) vs driver time (fresh count() QueryExecution: analyze/
+      // optimize/codegen-source-gen of the fused tree per action)
+      val df2 = SparkEntry.queries(name)(spark, sfDir)
+      df2.count()
+      val group = s"plancost-$name"
+      val recount = new GroupTaskTime(group)
+      spark.sparkContext.addSparkListener(recount)
+      spark.sparkContext.setJobGroup(group, s"$name same-df recount")
+      val t0 = System.nanoTime()
+      try df2.count() finally spark.sparkContext.clearJobGroup()
+      val wall = (System.nanoTime() - t0) / 1e9
+      val drained = recount.awaitJobsEnded(timeoutMs = 30000L)
+      spark.sparkContext.removeSparkListener(recount)
+      println(f"[extra] $name%-24s construct $a%5.2f  plan $b%5.2f  " +
+        f"exec(count) $c%5.2f s  execs ${ps.map(p => f"${p._3}%.2f").mkString(",")}" +
+        f"  same-df recount $wall%5.2f (task-sum ${recount.taskNs.get / 1e9}%5.2f s " +
+        s"over ${recount.tasks.get} tasks in ${recount.jobCount} jobs" +
+        (if (drained) ")" else ", listener not drained)"))
     }
     spark.stop()
   }
+
+  /** Sums task durations of the jobs that run under one job group. Only
+    * task ends from the group's own stages count, so jobs of other threads
+    * (or late events of earlier passes) never leak in. Every event of the
+    * action is posted before it returns, but the listener bus delivers
+    * them later: [[awaitJobsEnded]] waits until the bus has delivered the
+    * action's SQL execution end (posted after all its jobs) and an
+    * onJobEnd for every group job — and with them, every task end.
+    */
+  private final class GroupTaskTime(group: String) extends SparkListener {
+    val taskNs = new AtomicLong(0)
+    val tasks = new AtomicLong(0)
+    private val stages = ConcurrentHashMap.newKeySet[Int]()
+    private val started = ConcurrentHashMap.newKeySet[Int]()
+    private val ended = ConcurrentHashMap.newKeySet[Int]()
+    private val executions = ConcurrentHashMap.newKeySet[String]()
+    @volatile private var executionEnded = false
+
+    def jobCount: Int = started.size
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (e.properties != null &&
+          e.properties.getProperty(JobGroupIdKey) == group) {
+        e.stageIds.foreach(stages.add(_))
+        Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+          .foreach(executions.add)
+        started.add(e.jobId)
+      }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (started.contains(e.jobId)) synchronized {
+        ended.add(e.jobId)
+        notifyAll()
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (stages.contains(e.stageId)) {
+        taskNs.addAndGet(e.taskInfo.duration * 1000000L)
+        tasks.incrementAndGet()
+      }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case end: SparkListenerSQLExecutionEnd
+          if executions.contains(end.executionId.toString) => synchronized {
+        executionEnded = true
+        notifyAll()
+      }
+      case _ =>
+    }
+
+    /** True once the group's execution ended and every group job ended. */
+    def awaitJobsEnded(timeoutMs: Long): Boolean = synchronized {
+      val deadline = System.currentTimeMillis() + timeoutMs
+      def done = executionEnded && ended.containsAll(started)
+      while (!done && System.currentTimeMillis() < deadline)
+        wait(math.max(1L, deadline - System.currentTimeMillis()))
+      done
+    }
+  }
+
+  /** The local property SparkContext.setJobGroup sets (its constant is
+    * private to Spark). */
+  private val JobGroupIdKey = "spark.jobGroup.id"
 }

@@ -7,7 +7,6 @@ import graft.extract.{Clean, HtmlText}
 import graft.lang.LangId
 import graft.rules.Heuristics
 import graft.score.{Perplexity, Score, Stages}
-import graft.scrub.PiiScrub
 
 /** The quality-filter pipeline composition (SURVEY.md §3.4, §7.2).
   *
@@ -16,27 +15,19 @@ import graft.scrub.PiiScrub
   * with extracted/cleaned text, langid, stats, stage-1..3 scores, the exact
   * M4 overall score, the P1 keep label, and PII-scrubbed text.
   *
-  * Plan structure (cheap-first, SURVEY.md §4.1): extraction and the cheap
-  * gates are pure Catalyst expressions fused into one codegen span over the
-  * scan; the perplexity `mapPartitions` stage computes only for rows that
-  * survived the gates (per-row conditional inside the batch — no plan split,
-  * no shuffle); everything downstream is expressions again.
+  * Plan structure (cheap-first, SURVEY.md §4.1): extraction, the cheap
+  * gates, perplexity and everything downstream are Catalyst expressions
+  * fused into one codegen span over the scan; perplexity computes only for
+  * rows that survived the gates (per-row conditional — no plan split, no
+  * shuffle).
   *
   * Scale notes: zero shuffles end-to-end for scoring (narrow transformations
-  * only); the output is written partitioned by url-hash; summaries are
-  * aggregations over the scored table, never a driver collect.
+  * only); the output is written partitioned by url-hash.
   */
 object Pipeline {
 
-  final case class Config(
-      /** analysis depth: "basic" skips stage 2/3 (P3, classifier.py:107-116) */
-      depth: String = "full",
-      minTextLength: Int = 300, // P5 (enhanced_paper_analyser.py:148)
-      keepThreshold: Double = Score.KeepThreshold,
-      /** broadcast + mapPartitions scorer instead of the native expression
-        * (the path for externally-trained model files). */
-      useMapPartitionsScorer: Boolean = false
-  )
+  /** P5 minimum cleaned-text length (enhanced_paper_analyser.py:148). */
+  val MinTextLength = 300
 
   /** Suitability gate — the reference's benchmark-suitability check
     * (enhanced_paper_analyser.py:145-172): min length 300, English stopword
@@ -54,8 +45,7 @@ object Pipeline {
   }
 
   /** Full scoring pipeline: docs_raw → docs_scored. */
-  def score(docsRaw: DataFrame, spark: SparkSession,
-            cfg: Config = Config()): DataFrame = {
+  def score(docsRaw: DataFrame, spark: SparkSession): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
 
     // E1 + C1: extraction and basic clean — THE byte-identical surface.
@@ -68,7 +58,7 @@ object Pipeline {
     val extracted = docsRaw
       .withColumn("text", call_function("graft_extract_clean", col("html")))
       .drop("html")
-    scoreExtracted(extracted, spark, cfg)
+    scoreExtracted(extracted, spark)
   }
 
   /** Scoring from the post-extraction seam: `extracted` already carries a
@@ -78,8 +68,7 @@ object Pipeline {
     * here, so the model never scores a document the cheap stages would
     * discard (cheap-first, SURVEY.md §4.1).
     */
-  def scoreExtracted(extracted: DataFrame, spark: SparkSession,
-                     cfg: Config = Config()): DataFrame = {
+  def scoreExtracted(extracted: DataFrame, spark: SparkSession): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
 
     // P4: langid (fastText-style hashed n-gram model, broadcast).
@@ -94,7 +83,7 @@ object Pipeline {
       .withColumn("stats",
         Heuristics.textStatsFused(col("text"), col("__ts"), col("__pc")))
       .drop("__ts", "__pc")
-      .withColumn("eligible", eligible(col("text"), col("url"), cfg.minTextLength))
+      .withColumn("eligible", eligible(col("text"), col("url"), MinTextLength))
 
     // M1 stage-1 gate (computed for all rows; pass requires eligibility —
     // ineligible docs never reached the classifier in the reference, and
@@ -107,26 +96,15 @@ object Pipeline {
       .withColumn("stage1_pass",
         col("eligible") && Stages.stage1Pass(col("sophistication")))
 
-    if (cfg.depth == "basic") {
-      // P2/P3 short-circuit: stage 2/3 skipped; defensive defaults (5.0 avg,
-      // default recommendation, no issues) — the reference's depth gating.
-      return finish(withStage1.withColumn("ppl", lit(Perplexity.MaxPpl))
-        .withColumn("avg_stage2", lit(5.0))
-        .withColumn("issues", array().cast("array<string>")), cfg)
-    }
-
-    // M2: perplexity. The model is code-embedded and deterministic, so the
-    // default path scores through a native expression over the JVM-static
-    // model — keeping the ENTIRE pipeline one whole-stage-codegen span with
-    // no mapPartitions fence and no Row serialization. The `when` gate is
+    // M2: perplexity. The model is code-embedded and deterministic, so it
+    // scores through a native expression over the JVM-static model —
+    // keeping the ENTIRE pipeline one whole-stage-codegen span with no
+    // mapPartitions fence and no Row serialization. The `when` gate is
     // lazy per-row: stage-1 failures skip the model (cheap-first ordering,
-    // classifier.py:102-104). Set useMapPartitionsScorer for externally-
-    // trained models that must ship via broadcast.
-    val withPpl =
-      if (cfg.useMapPartitionsScorer) withPerplexityGated(withStage1, spark)
-      else withStage1.withColumn("ppl",
-        when(col("stage1_pass"), call_function("graft_perplexity", col("text")))
-          .otherwise(lit(Perplexity.MaxPpl)))
+    // classifier.py:102-104).
+    val withPpl = withStage1.withColumn("ppl",
+      when(col("stage1_pass"), call_function("graft_perplexity", col("text")))
+        .otherwise(lit(Perplexity.MaxPpl)))
 
     val withDims = withPpl
       .withColumn("dim_math_errors",
@@ -143,46 +121,18 @@ object Pipeline {
         Stages.subtleIssues(col("dim_math_errors"), col("dim_physics_assumptions"),
           col("dim_logical_consistency"), col("dim_literature_integration")))
 
-    finish(withDims, cfg)
-  }
-
-  /** Gated perplexity: one typed mapPartitions pass; rows that failed the
-    * stage-1 gate skip the model entirely (conditional inside the batch).
-    */
-  private def withPerplexityGated(df: DataFrame, spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.DoubleType
-    val bc = spark.sparkContext.broadcast(Perplexity.buildModel())
-    val outSchema = df.schema.add("ppl", DoubleType, nullable = false)
-    val textIdx = df.schema.fieldIndex("text")
-    val gateIdx = df.schema.fieldIndex("stage1_pass")
-    df.mapPartitions { it =>
-      val m = bc.value
-      it.map { r =>
-        val ppl =
-          if (!r.isNullAt(gateIdx) && r.getBoolean(gateIdx))
-            m.score(if (r.isNullAt(textIdx)) null else r.getString(textIdx))
-          else Perplexity.MaxPpl
-        Row.fromSeq(r.toSeq :+ ppl)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** M3 + M4 + P1 + C13: recommendation, overall score, keep label, scrub.
-    * The scrub runs as the native single-pass Catalyst expression
-    * (graft.functions.PiiScrubExpr) — one string boundary crossing instead
-    * of six chained regexp_replace materializations; identical output by
-    * construction (both run PiiScrub's compiled battery).
-    */
-  private def finish(df: DataFrame, cfg: Config): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df
+    // M3 + M4 + P1 + C13: recommendation, overall score, keep label, scrub.
+    // The scrub runs as the native single-pass Catalyst expression
+    // (graft.functions.PiiScrubExpr) — one string boundary crossing instead
+    // of six chained regexp_replace materializations; identical output by
+    // construction (both run PiiScrub's compiled battery).
+    withDims
       .withColumn("recommendation",
         Stages.recommendation(col("stage1_pass"), col("sophistication"), col("avg_stage2")))
       .withColumn("overall_score",
         Score.overall(col("stage1_pass"), col("sophistication"),
           col("avg_stage2"), col("recommendation")))
-      .withColumn("keep", col("overall_score") >= cfg.keepThreshold)
+      .withColumn("keep", Score.keep(col("overall_score")))
       .withColumn("scrubbed_text", call_function("pii_scrub", col("text")))
   }
 

@@ -597,6 +597,95 @@ object SparkEntry {
           val arr = h.map(_.toString).mkString("[", ", ", "]")
           s"(CASE WHEN list_dot_product(v, $arr) >= 0 THEN ${1 << p} ELSE 0 END)"
       }.mkString(" + ")
+    // The curation chain's stage labels (`sel`), shared by q52 (per-doc
+    // rows) and q53 (per-stage counts); each appends its final SELECT.
+    // Stage nesting is replicated exactly: gopher signals (q51's formulas,
+    // UNROUNDED comparisons) gate who enters exact dedup; exact-dedup
+    // survivors (min doc_id per md5) are the only pair-generation input;
+    // trigram-shingle Jaccard ≥ 0.8 (rounded to 6 like the Spark side)
+    // feeds the recursive-CTE components. The shingle tokenizer class
+    // spells Java's ASCII \s (incl \x0B, which RE2's \s lacks) over
+    // lower(trim(text)), with NO empty-token filtering — exactly
+    // Dedup.shingles.
+    val curationSelCte =
+      raw"""WITH RECURSIVE
+      |gtok AS (
+      |  SELECT doc_id, text,
+      |    list_filter(list_transform(string_split(text, chr(10)),
+      |      x -> trim(x)), x -> length(x) > 0) AS lines,
+      |    list_filter(regexp_split_to_array(lower(text), '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
+      |      x -> length(x) > 0) AS ltok,
+      |    list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
+      |      x -> length(x) > 0) AS tok
+      |  FROM documents),
+      |ggrams AS (
+      |  SELECT doc_id, text, lines, ltok, tok,
+      |    CASE WHEN len(ltok) < 3 THEN CAST([] AS VARCHAR[])
+      |      ELSE list_transform(generate_series(1, len(ltok) - 2),
+      |        i -> ltok[i] || ' ' || ltok[i+1] || ' ' || ltok[i+2]) END AS grams
+      |  FROM gtok),
+      |gsig AS (
+      |  SELECT doc_id, text,
+      |    CASE WHEN len(lines) = 0 THEN 0.0
+      |      ELSE 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END AS dl,
+      |    CASE WHEN len(grams) = 0 THEN 0.0
+      |      ELSE 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams) END AS dg,
+      |    CASE WHEN len(tok) = 0 THEN 0.0
+      |      ELSE CAST(list_aggregate(list_transform(tok, x -> length(x)), 'sum') AS DOUBLE) / len(tok) END AS mwl,
+      |    CASE WHEN length(text) = 0 THEN 0.0
+      |      ELSE CAST(length(regexp_replace(text, '[[:alnum:]\t\n\x0B\f\r ]', '', 'g')) AS DOUBLE) / length(text) END AS sym,
+      |    length(trim(text)) AS lt, len(tok) AS nt
+      |  FROM ggrams),
+      |gk AS (
+      |  SELECT doc_id, text,
+      |    COALESCE(lt >= 50 AND nt BETWEEN 10 AND 200000 AND mwl BETWEEN 2.0 AND 12.0
+      |      AND sym < 0.30 AND dl < 0.50 AND dg < 0.80, FALSE) AS gopher_keep
+      |  FROM gsig),
+      |gkeep AS (SELECT doc_id, text FROM gk WHERE gopher_keep),
+      |elos AS (
+      |  SELECT doc_id FROM (
+      |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
+      |    FROM gkeep)
+      |  WHERE doc_id <> keeper),
+      |ekeep AS (SELECT doc_id, text FROM gkeep
+      |          WHERE doc_id NOT IN (SELECT doc_id FROM elos)),
+      |sh AS (
+      |  SELECT DISTINCT doc_id, unnest(
+      |    list_transform(generate_series(1, len(w) - 2),
+      |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
+      |  FROM (SELECT doc_id,
+      |          regexp_split_to_array(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS w
+      |        FROM ekeep)),
+      |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+      |pc AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+      |  FROM sh a JOIN sh b ON a.tok = b.tok AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2),
+      |pr AS (
+      |  SELECT id_a, id_b FROM pc
+      |  JOIN sz sa ON sa.doc_id = pc.id_a
+      |  JOIN sz sb ON sb.doc_id = pc.id_b
+      |  WHERE round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) >= 0.8),
+      |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
+      |          UNION ALL SELECT id_b, id_a FROM pr),
+      |verts AS (SELECT DISTINCT src AS id FROM edges),
+      |reach(id, c) AS (
+      |  SELECT id, id FROM verts
+      |  UNION
+      |  SELECT e2.dst, r.c FROM reach r JOIN edges e2 ON e2.src = r.id),
+      |comp AS (SELECT id, min(c) AS component FROM reach GROUP BY id),
+      |nlos AS (SELECT id FROM comp WHERE id <> component),
+      |sel AS (
+      |  SELECT g.doc_id,
+      |    CASE WHEN NOT g.gopher_keep THEN 'gopher'
+      |         WHEN el.doc_id IS NOT NULL THEN 'exact_dup'
+      |         WHEN nl.id IS NOT NULL THEN 'near_dup'
+      |         ELSE 'kept' END AS stage,
+      |    g.text
+      |  FROM gk g
+      |  LEFT JOIN elos el ON el.doc_id = g.doc_id
+      |  LEFT JOIN nlos nl ON nl.id = g.doc_id)
+      |""".stripMargin
     Map(
       "q01_lineitem_agg" ->
         """SELECT l_returnflag, l_linestatus,
@@ -821,178 +910,17 @@ object SparkEntry {
           |    AND dl < 0.50 AND dg < 0.80) AS gopher_keep
           |FROM r ORDER BY doc_id""".stripMargin,
 
-      // The composed chain end-to-end. Stage nesting is replicated
-      // exactly: gopher signals (q51's formulas, UNROUNDED comparisons)
-      // gate who enters exact dedup; exact-dedup survivors (min doc_id
-      // per md5) are the only pair-generation input; trigram-shingle
-      // Jaccard ≥ 0.8 (rounded to 6 like the Spark side) feeds the
-      // recursive-CTE components; kept rows get the full scrub battery.
-      // The shingle tokenizer class spells Java's ASCII \s (incl \x0B,
-      // which RE2's \s lacks) over lower(trim(text)), with NO
-      // empty-token filtering — exactly Dedup.shingles.
-      "q52_curation_chain" ->
-        raw"""WITH RECURSIVE
-           |gtok AS (
-           |  SELECT doc_id, text,
-           |    list_filter(list_transform(string_split(text, chr(10)),
-           |      x -> trim(x)), x -> length(x) > 0) AS lines,
-           |    list_filter(regexp_split_to_array(lower(text), '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
-           |      x -> length(x) > 0) AS ltok,
-           |    list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
-           |      x -> length(x) > 0) AS tok
-           |  FROM documents),
-           |ggrams AS (
-           |  SELECT doc_id, text, lines, ltok, tok,
-           |    CASE WHEN len(ltok) < 3 THEN CAST([] AS VARCHAR[])
-           |      ELSE list_transform(generate_series(1, len(ltok) - 2),
-           |        i -> ltok[i] || ' ' || ltok[i+1] || ' ' || ltok[i+2]) END AS grams
-           |  FROM gtok),
-           |gsig AS (
-           |  SELECT doc_id, text,
-           |    CASE WHEN len(lines) = 0 THEN 0.0
-           |      ELSE 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END AS dl,
-           |    CASE WHEN len(grams) = 0 THEN 0.0
-           |      ELSE 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams) END AS dg,
-           |    CASE WHEN len(tok) = 0 THEN 0.0
-           |      ELSE CAST(list_aggregate(list_transform(tok, x -> length(x)), 'sum') AS DOUBLE) / len(tok) END AS mwl,
-           |    CASE WHEN length(text) = 0 THEN 0.0
-           |      ELSE CAST(length(regexp_replace(text, '[[:alnum:]\t\n\x0B\f\r ]', '', 'g')) AS DOUBLE) / length(text) END AS sym,
-           |    length(trim(text)) AS lt, len(tok) AS nt
-           |  FROM ggrams),
-           |gk AS (
-           |  SELECT doc_id, text,
-           |    COALESCE(lt >= 50 AND nt BETWEEN 10 AND 200000 AND mwl BETWEEN 2.0 AND 12.0
-           |      AND sym < 0.30 AND dl < 0.50 AND dg < 0.80, FALSE) AS gopher_keep
-           |  FROM gsig),
-           |gkeep AS (SELECT doc_id, text FROM gk WHERE gopher_keep),
-           |elos AS (
-           |  SELECT doc_id FROM (
-           |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
-           |    FROM gkeep)
-           |  WHERE doc_id <> keeper),
-           |ekeep AS (SELECT doc_id, text FROM gkeep
-           |          WHERE doc_id NOT IN (SELECT doc_id FROM elos)),
-           |sh AS (
-           |  SELECT DISTINCT doc_id, unnest(
-           |    list_transform(generate_series(1, len(w) - 2),
-           |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-           |  FROM (SELECT doc_id,
-           |          regexp_split_to_array(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS w
-           |        FROM ekeep)),
-           |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-           |pc AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-           |  FROM sh a JOIN sh b ON a.tok = b.tok AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
-           |pr AS (
-           |  SELECT id_a, id_b FROM pc
-           |  JOIN sz sa ON sa.doc_id = pc.id_a
-           |  JOIN sz sb ON sb.doc_id = pc.id_b
-           |  WHERE round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) >= 0.8),
-           |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-           |          UNION ALL SELECT id_b, id_a FROM pr),
-           |verts AS (SELECT DISTINCT src AS id FROM edges),
-           |reach(id, c) AS (
-           |  SELECT id, id FROM verts
-           |  UNION
-           |  SELECT e2.dst, r.c FROM reach r JOIN edges e2 ON e2.src = r.id),
-           |comp AS (SELECT id, min(c) AS component FROM reach GROUP BY id),
-           |nlos AS (SELECT id FROM comp WHERE id <> component),
-           |sel AS (
-           |  SELECT g.doc_id,
-           |    CASE WHEN NOT g.gopher_keep THEN 'gopher'
-           |         WHEN el.doc_id IS NOT NULL THEN 'exact_dup'
-           |         WHEN nl.id IS NOT NULL THEN 'near_dup'
-           |         ELSE 'kept' END AS stage,
-           |    g.text
-           |  FROM gk g
-           |  LEFT JOIN elos el ON el.doc_id = g.doc_id
-           |  LEFT JOIN nlos nl ON nl.id = g.doc_id)
-           |SELECT doc_id, stage,
+      // The composed chain end-to-end; kept rows get the full scrub
+      // battery.
+      "q52_curation_chain" -> (curationSelCte +
+        raw"""SELECT doc_id, stage,
            |  CASE WHEN stage = 'kept' THEN ${scrubSqlExpr("text")} END AS scrubbed
-           |FROM sel ORDER BY doc_id""".stripMargin,
+           |FROM sel ORDER BY doc_id""".stripMargin),
 
-      // the q52 chain, aggregated: per-stage counts (same CTE, GROUP BY)
-      "q53_curation_stages" ->
-        raw"""WITH RECURSIVE
-           |gtok AS (
-           |  SELECT doc_id, text,
-           |    list_filter(list_transform(string_split(text, chr(10)),
-           |      x -> trim(x)), x -> length(x) > 0) AS lines,
-           |    list_filter(regexp_split_to_array(lower(text), '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
-           |      x -> length(x) > 0) AS ltok,
-           |    list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
-           |      x -> length(x) > 0) AS tok
-           |  FROM documents),
-           |ggrams AS (
-           |  SELECT doc_id, text, lines, ltok, tok,
-           |    CASE WHEN len(ltok) < 3 THEN CAST([] AS VARCHAR[])
-           |      ELSE list_transform(generate_series(1, len(ltok) - 2),
-           |        i -> ltok[i] || ' ' || ltok[i+1] || ' ' || ltok[i+2]) END AS grams
-           |  FROM gtok),
-           |gsig AS (
-           |  SELECT doc_id, text,
-           |    CASE WHEN len(lines) = 0 THEN 0.0
-           |      ELSE 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END AS dl,
-           |    CASE WHEN len(grams) = 0 THEN 0.0
-           |      ELSE 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams) END AS dg,
-           |    CASE WHEN len(tok) = 0 THEN 0.0
-           |      ELSE CAST(list_aggregate(list_transform(tok, x -> length(x)), 'sum') AS DOUBLE) / len(tok) END AS mwl,
-           |    CASE WHEN length(text) = 0 THEN 0.0
-           |      ELSE CAST(length(regexp_replace(text, '[[:alnum:]\t\n\x0B\f\r ]', '', 'g')) AS DOUBLE) / length(text) END AS sym,
-           |    length(trim(text)) AS lt, len(tok) AS nt
-           |  FROM ggrams),
-           |gk AS (
-           |  SELECT doc_id, text,
-           |    COALESCE(lt >= 50 AND nt BETWEEN 10 AND 200000 AND mwl BETWEEN 2.0 AND 12.0
-           |      AND sym < 0.30 AND dl < 0.50 AND dg < 0.80, FALSE) AS gopher_keep
-           |  FROM gsig),
-           |gkeep AS (SELECT doc_id, text FROM gk WHERE gopher_keep),
-           |elos AS (
-           |  SELECT doc_id FROM (
-           |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
-           |    FROM gkeep)
-           |  WHERE doc_id <> keeper),
-           |ekeep AS (SELECT doc_id, text FROM gkeep
-           |          WHERE doc_id NOT IN (SELECT doc_id FROM elos)),
-           |sh AS (
-           |  SELECT DISTINCT doc_id, unnest(
-           |    list_transform(generate_series(1, len(w) - 2),
-           |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS tok
-           |  FROM (SELECT doc_id,
-           |          regexp_split_to_array(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS w
-           |        FROM ekeep)),
-           |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-           |pc AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-           |  FROM sh a JOIN sh b ON a.tok = b.tok AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
-           |pr AS (
-           |  SELECT id_a, id_b FROM pc
-           |  JOIN sz sa ON sa.doc_id = pc.id_a
-           |  JOIN sz sb ON sb.doc_id = pc.id_b
-           |  WHERE round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) >= 0.8),
-           |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-           |          UNION ALL SELECT id_b, id_a FROM pr),
-           |verts AS (SELECT DISTINCT src AS id FROM edges),
-           |reach(id, c) AS (
-           |  SELECT id, id FROM verts
-           |  UNION
-           |  SELECT e2.dst, r.c FROM reach r JOIN edges e2 ON e2.src = r.id),
-           |comp AS (SELECT id, min(c) AS component FROM reach GROUP BY id),
-           |nlos AS (SELECT id FROM comp WHERE id <> component),
-           |sel AS (
-           |  SELECT g.doc_id,
-           |    CASE WHEN NOT g.gopher_keep THEN 'gopher'
-           |         WHEN el.doc_id IS NOT NULL THEN 'exact_dup'
-           |         WHEN nl.id IS NOT NULL THEN 'near_dup'
-           |         ELSE 'kept' END AS stage,
-           |    g.text
-           |  FROM gk g
-           |  LEFT JOIN elos el ON el.doc_id = g.doc_id
-           |  LEFT JOIN nlos nl ON nl.id = g.doc_id)
-           |SELECT stage, count(*) AS n
-           |FROM sel GROUP BY stage ORDER BY stage""".stripMargin,
+      // the q52 chain, aggregated: per-stage counts
+      "q53_curation_stages" -> (curationSelCte +
+        raw"""SELECT stage, count(*) AS n
+           |FROM sel GROUP BY stage ORDER BY stage""".stripMargin),
 
       "q26_quality_score" -> {
         val stopSum = graft.lang.LangId.EnglishStopwords10

@@ -1,10 +1,10 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Aggregations A1–A8 (SURVEY.md §2.5), including the north_rule-mandated
-  * SALTED per-domain statistics for skewed hosts.
+/** Aggregation A8 (SURVEY.md §2.5): the north_rule-mandated SALTED
+  * per-key statistics for skewed hosts.
   *
   * Why salting: with Zipf-distributed hosts one mega-domain receives a large
   * share of all rows; a plain groupBy(domain) sends that entire share to one
@@ -14,35 +14,10 @@ import org.apache.spark.sql.functions._
   */
 object DomainStats {
 
-  /** Host component of a url (pure Catalyst parse_url). */
-  def domainOf(url: Column): Column = parse_url(url, lit("HOST"))
-
-  /** Salted two-phase per-domain stats over a scored-docs DataFrame:
-    * volume, keep count/rate, avg score, scrub hits. Results identical to a
-    * direct groupBy (verified by the DuckDB oracle on the same data).
-    */
-  def perDomain(scored: DataFrame, urlCol: String = "url",
-                keepCol: String = "keep", scoreCol: String = "overall_score",
-                salts: Int = 16): DataFrame = {
-    val partial = scored
-      .withColumn("domain", domainOf(col(urlCol)))
-      .withColumn("salt", pmod(xxhash64(col(urlCol)), lit(salts)))
-      .groupBy("domain", "salt")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col(keepCol), 1L).otherwise(0L)).as("kept"),
-        sum(col(scoreCol)).as("score_sum"))
-    partial.groupBy("domain")
-      .agg(
-        sum("n").as("n_docs"),
-        sum("kept").as("n_kept"),
-        round(sum("kept").cast("double") / sum("n").cast("double"), 6).as("keep_rate"),
-        round(sum("score_sum") / sum("n").cast("double"), 6).as("avg_score"))
-  }
-
   /** Generic salted aggregation over any key: count + sum/avg of a numeric
     * column — the reusable A8 pattern (salt on a high-cardinality column to
-    * spread hot keys, then merge).
+    * spread hot keys, then merge). Results identical to a direct groupBy
+    * (verified by the q32 DuckDB oracle on the same data).
     */
   def saltedStats(df: DataFrame, keyCol: String, saltSource: String,
                   valueCol: String, salts: Int = 16): DataFrame = {
@@ -55,20 +30,4 @@ object DomainStats {
         round(sum("s").cast("double") / sum("n").cast("double"), 6).as("avg_value"),
         round(sum("s").cast("double"), 6).as("sum_value"))
   }
-
-  /** A1 run totals (paper_analyser.py:140-141). */
-  def runTotals(scored: DataFrame, keepCol: String = "keep"): DataFrame =
-    scored.agg(
-      count(lit(1)).as("total_docs"),
-      sum(when(col(keepCol), 1L).otherwise(0L)).as("kept_docs"))
-
-  /** A3/A4 distributions: count by a label column. */
-  def distribution(df: DataFrame, labelCol: String): DataFrame =
-    df.groupBy(labelCol).agg(count(lit(1)).as("n"))
-
-  /** O1 top-k by score (paper_analyser.py:145-147): TakeOrderedAndProject. */
-  def topKByScore(scored: DataFrame, k: Int = 3,
-                  scoreCol: String = "overall_score",
-                  urlCol: String = "url"): DataFrame =
-    scored.orderBy(desc(scoreCol), asc(urlCol)).limit(k)
 }

@@ -230,7 +230,6 @@ object Curate {
     * surviving documents.
     */
   def full(docsRaw: DataFrame, spark: SparkSession,
-           cfg: Pipeline.Config = Pipeline.Config(),
            shingleN: Int = 3, minJaccard: Double = 0.8,
            maxDf: Int = 10000, collectThreshold: Int = 1 << 20,
            materialize: Boolean = false,
@@ -242,6 +241,6 @@ object Curate {
     val survivors = curated(extracted, "url", "text", shingleN, minJaccard,
       maxDf, collectThreshold, materialize, strategy).drop("scrubbed")
     // scoreExtracted re-applies the scrub on its own output column
-    Pipeline.scoreExtracted(survivors, spark, cfg)
+    Pipeline.scoreExtracted(survivors, spark)
   }
 }

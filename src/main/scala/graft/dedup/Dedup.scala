@@ -266,30 +266,6 @@ object Dedup {
   private def shiftLeftCol(v: Column, bits: Column): Column =
     call_function("shiftleft", v, bits)
 
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** SimHash near-dup pairs with Hamming distance <= maxDist, candidates
-    * via 16-bit chunk equality banding.
-    */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int = 3): DataFrame = {
-    val sigs = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
-    val chunked = sigs.withColumn("chunk_id", explode(sequence(lit(0), lit(3))))
-      .withColumn("chunk",
-        shiftRightCol(col("sig"), col("chunk_id") * 16).bitwiseAND(lit(0xFFFFL)))
-    val a = chunked.select(col("chunk_id"), col("chunk"),
-      col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = chunked.select(col("chunk_id"), col("chunk"),
-      col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("chunk_id", "chunk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sig_a", "sig_b").distinct()
-      .withColumn("dist", hamming(col("sig_a"), col("sig_b")))
-      .filter(col("dist") <= maxDist)
-      .select("id_a", "id_b", "dist")
-  }
-
   // ------------------------------------------------------------------
   // N-gram Jaccard via inverted-index join — the scalable exact-similarity
   // path (token → postings → pair counts), no signatures, no cross join.
@@ -339,7 +315,7 @@ object Dedup {
       .observe("ngram_df_cap",
         coalesce(sum(when(col("df") > maxDf, 1L).otherwise(0L)), lit(0L))
           .as("dropped_postings"),
-        max(col("df")).as("max_df"))
+        coalesce(max(col("df")), lit(0L)).as("max_df"))
       .filter(col("df") <= maxDf)
       .drop("df")
     val inter = postings.as("x").join(postings.as("y"),
@@ -404,7 +380,7 @@ object Dedup {
     * partition. Cap metrics are value-identical to the window form's
     * (dropped postings = Σ df over capped tokens); measured at sf0.1
     * the join form also times at-or-under the window form (no local
-    * regression — BenchExtra `pfxdf` A/B).
+    * regression in an interleaved A/B).
     *
     * Cost of the trade: the df aggregate is one more reference to
     * `toks` (a tok-only column-pruned explode + partial agg), so with
@@ -422,13 +398,13 @@ object Dedup {
       .partitionBy("id").orderBy("df", "tok")
     val dfTab = toks.select(explode(col("sh")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("df"))
-      // coalesce: sum over a zero-token corpus is null, and a metrics
-      // consumer unboxing getAs[Long] would NPE — 0 is the honest value
-      // (max_df stays null there: no tokens, no maximum)
+      // coalesce: sum and max over a zero-token corpus are null, and a
+      // metrics consumer unboxing getAs[Long] would NPE — 0 is the honest
+      // value for both
       .observe("ngram_df_cap",
         coalesce(sum(when(col("df") > maxDf, col("df")).otherwise(lit(0L))),
           lit(0L)).as("dropped_postings"),
-        max(col("df")).as("max_df"))
+        coalesce(max(col("df")), lit(0L)).as("max_df"))
       .filter(col("df") <= maxDf)
     val posts = toks
       .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("tok"))

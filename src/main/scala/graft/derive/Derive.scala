@@ -182,14 +182,4 @@ object Derive {
         col("equations"), col("derivations"), col("assumptions"),
         col("questions"), col("n_questions"))
   }
-
-  /** Run-summary aggregates A1-A6 over derived training examples. */
-  def trainingSummary(examples: DataFrame): DataFrame =
-    examples.agg(
-      count(lit(1)).as("total_examples"),
-      round(avg("quality_score"), 6).as("avg_quality"),
-      round(min("quality_score"), 6).as("min_quality"),
-      round(max("quality_score"), 6).as("max_quality"),
-      round(avg("step_count"), 6).as("avg_steps"),
-      sum(when(col("quality_score") > 0.7, 1L).otherwise(0L)).as("high_quality"))
 }

@@ -344,11 +344,4 @@ object Clean {
 
   def equationClean(c: Column): Column =
     trim(regexp_replace(regexp_replace(c, WsRun, " "), EqStripClass, ""))
-
-  def equationCleanStr(t: String): String = {
-    if (t == null) return ""
-    t.replaceAll(WsRun, " ")
-      .replaceAll(EqStripClass, "")
-      .trim
-  }
 }

@@ -77,8 +77,8 @@ case class ExtractCleanExpr(child: Expression) extends UnaryExpression {
 }
 
 /** M2 perplexity as a native expression over the JVM-static model (see
-  * Perplexity.Shared) — identical scores to the broadcast/mapPartitions
-  * path by construction (same Model.score).
+  * Perplexity.Shared) — identical scores to RefOracle's row-at-a-time
+  * scorer by construction (same Model.score).
   */
 case class PerplexityExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType

@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions._
   *    hashed trigram features → per-language weight table → argmax. The
   *    weight table is built deterministically from embedded per-language
   *    marker lexicons (no training data exists in the sandbox; the model is
-  *    a fixed, reproducible profile). It is broadcast to executors and
-  *    applied inside `mapPartitions` so the table lookup is amortized per
-  *    batch, not per row (SURVEY.md §2.7 M2 pattern).
+  *    a fixed, reproducible profile). It is broadcast once to executors;
+  *    rows never visit the driver.
   */
 object LangId {
 
@@ -41,12 +40,6 @@ object LangId {
     words.map(w => when(sample.contains(w), 1).otherwise(0).cast("int"))
       .reduce(_ + _)
   }
-
-  /** Reference keep-threshold: >= 2 for viXra-like, >= 3 otherwise
-    * (enhanced_paper_analyser.py:158-160).
-    */
-  def isEnglishStopword(text: Column, threshold: Int = 3): Column =
-    englishStopwordCount(text) >= threshold
 
   /** Plain-Scala mirror for the oracle — exact Column semantics:
     * code-point sampling (Spark substring) + Spark lower (sparkLower).
@@ -167,7 +160,7 @@ object LangId {
     NgramModel(dim, Languages, weights)
   }
 
-  /** Apply the model over a DataFrame: broadcast once, score per partition.
+  /** Apply the model over a DataFrame: broadcast once, predict per row.
     * Adds `langCol` from `textCol`. Driver-light: only the (dim × langs)
     * float table ships; rows never visit the driver.
     */
@@ -176,28 +169,5 @@ object LangId {
     val model = spark.sparkContext.broadcast(buildModel())
     val predictUdf = udf((t: String) => model.value.predict(t))
     df.withColumn(langCol, predictUdf(col(textCol)))
-  }
-
-  /** The north_star-literal form: broadcast model applied inside a typed
-    * `mapPartitions` batch (model deref amortized per partition, no UDF
-    * boundary). Identical labels to `withLangNgram` by construction; the
-    * UDF form is the default because it composes inside whole-stage
-    * codegen while this one is a fence.
-    */
-  def withLangNgramMapPartitions(df: DataFrame, textCol: String,
-                                 langCol: String,
-                                 spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.StringType
-    val bc = spark.sparkContext.broadcast(buildModel())
-    val outSchema = df.schema.add(langCol, StringType, nullable = true)
-    val idx = df.schema.fieldIndex(textCol)
-    df.mapPartitions { it =>
-      val m = bc.value // one deref per partition
-      it.map { r =>
-        val t = if (r.isNullAt(idx)) null else r.getString(idx)
-        Row.fromSeq(r.toSeq :+ m.predict(t))
-      }
-    }(Encoders.row(outSchema))
   }
 }

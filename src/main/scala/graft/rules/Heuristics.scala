@@ -57,16 +57,10 @@ object Heuristics {
 
   // ------------------------------------------------------------------
   // E4 — reference count (pdf_processor.py:81): \[\d+\]|\(\d{4}\)
-  // Enhanced battery (pdf_processor.py:226-233) adds et al. / Ref. n
   // ------------------------------------------------------------------
   val RefPatternBasic = "\\[\\d+\\]|\\(\\d{4}\\)"
-  val RefPatternsEnhanced: Seq[String] =
-    Seq("\\[\\d+\\]", "\\(\\d{4}\\)", "et al\\.", "Ref\\.\\s*\\d+")
 
   def referenceCount(c: Column): Column = patternCount(c, RefPatternBasic)
-
-  def referenceCountEnhanced(c: Column): Column =
-    RefPatternsEnhanced.map(patternCount(c, _)).reduce(_ + _)
 
   def referenceCountStr(t: String): Long = patternCountStr(t, RefPatternBasic)
 
@@ -80,11 +74,6 @@ object Heuristics {
 
   def avgSentenceLength(c: Column): Column =
     wordCount(c).cast("double") / greatest(dotCount(c), lit(1L)).cast("double")
-
-  def avgSentenceLengthStr(t: String): Double = {
-    val dots = if (t == null) 0L else t.count(_ == '.').toLong
-    wordCountStr(t).toDouble / math.max(dots, 1L)
-  }
 
   // ------------------------------------------------------------------
   // E6 — keyword occurrence counts. Reference counts OCCURRENCES of exact
@@ -206,8 +195,9 @@ object Heuristics {
   def minLength(c: Column, k: Int): Column = length(trim(c)) >= k
 
   // ------------------------------------------------------------------
-  // P6 — domain-term density gate (enhanced_paper_analyser.py:163-172):
-  // substring containment counts over lower(text[:1000]).
+  // P6 — domain-term indicators (enhanced_paper_analyser.py:163-172),
+  // counted by substring containment over lower(text[:1000]) in
+  // Pipeline.eligible.
   // ------------------------------------------------------------------
   val PhysicsIndicators: Seq[String] = Seq(
     "equation", "theory", "model", "physics", "energy", "force", "field",
@@ -215,12 +205,6 @@ object Heuristics {
   val VixraIndicators: Seq[String] = Seq(
     "gravity", "gravitational", "universe", "cosmic", "space", "time",
     "mass", "particle")
-
-  def domainTermGate(text: Column, threshold: Int): Column = {
-    val sample = lower(substring(text, 1, 1000))
-    (containsMembershipCount(sample, PhysicsIndicators) +
-      containsMembershipCount(sample, VixraIndicators)) >= threshold
-  }
 
   // ------------------------------------------------------------------
   // Gopher/C4-style web-text rules (north_rule additions; SURVEY.md P4-P6

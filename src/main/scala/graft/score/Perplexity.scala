@@ -1,8 +1,5 @@
 package graft.score
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.types.{DoubleType, StructType}
-
 /** M2 — hashed n-gram perplexity scorer (SURVEY.md §2.7 M2; BASELINE.json
   * north_rule: "hashed n-gram (Kneser-Ney-style) perplexity model batched
   * per partition").
@@ -13,12 +10,9 @@ import org.apache.spark.sql.types.{DoubleType, StructType}
   * backing off to the add-0.5-smoothed hashed unigram P_uni when the
   * context is unseen. Both tables are built deterministically from an
   * embedded English frequency lexicon and bigram list (Zipf rank weights —
-  * public knowledge, no RNG, no external data). The model is broadcast
-  * once and applied inside `Dataset.mapPartitions` (typed API, not RDD) so
-  * the per-batch setup (model deref, buffer alloc) is amortized across the
-  * partition — explicitly NOT a row-at-a-time UDF (SURVEY.md §2.7) — or,
-  * on the default path, evaluated by the native PerplexityExpr over the
-  * JVM-static instance.
+  * public knowledge, no RNG, no external data). It is evaluated by the
+  * native PerplexityExpr over the JVM-static instance — explicitly NOT a
+  * row-at-a-time UDF (SURVEY.md §2.7).
   *
   * The same `score(text)` function is used by the row-at-a-time reference
   * oracle, so pipeline/oracle parity holds by construction and tests verify
@@ -173,31 +167,11 @@ object Perplexity {
   /** JVM-static instance: the model is built from code-embedded data, so
     * every executor can construct it lazily without a broadcast — which
     * lets the scorer run as a native expression INSIDE whole-stage codegen
-    * (no mapPartitions fence, no Row serialization). The broadcast +
-    * mapPartitions path below remains the API for externally-trained
-    * models that must ship with the job.
+    * (no mapPartitions fence, no Row serialization).
     */
   lazy val Shared: Model = buildModel()
 
   /** Static scoring entry for codegen. */
   def scoreShared(u: org.apache.spark.unsafe.types.UTF8String): Double =
     if (u == null) MaxPpl else Shared.score(u.toString)
-
-  /** Add a `pplCol` double column computed per partition from `textCol`.
-    * Typed Dataset.mapPartitions (no RDD); model broadcast once.
-    */
-  def withPerplexity(df: DataFrame, textCol: String, pplCol: String,
-                     spark: SparkSession): DataFrame = {
-    val bc = spark.sparkContext.broadcast(buildModel())
-    val outSchema: StructType = df.schema.add(pplCol, DoubleType, nullable = false)
-    val idx = df.schema.fieldIndex(textCol)
-    val enc = Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val m = bc.value // one deref per partition
-      it.map { r =>
-        val t = if (r.isNullAt(idx)) null else r.getString(idx)
-        Row.fromSeq(r.toSeq :+ m.score(t))
-      }
-    }(enc)
-  }
 }

@@ -64,10 +64,4 @@ object PiiScrub {
     }
     toxicCompiled.matcher(s).replaceAll("<TOXIC>")
   }
-
-  /** Count of scrub hits (for the per-domain stats report). */
-  def scrubHitCount(c: Column): Column =
-    (Battery.map(_._1) :+ ToxicPattern)
-      .map(p => size(regexp_extract_all(c, lit(p), lit(0))).cast("long"))
-      .reduce(_ + _)
 }

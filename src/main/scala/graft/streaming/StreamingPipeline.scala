@@ -2,14 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured Streaming face of the quality filter.
   *
   * The reference has no streaming (SURVEY.md §2.9) and the batch pipeline is
   * the primary path; this module exists because every transformation in
-  * graft.Pipeline is NARROW (project/filter/mapPartitions — no global sort,
+  * graft.Pipeline is NARROW (project/filter — no global sort,
   * no cross-row state), so the identical plan runs unchanged on an unbounded
   * `readStream` source. That property is itself worth a test: streaming
   * micro-batches must produce byte-for-byte the batch pipeline's labels.
@@ -145,18 +144,6 @@ object StreamingPipeline {
         count(lit(1)).as("n_docs"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
         avg(col("overall_score")).as("avg_score"))
-
-  /** Sink helper: parquet append with checkpointing — the streaming analog
-    * of the batch manifest (exactly-once via the stream checkpoint).
-    */
-  def toParquetSink(scored: DataFrame, path: String,
-                    checkpoint: String): DataStreamWriter[Row] =
-    scored.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
 
   // ------------------------------------------------------------------
   // Streaming exact dedup — the stream face of Dedup.exactSurvivors.

@@ -14,12 +14,6 @@ object TextAnalysis {
     when(length(trim(c)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(c), "\\s+"))
 
-  /** BPE-ish pre-tokenizer: letter runs | digit runs | single symbol. */
-  val BpePattern = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
-
-  def bpeTokenCount(c: Column): Column =
-    size(regexp_extract_all(c, lit(BpePattern), lit(0))).cast("long")
-
   /** Composite 0..1 web-text quality score from cheap ratios
     * (C4/Gopher-flavored: length, stopword mass, punctuation balance,
     * alpha fraction). Deterministic, SQL-expressible.

@@ -99,8 +99,9 @@ class AnchorNecessitySpec extends SparkTestBase {
           !m || AnchorGuard.anchored(fold, anchors(i))
         }
       }
-      val res = SCTest.check(
-        SCTest.Parameters.default.withMinSuccessfulTests(1200), prop)
+      // fixed seed: the per-pattern floor below must not depend on luck
+      val res = SCTest.check(SCTest.Parameters.default
+        .withMinSuccessfulTests(1200).withInitialSeed(0x5eedL), prop)
       assert(res.passed, s"$name: ${res.status}")
       // non-vacuous PER PATTERN: every pattern's match->anchored
       // implication must actually fire, or a wrong anchor on a pattern

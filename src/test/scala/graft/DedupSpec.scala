@@ -83,12 +83,6 @@ class DedupSpec extends SparkTestBase {
     assert(plan.queryExecution.executedPlan.toString.contains("*(1)"))
   }
 
-  test("simhashPairs surfaces the exact-dup pair via chunk banding") {
-    val pairs = Dedup.simhashPairs(df, "doc_id", "text", maxDist = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)))
-  }
-
   test("ngram jaccard pairs: identical docs score 1.0, manual value checks") {
     val tiny = Seq((1L, "a b c"), (2L, "a b c"), (3L, "a b x"), (4L, "z z z"))
       .toDF("doc_id", "text")
@@ -198,6 +192,28 @@ class DedupSpec extends SparkTestBase {
     // and with the cap above df the full pair set comes back
     assert(Dedup.ngramJaccardPairs(flood, "doc_id", "text", n = 1,
       maxDf = 10000).count() == 30L * 29L / 2)
+  }
+
+  test("ngram df cap metrics are 0, not null, on a zero-token corpus") {
+    // AQE off: on an empty result its empty-relation propagation drops
+    // the CollectMetrics node from the final plan, so no metric is left
+    // to read (see the planted-flood test above)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val empty = Seq((1L, ""), (2L, "   ")).toDF("doc_id", "text")
+      for (minJaccard <- Seq(0.0, 0.8)) {
+        val pairs = Dedup.ngramJaccardPairs(empty, "doc_id", "text", n = 1,
+          minJaccard = minJaccard, maxDf = 5)
+        assert(pairs.collect().isEmpty)
+        val metrics = pairs.queryExecution.observedMetrics("ngram_df_cap")
+        // isNullAt too: Scala unboxes a null getAs[Long] to 0 silently
+        for (m <- Seq("dropped_postings", "max_df")) {
+          assert(!metrics.isNullAt(metrics.fieldIndex(m)), s"$m null, minJaccard=$minJaccard")
+          assert(metrics.getAs[Long](m) == 0L, s"$m, minJaccard=$minJaccard")
+        }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("native HashedShinglesExpr ≡ transform(shingles, xxhash64), stays in codegen") {

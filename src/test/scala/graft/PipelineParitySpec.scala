@@ -68,18 +68,6 @@ class PipelineParitySpec extends SparkTestBase {
     assert(f1 >= 0.99, f"F1 $f1%.4f < 0.99 (tp=$tp fp=$fp fn=$fn)")
   }
 
-  test("mapPartitions scorer path equals the native-expression path") {
-    val raw = SynthCorpus.docsRaw(spark, 120L, partitions = 4).toDF()
-    val a = Pipeline.score(raw, spark)
-      .select("url", "overall_score", "keep").collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
-    val b = Pipeline.score(raw, spark,
-      Pipeline.Config(useMapPartitionsScorer = true))
-      .select("url", "overall_score", "keep").collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
-    assert(a == b)
-  }
-
   test("scoring is invariant to partitioning (repartition(k) invariance)") {
     val raw = SynthCorpus.docsRaw(spark, 100L, partitions = 1).toDF()
     val a = Pipeline.score(raw, spark)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** North-star evidence: "AQE skew-join handling for oversized hosts".
-  * The deployment config (io.Tables.RuntimeConf, Bench session) enables
+  * The deployment config (the Bench session) enables
   * `spark.sql.adaptive.skewJoin`; this spec DEMONSTRATES it firing — an
   * oversized-host join partition is split by OptimizeSkewedJoin
   * (`skew=true` in the final adaptive plan) and the join result is

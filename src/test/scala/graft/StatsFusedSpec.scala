@@ -167,19 +167,3 @@ class LangIdQualitySpec extends SparkTestBase {
     assert(model.predict("the order of the records for the batch is fixed and we can sort it") == "en")
   }
 }
-
-/** The two langid application forms must label identically. */
-class LangIdFormsSpec extends SparkTestBase {
-  test("UDF form equals mapPartitions form") {
-    import org.apache.spark.sql.functions._
-    val texts = graft.fixtures.SynthCorpus.docsRaw(spark, 200, 4).toDF()
-      .withColumn("text",
-        graft.extract.Clean.basicClean(graft.extract.HtmlText.extractCol(col("html"))))
-      .select("url", "text")
-    val a = graft.lang.LangId.withLangNgram(texts, "text", "lang", spark)
-      .select("url", "lang").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val b = graft.lang.LangId.withLangNgramMapPartitions(texts, "text", "lang", spark)
-      .select("url", "lang").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(a == b)
-  }
-}
