@@ -584,9 +584,26 @@ object SparkEntry {
       }
 
   def oracleSql: Map[String, String] = {
-    val enCountSql = graft.lang.LangId.EnglishStopwords10
-      .map(w => s"(CASE WHEN contains(substr(lower(text),1,1000), '$w') THEN 1 ELSE 0 END)")
+    // Shared by the builder oracles (q31, q38, q39, q41, q42, q45,
+    // q47–q49). The globs name the SAME materialized fixture parquet the
+    // Spark side scans. `pat` turns an RE2 pattern into a SQL literal:
+    // escape quotes, and turn REAL newline chars inside patterns into the
+    // RE2 \n escape — a raw newline followed by '|' would otherwise be
+    // EATEN by stripMargin and silently corrupt the alternation.
+    def fixtureGlob(name: String) = new java.io.File(
+      s"target/graft_fixture/$name").getAbsolutePath + "/*.parquet"
+    val corpusGlob = fixtureGlob("corpus_400")
+    val scoredGlob = fixtureGlob("scored_400")
+    def pat(p: String) =
+      "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
+    def cnt(terms: Seq[String], over: String) = terms
+      .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
       .mkString(" + ")
+    def anyOf(terms: Seq[String], over: String) = terms
+      .map(w => s"contains($over, '${w.replace("'", "''")}')")
+      .mkString("(", " OR ", ")")
+    val enCountSql =
+      cnt(graft.lang.LangId.EnglishStopwords10, "substr(lower(text),1,1000)")
     val wcSql =
       "CASE WHEN length(trim(text)) = 0 THEN 0 ELSE array_length(regexp_split_to_array(trim(text), '\\s+')) END"
     // LSH hyperplanes are pure deterministic literals (Ann.hyperplanes) —
@@ -958,14 +975,6 @@ object SparkEntry {
       // RE2-compatible by construction)
       "q31_benchmark_items" -> {
         import graft.derive.Extract
-        val corpusGlob = new java.io.File(
-          "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        // RE2 pattern → SQL literal: escape quotes, and turn REAL newline
-        // chars inside patterns into the RE2 \n escape — a raw newline
-        // followed by '|' would otherwise be EATEN by stripMargin and
-        // silently corrupt the alternation
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
         def joinedLen(patterns: Seq[String], cap: Int): String = {
           val lists = patterns
             .map(p => s"regexp_extract_all(text, ${pat(p)})").mkString(" || ")
@@ -975,13 +984,9 @@ object SparkEntry {
         val derLen = joinedLen(Extract.DerivationPatterns, 5)
         val asmLen = joinedLen(Extract.AssumptionPatterns, 10)
         val sampleSql = "substr(lower(text), 1, 1000)"
-        val enCnt = graft.lang.LangId.EnglishStopwords10
-          .map(w => s"(CASE WHEN contains($sampleSql, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        val termCnt = (graft.rules.Heuristics.PhysicsIndicators ++
-          graft.rules.Heuristics.VixraIndicators)
-          .map(w => s"(CASE WHEN contains($sampleSql, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
+        val enCnt = cnt(graft.lang.LangId.EnglishStopwords10, sampleSql)
+        val termCnt = cnt(graft.rules.Heuristics.PhysicsIndicators ++
+          graft.rules.Heuristics.VixraIndicators, sampleSql)
         val cleanTitle = graft.extract.Clean.titleCleanStr(BenchmarkTitleFixture)
         s"""WITH c AS (SELECT url, text FROM read_parquet('$corpusGlob')),
            |elig AS (
@@ -1005,13 +1010,6 @@ object SparkEntry {
       // proves the rewrite equivalence holds on real data too.
       "q47_rl_v2_gates" -> {
         import graft.derive.RlBuilder
-        val corpusGlob = new java.io.File(
-          "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         val sample = "substr(lower(text), 1, 2000)"
         val probs = cnt(RlBuilder.RlProblemIndicators, sample)
         val reas = cnt(RlBuilder.RlReasoningIndicators, sample)
@@ -1021,8 +1019,8 @@ object SparkEntry {
           .zipWithIndex
           .map { case (p, i) => s"regexp_matches(text, ${pat(p)}) AS m$i" }
           .mkString(",\n  ")
-        val crashAnchor = Seq("calculate", "computing", "to find")
-          .map(w => s"contains(lower(text), '$w')").mkString("(", " OR ", ")")
+        val crashAnchor =
+          anyOf(Seq("calculate", "computing", "to find"), "lower(text)")
         s"""SELECT url,
            |  (length(trim(text)) >= 1000 AND ($probs) >= 2
            |   AND ($reas) >= 3 AND ($phys) >= 2) AS suitable,
@@ -1034,13 +1032,6 @@ object SparkEntry {
 
       "q48_rl_v3_gates" -> {
         import graft.derive.RlBuilder
-        val corpusGlob = new java.io.File(
-          "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         val gate = cnt(RlBuilder.V3GateIndicators, "substr(lower(text), 1, 1500)")
         val ex = (RlBuilder.V3ExplicitExistence ++ RlBuilder.V3DerivationExistence)
           .zipWithIndex
@@ -1054,13 +1045,6 @@ object SparkEntry {
 
       "q49_ug_deriv_gates" -> {
         import graft.derive.UgBuilders
-        val corpusGlob = new java.io.File(
-          "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         val sample = "substr(lower(text), 1, 2000)"
         val gate = s"(${cnt(UgBuilders.UgPhysicsIndicators, sample)} + " +
           s"${cnt(UgBuilders.UgMathIndicators, sample)})"
@@ -1076,17 +1060,6 @@ object SparkEntry {
 
       "q38_training_gate" -> {
         import graft.derive.{Derive, Extract}
-        val corpusGlob = new java.io.File(
-          "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        // RE2 pattern → SQL literal: escape quotes, and turn REAL newline
-        // chars inside patterns into the RE2 \n escape — a raw newline
-        // followed by '|' would otherwise be EATEN by stripMargin and
-        // silently corrupt the alternation
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         // _contains_english_physics_terms over a candidate block `m`
         val phys = cnt(Extract.EnglishPhysicsTerms, "lower(m)")
         val vix = cnt(Extract.VixraPhysicsTerms, "lower(m)")
@@ -1122,13 +1095,6 @@ object SparkEntry {
       // and the >= 2-questions item gate
       "q45_ug_benchmark" -> {
         import graft.derive.UgBuilders._
-        val scoredGlob = new java.io.File(
-          "target/graft_fixture/scored_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
         def battery(patterns: Seq[String], minLen: Int) = patterns
           .map(p => s"list_filter(list_transform(regexp_extract_all(text, ${pat(p)}), " +
             s"x -> trim(x)), m -> length(m) > $minLen)")
@@ -1203,16 +1169,6 @@ object SparkEntry {
       "q41_benchmark_v2_dist" -> {
         import graft.derive.BenchmarkBuilders._
         import graft.extract.Clean
-        val scoredGlob = new java.io.File(
-          "target/graft_fixture/scored_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        def anyOf(terms: Seq[String], over: String) = terms
-          .map(w => s"contains($over, '${w.replace("'", "''")}')")
-          .mkString("(", " OR ", ")")
         // battery: group-1 extraction per pattern → transform → filter
         def battery(patterns: Seq[String], mk: String => String,
                     pred: String): String =
@@ -1279,16 +1235,6 @@ object SparkEntry {
       // the issues-conditional scenario difficulty
       "q42_benchmark_v3_dist" -> {
         import graft.derive.BenchmarkBuilders._
-        val scoredGlob = new java.io.File(
-          "target/graft_fixture/scored_400").getAbsolutePath + "/*.parquet"
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        def anyOf(terms: Seq[String], over: String) = terms
-          .map(w => s"contains($over, '${w.replace("'", "''")}')")
-          .mkString("(", " OR ", ")")
         val eqCleanV3 = (x: String) =>
           s"trim(regexp_replace(regexp_replace($x, '\\s+', ' ', 'g'), " +
             s"${pat(EqStripClassV3)}, '', 'g'))"
@@ -1353,18 +1299,6 @@ object SparkEntry {
       // Spark side's (?U)\s.
       "q39_training_dist" -> {
         import graft.derive.{Derive, Extract}
-        val corpusGlob = new java.io.File(
-          "target/graft_fixture/corpus_400").getAbsolutePath + "/*.parquet"
-        // RE2 pattern → SQL literal (same trap as q31/q38: real newlines in
-        // patterns must become RE2 \n or stripMargin corrupts alternations)
-        def pat(p: String) =
-          "'" + p.replace("'", "''").replace("\n", "\\n") + "'"
-        def cnt(terms: Seq[String], over: String) = terms
-          .map(w => s"(CASE WHEN contains($over, '$w') THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        def anyOf(terms: Seq[String], over: String) = terms
-          .map(w => s"contains($over, '$w')").mkString("(", " OR ", ")")
-
         // -- gate (same as q38) --
         val sample = "substr(lower(text), 1, 2000)"
         val en14 = cnt(graft.lang.LangId.EnglishStopwords14, sample)

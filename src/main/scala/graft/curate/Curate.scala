@@ -17,14 +17,9 @@ import graft.scrub.PiiScrub
   *      (`Heuristics.gopherStats` behind a ComputeOnce barrier): zero
   *      shuffles, whole-stage codegen, drops degenerate text before
   *      anything pays a shuffle for it.
-  *   2. Exact dedup           — min-id per md5 fingerprint, in the
-  *      map-side-combinable groupBy.agg form over a PROJECTED
-  *      (id, fingerprint) frame: the shuffles move ~48 bytes/row, never
-  *      the document text, a mega-duplicated page collapses in the
-  *      partial aggregate instead of materializing its whole group in
-  *      one window task, and the loser ids come back via joins that AQE
-  *      broadcasts/skew-splits (dup-group table shrinks to n>1 groups —
-  *      tiny in the common crawl-snapshot case).
+  *   2. Exact dedup           — `Dedup.exactLosers`: min id per md5
+  *      fingerprint, map-side-combinable; the shuffles move (id,
+  *      fingerprint) rows, never the document text.
   *   3. Near-dup dedup        — candidate pairs over the exact-dedup
   *      survivors only, then connected components (adaptive driver
   *      union-find / HashMin+pointer-jumping) and keep-one-per-cluster.
@@ -63,6 +58,17 @@ object Curate {
   val StageNearDup = "near_dup"
   val StageKept = "kept"
 
+  /** Near-dup pair parameters: word trigram shingles, Jaccard ≥ 0.8 (the
+    * q52 oracle's threshold), posting lists capped at 10,000 documents.
+    */
+  val ShingleN = 3
+  val MinJaccard = 0.8
+  val MaxDf = 10000
+
+  /** Columns the chain adds while labeling rows; input may not carry them. */
+  val ReservedColumns =
+    Seq("stage", "scrubbed", "__keep", "__stage", "__fp", "__keeper", "__n", "__g")
+
   /** Shared chain plumbing: gopher-annotated frame + the loser list.
     *
     * @return (gophered, losers): `gophered` is `docs` plus a `__keep`
@@ -71,9 +77,9 @@ object Curate {
     *         never feed stage 3's pair generation.
     */
   private def chain(docs: DataFrame, idCol: String, textCol: String,
-                    shingleN: Int, minJaccard: Double, maxDf: Int,
                     collectThreshold: Int, materialize: Boolean,
                     strategy: String): (DataFrame, DataFrame) = {
+    Dedup.requireFree(docs, ReservedColumns)
     val id = col(idCol)
     val text = col(textCol)
     // one tokenizer pass per row (Let-bound inside gopherStats) behind a
@@ -99,31 +105,12 @@ object Curate {
     val gophered = if (materialize) gophered0.localCheckpoint() else gophered0
     val gopherKept = gophered.filter(col("__keep"))
 
-    // stage 2: exact dedup — shuffle (id, 16-byte fingerprint) only, in
-    // the map-side-combinable form (round-5 verdict #1): a full-group
-    // window (min(id) over partitionBy(__fp)) must co-locate EVERY row
-    // of a duplicate group in one task before the min is known — a page
-    // duplicated 10^8 times at crawl scale is a multi-GB single-task
-    // sort. groupBy.agg collapses the mega-group map-side (partial_min/
-    // partial_count), the n>1 filter shrinks the group table to actual
-    // dup groups, and the join-back is a join AQE's skew handling CAN
-    // split (unlike a window partition). Same output, ties included:
-    // both forms label every row with id ≠ group-min as the loser.
-    // null-text sentinel (defense in depth, mirrors Dedup.exactSurvivors):
-    // md5(null) is null and null keys never equi-join, so without it a
-    // null-text row could never be labeled exact_dup. Unreachable TODAY —
-    // stage 1 drops null text (gopher signals are null ⇒ keep=false) —
-    // but stage 2 must not silently depend on stage 1's ordering for
-    // correctness. Real digests are 32 hex chars; no collision.
-    val fps = gopherKept.select(id,
-      when(text.isNull, lit("__graft_null_text__"))
-        .otherwise(md5(text.cast("binary"))).as("__fp"))
-    val dupGroups = fps.groupBy("__fp")
-      .agg(min(id).as("__keeper"), count(lit(1)).as("__n"))
-      .filter(col("__n") > 1)
-      .select("__fp", "__keeper")
-    val exactLosers = fps.join(dupGroups, "__fp")
-      .filter(id =!= col("__keeper"))
+    // stage 2: exact dedup — Dedup's loser operator (map-side-combinable
+    // min-id per fingerprint; shuffles (id, fingerprint) only, never the
+    // text). Its null-text sentinel makes stage 2 correct on its own:
+    // today stage 1 already drops null text (gopher signals are null ⇒
+    // keep=false), but stage 2 must not depend on stage 1's ordering.
+    val exactLosers = Dedup.exactLosers(gopherKept, idCol, textCol)
       .select(id, lit(StageExactDup).as("stage"))
 
     // stage 3 input: exact-dedup survivors, text column pruned to what
@@ -137,7 +124,7 @@ object Curate {
         // quadratic in near-dup CLUSTER size, so this is the
         // sparse-duplication / oracle regime.
         Dedup.ngramJaccardPairs(exactKept, idCol, textCol,
-          n = shingleN, minJaccard = minJaccard, maxDf = maxDf,
+          n = ShingleN, minJaccard = MinJaccard, maxDf = MaxDf,
           materialize = materialize)
       case "minhash" =>
         // web-scale regime (what production crawl dedup runs): MinHash
@@ -146,7 +133,7 @@ object Curate {
         // each candidate exactly verified. Recall < 1 by construction:
         // a missed pair keeps an extra document (the safe direction).
         Dedup.minhashPairs(exactKept, idCol, textCol,
-          shingleN = shingleN, threshold = minJaccard,
+          shingleN = ShingleN, threshold = MinJaccard,
           materialize = materialize)
       case other =>
         throw new IllegalArgumentException(
@@ -171,23 +158,17 @@ object Curate {
     * to the training sink: every drop is attributable, every kept byte
     * is scrub-clean. Fully DuckDB-oracled end-to-end (q52).
     *
-    * Reserved column names (round-5 ADVICE): the chain labels rows
-    * through columns named `stage`, `scrubbed`, `__keep`, `__stage`,
-    * `__fp`, `__keeper`, `__n` and `__g`; an input frame that already
-    * carries one of these makes the labeling join ambiguous
-    * (AnalysisException) or mislabels rows. Callers must rename such
-    * input columns first — the declared-query surface (doc_id, text)
-    * never collides.
+    * An input frame carrying one of [[ReservedColumns]] is rejected
+    * with an IllegalArgumentException naming the column.
     */
   def curationLog(docs: DataFrame, idCol: String, textCol: String,
-                  shingleN: Int = 3, minJaccard: Double = 0.8,
-                  maxDf: Int = 10000, collectThreshold: Int = 1 << 20,
+                  collectThreshold: Int = 1 << 20,
                   materialize: Boolean = false,
                   strategy: String = "exact"): DataFrame = {
     val id = col(idCol)
     val text = col(textCol)
-    val (gophered, losers) = chain(docs, idCol, textCol, shingleN,
-      minJaccard, maxDf, collectThreshold, materialize, strategy)
+    val (gophered, losers) = chain(docs, idCol, textCol,
+      collectThreshold, materialize, strategy)
     // single-branch labeling: one left join over ALL docs instead of a
     // filter-split + union (the split evaluated the gopher subtree once
     // per branch — measured ~6 s/evaluation on the 20k-doc raw corpus).
@@ -209,12 +190,11 @@ object Curate {
     * actually read.
     */
   def curated(docs: DataFrame, idCol: String, textCol: String,
-              shingleN: Int = 3, minJaccard: Double = 0.8,
-              maxDf: Int = 10000, collectThreshold: Int = 1 << 20,
+              collectThreshold: Int = 1 << 20,
               materialize: Boolean = false,
               strategy: String = "exact"): DataFrame = {
-    val (gophered, losers) = chain(docs, idCol, textCol, shingleN,
-      minJaccard, maxDf, collectThreshold, materialize, strategy)
+    val (gophered, losers) = chain(docs, idCol, textCol,
+      collectThreshold, materialize, strategy)
     gophered.filter(col("__keep"))
       .drop("__keep")
       .join(losers.select(col(idCol)), Seq(idCol), "left_anti")
@@ -230,16 +210,15 @@ object Curate {
     * surviving documents.
     */
   def full(docsRaw: DataFrame, spark: SparkSession,
-           shingleN: Int = 3, minJaccard: Double = 0.8,
-           maxDf: Int = 10000, collectThreshold: Int = 1 << 20,
+           collectThreshold: Int = 1 << 20,
            materialize: Boolean = false,
            strategy: String = "exact"): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val extracted = docsRaw
       .withColumn("text", call_function("graft_extract_clean", col("html")))
       .drop("html")
-    val survivors = curated(extracted, "url", "text", shingleN, minJaccard,
-      maxDf, collectThreshold, materialize, strategy).drop("scrubbed")
+    val survivors = curated(extracted, "url", "text",
+      collectThreshold, materialize, strategy).drop("scrubbed")
     // scoreExtracted re-applies the scrub on its own output column
     Pipeline.scoreExtracted(survivors, spark)
   }

@@ -29,44 +29,64 @@ object Dedup {
   // expected collision count is ~1e-14 — grouping by the fingerprint is
   // equivalent to grouping by the text without shuffling the text itself.
   // ------------------------------------------------------------------
-  def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(md5(col(textCol).cast("binary")).as("text_hash"))
-      .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_dups"))
 
-  /** Rows that survive exact dedup (keep lowest id per identical text).
-    *
-    * Map-side-combinable form (round-5 verdict #1): the earlier
-    * row_number window materialized every row of a duplicate group in
-    * ONE task before ranking — a straggler/OOM hazard on mega-duplicated
-    * boilerplate at crawl scale. Here the group table collapses map-side
-    * (partial min/count), only groups with actual duplicates (n > 1)
-    * survive the filter, and losers come back via an AQE-skew-splittable
-    * join keyed on (id, fingerprint) — so a duplicate id carrying
-    * DIFFERENT text is never collaterally dropped. Null text groups
-    * under a sentinel fingerprint (md5 of null is null, and null keys
-    * never equi-join — the window form's partitionBy grouped the null
-    * partition, so the sentinel preserves keep-one-null semantics; no
-    * collision: real digests are exactly 32 hex chars). Tie nuance:
-    * rows whose id EQUALS the group minimum are all kept (the window
-    * form kept exactly one arbitrary row when the same id appeared
-    * twice with identical text — degenerate input; unique ids behave
-    * identically on both forms).
+  /** Throw an IllegalArgumentException naming the first column of `df`
+    * that is one of `reserved` (compared case-insensitively, like Spark's
+    * default resolution): an operator that adds such a column would make
+    * its joins ambiguous or mislabel rows.
     */
-  def exactSurvivors(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val fp = when(col(textCol).isNull, lit("__graft_null_text__"))
-      .otherwise(md5(col(textCol).cast("binary")))
-    val withFp = df.withColumn("__graft_es_fp", fp)
-    val fps = withFp.select(col(idCol), col("__graft_es_fp"))
-    val losers = fps
-      .join(fps.groupBy("__graft_es_fp")
-        .agg(min(col(idCol)).as("__keeper"), count(lit(1)).as("__n"))
-        .filter(col("__n") > 1)
-        .select("__graft_es_fp", "__keeper"), "__graft_es_fp")
-      .filter(col(idCol) =!= col("__keeper"))
-      .select(col(idCol), col("__graft_es_fp"))
-    withFp.join(losers, Seq(idCol, "__graft_es_fp"), "left_anti")
-      .drop("__graft_es_fp")
+  private[graft] def requireFree(df: DataFrame, reserved: Seq[String]): Unit =
+    df.columns.find(c => reserved.exists(_.equalsIgnoreCase(c))).foreach { c =>
+      throw new IllegalArgumentException(
+        s"input column '$c' collides with a reserved column name " +
+          reserved.mkString("(", ", ", ")") + "; rename it first")
+    }
+
+  /** The exact-dedup fingerprint `__fp`: md5 of the text, with null text
+    * grouped under a sentinel (md5 of null is null, and null keys never
+    * equi-join — without it a null-text row could never be labeled a
+    * duplicate; no collision: real digests are exactly 32 hex chars).
+    */
+  private def fingerprint(text: Column): Column =
+    when(text.isNull, lit("__graft_null_text__"))
+      .otherwise(md5(text.cast("binary"))).as("__fp")
+
+  /** The exact-dedup loser list: (idCol, `__fp`) for every row whose id
+    * is not the minimum id of its fingerprint group.
+    *
+    * Map-side-combinable form (round-5 verdict #1): a full-group window
+    * (min(id) over partitionBy(fp)) must co-locate EVERY row of a
+    * duplicate group in one task before the min is known — a page
+    * duplicated 10^8 times at crawl scale is a multi-GB single-task
+    * sort. Here only (id, 16-byte fingerprint) is shuffled, the group
+    * table collapses map-side (partial min/count), the n > 1 filter
+    * shrinks it to actual duplicate groups, and losers come back via a
+    * join AQE's skew handling CAN split (unlike a window partition).
+    * Every row with id ≠ group-min is a loser; rows whose id EQUALS the
+    * group minimum are all kept (ties only arise from duplicate ids).
+    * All null texts form one group (the min-id null row is kept).
+    */
+  def exactLosers(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    requireFree(df, Seq("__fp", "__keeper", "__n"))
+    val id = col(idCol)
+    val fps = df.select(id, fingerprint(col(textCol)))
+    val dupGroups = fps.groupBy("__fp")
+      .agg(min(id).as("__keeper"), count(lit(1)).as("__n"))
+      .filter(col("__n") > 1)
+      .select("__fp", "__keeper")
+    fps.join(dupGroups, "__fp")
+      .filter(id =!= col("__keeper"))
+      .select(id, col("__fp"))
   }
+
+  /** Rows that survive exact dedup (keep lowest id per identical text):
+    * `df` anti-joined with [[exactLosers]] on (id, fingerprint), so a
+    * duplicate id carrying DIFFERENT text is never collaterally dropped.
+    */
+  def exactSurvivors(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.withColumn("__fp", fingerprint(col(textCol)))
+      .join(exactLosers(df, idCol, textCol), Seq(idCol, "__fp"), "left_anti")
+      .drop("__fp")
 
   // ------------------------------------------------------------------
   // Shingling + MinHash signatures — single-pass elementwise-min via
@@ -134,6 +154,27 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(b, slice(sigCol, b * rowsPerBand + 1, lit(rowsPerBand))))
 
+  /** The (id, sh) frame both pair paths start from: `sh` is the distinct
+    * hashed shingles of the text (64-bit digests — join keys, sizes and
+    * intersections are digest-equality, never shingle text). Generate
+    * barrier: `sh` has several references (size filter, signature or
+    * postings explode, verify joins) — as a plain projection alias
+    * CollapseProject would re-run the shingle builder at every reference
+    * (the q52 regression, round 5). materialize (execution-only knob,
+    * same contract as Curate's): the frame feeds the candidate pass AND
+    * both verify joins; when it fits executor storage one eager
+    * localCheckpoint replaces those re-evaluations of scan + shingling.
+    * At true 100-TB scale leave false (recomputing a narrow scan beats
+    * writing a corpus-sized intermediate).
+    */
+  private def digestFrame(df: DataFrame, idCol: String, textCol: String,
+                          n: Int, materialize: Boolean): DataFrame = {
+    val toks = graft.functions.ComputeOnce(
+      df.select(col(idCol).as("id"), col(textCol)),
+      "sh", hashedShingles(col(textCol), n)).select("id", "sh")
+    if (materialize) toks.localCheckpoint() else toks
+  }
+
   /** MinHash-LSH candidate pairs with exact-Jaccard verification.
     *
     * docs(idCol, textCol) → (id_a, id_b, jaccard) for verified pairs with
@@ -147,24 +188,15 @@ object Dedup {
                    threshold: Double = 0.7, maxBucket: Int = 64,
                    materialize: Boolean = false): DataFrame = {
     val rowsPerBand = numHashes / bands
-    // Generate barriers: `sh` is consumed by the size filter AND the
-    // signature aggregate (and by the verify joins below); `sig` by the
-    // band exploder — without the barriers CollapseProject re-inlines a
-    // full re-shingling / re-signing per reference per row (the q52
-    // regression, round-5)
     // the whole path — signatures, band buckets, verification — runs on
     // the 64-bit digest shingles (hashedShingles; round 6): lane hashing
     // costs k × 8 bytes per shingle instead of k × |shingle-text| bytes,
     // and the verify join was already digest-based. The LSH basis change
     // keeps the strategy's contract (capped observable buckets, exact
-    // verification, recall < 1); digests never leave the query.
-    // materialize (execution-only knob, as in ngramJaccardPairs): the
-    // digest frame is referenced by the signature pass AND both verify
-    // joins — checkpoint once when the working set fits storage.
-    val toks0 = graft.functions.ComputeOnce(
-      df.select(col(idCol).as("id"), col(textCol)),
-      "sh", hashedShingles(col(textCol), shingleN)).select("id", "sh")
-    val toks = if (materialize) toks0.localCheckpoint() else toks0
+    // verification, recall < 1); digests never leave the query. `sig`
+    // sits behind its own Generate barrier: the band exploder is its
+    // second reference.
+    val toks = digestFrame(df, idCol, textCol, shingleN, materialize)
     val withSig = graft.functions.ComputeOnce(
       toks.filter(size(col("sh")) > 0),
       "sig", minhashSignature(col("sh"), numHashes))
@@ -287,26 +319,7 @@ object Dedup {
                         n: Int = 1, minJaccard: Double = 0.0,
                         maxDf: Int = 10000,
                         materialize: Boolean = false): DataFrame = {
-    // Generate barrier: `sh` is consumed by size() AND explode() (and on
-    // the prefix path by the verify joins) — as a plain projection alias
-    // CollapseProject would inline the whole shingle builder into every
-    // reference (one full re-shingling per reference per row).
-    // Pair paths run on HASHED shingles (64-bit digests — see
-    // hashedShingles): `tok` join keys, sizes and intersections are
-    // digest-equality, never shingle text.
-    //
-    // materialize (execution-only knob, same contract as Curate's): the
-    // (id, digests) frame is referenced by the postings explode AND both
-    // verify joins — three tree-shaped evaluations of the upstream scan
-    // + shingling per query. When the digest frame fits executor storage
-    // one eager localCheckpoint replaces the re-evaluations; at true
-    // 100-TB scale leave false (recomputing a narrow scan beats writing
-    // a corpus-sized intermediate; blocks are freed by ContextCleaner
-    // when the frame is GC'd).
-    val toks0 = graft.functions.ComputeOnce(
-      df.select(col(idCol).as("id"), col(textCol)),
-      "sh", hashedShingles(col(textCol), n)).select("id", "sh")
-    val toks = if (materialize) toks0.localCheckpoint() else toks0
+    val toks = digestFrame(df, idCol, textCol, n, materialize)
     if (minJaccard > 0.0) return prefixFilteredPairs(toks, minJaccard, maxDf)
     val sizes = toks.select(col("id"), size(col("sh")).as("sz"))
     val wTok = org.apache.spark.sql.expressions.Window.partitionBy("tok")
@@ -634,21 +647,5 @@ object Dedup {
     spark.createDataFrame(
       spark.sparkContext.parallelize(out,
         math.max(1, spark.sparkContext.defaultParallelism)), schema)
-  }
-
-  /** One document per near-dup cluster: drops every row whose id appears
-    * in `pairs` with a smaller reachable id (keeps cluster minima);
-    * singletons — never in the pair list — are kept untouched. The
-    * non-keeper set is component-labeled vertices with id ≠ component:
-    * at most |pairs|-graph vertices, broadcast when small, hash
-    * anti-join otherwise (Spark picks via AQE).
-    */
-  def nearDupSurvivors(df: DataFrame, idCol: String,
-                       pairs: DataFrame, aCol: String = "id_a",
-                       bCol: String = "id_b"): DataFrame = {
-    val losers = connectedComponents(pairs, aCol, bCol)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
   }
 }

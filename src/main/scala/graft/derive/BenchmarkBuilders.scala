@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -25,15 +27,8 @@ import graft.extract.Clean
   */
 object BenchmarkBuilders {
 
-  private def containsAny(c: Column, terms: Seq[String]): Column =
-    terms.map(t => c.contains(t)).reduce(_ || _)
-
-  private def hits(c: Column, pattern: String, group: Int = 1): Column =
-    when(c.isNull, array().cast("array<string>"))
-      .otherwise(regexp_extract_all(c, lit(pattern), lit(group)))
-
-  private def hitsAll(c: Column, patterns: Seq[String], group: Int = 1): Column =
-    concat(patterns.map(hits(c, _, group)): _*)
+  private def hitsAll(c: Column, patterns: Seq[String]): Column =
+    concat(patterns.map(hits(c, _, 1)): _*)
 
   private def bullets(arr: Column): Column =
     aggregate(arr, lit(""), (acc, x) => concat(acc, lit("• "), x, lit("\n")))

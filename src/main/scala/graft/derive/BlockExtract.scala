@@ -1,10 +1,11 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -127,8 +128,6 @@ object BlockExtract {
 
   def computeRow(u: UTF8String): InternalRow = {
     val (d, s, p) = compute(if (u == null) null else u.toString)
-    def arr(a: Array[String]) =
-      new GenericArrayData(a.map(x => UTF8String.fromString(x).asInstanceOf[Any]))
     new GenericInternalRow(Array[Any](arr(d), arr(s), arr(p)))
   }
 

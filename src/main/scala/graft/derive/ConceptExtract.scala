@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import java.util.regex.Pattern
 
 import graft.extract.Clean.sparkLower
@@ -22,14 +24,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * tested in BenchmarkBuildersSpec.
   */
 object ConceptExtract {
-
-  @inline private def spaceTrim(s: String): String = {
-    var a = 0
-    var b = s.length
-    while (a < b && s.charAt(a) == ' ') a += 1
-    while (b > a && s.charAt(b - 1) == ' ') b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
 
   /** findAll with per-pattern necessary-literal guards (round-6: the
     * AnchorGuard discipline — a pattern whose required literal set is
@@ -55,9 +49,6 @@ object ConceptExtract {
   private val Digits: Array[String] =
     Array("0", "1", "2", "3", "4", "5", "6", "7", "8", "9")
 
-  private def arr(a: Array[String]) =
-    new GenericArrayData(a.map(x => UTF8String.fromString(x).asInstanceOf[Any]))
-
   // ------------------------------------------------------------------
   // Shared clean mirrors (same regexes as Clean.equationClean /
   // BenchmarkBuilders.equationCleanV3 — WsRun collapse then whitelist
@@ -71,9 +62,6 @@ object ConceptExtract {
 
   private def cleanEq(whitelist: Pattern, s: String): String =
     whitelist.matcher(WsRunP.matcher(s).replaceAll(" ")).replaceAll("").trim
-
-  @inline private def containsAnyLower(lo: String, terms: Seq[String]): Boolean =
-    terms.exists(lo.contains)
 
   // ====================================================================
   // V2 mirrors (constants shared with BenchmarkBuilders)
@@ -119,7 +107,7 @@ object ConceptExtract {
     Array(Array("thermodynamic"), Array("law")))
 
   private def physicsContentV2(s: String): Boolean =
-    containsAnyLower(sparkLower(s), V2PhysicsTerms) ||
+    V2PhysicsTerms.exists(sparkLower(s).contains) ||
       V2MathChars.exists(s.contains)
 
   private def meaningfulEquation(eq: String): Boolean =
@@ -145,7 +133,7 @@ object ConceptExtract {
     val nums = findAllGuarded(v2NumPs, V2NumAnchors, fold, text) { m =>
       val t = spaceTrim(m)
       if (digitP.matcher(t).find() &&
-        containsAnyLower(sparkLower(t), V2NumContexts) && t.length > 5)
+        V2NumContexts.exists(sparkLower(t).contains) && t.length > 5)
         Some(t) else None
     }
     val prins = findAllGuarded(v2PrinPs, V2PrinAnchors, fold, text)(
@@ -216,12 +204,12 @@ object ConceptExtract {
     val nums = findAllGuarded(v3NumPs, V3NumAnchors, fold, text) { m =>
       val t = spaceTrim(m)
       if (digitP.matcher(t).find() &&
-        containsAnyLower(sparkLower(t), V3NumContexts) && t.length > 4)
+        V3NumContexts.exists(sparkLower(t).contains) && t.length > 4)
         Some(t) else None
     }
     val scens = findAllGuarded(v3ScenPs, V3ScenAnchors, fold, text) { m =>
       val t = spaceTrim(m)
-      if (t.length > 25 && containsAnyLower(sparkLower(t), V3PhysicsTerms))
+      if (t.length > 25 && V3PhysicsTerms.exists(sparkLower(t).contains))
         Some(t) else None
     }
     new GenericInternalRow(Array[Any](

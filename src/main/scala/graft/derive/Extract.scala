@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -11,13 +13,6 @@ import org.apache.spark.sql.functions._
   * `(?i)`, `\Z` → `\z` (Python \Z is absolute end = Java \z).
   */
 object Extract {
-
-  private def hits(c: Column, pattern: String, group: Int = 0): Column =
-    when(c.isNull, array().cast("array<string>"))
-      .otherwise(regexp_extract_all(c, lit(pattern), lit(group)))
-
-  private def containsAny(c: Column, terms: Seq[String]): Column =
-    terms.map(t => c.contains(t)).reduce(_ || _)
 
   // ------------------------------------------------------------------
   // E10 — equation extraction (enhanced_paper_analyser.py:205-225):
@@ -33,7 +28,7 @@ object Extract {
   val EquationIndicator = "[Ee]quation?\\s*\\(\\d+\\)[^.]*[.!?]"
 
   def equationsArr(c: Column): Column =
-    slice(concat((LatexPatterns :+ EquationIndicator).map(hits(c, _)): _*), 1, 10)
+    slice(concat((LatexPatterns :+ EquationIndicator).map(hits(c, _, 0)): _*), 1, 10)
 
   def equations(c: Column): Column = array_join(equationsArr(c), "\n")
 
@@ -50,7 +45,7 @@ object Extract {
     "(?s)From.*?it follows that")
 
   def derivationsArr(c: Column): Column =
-    slice(concat(DerivationPatterns.map(hits(c, _)): _*), 1, 5)
+    slice(concat(DerivationPatterns.map(hits(c, _, 0)): _*), 1, 5)
 
   def derivations(c: Column): Column = array_join(derivationsArr(c), "\n")
 
@@ -67,7 +62,7 @@ object Extract {
     "[Ii]n the limit[^.]*?[.!?]")
 
   def assumptionsArr(c: Column): Column =
-    slice(concat(AssumptionPatterns.map(hits(c, _)): _*), 1, 10)
+    slice(concat(AssumptionPatterns.map(hits(c, _, 0)): _*), 1, 10)
 
   def assumptions(c: Column): Column = array_join(assumptionsArr(c), "\n")
 
@@ -160,7 +155,7 @@ object Extract {
 
   def reasoningStepsAnalyser(c: Column): Column = {
     val primary = concat(AnalyserStepPatterns.map(p =>
-      filter(transform(hits(c, p), m => trim(m)),
+      filter(transform(hits(c, p, 0), m => trim(m)),
         s => length(s) > 8 && length(s) < 250 && isMeaningfulStepAnalyser(s))): _*)
     val sentences = filter(
       transform(split(coalesce(c, lit("")), "[.!?]+"), s => trim(s)),
@@ -207,7 +202,7 @@ object Extract {
 
   def completeDerivations(c: Column): Column =
     slice(concat(CompleteDerivationPatterns.map(p =>
-      filter(hits(c, p),
+      filter(hits(c, p, 0),
         m => length(m) > 100 && length(m) < 2500 && containsEnglishPhysicsTerms(m))): _*),
       1, 7)
 
@@ -220,7 +215,7 @@ object Extract {
 
   def workedSolutions(c: Column): Column =
     slice(concat(WorkedSolutionPatterns.map(p =>
-      filter(hits(c, p),
+      filter(hits(c, p, 0),
         m => length(m) > 80 && length(m) < 1800 && containsEnglishPhysicsTerms(m))): _*),
       1, 7)
 
@@ -231,7 +226,7 @@ object Extract {
 
   def mathematicalProofs(c: Column): Column =
     slice(concat(ProofPatterns.map(p =>
-      filter(hits(c, p),
+      filter(hits(c, p, 0),
         m => length(m) > 100 && length(m) < 1200 && containsEnglishPhysicsTerms(m))): _*),
       1, 3)
 
@@ -330,7 +325,7 @@ object Extract {
     * keeps first occurrence — deterministic (documented divergence).
     */
   def concepts(c: Column): Column =
-    array_distinct(concat(ConceptPatterns.map(hits(c, _)): _*))
+    array_distinct(concat(ConceptPatterns.map(hits(c, _, 0)): _*))
 
   // ------------------------------------------------------------------
   // E16 — final-answer extraction (enhanced_training_builder.py:291-313):

@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -11,9 +13,6 @@ import graft.extract.Clean
   * Pure Catalyst throughout.
   */
 object Gates {
-
-  private def containsAny(c: Column, terms: Seq[String]): Column =
-    terms.map(t => c.contains(t)).reduce(_ || _)
 
   // ------------------------------------------------------------------
   // P9 — meaningful-equation predicate

@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -23,16 +25,6 @@ import org.apache.spark.sql.functions._
   * the reference logic.
   */
 object RlBuilder {
-
-  private def hits(c: Column, pattern: String, group: Int): Column =
-    when(c.isNull, array().cast("array<string>"))
-      .otherwise(regexp_extract_all(c, lit(pattern), lit(group)))
-
-  private def containsAny(c: Column, terms: Seq[String]): Column =
-    terms.map(t => c.contains(t)).reduce(_ || _)
-
-  private def cnt(c: Column, terms: Seq[String]): Column =
-    terms.map(t => when(c.contains(t), 1).otherwise(0)).reduce(_ + _)
 
   /** Positional zip of the per-group match lists (same battery → same
     * lengths; try_element_at for ANSI safety). The b/c sides are

@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import java.util.regex.Pattern
 
 import graft.extract.Clean.sparkLower
@@ -54,13 +56,6 @@ object RlExample {
 
   // ---- Spark-semantics helpers -------------------------------------
 
-  @inline private def spaceTrim(s: String): String = {
-    var a = 0; var b = s.length
-    while (a < b && s.charAt(a) == ' ') a += 1
-    while (b > a && s.charAt(b - 1) == ' ') b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
-
   @inline private def trimOrNull(s: String): String =
     if (s == null) null else spaceTrim(s)
 
@@ -70,17 +65,6 @@ object RlExample {
   /** `length(x) < n` under CaseWhen: null compares to false. */
   @inline private def lt(s: String, n: Int): Boolean =
     s != null && nchars(s) < n
-
-  private def groupHits(p: Pattern, s: String, g: Int): Array[String] = {
-    if (s == null) return Array.empty
-    val out = ArrayBuffer.empty[String]
-    val m = p.matcher(s)
-    while (m.find()) {
-      val x = m.group(g)
-      out += (if (x == null) "" else x)
-    }
-    out.toArray
-  }
 
   // ---- P8: meaningful-step predicate (Extract.isMeaningfulStep) ----
 

@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -22,14 +24,6 @@ object StepExtract {
     Extract.AnalyserStepPatterns.map(java.util.regex.Pattern.compile)
   private val sentSplit = java.util.regex.Pattern.compile("[.!?]+")
 
-  /** Spark `trim` semantics: strips ' ' only (NOT Java String.trim). */
-  @inline private def spaceTrim(s: String): String = {
-    var a = 0
-    var b = s.length
-    while (a < b && s.charAt(a) == ' ') a += 1
-    while (b > a && s.charAt(b - 1) == ' ') b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
 
   /** _is_meaningful_step mirror (enhanced_paper_analyser.py:951-966). */
   def isMeaningfulStep(s: String): Boolean = {

@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,16 +31,6 @@ import graft.functions.Let
   *     `_extract_physics_concepts` (E18/E21, already implemented).
   */
 object UgBuilders {
-
-  private def hits(c: Column, pattern: String, group: Int = 0): Column =
-    when(c.isNull, array().cast("array<string>"))
-      .otherwise(regexp_extract_all(c, lit(pattern), lit(group)))
-
-  private def containsAny(c: Column, terms: Seq[String]): Column =
-    terms.map(t => c.contains(t)).reduce(_ || _)
-
-  private def cnt(c: Column, terms: Seq[String]): Column =
-    terms.map(t => when(c.contains(t), 1).otherwise(0)).reduce(_ + _)
 
   /** Python max(xs, key=len) — FIRST element among maximal lengths. */
   private def firstLongest(arr: Column): Column =
@@ -369,7 +361,7 @@ Focus particularly on the application of: """),
 
   private def anchoredHits(guard: Column, text: Column,
                            pattern: String): Column =
-    when(guard, hits(text, pattern)).otherwise(array().cast("array<string>"))
+    when(guard, hits(text, pattern, 0)).otherwise(array().cast("array<string>"))
 
   /** Battery scans stay guarded Catalyst; the per-candidate clean +
     * completeness check runs as the fused UgCompleteDerivExpr (Column

@@ -1,5 +1,7 @@
 package graft.derive
 
+import DeriveHelpers._
+
 import java.util.regex.Pattern
 
 import graft.extract.Clean.sparkLower
@@ -33,28 +35,10 @@ object UgExample {
 
   // ---- shared helpers (see RlExample for the semantics notes) ------
 
-  @inline private def spaceTrim(s: String): String = {
-    var a = 0; var b = s.length
-    while (a < b && s.charAt(a) == ' ') a += 1
-    while (b > a && s.charAt(b - 1) == ' ') b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
-
   @inline private def nchars(s: String): Int =
     s.codePointCount(0, s.length)
 
   private val wsSplit = Pattern.compile("(?U)\\s+")
-
-  private def groupHits(p: Pattern, s: String, g: Int): Array[String] = {
-    if (s == null) return Array.empty
-    val out = ArrayBuffer.empty[String]
-    val m = p.matcher(s)
-    while (m.find()) {
-      val x = m.group(g)
-      out += (if (x == null) "" else x)
-    }
-    out.toArray
-  }
 
   // ---- Gates.isMeaningfulSentence / Gates.derivationClean ----------
 

@@ -219,48 +219,38 @@ object GraftFunctions {
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    if (Names.forall(n => reg.functionExists(FunctionIdentifier(n)))) return
-    def reg1(name: String, builder: Seq[Expression] => Expression): Unit =
+    if (Functions.forall(f => reg.functionExists(FunctionIdentifier(f._1)))) return
+    Functions.foreach { case (name, _, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "built-in")
-    reg1("pii_scrub", exprs => PiiScrubExpr(exprs.head))
-    reg1("graft_token_stats", exprs => graft.rules.TokenStatsExpr(exprs.head))
-    reg1("graft_pattern_counts",
-      exprs => graft.rules.PatternCountsExpr(exprs.head))
-    reg1("graft_basic_clean", exprs => BasicCleanExpr(exprs.head))
-    reg1("graft_perplexity", exprs => PerplexityExpr(exprs.head))
-    reg1("graft_simhash", exprs => graft.dedup.SimHashExpr(exprs.head))
-    reg1("graft_extract_clean", exprs => ExtractCleanExpr(exprs.head))
+    }
   }
 
-  /** Every name `register` installs — the idempotence probe set. */
-  private val Names = Seq("pii_scrub", "graft_token_stats",
-    "graft_pattern_counts", "graft_basic_clean", "graft_perplexity",
-    "graft_simhash", "graft_extract_clean")
+  /** The graft-native SQL functions, as (name, expression class,
+    * builder) — what `register` and `injectAll` install.
+    */
+  private val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("pii_scrub", classOf[PiiScrubExpr], e => PiiScrubExpr(e.head)),
+    ("graft_token_stats", classOf[graft.rules.TokenStatsExpr],
+      e => graft.rules.TokenStatsExpr(e.head)),
+    ("graft_pattern_counts", classOf[graft.rules.PatternCountsExpr],
+      e => graft.rules.PatternCountsExpr(e.head)),
+    ("graft_basic_clean", classOf[BasicCleanExpr], e => BasicCleanExpr(e.head)),
+    ("graft_perplexity", classOf[PerplexityExpr], e => PerplexityExpr(e.head)),
+    ("graft_simhash", classOf[graft.dedup.SimHashExpr],
+      e => graft.dedup.SimHashExpr(e.head)),
+    ("graft_extract_clean", classOf[ExtractCleanExpr], e => ExtractCleanExpr(e.head)))
 
   /** SparkSessionExtensions injection point (for spark-submit via
     * spark.sql.extensions=graft.functions.GraftExtensions) — registers
-    * the complete native-expression surface, mirroring `register`.
+    * the same native-expression surface as `register`.
     */
-  def injectAll(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    def inject(name: String, clazz: Class[_],
-               builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((
-        FunctionIdentifier(name),
+  def injectAll(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    Functions.foreach { case (name, clazz, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
           clazz.getName, name),
         builder))
-    inject("pii_scrub", classOf[PiiScrubExpr], e => PiiScrubExpr(e.head))
-    inject("graft_token_stats", classOf[graft.rules.TokenStatsExpr],
-      e => graft.rules.TokenStatsExpr(e.head))
-    inject("graft_pattern_counts", classOf[graft.rules.PatternCountsExpr],
-      e => graft.rules.PatternCountsExpr(e.head))
-    inject("graft_basic_clean", classOf[BasicCleanExpr], e => BasicCleanExpr(e.head))
-    inject("graft_perplexity", classOf[PerplexityExpr], e => PerplexityExpr(e.head))
-    inject("graft_simhash", classOf[graft.dedup.SimHashExpr],
-      e => graft.dedup.SimHashExpr(e.head))
-    inject("graft_extract_clean", classOf[ExtractCleanExpr],
-      e => ExtractCleanExpr(e.head))
-  }
+    }
 }
 
 /** `spark.sql.extensions` entry class. */

@@ -1,91 +1,33 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured Streaming face of the quality filter.
   *
   * The reference has no streaming (SURVEY.md §2.9) and the batch pipeline is
-  * the primary path; this module exists because every transformation in
-  * graft.Pipeline is NARROW (project/filter — no global sort,
-  * no cross-row state), so the identical plan runs unchanged on an unbounded
-  * `readStream` source. That property is itself worth a test: streaming
-  * micro-batches must produce byte-for-byte the batch pipeline's labels.
+  * the primary path. Every transformation in graft.Pipeline and the
+  * derive builders is NARROW (project/filter — no global sort, no
+  * cross-row state), so those batch functions run unchanged on an
+  * unbounded `readStream` source (StreamingSpec proves micro-batches ≡
+  * batch); this module holds only what needs a streaming-native form.
   *
-  * Also provided: watermarked per-window keep-rate aggregation (the
-  * monitoring stream a production filter runs next to the main sink).
+  * Provided: the curation chain's streaming face, watermarked
+  * per-window keep-rate aggregation (the monitoring stream a production
+  * filter runs next to the main sink), streaming exact dedup and
+  * per-domain running state.
   */
 object StreamingPipeline {
-
-  /** Apply the full scoring pipeline to a streaming docs_raw DataFrame.
-    * Works on any streaming source with the input_hint schema
-    * (url, warc_ts, html binary, ...).
-    */
-  def score(streamingDocs: DataFrame, spark: SparkSession): DataFrame =
-    graft.Pipeline.score(streamingDocs, spark)
-
-  /** Streaming face of the derived-dataset builders: the training-example
-    * and v3 benchmark batteries are NARROW plans (gate → per-row regexp
-    * batteries → explode), so they run unchanged on a scored stream —
-    * continuous training-data derivation next to the filter sink.
-    * StreamingDeriveSpec proves micro-batches ≡ batch rows.
-    */
-  def trainingExamplesStream(scoredStream: DataFrame): DataFrame =
-    graft.derive.Derive.trainingExamples(
-      scoredStream.withColumn("subject", lit("Physics")), "url", "text", "subject")
-
-  def benchmarkItemsV3Stream(scoredStream: DataFrame): DataFrame =
-    graft.derive.BenchmarkBuilders.benchmarkItemsV3(
-      scoredStream.withColumn("subject", lit("Physics")), "url", "text", "subject")
-
-  /** The RL (v2/v3) and UG training builders are the same narrow shape
-    * (gate → guarded batteries → fused per-candidate exprs → explode),
-    * so they stream unchanged too — StreamingDeriveSpec proves
-    * micro-batches ≡ batch for each.
-    */
-  def rlTrainingExamplesStream(scoredStream: DataFrame): DataFrame =
-    graft.derive.RlBuilder.rlTrainingExamples(
-      scoredStream.withColumn("subject", lit("Physics"))
-        .withColumn("title", lit("Physics paper")),
-      "url", "text", "subject", "title")
-
-  def rlTrainingExamplesV3Stream(scoredStream: DataFrame): DataFrame =
-    graft.derive.RlBuilder.rlTrainingExamplesV3(
-      scoredStream.withColumn("subject", lit("Physics"))
-        .withColumn("title", lit("Physics paper")),
-      "url", "text", "subject", "title")
-
-  def ugTrainingExamplesStream(scoredStream: DataFrame): DataFrame =
-    graft.derive.UgBuilders.ugTrainingExamples(
-      scoredStream.withColumn("subject", lit("Physics"))
-        .withColumn("title", lit("Physics paper")),
-      "url", "text", "subject", "title")
-
-  /** Gopher/C4 repetition + shape signals on a stream: one stateless
-    * Let-bound projection per row (the ComputeOnce Generate barrier is
-    * streaming-safe), so the q51 pre-filter runs unchanged ahead of the
-    * scoring sink. StreamingDeriveSpec proves micro-batches ≡ batch.
-    */
-  def gopherStatsStream(docsStream: DataFrame): DataFrame =
-    graft.functions.ComputeOnce(docsStream, "__g",
-      graft.rules.Heuristics.gopherStats(col("text")))
-      .select(col("url"),
-        col("__g.dup_line_frac").as("dup_line_frac"),
-        col("__g.dup_3gram_frac").as("dup_3gram_frac"),
-        col("__g.mean_word_len").as("mean_word_len"),
-        col("__g.symbol_ratio").as("symbol_ratio"),
-        col("__g.stopword_ratio").as("stopword_ratio"),
-        col("__g.gopher_keep").as("gopher_keep"))
 
   /** Streaming face of the composed curation chain (Curate.curationLog's
     * cheap-first order, re-expressed with streaming-native operators):
     *
     *   1. Gopher pre-filter — stateless narrow projection, unchanged.
-    *   2. Exact dedup — `dropDuplicates` on the md5 content key
-    *      (state-store-backed; the kept row is the FIRST ARRIVAL, the
-    *      honest streaming analog of the batch min-id keeper — a stream
-    *      cannot retro-swap an emitted survivor).
+    *   2. Exact dedup — [[streamingDedup]]: `dropDuplicates` on the md5
+    *      content key (state-store-backed; the kept row is the FIRST
+    *      ARRIVAL, the honest streaming analog of the batch min-id
+    *      keeper — a stream cannot retro-swap an emitted survivor).
     *   3. Near-dup — `dropDuplicates` on the 64-bit SimHash key: only
     *      documents whose full fingerprint collides are treated as
     *      near-dups. This is deliberately a CONSERVATIVE approximation
@@ -120,10 +62,7 @@ object StreamingPipeline {
         graft.rules.Heuristics.gopherStats(text))
       .filter(col("__g.gopher_keep"))
       .drop("__g")
-    val exact = gophered
-      .withColumn("__dup_key", md5(text.cast("binary")))
-      .dropDuplicates("__dup_key")
-      .drop("__dup_key")
+    val exact = streamingDedup(gophered, textCol).drop("dup_key")
     val near =
       if (!simhashNearDup) exact
       else exact.withColumn("__sim", graft.dedup.Dedup.simhash(text))

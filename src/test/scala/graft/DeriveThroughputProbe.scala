@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions._
 
 /** Dev probe, run manually: measures Derive.trainingExamples throughput on
   * a pre-materialized corpus (BENCH/BASELINE.md §3b).
-  * `sbt "testOnly graft.DeriveThroughputProbe"` — tagged as a plain test
-  * so it shares SparkTestBase; asserts only that examples are produced.
+  * Probe-tagged, so the default suite skips it; run it with the
+  * `-n graft.Probe` recipe in build.sbt. Asserts only that examples are
+  * produced.
   */
 class DeriveThroughputProbe extends SparkTestBase {
-  test("derive throughput probe (informational)") {
+  test("derive throughput probe (informational)", ProbeTag) {
     val dir = graft.fixtures.SynthCorpus.materializedCorpus(spark, 5000, 32)
     val corpus = spark.read.parquet(dir).withColumn("subject", lit("Physics"))
     def run(): (Long, Double) = {

@@ -19,7 +19,7 @@ class StreamingSpec extends SparkTestBase {
     stream.addData(docs.take(50))
     stream.addData(docs.drop(50))
 
-    val scored = StreamingPipeline.score(stream.toDF(), spark)
+    val scored = Pipeline.score(stream.toDF(), spark)
       .select("url", "lang", "overall_score", "keep")
     val q = scored.writeStream.format("memory")
       .queryName("scored_stream").outputMode("append").start()
@@ -39,7 +39,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = MemoryStream[WebDoc]
     stream.addData((0L until 40L).map(SynthCorpus.docFor))
     val agg = StreamingPipeline.keepRateByWindow(
-      StreamingPipeline.score(stream.toDF(), spark))
+      Pipeline.score(stream.toDF(), spark))
     val q = agg.writeStream.format("memory")
       .queryName("keeprate_stream").outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -64,7 +64,7 @@ class StreamingStateSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val docs = (0L until 80L).map(SynthCorpus.docFor)
     val stream = MemoryStream[WebDoc]
-    val scored = StreamingPipeline.score(stream.toDF(), spark)
+    val scored = Pipeline.score(stream.toDF(), spark)
     val updates = StreamingPipeline.domainRunningStats(scored)
     val q = updates.writeStream.format("memory")
       .queryName("domain_state_stream").outputMode("append").start()
@@ -90,7 +90,9 @@ class StreamingDeriveSpec extends SparkTestBase {
   import spark.implicits._
   import graft.fixtures.SynthCorpus
   import graft.model.WebDoc
-  import graft.streaming.StreamingPipeline
+  import graft.derive.{BenchmarkBuilders, Derive, RlBuilder, UgBuilders}
+  import graft.functions.ComputeOnce
+  import graft.rules.Heuristics
   import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
   test("streaming training examples and v3 benchmark items equal batch") {
@@ -100,12 +102,13 @@ class StreamingDeriveSpec extends SparkTestBase {
     stream.addData(docs.take(70))
     stream.addData(docs.drop(70))
 
-    val scoredStream = StreamingPipeline.score(stream.toDF(), spark)
-    val q1 = StreamingPipeline.trainingExamplesStream(scoredStream)
+    val scoredStream = Pipeline.score(stream.toDF(), spark)
+      .withColumn("subject", lit("Physics"))
+    val q1 = Derive.trainingExamples(scoredStream, "url", "text", "subject")
       .select("id", "example_type", "difficulty", "quality_score")
       .writeStream.format("memory").queryName("train_stream")
       .outputMode("append").start()
-    val q2 = StreamingPipeline.benchmarkItemsV3Stream(scoredStream)
+    val q2 = BenchmarkBuilders.benchmarkItemsV3(scoredStream, "url", "text", "subject")
       .select("problem_id", "type", "difficulty")
       .writeStream.format("memory").queryName("bench_stream")
       .outputMode("append").start()
@@ -113,13 +116,14 @@ class StreamingDeriveSpec extends SparkTestBase {
     finally { q1.stop(); q2.stop() }
 
     val scoredBatch = Pipeline.score(docs.toDF(), spark)
-    val trainBatch = StreamingPipeline.trainingExamplesStream(scoredBatch)
+      .withColumn("subject", lit("Physics"))
+    val trainBatch = Derive.trainingExamples(scoredBatch, "url", "text", "subject")
       .select("id", "example_type", "difficulty", "quality_score")
       .collect().map(_.toSeq).toSet
     val trainStreamed = spark.table("train_stream").collect().map(_.toSeq).toSet
     assert(trainStreamed.nonEmpty && trainStreamed == trainBatch)
 
-    val benchBatch = StreamingPipeline.benchmarkItemsV3Stream(scoredBatch)
+    val benchBatch = BenchmarkBuilders.benchmarkItemsV3(scoredBatch, "url", "text", "subject")
       .select("problem_id", "type", "difficulty")
       .collect().map(_.toSeq).toSet
     val benchStreamed = spark.table("bench_stream").collect().map(_.toSeq).toSet
@@ -132,13 +136,15 @@ class StreamingDeriveSpec extends SparkTestBase {
     val stream = MemoryStream[WebDoc]
     stream.addData(docs.take(50))
     stream.addData(docs.drop(50))
-    val scoredStream = StreamingPipeline.score(stream.toDF(), spark)
-    val q = StreamingPipeline.gopherStatsStream(scoredStream)
+    val scoredStream = Pipeline.score(stream.toDF(), spark)
+    val q = ComputeOnce(scoredStream, "__g", Heuristics.gopherStats(col("text")))
+      .select(col("url"), col("__g.*"))
       .writeStream.format("memory").queryName("gopher_stream")
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    val batch = StreamingPipeline.gopherStatsStream(
-      Pipeline.score(docs.toDF(), spark)).collect().map(_.toSeq).toSet
+    val batch = ComputeOnce(Pipeline.score(docs.toDF(), spark), "__g",
+        Heuristics.gopherStats(col("text")))
+      .select(col("url"), col("__g.*")).collect().map(_.toSeq).toSet
     val streamed = spark.table("gopher_stream").collect().map(_.toSeq).toSet
     assert(streamed == batch)
     assert(batch.nonEmpty)
@@ -151,13 +157,18 @@ class StreamingDeriveSpec extends SparkTestBase {
     stream.addData(docs.take(70))
     stream.addData(docs.drop(70))
 
-    val scoredStream = StreamingPipeline.score(stream.toDF(), spark)
+    val scoredStream = Pipeline.score(stream.toDF(), spark)
+      .withColumn("subject", lit("Physics"))
+      .withColumn("title", lit("Physics paper"))
     val faces = Seq(
-      ("rl_v2_stream", StreamingPipeline.rlTrainingExamplesStream(scoredStream)
+      ("rl_v2_stream", RlBuilder.rlTrainingExamples(scoredStream,
+          "url", "text", "subject", "title")
         .select("id", "example_type", "step_count", "difficulty")),
-      ("rl_v3_stream", StreamingPipeline.rlTrainingExamplesV3Stream(scoredStream)
+      ("rl_v3_stream", RlBuilder.rlTrainingExamplesV3(scoredStream,
+          "url", "text", "subject", "title")
         .select("id", "example_type", "difficulty")),
-      ("ug_stream", StreamingPipeline.ugTrainingExamplesStream(scoredStream)
+      ("ug_stream", UgBuilders.ugTrainingExamples(scoredStream,
+          "url", "text", "subject", "title")
         .select("id", "example_type", "step_count", "difficulty", "topic")))
     val queries = faces.map { case (name, df) =>
       df.writeStream.format("memory").queryName(name)
@@ -167,12 +178,14 @@ class StreamingDeriveSpec extends SparkTestBase {
     finally queries.foreach(_.stop())
 
     val scoredBatch = Pipeline.score(docs.toDF(), spark)
+      .withColumn("subject", lit("Physics"))
+      .withColumn("title", lit("Physics paper"))
     val batch = Seq(
-      StreamingPipeline.rlTrainingExamplesStream(scoredBatch)
+      RlBuilder.rlTrainingExamples(scoredBatch, "url", "text", "subject", "title")
         .select("id", "example_type", "step_count", "difficulty"),
-      StreamingPipeline.rlTrainingExamplesV3Stream(scoredBatch)
+      RlBuilder.rlTrainingExamplesV3(scoredBatch, "url", "text", "subject", "title")
         .select("id", "example_type", "difficulty"),
-      StreamingPipeline.ugTrainingExamplesStream(scoredBatch)
+      UgBuilders.ugTrainingExamples(scoredBatch, "url", "text", "subject", "title")
         .select("id", "example_type", "step_count", "difficulty", "topic"))
     faces.map(_._1).zip(batch).foreach { case (name, b) =>
       val streamed = spark.table(name).collect().map(_.toSeq).toSet
