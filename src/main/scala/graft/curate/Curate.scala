@@ -71,6 +71,11 @@ object Curate {
 
   /** Shared chain plumbing: gopher-annotated frame + the loser list.
     *
+    * Only keys move between the stages: each loser list (the exact
+    * losers, then exact ∪ near) is a key-only `(idCol, stage)` frame
+    * held once by [[keyList]], so while the lists fit the driver budget
+    * no exchange of the chain carries the document text.
+    *
     * @return (gophered, losers): `gophered` is `docs` plus a `__keep`
     *         gopher-keep boolean; `losers` is (idCol, stage) for
     *         every document dropped by stage 2 or 3 — stage 2 losers
@@ -94,7 +99,7 @@ object Curate {
       .withColumn("__keep", coalesce(col("__g.gopher_keep"), lit(false)))
       .drop("__g")
     // materialize: the chain references this frame from several branches
-    // (exact-dedup window, pair generation, final labeling) — each
+    // (exact-dedup aggregate, pair generation, final labeling) — each
     // re-runs the upstream scan + extraction + gopher pass (~8 s per
     // evaluation on the 20k-doc raw corpus). When the working set fits
     // executor storage (corpus ≪ memory), one eager localCheckpoint
@@ -110,13 +115,13 @@ object Curate {
     // text). Its null-text sentinel makes stage 2 correct on its own:
     // today stage 1 already drops null text (gopher signals are null ⇒
     // keep=false), but stage 2 must not depend on stage 1's ordering.
-    val exactLosers = Dedup.exactLosers(gopherKept, idCol, textCol)
-      .select(id, lit(StageExactDup).as("stage"))
+    val exactLosers = keyList(Dedup.exactLosers(gopherKept, idCol, textCol)
+      .select(id, lit(StageExactDup).as("stage")), collectThreshold)
 
     // stage 3 input: exact-dedup survivors, text column pruned to what
     // pair generation needs
     val exactKept = gopherKept.select(id, text)
-      .join(exactLosers.select(id), Seq(idCol), "left_anti")
+      .join(exactLosers, Seq(idCol), "left_anti")
     val pairs = strategy match {
       case "exact" =>
         // exhaustive prefix-filtered all-pairs: every J ≥ t pair found —
@@ -147,7 +152,25 @@ object Curate {
 
     // disjoint by construction: near-dup pairs are generated among exact
     // KEEPERS only, so no id carries two loser labels
-    (gophered, exactLosers.unionByName(nearLosers))
+    (gophered, keyList(exactLosers.unionByName(nearLosers), collectThreshold))
+  }
+
+  /** A key-only loser list, computed once: a lazy local checkpoint whose
+    * first reader stores its blocks, so every later join reads them
+    * instead of re-running the dedup plan. When the list has at most
+    * `collectThreshold` rows (one `count` both sizes and stores it), it
+    * is hinted to broadcast: a join against it then runs in the probe
+    * side's own partitions and never shuffles the document text (a
+    * shuffled labeling join moves the full-width frame, and AQE may
+    * coalesce that shuffle — the scorer after it included — into one
+    * task). Above the threshold (or at 0) the planner's shuffled join
+    * stays: the 100-TB path, with no count. Blocks are freed by the
+    * ContextCleaner when the frame is GC'd.
+    */
+  private def keyList(list: DataFrame, collectThreshold: Int): DataFrame = {
+    val held = list.localCheckpoint(eager = false)
+    if (collectThreshold > 0 && held.count() <= collectThreshold) broadcast(held)
+    else held
   }
 
   /** The auditable per-document decision log: ONE row per input document
@@ -160,6 +183,13 @@ object Curate {
     *
     * An input frame carrying one of [[ReservedColumns]] is rejected
     * with an IllegalArgumentException naming the column.
+    *
+    * @param collectThreshold the chain's driver budget, in rows (also for
+    *        [[curated]] and [[full]]): the near-dup pair graph is union-
+    *        found on the driver when it has at most this many edges, and
+    *        a loser list is broadcast to its joins when it has at most
+    *        this many rows. Above it (or at 0) both stay distributed: the
+    *        HashMin loop and shuffled joins.
     */
   def curationLog(docs: DataFrame, idCol: String, textCol: String,
                   collectThreshold: Int = 1 << 20,
@@ -197,7 +227,7 @@ object Curate {
       collectThreshold, materialize, strategy)
     gophered.filter(col("__keep"))
       .drop("__keep")
-      .join(losers.select(col(idCol)), Seq(idCol), "left_anti")
+      .join(losers, Seq(idCol), "left_anti")
       .withColumn("scrubbed", PiiScrub.scrub(col(textCol)))
   }
 

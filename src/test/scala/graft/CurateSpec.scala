@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.curate.Curate
 
 /** The composed curation chain: stage attribution on planted documents,
@@ -9,8 +14,37 @@ import graft.curate.Curate
   * kept rows, and the face equivalences (curated ≡ curationLog-kept;
   * full ≡ curate-then-score).
   */
-class CurateSpec extends SparkTestBase {
+class CurateSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  /** Shuffle exchanges in `df`'s executed (final adaptive) plan whose
+    * output carries the `text` column; call after an action on `df`.
+    */
+  private def textShuffles(df: DataFrame) =
+    collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeLike if e.output.exists(_.name == "text") => e
+    }
+
+  /** Executed plans (as strings) of every query that finishes while
+    * `body` runs — including the chain's own checkpoint and count queries.
+    */
+  private def plansOfEveryQuery[T](body: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (out, plans.toArray(Array.empty[String]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   /** ~40 natural-looking words with a seeded shuffle — passes every
     * gopher gate and shares no 3-gram run with other seeds' docs.
@@ -145,54 +179,80 @@ class CurateSpec extends SparkTestBase {
   }
 
   test("AQE broadcasts the loser-labeling join when the loser set is small") {
-    // the scaladoc's scale claim: the loser ids come back via a join
-    // that AQE converts to broadcast whenever the dup rate is low (the
-    // common crawl-snapshot case) — so labeling needs NO shuffle of the
-    // document text. Assert it on the final adaptive plan.
+    // the scaladoc's scale claim: a loser list within the driver budget
+    // is broadcast, so labeling needs NO shuffle of the document text.
+    // Assert it on the final adaptive plan, both where losers exist and
+    // where the loser list is empty (an all-unique corpus).
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val log = Curate.curationLog(docs, "doc_id", "text")
-    // collect(), not head(): head() plans a SEPARATE limited query
-    assert(log.collect().length == docs.count())
-    val finalPlan = log.queryExecution.executedPlan.toString
-    assert(finalPlan.contains("BroadcastHashJoin"),
-      s"loser join should broadcast under AQE; plan:\n${finalPlan.take(4000)}")
+    val unique = (1 to 40).map(i => (i.toLong, prose(100 + i)))
+      .toDF("doc_id", "text")
+    Seq("sf0.001" -> docs, "all-unique" -> unique).foreach { case (name, in) =>
+      val log = Curate.curationLog(in, "doc_id", "text")
+      // collect(), not head(): head() plans a SEPARATE limited query
+      val stages = log.collect().map(_.getString(1))
+      assert(stages.length == in.count(), name)
+      val losers = stages.count(s =>
+        s == Curate.StageExactDup || s == Curate.StageNearDup)
+      if (name == "sf0.001") assert(losers > 0, "sf0.001 has duplicates")
+      else assert(losers == 0, "the all-unique corpus has no losers")
+      val shuffled = textShuffles(log)
+      assert(shuffled.isEmpty,
+        s"$name: labeling must not shuffle the text; exchanges:\n" +
+          shuffled.mkString("\n").take(4000))
+    }
   }
 
   test("exact-dedup stage is map-side-combinable: mega-dup group, no window") {
     // round-5 verdict #1: a page duplicated 10^5+ times must collapse in
     // a partial aggregate on the fingerprint, never co-locate as one
     // window partition. Plant one mega-duplicated text and assert (a)
-    // the labels, (b) the plan shape: a HashAggregate keyed on the
+    // the labels, (b) the plan shape over EVERY query the chain runs
+    // (the exact losers are computed once, in the chain's checkpoint
+    // query, not in the log's final plan): a HashAggregate keyed on the
     // fingerprint with partial_min, and NO Window node anywhere on the
-    // exact-dedup path (the only windows in the chain plan belong to the
-    // pair-generation caps, which never see the mega-group — exact
+    // exact-dedup path (the only windows in the chain's plans belong to
+    // the pair-generation caps, which never see the mega-group — exact
     // losers are removed before pair generation).
     val mega = spark.range(0, 100000).select(col("id").as("doc_id"),
         lit(proseA).as("text"))
       .unionByName(Seq((200000L, proseB), (200001L, proseB + " extra tail"))
         .toDF("doc_id", "text"))
-    val log = Curate.curationLog(mega, "doc_id", "text")
-    val stages = log.groupBy("stage").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (stages, plans) = plansOfEveryQuery {
+      Curate.curationLog(mega, "doc_id", "text")
+        .groupBy("stage").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     assert(stages(Curate.StageExactDup) == 99999L)
     assert(stages(Curate.StageNearDup) == 1L)
     assert(stages(Curate.StageKept) == 2L) // doc 0 and doc 200000
-    val plan = log.queryExecution.executedPlan.toString
-    assert(plan.matches("(?s).*HashAggregate\\(keys=\\[__fp[#\\d]*\\]" +
-      ".*partial_min.*"),
-      s"expected a partial aggregate on the fingerprint; plan:\n${plan.take(4000)}")
-    val windowsOnFp = plan.linesIterator
-      .filter(_.contains("Window")).filter(_.contains("__fp")).toSeq
+    assert(plans.exists(_.matches("(?s).*HashAggregate\\(keys=\\[__fp[#\\d]*\\]" +
+      ".*partial_min.*")),
+      s"expected a partial aggregate on the fingerprint; plans:\n" +
+        plans.mkString("\n----\n").take(8000))
+    val windowsOnFp = plans.flatMap(_.linesIterator)
+      .filter(_.contains("Window")).filter(_.contains("__fp"))
     assert(windowsOnFp.isEmpty,
       s"exact-dedup path must not use a window over the fingerprint: $windowsOnFp")
   }
 
   test("forced distributed components path labels identically") {
     // collectThreshold=0 forces the HashMin+jump loop inside the chain
+    // AND the shuffled loser joins; the planted corpus has exact and
+    // near losers, so both joins carry rows on both paths
     val viaLoop = Curate.curationLog(corpus, "doc_id", "text",
         collectThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(viaLoop == log.map { case (k, (s, _)) => k -> s })
+    assert(viaLoop.values.toSet.contains(Curate.StageExactDup))
+    assert(viaLoop.values.toSet.contains(Curate.StageNearDup))
+    val curatedLoop = Curate.curated(corpus, "doc_id", "text",
+      collectThreshold = 0)
+    val curatedBcast = Curate.curated(corpus, "doc_id", "text")
+    val rowsLoop = curatedLoop.collect().map(_.toSeq).toSet
+    assert(rowsLoop == curatedBcast.collect().map(_.toSeq).toSet)
+    // the two runs took different join forms
+    assert(textShuffles(curatedLoop).nonEmpty)
+    assert(textShuffles(curatedBcast).isEmpty)
   }
 
   test("an input column named like a chain column fails fast, naming it") {
