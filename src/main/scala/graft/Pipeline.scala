@@ -7,6 +7,7 @@ import graft.extract.{Clean, HtmlText}
 import graft.lang.LangId
 import graft.rules.Heuristics
 import graft.score.{Perplexity, Score, Stages}
+import graft.scrub.PiiScrub
 
 /** The quality-filter pipeline composition (SURVEY.md §3.4, §7.2).
   *
@@ -71,7 +72,7 @@ object Pipeline {
   def scoreExtracted(extracted: DataFrame, spark: SparkSession): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
 
-    // P4: langid (fastText-style hashed n-gram model, broadcast).
+    // P4: langid (fastText-style hashed n-gram model, JVM-static).
     val withLang = LangId.withLangNgram(extracted, "text", "lang", spark)
 
     // E2–E9 as one struct + cheap gates. The tokenize-and-count core and
@@ -122,10 +123,8 @@ object Pipeline {
           col("dim_logical_consistency"), col("dim_literature_integration")))
 
     // M3 + M4 + P1 + C13: recommendation, overall score, keep label, scrub.
-    // The scrub runs as the native single-pass Catalyst expression
-    // (graft.functions.PiiScrubExpr) — one string boundary crossing instead
-    // of six chained regexp_replace materializations; identical output by
-    // construction (both run PiiScrub's compiled battery).
+    // The scrub is the native PiiScrubExpr: one string boundary crossing,
+    // and only the regex passes whose required literal occurs in the row.
     withDims
       .withColumn("recommendation",
         Stages.recommendation(col("stage1_pass"), col("sophistication"), col("avg_stage2")))
@@ -133,7 +132,7 @@ object Pipeline {
         Score.overall(col("stage1_pass"), col("sophistication"),
           col("avg_stage2"), col("recommendation")))
       .withColumn("keep", Score.keep(col("overall_score")))
-      .withColumn("scrubbed_text", call_function("pii_scrub", col("text")))
+      .withColumn("scrubbed_text", PiiScrub.scrub(col("text")))
   }
 
   /** Canonical docs_raw synthesis from the driver's `documents` table —

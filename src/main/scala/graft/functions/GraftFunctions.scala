@@ -12,26 +12,24 @@ import graft.scrub.PiiScrub
 /** C13 as a native Catalyst expression (SURVEY.md §2.3 C13: "custom
   * Catalyst Expression (codegen-friendly, compile-once-per-task)").
   *
-  * Compared to the 6-deep `regexp_replace` chain, this evaluates the whole
-  * PII/toxicity battery in ONE expression node: one UTF8String→String
-  * conversion in, one out, patterns compiled once per JVM (static), and a
-  * `doGenCode` body that stays inside whole-stage codegen (a single static
-  * call — no virtual dispatch, no per-row pattern lookup).
-  *
-  * Semantics are identical to PiiScrub.scrub by construction — both sides
-  * call the same compiled battery (`PiiScrub.scrubStr`).
+  * The whole PII/toxicity battery in ONE expression node: one
+  * UTF8String→String conversion in, one out, patterns compiled once per
+  * JVM (static), and a `doGenCode` body that stays inside whole-stage
+  * codegen (a single static call — no virtual dispatch, no per-row
+  * pattern lookup). It runs `PiiScrub.scrubKernel`, which the parity
+  * specs hold equal to the plain chain `PiiScrub.scrubStr`.
   */
 case class PiiScrubExpr(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = StringType
 
   override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(PiiScrub.scrubStr(input.asInstanceOf[UTF8String].toString))
+    UTF8String.fromString(PiiScrub.scrubKernel(input.asInstanceOf[UTF8String].toString))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
       s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.scrub.PiiScrub.scrubStr($c.toString()))")
+        s"graft.scrub.PiiScrub.scrubKernel($c.toString()))")
 
   override protected def withNewChildInternal(newChild: Expression): PiiScrubExpr =
     copy(child = newChild)

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *    hashed trigram features → per-language weight table → argmax. The
   *    weight table is built deterministically from embedded per-language
   *    marker lexicons (no training data exists in the sandbox; the model is
-  *    a fixed, reproducible profile). It is broadcast once to executors;
-  *    rows never visit the driver.
+  *    a fixed, reproducible profile). Each JVM holds one lazily built
+  *    instance (`Shared`); rows never visit the driver.
   */
 object LangId {
 
@@ -86,7 +86,7 @@ object LangId {
 
   val Languages: Array[String] = Lexicons.map(_._1).toArray
 
-  /** The broadcastable model: flat weight matrix [lang][bucket]. */
+  /** The model: flat weight matrix [lang][bucket]. */
   final case class NgramModel(dim: Int, langs: Array[String],
                               weights: Array[Array[Float]]) extends Serializable {
     /** Classify one text sample. Returns language code or "und".
@@ -160,14 +160,19 @@ object LangId {
     NgramModel(dim, Languages, weights)
   }
 
-  /** Apply the model over a DataFrame: broadcast once, predict per row.
-    * Adds `langCol` from `textCol`. Driver-light: only the (dim × langs)
-    * float table ships; rows never visit the driver.
+  /** JVM-static instance, as `Perplexity.Shared`: the model is built from
+    * code-embedded data, so each JVM builds it once, lazily, and no call
+    * ships or re-builds the (dim × langs) float table.
+    */
+  lazy val Shared: NgramModel = buildModel()
+
+  /** Apply the model over a DataFrame, predicting per row on the executors.
+    * Adds `langCol` from `textCol`; rows never visit the driver. `spark` is
+    * not used.
     */
   def withLangNgram(df: DataFrame, textCol: String, langCol: String,
                     spark: SparkSession): DataFrame = {
-    val model = spark.sparkContext.broadcast(buildModel())
-    val predictUdf = udf((t: String) => model.value.predict(t))
+    val predictUdf = udf((t: String) => Shared.predict(t))
     df.withColumn(langCol, predictUdf(col(textCol)))
   }
 }

@@ -89,30 +89,102 @@ object TokenStats {
 /** Fused pattern-count battery (E3 math expressions + E4 references + E8
   * equation battery): the Catalyst form runs 10 `regexp_extract_all` passes
   * per row, each MATERIALIZING every match string just to take the array
-  * size. This runs the same 10 precompiled patterns with find()-only loops —
-  * no substring extraction, one UTF8String→String conversion total.
+  * size. This counts the same matches with no substring extraction and one
+  * UTF8String→String conversion total. A pattern whose required literal is
+  * absent is skipped (its count is 0); the others are tried only where a
+  * match can start. `\$[^$]+\$` opens both E3 and E8 and is counted once.
   * Patterns and counting semantics identical to Heuristics (parity-tested).
   */
 object PatternCounts {
+  import java.util.regex.Pattern
 
-  private val mathPs = Heuristics.MathPatterns.map(java.util.regex.Pattern.compile)
-  private val refP = java.util.regex.Pattern.compile(Heuristics.RefPatternBasic)
-  private val eqPs = Heuristics.EquationPatterns.map(java.util.regex.Pattern.compile)
+  // E3 and E8 share their first pattern, inline math.
+  require(Heuristics.MathPatterns.head == Heuristics.EquationPatterns.head)
+  private val Seq(inlineRe, commandRe, decimalRe) = Heuristics.MathPatterns
+  private val Seq(_, displayRe, assignmentRe, fracRe, integralRe, sumRe) =
+    Heuristics.EquationPatterns
 
-  @inline private def countOf(p: java.util.regex.Pattern, s: String): Long = {
-    val m = p.matcher(s)
+  private final val InlineMath = 0
+  private final val Command = 1
+  private final val Decimal = 2
+  private final val Reference = 3
+  private final val DisplayMath = 4
+  private final val Assignment = 5
+  private final val Frac = 6
+  private final val Integral = 7
+  private final val Sum = 8
+  private val patterns: Array[Pattern] = Array(inlineRe, commandRe, decimalRe,
+    Heuristics.RefPatternBasic, displayRe, assignmentRe, fracRe, integralRe, sumRe)
+    .map(Pattern.compile)
+
+  @inline private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  /** Java's `\s` without UNICODE_CHARACTER_CLASS: [ \t\n\x0B\f\r]. */
+  @inline private def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Whether a match of pattern k can start at `i`, read off its head: '$',
+    * '\', a digit, '[' or '('; an assignment is an ASCII letter whose next
+    * non-`\s` char is '='.
+    */
+  private def canStart(k: Int, s: String, i: Int): Boolean = {
+    val c = s.charAt(i)
+    k match {
+      case InlineMath | DisplayMath => c == '$'
+      case Command | Frac | Integral | Sum => c == '\\'
+      case Decimal => isDigit(c)
+      case Reference => c == '[' || c == '('
+      case Assignment =>
+        ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')) && {
+          var j = i + 1
+          while (j < s.length && isSpace(s.charAt(j))) j += 1
+          j < s.length && s.charAt(j) == '='
+        }
+    }
+  }
+
+  /** Matches of pattern k, as a `find()` loop counts them (every match of
+    * these patterns is non-empty).
+    */
+  private def countOf(k: Int, s: String): Long = {
+    val m = patterns(k).matcher(s)
+    val at = (i: Int) => canStart(k, s, i)
     var c = 0L
-    while (m.find()) c += 1
+    var from = 0
+    while (graft.functions.AnchoredFind.find(m, s, from, at)) {
+      c += 1
+      from = m.end()
+    }
     c
+  }
+
+  /** An ASCII digit, '.', an ASCII digit: required by `[0-9]+\.[0-9]+`. */
+  private def hasDecimal(s: String): Boolean = {
+    var i = s.indexOf('.', 1)
+    while (i >= 0 && i + 1 < s.length) {
+      if (isDigit(s.charAt(i - 1)) && isDigit(s.charAt(i + 1))) return true
+      i = s.indexOf('.', i + 1)
+    }
+    false
   }
 
   /** (math_expressions, reference_count, equation_count) in one call. */
   def compute(s: String): Array[Long] = {
-    if (s == null || s.isEmpty) return new Array[Long](3)
     val out = new Array[Long](3)
-    mathPs.foreach(p => out(0) += countOf(p, s))
-    out(1) = countOf(refP, s)
-    eqPs.foreach(p => out(2) += countOf(p, s))
+    if (s == null || s.isEmpty) return out
+    val dollar = s.indexOf('$') >= 0
+    val backslash = s.indexOf('\\') >= 0
+    val inline = if (dollar) countOf(InlineMath, s) else 0L
+    out(0) = inline +
+      (if (backslash) countOf(Command, s) else 0L) +
+      (if (hasDecimal(s)) countOf(Decimal, s) else 0L)
+    out(1) =
+      if (s.indexOf('[') >= 0 || s.indexOf('(') >= 0) countOf(Reference, s) else 0L
+    out(2) = inline +
+      (if (dollar && s.contains("$$")) countOf(DisplayMath, s) else 0L) +
+      (if (s.indexOf('=') >= 0) countOf(Assignment, s) else 0L) +
+      (if (backslash && s.contains("\\frac{")) countOf(Frac, s) else 0L) +
+      (if (backslash && s.contains("\\int")) countOf(Integral, s) else 0L) +
+      (if (backslash && s.contains("\\sum")) countOf(Sum, s) else 0L)
     out
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.scrub.PiiScrub
@@ -12,19 +13,34 @@ class FunctionsSpec extends SparkTestBase {
 
   GraftFunctions.register(spark)
 
+  /** The battery as Spark's own `regexp_replace` chain: the reference the
+    * native expression is compared against.
+    */
+  private def scrubChain(c: Column): Column = {
+    val pii = PiiScrub.Battery.foldLeft(c) { case (acc, (p, r)) => regexp_replace(acc, p, r) }
+    regexp_replace(pii, PiiScrub.ToxicPattern, "<TOXIC>")
+  }
+
   private val inputs = Seq(
     "mail me at john.doe+x@sub.example.co.uk today",
     "server 10.0.255.7 and 192.168.1.1 up",
     "call +1 (555) 123-4567 or 555-867-5309",
     "card 4111111111111111 and ssn 123-45-6789",
-    "Idiot and MORON both", "clean text", "")
+    "Idiot and MORON both", "clean text", "",
+    "a@b.com1x@c.org", "a@b.co@c.de", "@x.org a@ @@ x@@y.com me@192.168.1.1",
+    "1234567890123 12345678901234567890 555 12-3 (55)1234",
+    "\u212Aill yourself \u0130diot HaTe")
 
   test("pii_scrub expression equals the regexp_replace chain") {
     val df = inputs.toDF("t")
     val rows = df.select(
       call_function("pii_scrub", col("t")).as("native"),
-      PiiScrub.scrub(col("t")).as("chain")).collect()
-    rows.foreach(r => assert(r.getString(0) == r.getString(1)))
+      PiiScrub.scrub(col("t")).as("column"),
+      scrubChain(col("t")).as("chain")).collect()
+    rows.foreach { r =>
+      assert(r.getString(0) == r.getString(2), s"<${r.getString(2)}>")
+      assert(r.getString(1) == r.getString(2), s"<${r.getString(2)}>")
+    }
   }
 
   test("pii_scrub works via SQL and handles NULL") {
