@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
-import graft.extract.{Clean, HtmlText}
+import graft.functions.{ExtractCleanExpr, PerplexityExpr}
 import graft.lang.LangId
-import graft.rules.Heuristics
+import graft.rules.{Heuristics, PatternCountsExpr, TokenStatsExpr}
 import graft.score.{Perplexity, Score, Stages}
 import graft.scrub.PiiScrub
 
@@ -38,29 +39,31 @@ object Pipeline {
     val isVixra = lower(url).contains("vixra")
     val enThreshold = when(isVixra, 2).otherwise(3)
     val termThreshold = when(isVixra, 1).otherwise(2)
-    val sample = lower(substring(text, 1, 1000))
+    val sample = Heuristics.lowerPrefix(text, 1000)
     Heuristics.minLength(text, minLen) &&
       (LangId.englishStopwordCount(text) >= enThreshold) &&
-      ((Heuristics.containsMembershipCount(sample, Heuristics.PhysicsIndicators) +
-        Heuristics.containsMembershipCount(sample, Heuristics.VixraIndicators)) >= termThreshold)
+      ((Heuristics.termCount(sample, Heuristics.PhysicsIndicators) +
+        Heuristics.termCount(sample, Heuristics.VixraIndicators)) >= termThreshold)
   }
+
+  /** A graft-native expression over `c`; needs no function registration. */
+  private def native(expr: Expression => Expression, c: Column): Column =
+    GraftColumnBridge.column(expr(GraftColumnBridge.expression(c)))
+
+  /** E1 + C1: extraction and basic clean — THE byte-identical surface.
+    * Fused into ONE scan (ExtractCleanExpr): html bytes → cleaned `text`,
+    * no intermediate extraction string, no separate clean pass (the
+    * chained extractCol + graft_basic_clean forms remain and are
+    * equality-tested against this). The html blob is dropped immediately
+    * after: it would otherwise be serialized onward (4KB+/row of pure
+    * memory traffic — at 10^12 docs that is petabytes).
+    */
+  def extract(docsRaw: DataFrame): DataFrame =
+    docsRaw.withColumn("text", native(ExtractCleanExpr(_), col("html"))).drop("html")
 
   /** Full scoring pipeline: docs_raw → docs_scored. */
-  def score(docsRaw: DataFrame, spark: SparkSession): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-
-    // E1 + C1: extraction and basic clean — THE byte-identical surface.
-    // Fused into ONE scan (ExtractCleanExpr): html bytes → cleaned text,
-    // no intermediate extraction string, no separate clean pass (the
-    // chained extractCol + graft_basic_clean forms remain and are
-    // equality-tested against this). The html blob is dropped immediately
-    // after: it would otherwise be serialized onward (4KB+/row of pure
-    // memory traffic — at 10^12 docs that is petabytes).
-    val extracted = docsRaw
-      .withColumn("text", call_function("graft_extract_clean", col("html")))
-      .drop("html")
-    scoreExtracted(extracted, spark)
-  }
+  def score(docsRaw: DataFrame, spark: SparkSession): DataFrame =
+    scoreExtracted(extract(docsRaw), spark)
 
   /** Scoring from the post-extraction seam: `extracted` already carries a
     * cleaned `text` column (and `url` for the eligibility gate). This is
@@ -70,8 +73,6 @@ object Pipeline {
     * discard (cheap-first, SURVEY.md §4.1).
     */
   def scoreExtracted(extracted: DataFrame, spark: SparkSession): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-
     // P4: langid (fastText-style hashed n-gram model, JVM-static).
     val withLang = LangId.withLangNgram(extracted, "text", "lang", spark)
 
@@ -79,8 +80,8 @@ object Pipeline {
     // the 10-pattern count battery each run as one fused native expression
     // (one tokenization + hash-set membership; find()-only pattern loops).
     val withStats = withLang
-      .withColumn("__ts", call_function("graft_token_stats", col("text")))
-      .withColumn("__pc", call_function("graft_pattern_counts", col("text")))
+      .withColumn("__ts", native(TokenStatsExpr(_), col("text")))
+      .withColumn("__pc", native(PatternCountsExpr(_), col("text")))
       .withColumn("stats",
         Heuristics.textStatsFused(col("text"), col("__ts"), col("__pc")))
       .drop("__ts", "__pc")
@@ -104,7 +105,7 @@ object Pipeline {
     // lazy per-row: stage-1 failures skip the model (cheap-first ordering,
     // classifier.py:102-104).
     val withPpl = withStage1.withColumn("ppl",
-      when(col("stage1_pass"), call_function("graft_perplexity", col("text")))
+      when(col("stage1_pass"), native(PerplexityExpr(_), col("text")))
         .otherwise(lit(Perplexity.MaxPpl)))
 
     val withDims = withPpl

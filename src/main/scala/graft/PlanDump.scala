@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r06")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "_before")
     val only = sys.env.get("SPARK_GRAFT_PLAN_ONLY") // comma-separated prefixes
@@ -27,6 +27,10 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // write the fixture corpora first: a query that writes one while its
+    // plan is built shifts the expression ids of every later dump
+    graft.fixtures.SynthCorpus.materializedCorpus(spark)
+    graft.fixtures.SynthCorpus.materializedScored(spark)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.forall(_.split(",").exists(name.startsWith))) {
         try {

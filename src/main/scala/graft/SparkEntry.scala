@@ -98,11 +98,9 @@ object SparkEntry {
 
     // ---- quality-filter operator family over `documents` ----
     "q10_langid_stopword" -> ((s, dir) => {
-      val sample = lower(substring(col("text"), 1, 1000))
-      val enCount = graft.lang.LangId.EnglishStopwords10
-        .map(w => when(sample.contains(w), 1).otherwise(0)).reduce(_ + _)
+      val enCount = graft.lang.LangId.englishStopwordCount(col("text"))
       docs(s, dir)
-        .select(col("doc_id"), enCount.cast("int").as("en_count"),
+        .select(col("doc_id"), enCount.as("en_count"),
           (enCount >= 3).as("is_en"))
         .orderBy("doc_id")
     }),

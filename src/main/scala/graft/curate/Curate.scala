@@ -85,6 +85,14 @@ object Curate {
                     collectThreshold: Int, materialize: Boolean,
                     strategy: String): (DataFrame, DataFrame) = {
     Dedup.requireFree(docs, ReservedColumns)
+    // every stage labels and joins by id alone, so a repeated id would put
+    // one loser label on each row sharing it (key-only: parquet reads the
+    // id column alone)
+    docs.select(idCol).groupBy(idCol).agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > 1).limit(1).collect().foreach { r =>
+        throw new IllegalArgumentException(s"id column '$idCol' is not unique: " +
+          s"value '${r.get(0)}' occurs ${r.getLong(1)} times; deduplicate by it first")
+      }
     val id = col(idCol)
     val text = col(textCol)
     // one tokenizer pass per row (Let-bound inside gopherStats) behind a
@@ -182,7 +190,9 @@ object Curate {
     * is scrub-clean. Fully DuckDB-oracled end-to-end (q52).
     *
     * An input frame carrying one of [[ReservedColumns]] is rejected
-    * with an IllegalArgumentException naming the column.
+    * with an IllegalArgumentException naming the column. `idCol` must be
+    * unique: a repeated id is rejected the same way, naming the column and
+    * one repeated value (also for [[curated]] and [[full]]).
     *
     * @param collectThreshold the chain's driver budget, in rows (also for
     *        [[curated]] and [[full]]): the near-dup pair graph is union-
@@ -238,16 +248,15 @@ object Curate {
     * dedup would discard; at web scale that is the majority of the
     * corpus. Output: `Pipeline.score`'s full docs_scored schema for the
     * surviving documents.
+    *
+    * `url` is the chain's id and must be unique (a repeated url is
+    * rejected): deduplicate re-crawls upstream, e.g. latest `warc_ts`.
     */
   def full(docsRaw: DataFrame, spark: SparkSession,
            collectThreshold: Int = 1 << 20,
            materialize: Boolean = false,
            strategy: String = "exact"): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val extracted = docsRaw
-      .withColumn("text", call_function("graft_extract_clean", col("html")))
-      .drop("html")
-    val survivors = curated(extracted, "url", "text",
+    val survivors = curated(Pipeline.extract(docsRaw), "url", "text",
       collectThreshold, materialize, strategy).drop("scrubbed")
     // scoreExtracted re-applies the scrub on its own output column
     Pipeline.scoreExtracted(survivors, spark)

@@ -4,6 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.rules.Heuristics.{lowerPrefix, termCount}
 
 import graft.extract.Clean
 
@@ -69,9 +70,7 @@ object BenchmarkBuilders {
   def suitableForBenchmarkV2(text: Column): Column = {
     val hasEq = text.contains("=") &&
       (size(hits(text, "[A-Za-z]\\s*=", 0)) >= 2)
-    val sample = lower(substring(text, 1, 2000))
-    val physCnt = V2SuitIndicators
-      .map(t => when(sample.contains(t), 1).otherwise(0)).reduce(_ + _)
+    val physCnt = termCount(lowerPrefix(text, 2000), V2SuitIndicators)
     (length(trim(text)) >= 800) && (hasEq || physCnt >= 4)
   }
 
@@ -113,9 +112,7 @@ object BenchmarkBuilders {
   private[graft] val V2NumPatterns = Seq(
     "(?i)([A-Za-z_]\\w*\\s*=\\s*[0-9]+\\.?[0-9]*(?:\\s*×\\s*10[⁻⁰-⁹]+)?\\s*(?:m|kg|s|Hz|eV|K|Pa|N|J|W|V|A|T|rad)?\\b)",
     "(?i)((?:wavelength|frequency|energy|mass|velocity|temperature|pressure)\\s*(?:of|=|is)\\s*[0-9]+[^.\\n]*)")
-  private[graft] val V2NumContexts = Seq(
-    "m", "kg", "s", "hz", "ev", "k", "pa", "n", "j", "w", "v", "a", "t",
-    "wavelength", "frequency", "energy", "mass", "velocity", "temperature")
+  private[graft] val V2NumContexts = Gates.PhysicsUnits
 
   private[graft] def v2Numericals(text: Column): Column =
     filter(transform(hitsAll(text, V2NumPatterns), m => trim(m)),
@@ -310,8 +307,7 @@ object BenchmarkBuilders {
 
   def suitableForBenchmarkV3(text: Column): Column = {
     val hasEq = text.contains("=") && (size(hits(text, "[A-Za-z]\\s*=", 0)) >= 1)
-    val sample = lower(substring(text, 1, 1500))
-    val cnt = V3SuitTerms.map(t => when(sample.contains(t), 1).otherwise(0)).reduce(_ + _)
+    val cnt = termCount(lowerPrefix(text, 1500), V3SuitTerms)
     (length(trim(text)) >= 600) && (hasEq || cnt >= 3)
   }
 

@@ -1,6 +1,7 @@
 package graft.derive
 
 import DeriveHelpers._
+import graft.rules.Heuristics.termCountStr
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -24,21 +25,12 @@ object BlockExtract {
   private val solPs = Extract.WorkedSolutionPatterns.map(java.util.regex.Pattern.compile)
   private val proofPs = Extract.ProofPatterns.map(java.util.regex.Pattern.compile)
 
-  private val PhysTerms = Array("equation", "energy", "force", "field",
-    "particle", "wave", "quantum", "mass", "velocity", "acceleration")
-  private val VixraTerms = Array("gravity", "gravitational", "universe",
-    "cosmic", "theory", "model", "physics", "space", "time")
-  private val CommonEn = Array("the", "and", "of", "to", "a", "in", "we",
-    "can", "from", "with", "is", "are", "this", "that")
-
   /** Exact mirror of Extract.containsEnglishPhysicsTerms (substring, 0/1). */
   def containsEnglishPhysicsTerms(s: String): Boolean = {
     val lo = graft.extract.Clean.sparkLower(s)
-    var phys = 0; var vix = 0; var en = 0
-    PhysTerms.foreach(t => if (lo.contains(t)) phys += 1)
-    VixraTerms.foreach(t => if (lo.contains(t)) vix += 1)
-    CommonEn.foreach(t => if (lo.contains(t)) en += 1)
-    (phys >= 1 || vix >= 2) && en >= 2
+    (termCountStr(lo, Extract.EnglishPhysicsTerms) >= 1 ||
+      termCountStr(lo, Extract.VixraPhysicsTerms) >= 2) &&
+      termCountStr(lo, Extract.CommonEnglish) >= 2
   }
 
   // necessary literals per pattern (round-6: the same AnchorGuard

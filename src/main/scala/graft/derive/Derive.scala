@@ -35,13 +35,10 @@ object Derive {
 
   def suitableForTraining(text: Column, url: Column): Column = {
     val isVixra = lower(url).contains("vixra")
-    val sample = lower(substring(text, 1, 2000))
-    val enCount = LangId.EnglishStopwords14
-      .map(w => when(sample.contains(w), 1).otherwise(0)).reduce(_ + _)
-    val stepCount = TrainingStepIndicators
-      .map(w => when(sample.contains(w), 1).otherwise(0)).reduce(_ + _)
-    val physCount = TrainingPhysIndicators
-      .map(w => when(sample.contains(w), 1).otherwise(0)).reduce(_ + _)
+    val sample = Heuristics.lowerPrefix(text, 2000)
+    val enCount = Heuristics.termCount(sample, LangId.EnglishStopwords14)
+    val stepCount = Heuristics.termCount(sample, TrainingStepIndicators)
+    val physCount = Heuristics.termCount(sample, TrainingPhysIndicators)
     (length(trim(text)) >= 500) &&
       (enCount >= when(isVixra, 5).otherwise(8)) &&
       ((stepCount + physCount) >= when(isVixra, 2).otherwise(3))

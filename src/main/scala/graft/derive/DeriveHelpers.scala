@@ -17,10 +17,6 @@ private[derive] object DeriveHelpers {
   def containsAny(c: Column, terms: Seq[String]): Column =
     terms.map(t => c.contains(t)).reduce(_ || _)
 
-  /** How many of `terms` occur in `c` (int). */
-  def cnt(c: Column, terms: Seq[String]): Column =
-    terms.map(t => when(c.contains(t), 1).otherwise(0)).reduce(_ + _)
-
   /** Every match of `pattern` (its `group`) — empty, not null, on null. */
   def hits(c: Column, pattern: String, group: Int): Column =
     when(c.isNull, array().cast("array<string>"))

@@ -4,6 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.rules.Heuristics.termCount
 
 /** Extraction batteries for the derived datasets (SURVEY.md §2.4 E10–E25).
   *
@@ -76,7 +77,7 @@ object Extract {
     "therefore", "using", "from", "given", "hence", "thus")
   val AvoidTerms: Seq[String] = Seq(
     "figure", "table", "page", "section", "paper", "author", "reference")
-  private val MathChars = Seq("=", "+", "-", "*", "/", "(", ")")
+  private[graft] val MathChars = Seq("=", "+", "-", "*", "/", "(", ")")
 
   def isMeaningfulStep(step: Column): Column = {
     val lo = lower(step)
@@ -186,9 +187,9 @@ object Extract {
     */
   def containsEnglishPhysicsTerms(c: Column): Column = {
     val lo = lower(c)
-    val phys = EnglishPhysicsTerms.map(t => when(lo.contains(t), 1).otherwise(0)).reduce(_ + _)
-    val vix = VixraPhysicsTerms.map(t => when(lo.contains(t), 1).otherwise(0)).reduce(_ + _)
-    val en = CommonEnglish.map(t => when(lo.contains(t), 1).otherwise(0)).reduce(_ + _)
+    val phys = termCount(lo, EnglishPhysicsTerms)
+    val vix = termCount(lo, VixraPhysicsTerms)
+    val en = termCount(lo, CommonEnglish)
     (phys >= 1 || vix >= 2) && en >= 2
   }
 
@@ -246,8 +247,8 @@ object Extract {
 
   def difficulty(c: Column): Column = {
     val lo = lower(c)
-    val adv = AdvancedIndicators.map(t => when(lo.contains(t), 1).otherwise(0)).reduce(_ + _)
-    val inter = IntermediateIndicators.map(t => when(lo.contains(t), 1).otherwise(0)).reduce(_ + _)
+    val adv = termCount(lo, AdvancedIndicators)
+    val inter = termCount(lo, IntermediateIndicators)
     when(adv > 0, "advanced").when(inter > 1, "intermediate").otherwise("introductory")
   }
 
@@ -269,7 +270,7 @@ object Extract {
   def topic(text: Column, subject: Column): Column = {
     val lo = lower(text)
     val scores = TopicKeywords.map { case (t, kws) =>
-      t -> kws.map(k => when(lo.contains(k), 1).otherwise(0)).reduce(_ + _)
+      t -> termCount(lo, kws)
     }
     val best = greatest(scores.map(_._2): _*)
     val chain = scores.foldLeft(when(lit(false), lit(""))) { case (acc, (t, s)) =>

@@ -4,6 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.rules.Heuristics.termCount
 import org.apache.spark.sql.types.StructType
 
 import graft.extract.Clean
@@ -97,7 +98,6 @@ object Gates {
   private[graft] val C9PhysicsTerms = Seq(
     "energy", "force", "mass", "velocity", "field", "charge", "potential",
     "particle", "wave", "frequency", "momentum", "acceleration")
-  private[graft] val C9MathChars = Seq("=", "+", "-", "*", "/", "(", ")")
   private[graft] val C9English = Seq(
     "the", "and", "of", "to", "a", "in", "we", "is", "this", "that")
 
@@ -109,10 +109,10 @@ object Gates {
       regexp_replace(c, "[^\\w\\s\\.,;:()=+\\-*/\\[\\]{}\\\\α-ωΑ-Ω]", ""),
       "(?U)\\s+", " "))) { cleaned =>
       val lo = lower(cleaned)
-      val enCount = C9English.map(w => when(lo.contains(w), 1).otherwise(0)).reduce(_ + _)
+      val enCount = termCount(lo, C9English)
       when(c.isNull, lit(null).cast("string"))
         .when(length(cleaned) < 15, lit(null).cast("string"))
-        .when(!containsAny(lo, C9PhysicsTerms) && !containsAny(cleaned, C9MathChars),
+        .when(!containsAny(lo, C9PhysicsTerms) && !containsAny(cleaned, Extract.MathChars),
           lit(null).cast("string"))
         .when(enCount < 2, lit(null).cast("string"))
         .otherwise(cleaned)

@@ -4,6 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.rules.Heuristics.{lowerPrefix, termCount}
 
 /** The RL-training builder — the third training path of the reference
   * (analysis/enhanced_training_builder.py:23-140), distinct from the
@@ -60,11 +61,11 @@ object RlBuilder {
     "equation")
 
   def suitableForRlTraining(text: Column): Column = {
-    val sample = lower(substring(text, 1, 2000))
+    val sample = lowerPrefix(text, 2000)
     (length(trim(coalesce(text, lit("")))) >= 1000) &&
-      (cnt(sample, RlProblemIndicators) >= 2) &&
-      (cnt(sample, RlReasoningIndicators) >= 3) &&
-      (cnt(sample, RlPhysicsTerms) >= 2)
+      (termCount(sample, RlProblemIndicators) >= 2) &&
+      (termCount(sample, RlReasoningIndicators) >= 3) &&
+      (termCount(sample, RlPhysicsTerms) >= 2)
   }
 
   // ------------------------------------------------------------------
@@ -186,8 +187,8 @@ object RlBuilder {
 
   def rlDifficulty(problem: Column, steps: Column): Column = {
     val lo = lower(concat(problem, lit(" "), array_join(steps, " ")))
-    val adv = cnt(lo, RlAdvancedTerms)
-    val inter = cnt(lo, RlIntermediateTerms)
+    val adv = termCount(lo, RlAdvancedTerms)
+    val inter = termCount(lo, RlIntermediateTerms)
     when(adv >= 2, "advanced")
       .when(inter >= 2 || adv >= 1, "intermediate")
       .otherwise("introductory")
@@ -386,8 +387,8 @@ object RlBuilder {
     * over the SOLUTION side only.
     */
   def v3AssessQuality(problem: Column, solution: Column): Column = {
-    val pPhys = cnt(lower(problem), V3QualityPhysicsTerms)
-    val sPhys = cnt(lower(solution), V3QualityPhysicsTerms)
+    val pPhys = termCount(lower(problem), V3QualityPhysicsTerms)
+    val sPhys = termCount(lower(solution), V3QualityPhysicsTerms)
     val hasMath = containsAny(solution, Seq("=", "+", "-", "*", "/"))
     val pw = wordCount(problem); val sw = wordCount(solution)
     val lengthScore = when(pw.between(10, 100) && sw.between(20, 200), 1.0)
@@ -402,9 +403,9 @@ object RlBuilder {
     */
   def v3Difficulty(problem: Column, solution: Column): Column = {
     val lo = lower(concat(problem, lit(" "), solution))
-    when(cnt(lo, Seq("differential", "integral", "quantum", "relativistic")) >= 1,
+    when(termCount(lo, Seq("differential", "integral", "quantum", "relativistic")) >= 1,
       "advanced")
-      .when(cnt(lo, Seq("derivative", "vector", "conservation", "electromagnetic")) >= 1,
+      .when(termCount(lo, Seq("derivative", "vector", "conservation", "electromagnetic")) >= 1,
         "intermediate")
       .otherwise("introductory")
   }
@@ -528,9 +529,8 @@ object RlBuilder {
     "calculate", "find", "derive")
 
   def suitableForRlTrainingV3(text: Column): Column = {
-    val sample = lower(substring(text, 1, 1500))
     (length(trim(coalesce(text, lit("")))) >= 800) &&
-      (cnt(sample, V3GateIndicators) >= 3)
+      (termCount(lowerPrefix(text, 1500), V3GateIndicators) >= 3)
   }
 
   /** V3 assembly (:446-461, :508-533): cap 2, rl_v3.0 format, standards =

@@ -5,6 +5,7 @@ import DeriveHelpers._
 import java.util.regex.Pattern
 
 import graft.extract.Clean.sparkLower
+import graft.rules.Heuristics.termCountStr
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -68,7 +69,6 @@ object RlExample {
 
   // ---- P8: meaningful-step predicate (Extract.isMeaningfulStep) ----
 
-  private val MathChars = Seq("=", "+", "-", "*", "/", "(", ")")
   private val wsSplit = Pattern.compile("(?U)\\s+")
 
   def isMeaningfulStep(step: String): Boolean = {
@@ -79,7 +79,7 @@ object RlExample {
     // word split entirely
     val lo = sparkLower(step)
     if (!(Extract.MeaningfulIndicators.exists(lo.contains) ||
-        MathChars.exists(step.contains))) return false
+        Extract.MathChars.exists(step.contains))) return false
     if (Extract.AvoidTerms.exists(lo.contains)) return false
     var wc = 0
     wsSplit.split(spaceTrim(step), -1).foreach(w => if (w.nonEmpty) wc += 1)
@@ -98,8 +98,8 @@ object RlExample {
     if (nchars(cleaned) < 15) return null
     val lo = sparkLower(cleaned)
     if (!Gates.C9PhysicsTerms.exists(lo.contains) &&
-      !Gates.C9MathChars.exists(cleaned.contains)) return null
-    if (Gates.C9English.count(lo.contains) < 2) return null
+      !Extract.MathChars.exists(cleaned.contains)) return null
+    if (termCountStr(lo, Gates.C9English) < 2) return null
     cleaned
   }
 
@@ -208,7 +208,7 @@ object RlExample {
     val lo = sparkLower(step)
     nchars(step) >= 15 &&
       (Extract.QualityStepIndicators.exists(lo.contains) ||
-        MathChars.exists(step.contains))
+        Extract.MathChars.exists(step.contains))
   }
 
   def assessQuality(problem: String, steps: Array[String]): Double = {
@@ -345,7 +345,7 @@ object RlExample {
   def v3Quality(problem: String, solution: String): Double = {
     def phys(s: String): Int =
       if (s == null) 0
-      else { val lo = sparkLower(s); RlBuilder.V3QualityPhysicsTerms.count(lo.contains) }
+      else termCountStr(sparkLower(s), RlBuilder.V3QualityPhysicsTerms)
     val hasMath = solution != null && V3MathChars.exists(solution.contains)
     val pw = v3WordCount(problem); val sw = v3WordCount(solution)
     val lengthScore =

@@ -4,6 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.rules.Heuristics.{lowerPrefix, termCount}
 
 import graft.functions.Let
 
@@ -54,10 +55,10 @@ object UgBuilders {
     "vector")
 
   def suitableForUgBenchmark(text: Column, url: Column): Column = {
-    val sample = lower(substring(text, 1, 2000))
+    val sample = lowerPrefix(text, 2000)
     val threshold = when(lower(url).contains("vixra"), 2).otherwise(3)
     (length(trim(coalesce(text, lit("")))) >= 500) &&
-      ((cnt(sample, UgPhysicsIndicators) + cnt(sample, UgMathIndicators)) >= threshold)
+      ((termCount(sample, UgPhysicsIndicators) + termCount(sample, UgMathIndicators)) >= threshold)
   }
 
   /** _extract_physics_content_structured (:333-377). Equation battery runs
@@ -471,8 +472,8 @@ Focus particularly on the application of: """),
 
   def ugDifficulty(c: Column): Column = {
     val lo = lower(c)
-    when(cnt(lo, UgAdvanced) >= 2, "advanced")
-      .when(cnt(lo, UgIntermediate) >= 2 || cnt(lo, UgAdvanced) >= 1,
+    when(termCount(lo, UgAdvanced) >= 2, "advanced")
+      .when(termCount(lo, UgIntermediate) >= 2 || termCount(lo, UgAdvanced) >= 1,
         "intermediate")
       .otherwise("introductory")
   }

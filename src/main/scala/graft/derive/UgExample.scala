@@ -5,6 +5,7 @@ import DeriveHelpers._
 import java.util.regex.Pattern
 
 import graft.extract.Clean.sparkLower
+import graft.rules.Heuristics.termCountStr
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -194,8 +195,8 @@ object UgExample {
   def difficulty(c: String): String = difficultyLo(sparkLower(c))
 
   private[derive] def difficultyLo(lo: String): String = {
-    val adv = UgBuilders.UgAdvanced.count(lo.contains)
-    val inter = UgBuilders.UgIntermediate.count(lo.contains)
+    val adv = termCountStr(lo, UgBuilders.UgAdvanced)
+    val inter = termCountStr(lo, UgBuilders.UgIntermediate)
     if (adv >= 2) "advanced"
     else if (inter >= 2 || adv >= 1) "intermediate"
     else "introductory"
@@ -208,7 +209,7 @@ object UgExample {
 
   private[derive] def topicLo(lo: String, subject: String): String = {
     val scores = Extract.TopicKeywords.map { case (t, kws) =>
-      t -> kws.count(lo.contains)
+      t -> termCountStr(lo, kws)
     }
     val best = scores.map(_._2).max
     scores.find { case (_, s) => s == best && best > 0 } match {

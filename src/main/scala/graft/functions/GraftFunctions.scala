@@ -199,20 +199,20 @@ object ComputeOnce {
   */
 object GraftFunctions {
 
-  /** Register on a live session. Idempotent — and quiet about it:
-    * `createOrReplaceTempFunction` on an existing name logs a
-    * "replaced a previously registered function" WARN, and Pipeline
-    * calls this once per query. The idempotence check asks the
-    * functionRegistry whether ALL graft names are present (not a
-    * session conf — a user-visible conf key made register() a
-    * permanent no-op: SET/RESET silently toggled it, and a graft
-    * function removed via DROP TEMPORARY FUNCTION could never be
-    * restored by re-calling register()). Registering when ANY name is
-    * missing keeps both contracts: a pre-existing FOREIGN temp
+  /** Register on a live session, for SQL and `call_function` users (the
+    * library's own paths build the expressions directly). Idempotent —
+    * and quiet about it: `createOrReplaceTempFunction` on an existing
+    * name logs a "replaced a previously registered function" WARN. The
+    * idempotence check asks the functionRegistry whether ALL graft
+    * names are present (not a session conf — a user-visible conf key
+    * made register() a permanent no-op: SET/RESET silently toggled it,
+    * and a graft function removed via DROP TEMPORARY FUNCTION could
+    * never be restored by re-calling register()). Registering when ANY
+    * name is missing keeps both contracts: a pre-existing FOREIGN temp
     * function squatting on one graft name is still replaced on the
     * first call (it can't plausibly pre-register the whole battery),
-    * and a dropped graft function is restored by the next register().
-    * A foreign function installed over a graft name AFTER a full
+    * and a dropped graft function is restored by the next register(). A
+    * foreign function installed over a graft name AFTER a full
     * registration is a deliberate user override and is left in place.
     */
   def register(spark: SparkSession): Unit = {

@@ -3,15 +3,20 @@ package graft.lang
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.rules.Heuristics
+
 /** P4 — language identification (SURVEY.md §2.2 P4, §2.7).
   *
   * Two implementations, per BASELINE.json north_rule:
   *
-  * 1. `englishStopwordCount` — the reference's exact semantics: count how
-  *    many of a fixed stopword list occur (substring containment, 0/1 each)
-  *    in the lowercased first-K-chars sample
-  *    (reference: enhanced_paper_analyser.py:152-160; 14-word variant
-  *    :716-724). Pure Catalyst — stays in whole-stage codegen.
+  * 1. `englishStopwordCount` — the reference's exact semantics: how many
+  *    of the 10 stopwords occur (substring containment, 0/1 each) in
+  *    `lower(text[:1000])` (reference: enhanced_paper_analyser.py:152-160).
+  *    It is the shared term-presence count
+  *    (`Heuristics.termCount(Heuristics.lowerPrefix(text, 1000), …)`);
+  *    the 14-word list is the training gate's
+  *    (`Derive.suitableForTraining`, :716-724). Pure Catalyst — stays in
+  *    whole-stage codegen; q10 calls it, so q10's DuckDB oracle checks it.
   *
   * 2. `NgramModel` — a fastText-style hashed char-n-gram linear classifier:
   *    hashed trigram features → per-language weight table → argmax. The
@@ -30,27 +35,16 @@ object LangId {
   val EnglishStopwords14: Seq[String] =
     EnglishStopwords10 ++ Seq("equation", "we", "can", "from")
 
-  /** Count of stopwords present (substring containment, each counted 0/1)
-    * in `lower(substring(text, 1, sampleLen))` — exact reference semantics:
-    * `sum(1 for word in english_words if word in text_sample)`.
+  /** How many of the 10 stopwords occur in `lower(text[:1000])` — the
+    * reference's `sum(1 for word in english_words if word in
+    * text_sample)`, through the shared `Heuristics.termCount`.
     */
-  def englishStopwordCount(text: Column, words: Seq[String] = EnglishStopwords10,
-                           sampleLen: Int = 1000): Column = {
-    val sample = lower(substring(text, 1, sampleLen))
-    words.map(w => when(sample.contains(w), 1).otherwise(0).cast("int"))
-      .reduce(_ + _)
-  }
+  def englishStopwordCount(text: Column): Column =
+    Heuristics.termCount(Heuristics.lowerPrefix(text, 1000), EnglishStopwords10)
 
-  /** Plain-Scala mirror for the oracle — exact Column semantics:
-    * code-point sampling (Spark substring) + Spark lower (sparkLower).
-    */
-  def englishStopwordCountStr(text: String, words: Seq[String] = EnglishStopwords10,
-                              sampleLen: Int = 1000): Int = {
-    if (text == null) return 0
-    val sample = graft.extract.Clean.sparkLower(
-      graft.extract.Clean.sparkSubstr(text, sampleLen))
-    words.count(sample.contains)
-  }
+  /** Plain-Scala mirror of `englishStopwordCount`. */
+  def englishStopwordCountStr(text: String): Int =
+    Heuristics.termCountStr(Heuristics.lowerPrefixStr(text, 1000), EnglishStopwords10)
 
   // ------------------------------------------------------------------
   // Hashed char-n-gram model (fastText-style)

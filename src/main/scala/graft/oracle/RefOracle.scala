@@ -57,8 +57,8 @@ object RefOracle {
       .toLowerCase(java.util.Locale.ROOT)
     val enCount = LangId.englishStopwordCountStr(text)
     val termCount =
-      Heuristics.containsMembershipCountStr(sample, Heuristics.PhysicsIndicators) +
-        Heuristics.containsMembershipCountStr(sample, Heuristics.VixraIndicators)
+      Heuristics.termCountStr(sample, Heuristics.PhysicsIndicators) +
+        Heuristics.termCountStr(sample, Heuristics.VixraIndicators)
     val eligible = text.trim.length >= 300 && enCount >= enThreshold &&
       termCount >= termThreshold
 

@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object Heuristics {
 
+  import graft.extract.Clean
   import graft.extract.Clean.WsRun
 
   // ------------------------------------------------------------------
@@ -98,18 +99,27 @@ object Heuristics {
   def tokenMembershipCountStr(t: String, terms: Seq[String]): Long = {
     if (t == null) return 0L
     val set = terms.toSet
-    t.split(WsRun).count(w => w.nonEmpty && set.contains(graft.extract.Clean.sparkLower(w))).toLong
+    t.split(WsRun).count(w => w.nonEmpty && set.contains(Clean.sparkLower(w))).toLong
   }
 
-  /** Substring-containment variant (each term counted 0/1) — the gate style
-    * used by P6 (enhanced_paper_analyser.py:163-172): `sum(1 for ind in
-    * indicators if ind in text_sample)`.
-    */
-  def containsMembershipCount(c: Column, terms: Seq[String]): Column =
-    terms.map(t => when(c.contains(t), 1).otherwise(0)).reduce(_ + _).cast("long")
+  // ------------------------------------------------------------------
+  // Term presence, the count behind every cheap gate
+  // (enhanced_paper_analyser.py:152-172, :716-724):
+  // `sum(1 for w in terms if w in text.lower()[:n])`. TermCountSpec holds
+  // each Column form equal to its mirror.
+  // ------------------------------------------------------------------
+  /** `lower(text[:n])`, n counted in code points (Spark `substring`). */
+  def lowerPrefix(text: Column, n: Int): Column = lower(substring(text, 1, n))
 
-  def containsMembershipCountStr(t: String, terms: Seq[String]): Long =
-    if (t == null) 0L else terms.count(t.contains).toLong
+  def lowerPrefixStr(text: String, n: Int): String =
+    if (text == null) null else Clean.sparkLower(Clean.sparkSubstr(text, n))
+
+  /** How many of `terms` occur in `c`, each counted 0/1 (int; 0 on null). */
+  def termCount(c: Column, terms: Seq[String]): Column =
+    terms.map(t => when(c.contains(t), 1).otherwise(0)).reduce(_ + _)
+
+  def termCountStr(c: String, terms: Seq[String]): Int =
+    if (c == null) 0 else terms.count(c.contains)
 
   // ------------------------------------------------------------------
   // E7/E8 — physics density + content flags (pdf_processor.py:236-249)
@@ -196,7 +206,7 @@ object Heuristics {
 
   // ------------------------------------------------------------------
   // P6 — domain-term indicators (enhanced_paper_analyser.py:163-172),
-  // counted by substring containment over lower(text[:1000]) in
+  // counted by `termCount` over `lowerPrefix(text, 1000)` in
   // Pipeline.eligible.
   // ------------------------------------------------------------------
   val PhysicsIndicators: Seq[String] = Seq(

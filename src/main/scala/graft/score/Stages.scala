@@ -67,17 +67,13 @@ object Stages {
     else clamp110d(10.0 - math.floor(mathExpr.toDouble / math.max(words, 1L) * 100.0))
 
   def dimPhysicsAssumptions(text: Column): Column = {
-    val sample = lower(substring(text, 1, 5000))
-    val cnt = Heuristics.containsMembershipCount(sample, AssumptionTerms)
+    val cnt = Heuristics.termCount(Heuristics.lowerPrefix(text, 5000), AssumptionTerms)
     when(length(trim(text)) === 0, lit(5.0))
       .otherwise(clamp110(lit(10.0) - cnt.cast("double")))
   }
   def dimPhysicsAssumptionsStr(text: String): Double = {
     if (text == null || text.trim.isEmpty) return 5.0
-    // exact Column mirror: code-point sample + Spark lower
-    val sample = graft.extract.Clean.sparkLower(
-      graft.extract.Clean.sparkSubstr(text, 5000))
-    val cnt = Heuristics.containsMembershipCountStr(sample, AssumptionTerms)
+    val cnt = Heuristics.termCountStr(Heuristics.lowerPrefixStr(text, 5000), AssumptionTerms)
     clamp110d(10.0 - cnt.toDouble)
   }
 

@@ -267,4 +267,23 @@ class CurateSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
     assert(dedupErr.getMessage.contains("'__fp'"), dedupErr.getMessage)
   }
+
+  test("a repeated id fails fast on every face, naming the column and value") {
+    // labels join by id alone: before the check, both id-1000 rows were
+    // labeled exact_dup and the unique body1 was dropped
+    import graft.fixtures.SynthCorpus.bodyFor
+    val docs = Seq((0L, bodyFor(0)), (1000L, bodyFor(0)), (1000L, bodyFor(1)),
+      (2L, bodyFor(2))).toDF("doc_id", "text")
+    def rejects(run: => Any, column: String, value: String): Unit = {
+      val err = intercept[IllegalArgumentException](run)
+      assert(err.getMessage.contains(s"'$column'") &&
+        err.getMessage.contains(s"'$value'"), err.getMessage)
+    }
+    rejects(Curate.curationLog(docs, "doc_id", "text").collect(), "doc_id", "1000")
+    rejects(Curate.curated(docs, "doc_id", "text").collect(), "doc_id", "1000")
+    val raw = docs.select(
+      concat(lit("https://t.example.org/doc/"), col("doc_id")).as("url"),
+      encode(col("text"), "UTF-8").as("html"))
+    rejects(Curate.full(raw, spark).collect(), "url", "https://t.example.org/doc/1000")
+  }
 }
