@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ExtractCleanExpr, PerplexityExpr}
+import graft.extract.HtmlText
 import graft.lang.LangId
-import graft.rules.{Heuristics, PatternCountsExpr, TokenStatsExpr}
+import graft.rules.{Heuristics, PatternCounts, TokenStats}
 import graft.score.{Perplexity, Score, Stages}
 import graft.scrub.PiiScrub
 
@@ -46,12 +45,8 @@ object Pipeline {
         Heuristics.termCount(sample, Heuristics.VixraIndicators)) >= termThreshold)
   }
 
-  /** A graft-native expression over `c`; needs no function registration. */
-  private def native(expr: Expression => Expression, c: Column): Column =
-    GraftColumnBridge.column(expr(GraftColumnBridge.expression(c)))
-
   /** E1 + C1: extraction and basic clean — THE byte-identical surface.
-    * Fused into ONE scan (ExtractCleanExpr): html bytes → cleaned `text`,
+    * Fused into ONE scan (HtmlText.extractCleanCol): html bytes → cleaned `text`,
     * no intermediate extraction string, no separate clean pass (the
     * chained extractCol + graft_basic_clean forms remain and are
     * equality-tested against this). The html blob is dropped immediately
@@ -59,7 +54,7 @@ object Pipeline {
     * memory traffic — at 10^12 docs that is petabytes).
     */
   def extract(docsRaw: DataFrame): DataFrame =
-    docsRaw.withColumn("text", native(ExtractCleanExpr(_), col("html"))).drop("html")
+    docsRaw.withColumn("text", HtmlText.extractCleanCol(col("html"))).drop("html")
 
   /** Full scoring pipeline: docs_raw → docs_scored. */
   def score(docsRaw: DataFrame, spark: SparkSession): DataFrame =
@@ -80,8 +75,8 @@ object Pipeline {
     // the 10-pattern count battery each run as one fused native expression
     // (one tokenization + hash-set membership; find()-only pattern loops).
     val withStats = withLang
-      .withColumn("__ts", native(TokenStatsExpr(_), col("text")))
-      .withColumn("__pc", native(PatternCountsExpr(_), col("text")))
+      .withColumn("__ts", TokenStats.statsCol(col("text")))
+      .withColumn("__pc", PatternCounts.countsCol(col("text")))
       .withColumn("stats",
         Heuristics.textStatsFused(col("text"), col("__ts"), col("__pc")))
       .drop("__ts", "__pc")
@@ -105,7 +100,7 @@ object Pipeline {
     // lazy per-row: stage-1 failures skip the model (cheap-first ordering,
     // classifier.py:102-104).
     val withPpl = withStage1.withColumn("ppl",
-      when(col("stage1_pass"), native(PerplexityExpr(_), col("text")))
+      when(col("stage1_pass"), Perplexity.scoreCol(col("text")))
         .otherwise(lit(Perplexity.MaxPpl)))
 
     val withDims = withPpl
@@ -124,7 +119,7 @@ object Pipeline {
           col("dim_logical_consistency"), col("dim_literature_integration")))
 
     // M3 + M4 + P1 + C13: recommendation, overall score, keep label, scrub.
-    // The scrub is the native PiiScrubExpr: one string boundary crossing,
+    // The scrub is a native kernel call: one string boundary crossing,
     // and only the regex passes whose required literal occurs in the row.
     withDims
       .withColumn("recommendation",

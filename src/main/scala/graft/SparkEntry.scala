@@ -481,12 +481,10 @@ object SparkEntry {
     // layer of the q30 derive path (DuckDB recomputes the suitability gate
     // and all 14 battery patterns with their length windows and term
     // filters over the same materialized corpus; the fused
-    // BlockExtractExpr computes the Spark side) ----
+    // BlockExtract kernel computes the Spark side) ----
     "q38_training_gate" -> ((s, dir) => {
       val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-      val fused = org.apache.spark.sql.GraftColumnBridge.column(
-        graft.derive.BlockExtractExpr(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("text"))))
+      val fused = graft.derive.BlockExtract.blocksCol(col("text"))
       corpus
         .withColumn("__bx", fused)
         .select(col("url"),
@@ -1108,11 +1106,7 @@ object SparkEntry {
         // advanced split (Gates.problemSolutionParts): end of the FIRST
         // match of the first separator pattern that matches; midpoint
         // fallback. DuckDB locates the first match via split-prefix length.
-        val seps = Seq(
-          "(?is)(?:Solution|Answer)\\s*:",
-          "(?is)(?:Given|Find|Calculate|Determine).*?(?:Solution|Answer)",
-          "(?is)(?:Problem)\\s*:.*?(?:Solution|Answer)\\s*:")
-        def sepEnd(over: String) = seps.map { sp =>
+        def sepEnd(over: String) = graft.derive.Gates.SeparatorPatterns.map { sp =>
           s"(CASE WHEN regexp_extract($over, ${pat(sp)}, 0) <> '' THEN " +
             s"length(regexp_split_to_array($over, ${pat(sp)})[1]) + " +
             s"length(regexp_extract($over, ${pat(sp)}, 0)) ELSE NULL END)"

@@ -123,13 +123,14 @@ object Curate {
     // text). Its null-text sentinel makes stage 2 correct on its own:
     // today stage 1 already drops null text (gopher signals are null ⇒
     // keep=false), but stage 2 must not depend on stage 1's ordering.
-    val exactLosers = keyList(Dedup.exactLosers(gopherKept, idCol, textCol)
-      .select(id, lit(StageExactDup).as("stage")), collectThreshold)
+    val (exactLosers, exactLosersSide) = keyList(
+      Dedup.exactLosers(gopherKept, idCol, textCol)
+        .select(id, lit(StageExactDup).as("stage")), collectThreshold)
 
     // stage 3 input: exact-dedup survivors, text column pruned to what
     // pair generation needs
     val exactKept = gopherKept.select(id, text)
-      .join(exactLosers, Seq(idCol), "left_anti")
+      .join(exactLosersSide, Seq(idCol), "left_anti")
     val pairs = strategy match {
       case "exact" =>
         // exhaustive prefix-filtered all-pairs: every J ≥ t pair found —
@@ -160,25 +161,30 @@ object Curate {
 
     // disjoint by construction: near-dup pairs are generated among exact
     // KEEPERS only, so no id carries two loser labels
-    (gophered, keyList(exactLosers.unionByName(nearLosers), collectThreshold))
+    (gophered, keyList(exactLosers.unionByName(nearLosers), collectThreshold)._2)
   }
 
   /** A key-only loser list, computed once: a lazy local checkpoint whose
     * first reader stores its blocks, so every later join reads them
-    * instead of re-running the dedup plan. When the list has at most
-    * `collectThreshold` rows (one `count` both sizes and stores it), it
-    * is hinted to broadcast: a join against it then runs in the probe
-    * side's own partitions and never shuffles the document text (a
-    * shuffled labeling join moves the full-width frame, and AQE may
-    * coalesce that shuffle — the scorer after it included — into one
-    * task). Above the threshold (or at 0) the planner's shuffled join
-    * stays: the 100-TB path, with no count. Blocks are freed by the
-    * ContextCleaner when the frame is GC'd.
+    * instead of re-running the dedup plan.
+    *
+    * @return (held, joinSide): `held` for any use but a join; `joinSide`
+    *         for a join. When the list has at most `collectThreshold`
+    *         rows (one `count` both sizes and stores it), `joinSide` is
+    *         hinted to broadcast: a join against it then runs in the probe
+    *         side's own partitions and never shuffles the document text (a
+    *         shuffled labeling join moves the full-width frame, and AQE may
+    *         coalesce that shuffle — the scorer after it included — into one
+    *         task). Above the threshold (or at 0) the planner's shuffled
+    *         join stays: the 100-TB path, with no count. A hint anywhere
+    *         but a join side (a union) is dropped with a warning, so
+    *         `held` carries none. Blocks are freed by the ContextCleaner
+    *         when the frame is GC'd.
     */
-  private def keyList(list: DataFrame, collectThreshold: Int): DataFrame = {
+  private def keyList(list: DataFrame, collectThreshold: Int): (DataFrame, DataFrame) = {
     val held = list.localCheckpoint(eager = false)
-    if (collectThreshold > 0 && held.count() <= collectThreshold) broadcast(held)
-    else held
+    val small = collectThreshold > 0 && held.count() <= collectThreshold
+    (held, if (small) broadcast(held) else held)
   }
 
   /** The auditable per-document decision log: ONE row per input document

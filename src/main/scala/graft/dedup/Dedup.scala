@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Deduplication operators for a large-scale training-data pipeline
   * (builder-prompt mandate; the reference's only dedup is `list(set(...))`
@@ -111,7 +112,7 @@ object Dedup {
   }
 
   /** Distinct xxhash64 digests of the word n-gram shingles — the
-    * pair-generation representation (native one-scan HashedShinglesExpr,
+    * pair-generation representation (native one-scan `HashedShingles.compute`,
     * ≡ `transform(shingles(text, n), s => xxhash64(s))` bit-identically;
     * DedupSpec parity test). Candidate joins and exact verification only
     * need shingle EQUALITY, so the 64-bit digests replace the strings:
@@ -122,10 +123,11 @@ object Dedup {
     * same adjudicated tolerance as the round-5 hashed-shingle LSH
     * verification.
     */
-  def hashedShingles(text: Column, n: Int): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      HashedShinglesExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(text), n))
+  def hashedShingles(text: Column, n: Int): Column = {
+    require(n > 0, s"n must be positive, got $n")
+    graft.functions.Native(HashedShingles, "compute",
+      ArrayType(LongType, containsNull = false), text, lit(n))
+  }
 
   /** MinHash signature: k independent hash functions h_i(s) =
     * xxhash64(i, s); signature[i] = min over shingles. Runs as the fused
@@ -261,15 +263,15 @@ object Dedup {
   // candidate, standard pigeonhole for distance <= 3).
   // ------------------------------------------------------------------
 
-  /** 64-bit SimHash of the lowercased token multiset. Runs as the fused
-    * native SimHashExpr (one forward scan per document); the
+  /** 64-bit SimHash of the lowercased token multiset. Runs as a native
+    * call of the fused `SimHash.computeLong` (one forward scan per
+    * document); the
     * `aggregate`/`zip_with` reference form below evaluates 64 interpreted
     * lambdas PER TOKEN — identical values (DedupSpec parity test), ~100x
     * the per-row cost.
     */
   def simhash(text: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      SimHashExpr(org.apache.spark.sql.GraftColumnBridge.expression(text)))
+    graft.functions.Native(SimHash, "computeLong", LongType, text)
 
   /** The pure-Catalyst reference form (kept for the parity test).
     * Tokens: non-empty ASCII-\s-separated runs of lower(text) — the

@@ -1,9 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused single-pass HASHED word-n-gram shingles — the pair-generation
@@ -11,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Mirror contract (DedupSpec parity test, bit-identical):
   *
-  *   HashedShinglesExpr(text, n) ≡ transform(Dedup.shingles(text, n),
-  *                                            s => xxhash64(s))
+  *   Dedup.hashedShingles(text, n) ≡ transform(Dedup.shingles(text, n),
+  *                                              s => xxhash64(s))
   *
   * Why it exists (round-6 measurement): the Column form builds every
   * shingle STRING through interpreted higher-order lambdas — `transform`
@@ -114,18 +113,4 @@ object HashedShingles {
     while (it.hasNext) { out(k) = it.next(); k += 1 }
     new GenericArrayData(out)
   }
-}
-
-/** Catalyst wrapper — whole-stage-codegen friendly (static call). */
-case class HashedShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n > 0, s"n must be positive, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    HashedShingles.compute(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.dedup.HashedShingles.compute($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): HashedShinglesExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_hashed_shingles"
 }

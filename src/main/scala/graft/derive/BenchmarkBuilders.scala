@@ -157,12 +157,11 @@ object BenchmarkBuilders {
                        subjectCol: String): DataFrame = {
     val text = col(textCol)
     val url = col(urlCol)
-    // concept batteries run fused (V2ConceptsExpr — identical values to the
-    // v2* Column forms, parity-tested in BenchmarkBuildersSpec), behind a
-    // ComputeOnce barrier (without it CollapseProject inlined the battery
-    // into 56 copies per row)
-    val fusedConcepts = org.apache.spark.sql.GraftColumnBridge.column(
-      V2ConceptsExpr(org.apache.spark.sql.GraftColumnBridge.expression(text)))
+    // concept batteries run fused (ConceptExtract.v2Col — identical values
+    // to the v2* Column forms, parity-tested in BenchmarkBuildersSpec),
+    // behind a ComputeOnce barrier (without it CollapseProject inlined the
+    // battery into 56 copies per row)
+    val fusedConcepts = ConceptExtract.v2Col(text)
     val base = graft.functions.ComputeOnce(
       scored.filter(suitableForBenchmarkV2(text)), "__cx", fusedConcepts)
       .withColumn("__eqs", col("__cx.equations"))
@@ -375,8 +374,7 @@ object BenchmarkBuilders {
                        subjectCol: String): DataFrame = {
     val text = col(textCol)
     val url = col(urlCol)
-    val fusedConcepts = org.apache.spark.sql.GraftColumnBridge.column(
-      V3ConceptsExpr(org.apache.spark.sql.GraftColumnBridge.expression(text)))
+    val fusedConcepts = ConceptExtract.v3Col(text)
     val base = graft.functions.ComputeOnce(
       scored.filter(suitableForBenchmarkV3(text)), "__cx", fusedConcepts)
       .withColumn("__eqs", col("__cx.equations"))

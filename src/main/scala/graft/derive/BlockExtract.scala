@@ -3,9 +3,8 @@ package graft.derive
 import DeriveHelpers._
 import graft.rules.Heuristics.termCountStr
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -127,15 +126,8 @@ object BlockExtract {
     StructField("derivations", ArrayType(StringType), nullable = false),
     StructField("solutions", ArrayType(StringType), nullable = false),
     StructField("proofs", ArrayType(StringType), nullable = false)))
-}
 
-case class BlockExtractExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BlockExtract.OutSchema
-  override def nullSafeEval(input: Any): Any =
-    BlockExtract.computeRow(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.derive.BlockExtract.computeRow($c)")
-  override protected def withNewChildInternal(newChild: Expression): BlockExtractExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_blocks"
+  /** The (derivations, solutions, proofs) struct as a native call. */
+  def blocksCol(text: Column): Column =
+    graft.functions.Native(this, "computeRow", OutSchema, text)
 }

@@ -6,8 +6,7 @@ import java.util.regex.Pattern
 
 import graft.extract.Clean.sparkLower
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -225,28 +224,11 @@ object ConceptExtract {
     StructField("derivations", ArrayType(V3PairSchema), nullable = false),
     StructField("numericals", ArrayType(StringType), nullable = false),
     StructField("scenarios", ArrayType(StringType), nullable = false)))
-}
 
-case class V2ConceptsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ConceptExtract.V2Schema
-  override def nullSafeEval(input: Any): Any =
-    ConceptExtract.computeV2(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.derive.ConceptExtract.computeV2($c.toString())")
-  override protected def withNewChildInternal(newChild: Expression): V2ConceptsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_v2_concepts"
-}
+  def v2Row(u: UTF8String): InternalRow = computeV2(u.toString)
+  def v3Row(u: UTF8String): InternalRow = computeV3(u.toString)
 
-case class V3ConceptsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ConceptExtract.V3Schema
-  override def nullSafeEval(input: Any): Any =
-    ConceptExtract.computeV3(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.derive.ConceptExtract.computeV3($c.toString())")
-  override protected def withNewChildInternal(newChild: Expression): V3ConceptsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_v3_concepts"
+  /** The v2 / v3 concept structs as native calls. */
+  def v2Col(text: Column): Column = graft.functions.Native(this, "v2Row", V2Schema, text)
+  def v3Col(text: Column): Column = graft.functions.Native(this, "v3Row", V3Schema, text)
 }

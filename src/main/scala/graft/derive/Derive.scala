@@ -57,17 +57,16 @@ object Derive {
     val blockStruct: (Column, String) => Column = (arr, typ) =>
       transform(arr, b => struct(lit(typ).as("example_type"), b.as("block")))
 
-    // E13 batteries run fused (BlockExtractExpr — identical matches to the
+    // E13 batteries run fused (BlockExtract — identical matches to the
     // Extract.* Column forms, ~100x less per-row interpreter overhead),
     // behind a ComputeOnce barrier so the battery runs once per row, not
     // once per field reference (CollapseProject would inline it 7x)
-    val fusedBlocks = org.apache.spark.sql.GraftColumnBridge.column(
-      BlockExtractExpr(org.apache.spark.sql.GraftColumnBridge.expression(text)))
+    val fusedBlocks = BlockExtract.blocksCol(text)
     val withBlocks = graft.functions.ComputeOnce(
       df.filter(suitableForTraining(text, col(urlCol))), "__bx", fusedBlocks)
       .withColumn("blocks", concat(
         // loop caps per enhanced_paper_analyser.py:692-705 — the find-level
-        // caps are 7/7/3 (BlockExtractExpr), the processing loop then takes
+        // caps are 7/7/3 (BlockExtract), the processing loop then takes
         // derivations[:3], solutions[:3], proofs[:2]
         blockStruct(slice(col("__bx.derivations"), 1, 3), "derivation"),
         blockStruct(slice(col("__bx.solutions"), 1, 3), "solution"),
@@ -80,13 +79,11 @@ object Derive {
         col("b.example_type").as("example_type"), col("b.block").as("block"))
 
     // _create_training_example (enhanced_paper_analyser.py:820-860).
-    // Steps run as the fused ReasoningStepsExpr (identical values to
+    // Steps run as the fused StepExtract kernel (identical values to
     // Extract.reasoningStepsAnalyser — DeriveSpec parity test). Both the
     // cleaned text (a 5-regex chain consumed ~8 times downstream) and the
     // steps array go behind ComputeOnce barriers.
-    val fusedSteps = org.apache.spark.sql.GraftColumnBridge.column(
-      ReasoningStepsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("cleaned"))))
+    val fusedSteps = StepExtract.stepsCol(col("cleaned"))
     val withSteps = graft.functions.ComputeOnce(
       graft.functions.ComputeOnce(withBlocks, "cleaned",
         Clean.trainingClean(col("block")))

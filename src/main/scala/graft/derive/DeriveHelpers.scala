@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Helpers shared by the derive builders: Column forms for the batteries
-  * and gates, and the JVM mirrors the fused expressions use.
+  * and gates, and the JVM mirrors the fused kernels use.
   */
 private[derive] object DeriveHelpers {
 
@@ -44,6 +44,9 @@ private[derive] object DeriveHelpers {
     }
     out.toArray
   }
+
+  /** A Catalyst string as a Java one, null kept. */
+  @inline def str(u: UTF8String): String = if (u == null) null else u.toString
 
   /** A Catalyst string array. */
   def arr(a: Array[String]): GenericArrayData =

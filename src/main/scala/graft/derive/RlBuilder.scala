@@ -313,15 +313,15 @@ object RlBuilder {
     * candidates capped at 5 then 3.
     *
     * Battery scans stay declarative Catalyst (guarded, oracle-visible);
-    * per-candidate processing runs as the fused RlExampleExpr — the
-    * Column chains it replaces are kept below as `extractedExamplesRef`
-    * and proven byte-identical by RlExampleParitySpec.
+    * per-candidate processing runs as the fused `RlExample.<kind>Row`
+    * kernel — the Column chains it replaces are kept below as
+    * `extractedExamplesRef` and proven byte-identical by
+    * RlExampleParitySpec.
     */
   def extractedExamples(text: Column): Column =
-    examplesPlan(text, { (kind, groups) =>
-      org.apache.spark.sql.GraftColumnBridge.column(RlExampleExpr(kind,
-        groups.map(org.apache.spark.sql.GraftColumnBridge.expression)))
-    })
+    examplesPlan(text, (kind, groups) =>
+      graft.functions.Native.nullAware(RlExample, s"${kind}Row",
+        RlExample.ExampleType, nullable = true, groups: _*))
 
   /** The pure-Column reference form (parity test only). */
   private[graft] def extractedExamplesRef(text: Column): Column =
@@ -469,14 +469,14 @@ object RlBuilder {
   private[graft] val V3AnchorTerms: Seq[String] =
     (V3ExplicitAnchors.flatten ++ V3DerivationAnchors).flatten.distinct
 
-  /** Per-candidate processing fused into V3ExampleExpr; the Column form
-    * stays as v3ExtractedExamplesRef for RlExampleParitySpec.
+  /** Per-candidate processing fused into the `RlExample.v3<Kind>Row`
+    * kernels; the Column form stays as v3ExtractedExamplesRef for
+    * RlExampleParitySpec.
     */
   def v3ExtractedExamples(text: Column): Column =
-    v3ExamplesPlan(text, { (kind, groups) =>
-      org.apache.spark.sql.GraftColumnBridge.column(V3ExampleExpr(kind,
-        groups.map(org.apache.spark.sql.GraftColumnBridge.expression)))
-    })
+    v3ExamplesPlan(text, (kind, groups) =>
+      graft.functions.Native.nullAware(RlExample, s"v3${kind.capitalize}Row",
+        RlExample.V3ExampleType, nullable = true, groups: _*))
 
   private[graft] def v3ExtractedExamplesRef(text: Column): Column = {
     val nullEx = lit(null).cast(V3ExampleStruct)

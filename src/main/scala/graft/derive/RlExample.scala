@@ -9,14 +9,13 @@ import graft.rules.Heuristics.termCountStr
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused per-candidate RL example processing — the v2 builder's
-  * validation/step-parsing/quality chains as ONE compiled expression per
+  * validation/step-parsing/quality chains as ONE native call per
   * battery candidate instead of a ~1000-node interpreted Column tree.
   *
   * Why: the Column lambdas (explicit/derivation/calculation example
@@ -381,9 +380,9 @@ object RlExample {
     V3Example("derivation", problem, solution, q)
   }
 
-  private[derive] def toV3Row(e: V3Example): AnyRef =
+  private def toV3Row(e: V3Example): InternalRow =
     if (e == null) null
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+    else new GenericInternalRow(Array[Any](
       UTF8String.fromString(e.exampleType),
       if (e.problem == null) null else UTF8String.fromString(e.problem),
       if (e.solution == null) null else UTF8String.fromString(e.solution),
@@ -391,76 +390,32 @@ object RlExample {
 
   // ---- InternalRow bridge ------------------------------------------
 
-  private[derive] def toRow(e: Example): AnyRef =
+  private def toRow(e: Example): InternalRow =
     if (e == null) null
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+    else new GenericInternalRow(Array[Any](
       UTF8String.fromString(e.exampleType),
       if (e.problem == null) null else UTF8String.fromString(e.problem),
       new GenericArrayData(e.steps.map(s =>
         (if (s == null) null else UTF8String.fromString(s)): Any)),
       if (e.answer == null) null else UTF8String.fromString(e.answer),
       e.quality))
-}
 
-/** The candidate-processing expression: kind selects the battery's
-  * builder; children are the zipped capture-group strings. eval is
-  * overridden (NOT nullSafeEval) — null groups flow through the same
-  * three-valued gate logic as the Column form. CodegenFallback is
-  * deliberate: these sit inside HOF lambdas, which always evaluate
-  * interpreted.
-  */
-case class RlExampleExpr(kind: String, children: Seq[Expression])
-    extends Expression with CodegenFallback {
+  // ---- native entries: one per battery kind, null groups passed
+  // through to the three-valued gate logic (RlBuilder calls them as
+  // `<kind>Row` / `v3<Kind>Row`) -------------------------------------
 
-  require(Seq("explicit", "derivation", "calculation").contains(kind))
+  def explicitRow(p: UTF8String, s: UTF8String): InternalRow =
+    toRow(explicitExample(str(p), str(s)))
 
-  override def dataType: DataType = RlExample.ExampleType
-  override def nullable: Boolean = true
+  def derivationRow(g: UTF8String, s: UTF8String, r: UTF8String): InternalRow =
+    toRow(derivationExample(str(g), str(s), str(r)))
 
-  override def eval(input: InternalRow): Any = {
-    def s(i: Int): String = {
-      val v = children(i).eval(input)
-      if (v == null) null else v.toString
-    }
-    val ex = kind match {
-      case "explicit" => RlExample.explicitExample(s(0), s(1))
-      case "derivation" => RlExample.derivationExample(s(0), s(1), s(2))
-      case "calculation" => RlExample.calculationExample(s(0), s(1), s(2))
-    }
-    RlExample.toRow(ex)
-  }
+  def calculationRow(s: UTF8String, c: UTF8String, r: UTF8String): InternalRow =
+    toRow(calculationExample(str(s), str(c), str(r)))
 
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): RlExampleExpr =
-    copy(children = newChildren)
+  def v3ExplicitRow(p: UTF8String, s: UTF8String): InternalRow =
+    toV3Row(v3ExplicitExample(str(p), str(s)))
 
-  override def prettyName: String = s"graft_rl_example_$kind"
-}
-
-/** V3 counterpart of RlExampleExpr. */
-case class V3ExampleExpr(kind: String, children: Seq[Expression])
-    extends Expression with CodegenFallback {
-
-  require(Seq("explicit", "derivation").contains(kind))
-
-  override def dataType: DataType = RlExample.V3ExampleType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    def s(i: Int): String = {
-      val v = children(i).eval(input)
-      if (v == null) null else v.toString
-    }
-    val ex = kind match {
-      case "explicit" => RlExample.v3ExplicitExample(s(0), s(1))
-      case "derivation" => RlExample.v3DerivationExample(s(0), s(1), s(2))
-    }
-    RlExample.toV3Row(ex)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): V3ExampleExpr =
-    copy(children = newChildren)
-
-  override def prettyName: String = s"graft_rl_v3_example_$kind"
+  def v3DerivationRow(g: UTF8String, p: UTF8String, r: UTF8String): InternalRow =
+    toV3Row(v3DerivationExample(str(g), str(p), str(r)))
 }

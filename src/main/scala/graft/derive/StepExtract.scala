@@ -2,10 +2,9 @@ package graft.derive
 
 import DeriveHelpers._
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused E15 reasoning-step extraction (the analyser variant,
@@ -78,15 +77,9 @@ object StepExtract {
     val a = compute(if (u == null) null else u.toString)
     new GenericArrayData(a.map(x => UTF8String.fromString(x).asInstanceOf[Any]))
   }
-}
 
-case class ReasoningStepsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    StepExtract.computeArray(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.derive.StepExtract.computeArray($c)")
-  override protected def withNewChildInternal(newChild: Expression): ReasoningStepsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_reasoning_steps"
+  /** The steps array as a native call. */
+  def stepsCol(text: Column): Column =
+    graft.functions.Native(this, "computeArray",
+      ArrayType(StringType, containsNull = false), text)
 }

@@ -365,17 +365,16 @@ Focus particularly on the application of: """),
     when(guard, hits(text, pattern, 0)).otherwise(array().cast("array<string>"))
 
   /** Battery scans stay guarded Catalyst; the per-candidate clean +
-    * completeness check runs as the fused UgCompleteDerivExpr (Column
-    * form kept as ugFindCompleteDerivationsRef; UgExampleParitySpec).
+    * completeness check runs as the fused UgExample.completeDerivationCol
+    * (Column form kept as ugFindCompleteDerivationsRef;
+    * UgExampleParitySpec).
     */
   def ugFindCompleteDerivations(text: Column): Column =
     wordGuarded(text) { g =>
       slice(
         UgDerivationPatterns.zip(UgDerivationAnchors).map { case (p, a) =>
           filter(transform(anchoredHits(g(a), text, p),
-            m => org.apache.spark.sql.GraftColumnBridge.column(
-              UgCompleteDerivExpr(
-                org.apache.spark.sql.GraftColumnBridge.expression(m)))),
+            UgExample.completeDerivationCol(_)),
             m => m.isNotNull)
         }.reduce(concat(_, _)),
         1, 5)
@@ -492,8 +491,7 @@ Focus particularly on the application of: """),
                                      textCol: String, subjectCol: String,
                                      titleCol: String): DataFrame = {
     val text = col(textCol)
-    val fusedBlocks = org.apache.spark.sql.GraftColumnBridge.column(
-      BlockExtractExpr(org.apache.spark.sql.GraftColumnBridge.expression(text)))
+    val fusedBlocks = BlockExtract.blocksCol(text)
     val blockStruct: (Column, String) => Column = (arr, typ) =>
       transform(arr, b => struct(lit(typ).as("example_type"), b.as("block")))
 
@@ -511,8 +509,7 @@ Focus particularly on the application of: """),
         col(titleCol).as("title"), explode(col("blocks")).as("b"))
 
     graft.functions.ComputeOnce(withBlocks, "cleaned",
-      org.apache.spark.sql.GraftColumnBridge.column(graft.derive.DerivationCleanExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("b.block")))))
+      UgExample.derivationCleanCol(col("b.block")))
       .filter(length(col("cleaned")) >= 100)
   }
 
@@ -520,12 +517,10 @@ Focus particularly on the application of: """),
                          subjectCol: String, titleCol: String): DataFrame = {
     val withCleaned = ugCleanedBlocks(df, urlCol, textCol, subjectCol, titleCol)
     // the whole per-block metadata stage fused into one compiled pass
-    // (UgMetaExpr; Column forms remain the q45/q49 oracle surface and
-    // the UgExampleParitySpec reference)
+    // (UgExample.metaCol; Column forms remain the q45/q49 oracle surface
+    // and the UgExampleParitySpec reference)
     val withMeta = graft.functions.ComputeOnce(withCleaned, "m",
-      org.apache.spark.sql.GraftColumnBridge.column(UgMetaExpr(Seq(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("cleaned")),
-        org.apache.spark.sql.GraftColumnBridge.expression(col("subject"))))))
+      UgExample.metaCol(col("cleaned"), col("subject")))
       .filter(col("m.step_count") >= 2)
 
     withMeta

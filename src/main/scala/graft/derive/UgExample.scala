@@ -8,21 +8,23 @@ import graft.extract.Clean.sparkLower
 import graft.rules.Heuristics.termCountStr
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused per-block UG training processing — same motivation and mirror
   * rules as [[RlExample]] (that scaladoc documents the mirrored Spark
-  * semantics). Two expressions:
+  * semantics). Three native calls:
   *
-  *   - [[UgCompleteDerivExpr]]: candidate → derivation-cleaned text if
+  *   - `derivationCleanCol`: Gates.derivationClean in one compiled pass
+  *     (null coalesces to "");
+  *   - `completeDerivationCol`: candidate → derivation-cleaned text if
   *     it passes the completeness predicate, else null (the per-candidate
   *     body of ugFindCompleteDerivations);
-  *   - [[UgMetaExpr]]: (cleaned block, subject) → the whole per-block
+  *   - `metaCol`: (cleaned block, subject) → the whole per-block
   *     metadata struct (problem statement, solution steps, difficulty,
   *     topic, reasoning type, prerequisites, concepts, raw text) that
   *     ugTrainingExamples previously assembled from eight separate
@@ -271,7 +273,7 @@ object UgExample {
     new GenericArrayData(a.map(s =>
       (if (s == null) null else UTF8String.fromString(s)): Any))
 
-  def metaRow(cleaned: String, subject: String): AnyRef = {
+  def metaRow(cleaned: String, subject: String): InternalRow = {
     // one Spark-lower and one ASCII fold for the whole block — the
     // helpers otherwise re-scan the identical string 7 times
     val lo = sparkLower(cleaned)
@@ -288,52 +290,30 @@ object UgExample {
       strArr(conceptsFold(cleaned, fold)),
       UTF8String.fromString(graft.extract.Clean.limitRawTextStr(cleaned))))
   }
-}
 
-/** Gates.derivationClean as one compiled pass (null coalesces to ""). */
-case class DerivationCleanExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    UTF8String.fromString(
-      UgExample.derivationClean(if (v == null) null else v.toString))
-  }
-  override protected def withNewChildInternal(newChild: Expression): DerivationCleanExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_derivation_clean"
-}
+  // ---- native entries: Catalyst values in and out, null-aware ------
 
-/** candidate → cleaned complete derivation, or null. */
-case class UgCompleteDerivExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    val out = UgExample.completeDerivation(if (v == null) null else v.toString)
+  def derivationCleanUtf8(u: UTF8String): UTF8String =
+    UTF8String.fromString(derivationClean(str(u)))
+
+  def completeDerivationUtf8(u: UTF8String): UTF8String = {
+    val out = completeDerivation(str(u))
     if (out == null) null else UTF8String.fromString(out)
   }
-  override protected def withNewChildInternal(newChild: Expression): UgCompleteDerivExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_ug_complete_deriv"
-}
 
-/** (cleaned block, subject) → the per-block metadata struct. */
-case class UgMetaExpr(children: Seq[Expression])
-    extends Expression with CodegenFallback {
-  require(children.length == 2)
-  override def dataType: DataType = UgExample.MetaType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val c = children(0).eval(input)
-    if (c == null) return null
-    val s = children(1).eval(input)
-    UgExample.metaRow(c.toString, if (s == null) null else s.toString)
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): UgMetaExpr =
-    copy(children = newChildren)
-  override def prettyName: String = "graft_ug_meta"
+  /** Null cleaned block → null; a null subject reaches `topicLo`. */
+  def metaRowUtf8(cleaned: UTF8String, subject: UTF8String): InternalRow =
+    if (cleaned == null) null else metaRow(cleaned.toString, str(subject))
+
+  def derivationCleanCol(c: Column): Column =
+    graft.functions.Native.nullAware(this, "derivationCleanUtf8", StringType,
+      nullable = false, c)
+
+  def completeDerivationCol(m: Column): Column =
+    graft.functions.Native.nullAware(this, "completeDerivationUtf8", StringType,
+      nullable = true, m)
+
+  def metaCol(cleaned: Column, subject: Column): Column =
+    graft.functions.Native.nullAware(this, "metaRowUtf8", MetaType,
+      nullable = true, cleaned, subject)
 }

@@ -2,6 +2,8 @@ package graft.extract
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-cleaning projections — the "scrub family" (SURVEY.md §2.3, C1–C10).
   *
@@ -109,6 +111,15 @@ object Clean {
     }
     sb.toString.trim
   }
+
+  /** `basicCleanFastStr` as a native call (the `graft_basic_clean` SQL
+    * function).
+    */
+  def basicCleanFastCol(c: Column): Column =
+    graft.functions.Native(this, "basicCleanUtf8", StringType, c)
+
+  def basicCleanUtf8(u: UTF8String): UTF8String =
+    UTF8String.fromString(basicCleanFastStr(u.toString))
 
   // ---------------------------------------------------------------------
   // C2 — enhanced clean (reference: analysis/pdf_processor.py:138-168)

@@ -55,18 +55,22 @@ object HtmlText {
   private val AnyTagRe = "(?s)<[^>]+>".r
   private val EntityRe = "&(#?[0-9a-zA-Z]+);".r
 
+  /** The text the entity `&name;` stands for: a `#x` hex or `#` decimal
+    * code unit, or a named entity; null when unknown or unparsable.
+    */
+  private def entity(name: String): String =
+    if (name.startsWith("#x") || name.startsWith("#X"))
+      try String.valueOf(Integer.parseInt(name.substring(2), 16).toChar)
+      catch { case _: Exception => null }
+    else if (name.startsWith("#"))
+      try String.valueOf(Integer.parseInt(name.substring(1)).toChar)
+      catch { case _: Exception => null }
+    else EntityMap.getOrElse(name, null)
+
   private def decodeEntities(s: String): String =
     EntityRe.replaceAllIn(s, m => {
-      val name = m.group(1)
-      val rep =
-        if (name.startsWith("#x") || name.startsWith("#X"))
-          try String.valueOf(Integer.parseInt(name.drop(2), 16).toChar)
-          catch { case _: Exception => m.matched }
-        else if (name.startsWith("#"))
-          try String.valueOf(Integer.parseInt(name.drop(1)).toChar)
-          catch { case _: Exception => m.matched }
-        else EntityMap.getOrElse(name, m.matched)
-      java.util.regex.Matcher.quoteReplacement(rep)
+      val rep = entity(m.group(1))
+      java.util.regex.Matcher.quoteReplacement(if (rep == null) m.matched else rep)
     })
 
   private val BlockTagSet: Set[String] = BlockTags.split('|').toSet
@@ -126,15 +130,7 @@ object HtmlText {
         // inline entity decode: &name; or &#nnn; or &#xhh; within 12 chars
         val semi = html.indexOf(';', i + 1)
         if (semi > i && semi - i <= 12) {
-          val name = html.substring(i + 1, semi)
-          val rep: String =
-            if (name.startsWith("#x") || name.startsWith("#X"))
-              try String.valueOf(Integer.parseInt(name.substring(2), 16).toChar)
-              catch { case _: Exception => null }
-            else if (name.startsWith("#"))
-              try String.valueOf(Integer.parseInt(name.substring(1)).toChar)
-              catch { case _: Exception => null }
-            else EntityMap.getOrElse(name, null)
+          val rep = entity(html.substring(i + 1, semi))
           if (rep != null) { sb.append(rep); i = semi + 1 }
           else { sb.append(c); i += 1 }
         } else { sb.append(c); i += 1 }
@@ -241,15 +237,7 @@ object HtmlText {
       } else if (c == '&') {
         val semi = html.indexOf(';', i + 1)
         if (semi > i && semi - i <= 12) {
-          val name = html.substring(i + 1, semi)
-          val rep: String =
-            if (name.startsWith("#x") || name.startsWith("#X"))
-              try String.valueOf(Integer.parseInt(name.substring(2), 16).toChar)
-              catch { case _: Exception => null }
-            else if (name.startsWith("#"))
-              try String.valueOf(Integer.parseInt(name.substring(1)).toChar)
-              catch { case _: Exception => null }
-            else EntityMap.getOrElse(name, null)
+          val rep = entity(html.substring(i + 1, semi))
           if (rep != null) {
             var r = 0
             while (r < rep.length) { emit(rep.charAt(r)); r += 1 }
@@ -493,15 +481,7 @@ object HtmlText {
           if (nameSb.length > 11) over = true // '&'+name+';' would exceed 12
         }
         if (semi > i && !over) {
-          val name = nameSb.toString
-          val rep: String =
-            if (name.startsWith("#x") || name.startsWith("#X"))
-              try String.valueOf(Integer.parseInt(name.substring(2), 16).toChar)
-              catch { case _: Exception => null }
-            else if (name.startsWith("#"))
-              try String.valueOf(Integer.parseInt(name.substring(1)).toChar)
-              catch { case _: Exception => null }
-            else EntityMap.getOrElse(name, null)
+          val rep = entity(nameSb.toString)
           if (rep != null) {
             var r = 0
             while (r < rep.length) { emitChar(rep.charAt(r)); r += 1 }
@@ -535,4 +515,13 @@ object HtmlText {
   private val extractUdf = udf((b: Array[Byte]) => extract(b))
 
   def extractCol(c: Column): Column = extractUdf(c)
+
+  /** E1 + C1 fused: html bytes → extracted, basic-cleaned text in one
+    * byte-level scan (`extractCleanBytes`) — no UTF-8 decode to String, no
+    * intermediate extraction string, no separate clean pass. Equality with
+    * the decode-then-scan and fully chained forms is property-tested.
+    */
+  def extractCleanCol(html: Column): Column =
+    graft.functions.Native(this, "extractCleanBytes",
+      org.apache.spark.sql.types.StringType, html)
 }

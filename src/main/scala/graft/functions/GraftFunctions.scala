@@ -1,93 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.DataType
 
+import graft.dedup.Dedup
+import graft.extract.{Clean, HtmlText}
+import graft.rules.{PatternCounts, TokenStats}
+import graft.score.Perplexity
 import graft.scrub.PiiScrub
-
-/** C13 as a native Catalyst expression (SURVEY.md §2.3 C13: "custom
-  * Catalyst Expression (codegen-friendly, compile-once-per-task)").
-  *
-  * The whole PII/toxicity battery in ONE expression node: one
-  * UTF8String→String conversion in, one out, patterns compiled once per
-  * JVM (static), and a `doGenCode` body that stays inside whole-stage
-  * codegen (a single static call — no virtual dispatch, no per-row
-  * pattern lookup). It runs `PiiScrub.scrubKernel`, which the parity
-  * specs hold equal to the plain chain `PiiScrub.scrubStr`.
-  */
-case class PiiScrubExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(PiiScrub.scrubKernel(input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.scrub.PiiScrub.scrubKernel($c.toString()))")
-
-  override protected def withNewChildInternal(newChild: Expression): PiiScrubExpr =
-    copy(child = newChild)
-
-  override def prettyName: String = "pii_scrub"
-}
-
-/** C1 basic clean as a native single-pass expression — same output as the
-  * regexp chain (Clean.basicClean) by the fused-scan argument documented at
-  * Clean.basicCleanFastStr; parity-tested.
-  */
-case class BasicCleanExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      graft.extract.Clean.basicCleanFastStr(input.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.extract.Clean.basicCleanFastStr($c.toString()))")
-  override protected def withNewChildInternal(newChild: Expression): BasicCleanExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_basic_clean"
-}
-
-/** E1 + C1 fused: raw html bytes → extracted, basic-cleaned text in ONE
-  * BYTE-LEVEL scan (HtmlText.extractCleanBytes) — no UTF-8 decode to
-  * String, no intermediate extraction string, no separate clean pass;
-  * the only allocation is the final output buffer. Replaces the UDF +
-  * graft_basic_clean pair on the pipeline hot path; equality vs the
-  * decode-then-scan and fully-chained forms is property-tested.
-  */
-case class ExtractCleanExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    graft.extract.HtmlText.extractCleanBytes(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.extract.HtmlText.extractCleanBytes($c)")
-  override protected def withNewChildInternal(newChild: Expression): ExtractCleanExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_extract_clean"
-}
-
-/** M2 perplexity as a native expression over the JVM-static model (see
-  * Perplexity.Shared) — identical scores to RefOracle's row-at-a-time
-  * scorer by construction (same Model.score).
-  */
-case class PerplexityExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullSafeEval(input: Any): Any =
-    graft.score.Perplexity.scoreShared(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.score.Perplexity.scoreShared($c)")
-  override protected def withNewChildInternal(newChild: Expression): PerplexityExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_perplexity"
-}
 
 /** Vector dot product over array<float>/array<double> columns — the
   * higher-order `aggregate(zip_with(...))` form is interpreted per element
@@ -195,12 +119,13 @@ object ComputeOnce {
 /** Registration of graft-native SQL functions on a session (the
   * SparkSessionExtensions-equivalent entry point — injectable via
   * `.withExtensions(GraftFunctions.injectAll)` on a fresh builder, or
-  * registered post-hoc on an existing session).
+  * registered post-hoc on an existing session). Every name resolves to a
+  * Spark `StaticInvoke` of its kernel, built by [[Native]].
   */
 object GraftFunctions {
 
   /** Register on a live session, for SQL and `call_function` users (the
-    * library's own paths build the expressions directly). Idempotent —
+    * library's own paths call the Column functions directly). Idempotent —
     * and quiet about it: `createOrReplaceTempFunction` on an existing
     * name logs a "replaced a previously registered function" WARN. The
     * idempotence check asks the functionRegistry whether ALL graft
@@ -218,36 +143,40 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     if (Functions.forall(f => reg.functionExists(FunctionIdentifier(f._1)))) return
-    Functions.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    Functions.foreach { case (name, f) =>
+      reg.createOrReplaceTempFunction(name, builder(name, f), "built-in")
     }
   }
 
-  /** The graft-native SQL functions, as (name, expression class,
-    * builder) — what `register` and `injectAll` install.
+  /** The graft-native SQL functions, as (name, the library's Column
+    * function) — what `register` and `injectAll` install. Each name
+    * builds the same [[Native]] call the library's own paths use.
     */
-  private val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("pii_scrub", classOf[PiiScrubExpr], e => PiiScrubExpr(e.head)),
-    ("graft_token_stats", classOf[graft.rules.TokenStatsExpr],
-      e => graft.rules.TokenStatsExpr(e.head)),
-    ("graft_pattern_counts", classOf[graft.rules.PatternCountsExpr],
-      e => graft.rules.PatternCountsExpr(e.head)),
-    ("graft_basic_clean", classOf[BasicCleanExpr], e => BasicCleanExpr(e.head)),
-    ("graft_perplexity", classOf[PerplexityExpr], e => PerplexityExpr(e.head)),
-    ("graft_simhash", classOf[graft.dedup.SimHashExpr],
-      e => graft.dedup.SimHashExpr(e.head)),
-    ("graft_extract_clean", classOf[ExtractCleanExpr], e => ExtractCleanExpr(e.head)))
+  private[graft] val Functions: Seq[(String, Column => Column)] = Seq(
+    "pii_scrub" -> PiiScrub.scrub,
+    "graft_token_stats" -> TokenStats.statsCol,
+    "graft_pattern_counts" -> PatternCounts.countsCol,
+    "graft_basic_clean" -> Clean.basicCleanFastCol,
+    "graft_perplexity" -> Perplexity.scoreCol,
+    "graft_simhash" -> Dedup.simhash,
+    "graft_extract_clean" -> HtmlText.extractCleanCol)
+
+  private def builder(name: String, f: Column => Column): Seq[Expression] => Expression = {
+    args =>
+      require(args.size == 1, s"$name takes one argument, got ${args.size}")
+      GraftColumnBridge.expression(f(GraftColumnBridge.column(args.head)))
+  }
 
   /** SparkSessionExtensions injection point (for spark-submit via
     * spark.sql.extensions=graft.functions.GraftExtensions) — registers
     * the same native-expression surface as `register`.
     */
   def injectAll(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    Functions.foreach { case (name, clazz, builder) =>
+    Functions.foreach { case (name, f) =>
       ext.injectFunction((FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          clazz.getName, name),
-        builder))
+          classOf[StaticInvoke].getName, name),
+        builder(name, f)))
     }
 }
 

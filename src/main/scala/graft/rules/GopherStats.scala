@@ -1,9 +1,6 @@
 package graft.rules
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -201,31 +198,4 @@ object GopherStats {
     StructField("symbol_ratio", DoubleType),
     StructField("stopword_ratio", DoubleType),
     StructField("gopher_keep", BooleanType)))
-}
-
-/** Catalyst wrapper: NEVER null (null text maps to the Column form's
-  * field-level three-valued-logic image), codegen-friendly static call.
-  */
-case class GopherStatsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"n must be positive, got $n")
-  override def dataType: DataType = GopherStats.outSchema(n)
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    GopherStats.computeRow(
-      if (v == null) null else v.asInstanceOf[UTF8String], n)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        $javaType ${ev.value} = graft.rules.GopherStats.computeRow(
-          ${c.isNull} ? null : ${c.value}, $n);""",
-      isNull = FalseLiteral)
-  }
-  override protected def withNewChildInternal(newChild: Expression): GopherStatsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_gopher_stats"
 }

@@ -296,8 +296,8 @@ object Heuristics {
       dupLineFraction(c) < 0.50 &&
       dupNgramFraction(c, 3) < 0.80
 
-  /** All Gopher signals + the keep rule in ONE pass per row — the native
-    * single-scan GopherStatsExpr (round 6; ~0.23 ms/doc of interpreted
+  /** All Gopher signals + the keep rule in ONE pass per row — a native
+    * call of the single-scan `GopherStats.computeRow` (round 6; ~0.23 ms/doc of interpreted
     * HOF lambda evaluation removed from the q51/q52/q53 paths). Field
     * values equal the individual functions UP TO `round(_, 6)` — the
     * ratio fields are rounded for oracle hash stability, the standalone
@@ -305,12 +305,15 @@ object Heuristics {
     * the Column functions AND against the Let-bound HOF composition
     * below; `gopher_keep` compares the UNROUNDED values, so the keep bit
     * is exactly `gopherKeep`). Consume behind a ComputeOnce barrier so
-    * the struct is computed once, not per field reference.
+    * the struct is computed once, not per field reference. Never null:
+    * null text maps to the Column form's field-level three-valued-logic
+    * image.
     */
-  def gopherStats(c: Column, n: Int = 3): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      GopherStatsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(c), n))
+  def gopherStats(c: Column, n: Int = 3): Column = {
+    require(n > 0, s"n must be positive, got $n")
+    graft.functions.Native.nullAware(GopherStats, "computeRow",
+      GopherStats.outSchema(n), nullable = false, c, lit(n))
+  }
 
   /** The Let-bound pure-Catalyst composition (kept as the parity-test
     * reference surface for the native expression). The naive

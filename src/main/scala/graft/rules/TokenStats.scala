@@ -1,8 +1,7 @@
 package graft.rules
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -84,6 +83,10 @@ object TokenStats {
     StructField("physics_terms", LongType, nullable = false),
     StructField("math_terms", LongType, nullable = false),
     StructField("dot_count", LongType, nullable = false)))
+
+  /** The struct as a native call (the `graft_token_stats` SQL function). */
+  def statsCol(text: Column): Column =
+    graft.functions.Native(this, "computeRow", OutSchema, text)
 }
 
 /** Fused pattern-count battery (E3 math expressions + E4 references + E8
@@ -197,32 +200,10 @@ object PatternCounts {
     StructField("math_expressions", LongType, nullable = false),
     StructField("reference_count", LongType, nullable = false),
     StructField("equation_count", LongType, nullable = false)))
-}
 
-case class PatternCountsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = PatternCounts.OutSchema
-  override def nullSafeEval(input: Any): Any =
-    PatternCounts.computeRow(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.rules.PatternCounts.computeRow($c)")
-  override protected def withNewChildInternal(newChild: Expression): PatternCountsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "graft_pattern_counts"
-}
-
-/** The Catalyst expression wrapper (registered as `graft_token_stats`). */
-case class TokenStatsExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = TokenStats.OutSchema
-
-  override def nullSafeEval(input: Any): Any =
-    TokenStats.computeRow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.rules.TokenStats.computeRow($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenStatsExpr =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_token_stats"
+  /** The struct as a native call (the `graft_pattern_counts` SQL
+    * function).
+    */
+  def countsCol(text: Column): Column =
+    graft.functions.Native(this, "computeRow", OutSchema, text)
 }

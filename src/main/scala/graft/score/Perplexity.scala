@@ -10,9 +10,9 @@ package graft.score
   * backing off to the add-0.5-smoothed hashed unigram P_uni when the
   * context is unseen. Both tables are built deterministically from an
   * embedded English frequency lexicon and bigram list (Zipf rank weights —
-  * public knowledge, no RNG, no external data). It is evaluated by the
-  * native PerplexityExpr over the JVM-static instance — explicitly NOT a
-  * row-at-a-time UDF (SURVEY.md §2.7).
+  * public knowledge, no RNG, no external data). It is evaluated by a
+  * native call of `scoreShared` over the JVM-static instance — explicitly
+  * NOT a row-at-a-time UDF (SURVEY.md §2.7).
   *
   * The same `score(text)` function is used by the row-at-a-time reference
   * oracle, so pipeline/oracle parity holds by construction and tests verify
@@ -174,4 +174,9 @@ object Perplexity {
   /** Static scoring entry for codegen. */
   def scoreShared(u: org.apache.spark.unsafe.types.UTF8String): Double =
     if (u == null) MaxPpl else Shared.score(u.toString)
+
+  /** Perplexity of `text` as a native call (null text → null). */
+  def scoreCol(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.functions.Native(this, "scoreShared",
+      org.apache.spark.sql.types.DoubleType, text)
 }

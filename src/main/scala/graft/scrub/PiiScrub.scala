@@ -2,9 +2,11 @@ package graft.scrub
 
 import java.util.regex.{Matcher, Pattern}
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{AnchoredFind, PiiScrubExpr}
+import graft.functions.{AnchoredFind, Native}
 
 /** C13 — PII / toxicity scrub (SURVEY.md §2.3 C13; mandated by
   * BASELINE.json north_rule: "scrubs PII/toxicity with compiled regex
@@ -14,10 +16,10 @@ import graft.functions.{AnchoredFind, PiiScrubExpr}
   * 905-912), admin-note removal (:174-192), non-ASCII strip
   * (analysis/pdf_processor.py:71). The graft extends those to web-text PII.
   *
-  * One production path: `scrub` builds the native [[PiiScrubExpr]], which
-  * runs `scrubKernel` — the ordered battery, where a pass runs only when
-  * the row holds a literal every match of it contains, and tries its
-  * pattern only where a match can start (the email pass: from each '@').
+  * One production path: `scrub` is a native call of `scrubKernel` — the
+  * ordered battery, where a pass runs only when the row holds a literal
+  * every match of it contains, and tries its pattern only where a match
+  * can start (the email pass: from each '@').
   * `scrubStr` is the plain unguarded chain of `replaceAll` passes; the
   * reference oracle and the parity specs compare the kernel against it.
   * DuckDB checks the kernel end to end through q15 and q52, whose oracle
@@ -60,8 +62,10 @@ object PiiScrub {
   /** The scrub as a Column: the native kernel, no function registration
     * needed.
     */
-  def scrub(c: Column): Column =
-    GraftColumnBridge.column(PiiScrubExpr(GraftColumnBridge.expression(c)))
+  def scrub(c: Column): Column = Native(this, "scrubUtf8", StringType, c)
+
+  def scrubUtf8(u: UTF8String): UTF8String =
+    UTF8String.fromString(scrubKernel(u.toString))
 
   // Battery passes in order, the toxic pass last (compiled once per JVM).
   private val passes: Array[(Pattern, String)] =

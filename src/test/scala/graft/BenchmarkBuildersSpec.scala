@@ -137,13 +137,9 @@ class BenchmarkBuildersSpec extends SparkTestBase {
   }
 
   test("fused concept extraction equals the Column battery forms") {
-    import graft.derive.{V2ConceptsExpr, V3ConceptsExpr}
-    def fused2(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.GraftColumnBridge.column(V2ConceptsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(c)))
-    def fused3(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.GraftColumnBridge.column(V3ConceptsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(c)))
+    import graft.derive.ConceptExtract
+    def fused2(c: org.apache.spark.sql.Column) = ConceptExtract.v2Col(c)
+    def fused3(c: org.apache.spark.sql.Column) = ConceptExtract.v3Col(c)
     val corpus = graft.fixtures.SynthCorpus.docsRaw(spark, 200, 4).toDF()
       .withColumn("text", graft.extract.Clean.basicClean(
         graft.extract.HtmlText.extractCol(col("html"))))

@@ -173,7 +173,7 @@ class DeriveSpec extends SparkTestBase {
   }
 }
 
-/** Fused BlockExtractExpr must equal the Catalyst battery forms exactly. */
+/** The fused BlockExtract kernel must equal the Catalyst battery forms exactly. */
 class BlockExtractParitySpec extends SparkTestBase {
   import org.apache.spark.sql.functions._
   import spark.implicits._
@@ -183,9 +183,7 @@ class BlockExtractParitySpec extends SparkTestBase {
       .withColumn("text",
         graft.extract.Clean.basicClean(graft.extract.HtmlText.extractCol(col("html"))))
       .select(col("url"), col("text"))
-    val fused = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.derive.BlockExtractExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("text"))))
+    val fused = graft.derive.BlockExtract.blocksCol(col("text"))
     val bad = texts
       .withColumn("bx", fused)
       .filter(
@@ -197,10 +195,8 @@ class BlockExtractParitySpec extends SparkTestBase {
   }
 
   test("fused reasoning steps equal the Column form on corpus blocks and edges") {
-    import graft.derive.{Extract, ReasoningStepsExpr}
-    def fused(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.GraftColumnBridge.column(ReasoningStepsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(c)))
+    import graft.derive.{Extract, StepExtract}
+    def fused(c: org.apache.spark.sql.Column) = StepExtract.stepsCol(c)
     // the real shape: cleaned blocks from the corpus derive path
     val blocks = graft.fixtures.SynthCorpus.docsRaw(spark, 200, 4).toDF()
       .withColumn("text",

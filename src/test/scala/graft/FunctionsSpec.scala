@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.scrub.PiiScrub
 
-/** Native Catalyst expression (PiiScrubExpr): semantics equal the chained
-  * regexp form; codegen path exercised; null-safe.
+/** The registered SQL functions: pii_scrub's semantics equal the chained
+  * regexp form; codegen path exercised; null-safe; every registered name
+  * equals the library's Column function.
   */
 class FunctionsSpec extends SparkTestBase {
   import spark.implicits._
@@ -71,8 +72,29 @@ class FunctionsSpec extends SparkTestBase {
       .select(call_function("pii_scrub",
         concat(lit("mail a@b.co #"), col("id").cast("string"))).as("s"))
     val plan = df.queryExecution.executedPlan.toString
-    // the "*(n)" prefix marks a WholeStageCodegen span in the compact form
-    assert(plan.contains("*(1) Project [pii_scrub"), s"no codegen span in:\n$plan")
+    // the "*(n)" prefix marks a WholeStageCodegen span in the compact form;
+    // the registered name resolves to Spark's StaticInvoke of the kernel
+    assert(plan.contains("*(1) Project [static_invoke(graft.scrub.PiiScrub.scrubUtf8("),
+      s"no codegen span in:\n$plan")
     assert(df.collect().forall(_.getString(0).startsWith("mail <EMAIL> #")))
+  }
+
+  test("every registered name equals its library Column function, NULL included") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("text").union(Seq(null.asInstanceOf[String], "").toDF("text"))
+    val n = docs.count()
+    // graft_extract_clean reads html bytes; every other name reads text
+    def arg(name: String) =
+      if (name == "graft_extract_clean") "CAST(text AS BINARY)" else "text"
+    assert(GraftFunctions.Functions.map(_._1).toSet == Set("pii_scrub",
+      "graft_token_stats", "graft_pattern_counts", "graft_basic_clean",
+      "graft_perplexity", "graft_simhash", "graft_extract_clean"))
+    GraftFunctions.Functions.foreach { case (name, f) =>
+      val rows = docs.select(expr(s"$name(${arg(name)})").as("sql"),
+        f(expr(arg(name))).as("lib")).collect()
+      assert(rows.length == n, name)
+      rows.foreach(r => assert(r.get(0) == r.get(1), s"$name: ${r.get(0)} != ${r.get(1)}"))
+      assert(rows.count(_.isNullAt(0)) == 1, s"$name: NULL in gives NULL out")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.derive.RlBuilder
 
-/** The fused RlExampleExpr must equal the pure-Column reference form
+/** The fused RlExample kernels must equal the pure-Column reference form
   * byte-for-byte (struct fields INCLUDING the raw double quality) on the
   * fixture corpus, degenerate inputs, and seeded anchor-dense random
   * docs — any Spark-semantics mismatch in the mirrors (space-only trim,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.derive.{Extract, Gates, UgBuilders, UgMetaExpr}
+import graft.derive.{Extract, Gates, UgBuilders, UgExample}
 
 /** The fused UG per-block expressions must equal the Column forms
   * byte-for-byte — the Column forms stay the oracle surface (q45/q49),
@@ -65,18 +65,15 @@ class UgExampleParitySpec extends SparkTestBase {
       "Given the energy equation we solve for the mass. Therefore m = E.",
       "Step 1: solve the energy equation for the field mass and charge now.")
     val df = blocks.toDF("cleaned").withColumn("subject", lit("Physics"))
-    // DerivationCleanExpr vs Gates.derivationClean over the RAW texts
+    // UgExample.derivationCleanCol vs Gates.derivationClean over the RAW texts
     val rawDf = texts.map(t => Option(t).getOrElse("")).toDF("text")
     val cleanPairs = rawDf.select(
-      org.apache.spark.sql.GraftColumnBridge.column(graft.derive.DerivationCleanExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("text")))).as("fused"),
+      UgExample.derivationCleanCol(col("text")).as("fused"),
       Gates.derivationClean(col("text")).as("ref")).collect()
     cleanPairs.foreach(r => assert(r.getString(0) == r.getString(1)))
 
     val both = df.select(
-      org.apache.spark.sql.GraftColumnBridge.column(UgMetaExpr(Seq(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("cleaned")),
-        org.apache.spark.sql.GraftColumnBridge.expression(col("subject"))))).as("fused"),
+      UgExample.metaCol(col("cleaned"), col("subject")).as("fused"),
       struct(
         UgBuilders.ugProblemStatement(col("cleaned")).as("problem_statement"),
         UgBuilders.ugSolutionSteps(col("cleaned")).as("steps"),

@@ -5,7 +5,7 @@ import graft.derive.{RlBuilder, UgBuilders, UgExample, Extract}
 
 /** Dev probe for the round-3 verdict's watch items (item 4): measure the
   * UG chain's remaining per-candidate terms (UgStepPatterns /
-  * UgProblemStmtPatterns and friends inside the fused UgMetaExpr) and
+  * UgProblemStmtPatterns and friends inside the fused UgExample.metaRow) and
   * the RL builders' post-explode Column assembly
   * (rlCompletion / v3ThinkingSection / sourceContext) so the
   * fuse-or-leave decision is evidence-based, not vibes. The numbers land
@@ -108,15 +108,13 @@ class UgProfileProbe extends SparkTestBase {
       .filter(graft.derive.Derive.suitableForTraining(col("text"), col("url")))
       .select("text").cache()
     val n = gated.count()
-    val fused = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.derive.BlockExtractExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("text"))))
+    val fused = graft.derive.BlockExtract.blocksCol(col("text"))
     def t(name: String)(c: org.apache.spark.sql.Column): Unit = {
       gated.select(sum(size(c))).head()
       val s = minOf(3)(gated.select(sum(size(c))).head())
       info(f"$name%-24s ${s * 1e6 / n}%8.1f us/gated-doc  (${s}%.3f s over $n docs)")
     }
-    t("BlockExtractExpr (E13)")(fused.getField("solutions"))
+    t("BlockExtract (E13)")(fused.getField("solutions"))
     t("ugFindCompleteDerivs")(UgBuilders.ugFindCompleteDerivations(col("text")))
     gated.unpersist()
   }
