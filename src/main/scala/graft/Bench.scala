@@ -3,6 +3,26 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+/** The session every graft main runs in: `local[cpus]` with one shuffle
+  * partition per core, UTC, no UI, WARN logging. Spark's defaults keep
+  * adaptive execution, partition coalescing and skew-join splitting on.
+  */
+object LocalSession {
+  /** SPARK_GRAFT_CPUS, default 4. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  def apply(cpus: Int = envCpus, conf: Seq[(String, String)] = Nil): SparkSession = {
+    val spark = conf.foldLeft(SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}
+
 /** Benchmark harness (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, plus a steady-state quality-filter throughput
   * measurement on the synthetic corpus, and prints ONE JSON line.
@@ -14,18 +34,9 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.envCpus
     val benchDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "40000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     // ---- warm-up: JIT, codegen caches, parquet footers ----
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -51,7 +62,7 @@ object Bench {
 
     // ---- steady-state filter throughput (the BASELINE.md headline) ----
     def pipelineCount(n: Long): (Long, Double) = {
-      val raw = graft.fixtures.SynthCorpus.docsRaw(spark, n, cpus.toInt).toDF()
+      val raw = graft.fixtures.SynthCorpus.docsRaw(spark, n, cpus).toDF()
       val t0 = System.nanoTime()
       val kept = Pipeline.score(raw, spark)
         .agg(count(lit(1)), sum(when(col("keep"), 1L).otherwise(0L))).head()
@@ -89,13 +100,6 @@ object ScalingAB {
     // shuffle-bearing end-to-end shape.
     val job = sys.env.getOrElse("SPARK_GRAFT_AB_JOB", "score")
     val large = small * 4
-    def session(cpus: Int): SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // The corpus is MATERIALIZED to parquet once and the measured job reads
     // it back — the real 100TB shape (scan → score), and it keeps the
     // generator's cost out of the engine throughput number.
@@ -129,8 +133,7 @@ object ScalingAB {
     val times32 = scala.collection.mutable.ArrayBuffer.empty[Double]
     (1 to rounds).foreach { r =>
       for (cpus <- Seq(small, large)) {
-        val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = LocalSession(cpus, Seq("spark.locality.wait" -> "0"))
         ensureCorpus(spark)
         if (r == 1) run(spark) // warm-up
         val s = run(spark)
@@ -154,39 +157,5 @@ object ScalingAB {
     def arr(ts: Seq[Double]): String =
       ts.map(t => f"$t%.3f").mkString("[", ",", "]")
     println(f"""{"job":"$job","docs":$n,"rounds":$rounds,"n_cores":$small,"t_n_docs_per_sec":$t8%.1f,"t_4n_docs_per_sec":$t32%.1f,"efficiency":$eff%.3f,"efficiency_median":$effMed%.3f,"times_n_sec":${arr(times8.toSeq)},"times_4n_sec":${arr(times32.toSeq)},"spread_n":"$min8%.2f-$max8%.2f s","spread_4n":"$min32%.2f-$max32%.2f s"}""")
-  }
-}
-
-/** Scaling-evidence runner (north_rule: throughput at N vs 4N parallelism).
-  * Runs the full quality-filter pipeline at the current SPARK_GRAFT_CPUS and
-  * prints one JSON line; the scaling report runs it at 8 and 32.
-  */
-object ScalingBench {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "80000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def run(docs: Long, parts: Int): Double = {
-      val raw = graft.fixtures.SynthCorpus.docsRaw(spark, docs, parts).toDF()
-      val t0 = System.nanoTime()
-      Pipeline.score(raw, spark)
-        .agg(count(lit(1)), sum(when(col("keep"), 1L).otherwise(0L))).head()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // partitions = 4x cores so scheduling is work-stealing-shaped at both sizes
-    run(math.min(n / 4, 10000L), cpus * 4) // warm-up
-    // min-of-3: the sandbox VM sees bursty hypervisor CPU steal; the minimum
-    // is the steal-free estimate (BASELINE.md protocol)
-    val secs = (1 to 3).map(_ => run(n, cpus * 4)).min
-    println(f"""{"cpus":$cpus,"docs":$n,"sec":$secs%.3f,"docs_per_sec":${n / secs}%.1f}""")
-    spark.stop()
   }
 }

@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
@@ -15,23 +14,12 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
   * same DataFrame instance with a task-time listener to split the repeated
   * floor into executor task time vs driver time.
   *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  *     sbt -batch "runMain graft.BenchExtra"
+  *   SPARK_GRAFT_SF_DIR=<scale-factor dir> sbt -batch "runMain graft.BenchExtra"
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // The round-3 adjudication says these queries' bench seconds are
     // per-query plan/optimize/codegen of large fused expression trees, not

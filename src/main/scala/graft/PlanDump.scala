@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for every declared query to a directory
   * (round-6 deliverable: plans/r06/<query>_{before,after}.txt). Not part of
   * the driver contract.
@@ -12,20 +10,10 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r06")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "_before")
     val only = sys.env.get("SPARK_GRAFT_PLAN_ONLY") // comma-separated prefixes
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // write the fixture corpora first: a query that writes one while its
     // plan is built shifts the expression ids of every later dump

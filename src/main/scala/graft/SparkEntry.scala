@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.fixtures.SynthCorpus
 import graft.scrub.PiiScrub
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -25,6 +26,52 @@ object SparkEntry {
 
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** The materialized builder fixture: SynthCorpus's cleaned corpus, or its
+    * scored form (`issues` and the scores as input columns). */
+  private def fixture(s: SparkSession, scored: Boolean = false): DataFrame =
+    s.read.parquet(
+      if (scored) SynthCorpus.materializedScored(s) else SynthCorpus.materializedCorpus(s))
+
+  /** The corpus with a fixed subject and title, as the RL/UG builders read it. */
+  private def titledCorpus(s: SparkSession): DataFrame =
+    fixture(s).withColumn("subject", lit("Physics"))
+      .withColumn("title", lit(BenchmarkTitleFixture))
+
+  /** q30's training examples; q39 aggregates them. */
+  private def trainingExamples(s: SparkSession): DataFrame =
+    graft.derive.Derive.trainingExamples(fixture(s).withColumn("subject", lit("Physics")),
+      "url", "text", "subject")
+
+  /** The scored fixture with the deterministic subject mix. */
+  private def subjectScored(s: SparkSession): DataFrame =
+    fixture(s, scored = true).withColumn("subject", fixtureSubject(col("url")))
+
+  /** q36's v2 benchmark items; q41 aggregates them. */
+  private def v2Items(s: SparkSession): DataFrame =
+    graft.derive.BenchmarkBuilders.benchmarkItemsV2(subjectScored(s), "url", "text", "subject")
+
+  /** q37's v3 benchmark items; q42 aggregates them. */
+  private def v3Items(s: SparkSession): DataFrame =
+    graft.derive.BenchmarkBuilders.benchmarkItemsV3(subjectScored(s), "url", "text", "subject")
+
+  /** q25's cosine near-dup pairs; q50 clusters them. */
+  private def cosineNearDups(s: SparkSession, dir: String): DataFrame =
+    graft.similarity.Ann.cosineNearDupPairs(tbl(s, dir, "embeddings"), "vec_id",
+      "embedding", threshold = 0.35, numPlanes = 6)
+
+  /** The fixture corpus as (url, gates, m0..mN): one `rlike` flag per pattern. */
+  private def gateFlags(s: SparkSession, gates: Seq[Column], patterns: Seq[String]): DataFrame =
+    fixture(s).select((col("url") +: gates) ++
+      patterns.zipWithIndex.map { case (p, i) => col("text").rlike(p).as(s"m$i") }: _*)
+      .orderBy("url")
+
+  /** q52's per-document curation rows; q53 counts them per stage.
+    * materialize: execution knob only (checkpoint the post-gopher frame
+    * once — the sf tables fit storage by orders of magnitude); oracle
+    * semantics identical. */
+  private def curationLog(s: SparkSession, dir: String): DataFrame =
+    graft.curate.Curate.curationLog(docs(s, dir), "doc_id", "text", materialize = true)
 
   /** ASCII whitespace split (matches RE2/DuckDB `\s`); documents are ASCII. */
   private val Ws = "\\s+"
@@ -235,23 +282,15 @@ object SparkEntry {
         .orderBy("query_id", "rk")
     }),
 
-    "q25_cos_neardup" -> ((s, dir) => {
-      graft.similarity.Ann.cosineNearDupPairs(
-        tbl(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.35, numPlanes = 6)
-        .orderBy("id_a", "id_b")
-    }),
+    "q25_cos_neardup" -> ((s, dir) =>
+      cosineNearDups(s, dir).orderBy("id_a", "id_b")),
 
     // near-dup clusters over the q25 pair graph: every vertex labeled
     // with its min reachable id (HashMin, O(diameter) rounds); "keep one
     // doc per cluster" is then filter(id === component)
-    "q50_neardup_components" -> ((s, dir) => {
-      val pairs = graft.similarity.Ann.cosineNearDupPairs(
-        tbl(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.35, numPlanes = 6)
-      graft.dedup.Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .orderBy("id")
-    }),
+    "q50_neardup_components" -> ((s, dir) =>
+      graft.dedup.Dedup.connectedComponents(cosineNearDups(s, dir), "id_a", "id_b")
+        .orderBy("id")),
 
     // Gopher/C4 repetition + shape signals (north_star: "repetition
     // n-gram dedup signals ... as Catalyst expressions") + the composite
@@ -278,23 +317,12 @@ object SparkEntry {
     // Stage order is semantic: near-dup pairs exist only among exact-dedup
     // survivors, which are only gopher survivors; the DuckDB oracle
     // replicates the full nesting end-to-end including the scrubbed text.
-    "q52_curation_chain" -> ((s, dir) => {
-      // materialize: execution knob only (checkpoint the post-gopher
-      // frame once — the sf tables fit storage by orders of magnitude);
-      // oracle semantics identical
-      graft.curate.Curate.curationLog(docs(s, dir), "doc_id", "text",
-        materialize = true)
-        .orderBy("doc_id")
-    }),
+    "q52_curation_chain" -> ((s, dir) => curationLog(s, dir).orderBy("doc_id")),
 
     // the chain's aggregate face: drop/keep counts per stage — the
     // one-line health dashboard a curation run reports
-    "q53_curation_stages" -> ((s, dir) => {
-      graft.curate.Curate.curationLog(docs(s, dir), "doc_id", "text",
-        materialize = true)
-        .groupBy("stage").agg(count(lit(1)).as("n"))
-        .orderBy("stage")
-    }),
+    "q53_curation_stages" -> ((s, dir) =>
+      curationLog(s, dir).groupBy("stage").agg(count(lit(1)).as("n")).orderBy("stage")),
 
     // ---- text analysis ----
     "q26_quality_score" -> ((s, dir) => {
@@ -317,19 +345,14 @@ object SparkEntry {
     // rows-only (its block/step batteries aren't SQL-expressible); q31 has
     // a full DuckDB oracle reading the same materialized files. ----
     "q30_training_examples" -> ((s, dir) => {
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-        .withColumn("subject", lit("Physics"))
-      graft.derive.Derive.trainingExamples(corpus, "url", "text", "subject")
+      trainingExamples(s)
         .select("id", "url", "example_type", "problem_statement", "step_count",
           "difficulty", "topic", "reasoning_type", "quality_score")
         .orderBy("id")
     }),
 
     "q31_benchmark_items" -> ((s, dir) => {
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-        .withColumn("subject", lit("Physics"))
-        .withColumn("title", lit(BenchmarkTitleFixture))
-        .withColumn("abstract", substring(col("text"), 1, 1200))
+      val corpus = titledCorpus(s).withColumn("abstract", substring(col("text"), 1, 1200))
       graft.derive.Derive.benchmarkItems(corpus, "url", "text", "subject",
         "title", "abstract")
         .select("url", "clean_title", "n_questions")
@@ -340,18 +363,14 @@ object SparkEntry {
     // (rows-only: per-concept problem templating isn't SQL-expressible;
     // builder semantics are golden-tested in BenchmarkBuildersSpec) ----
     "q36_benchmark_v2" -> ((s, dir) => {
-      val scored = s.read.parquet(graft.fixtures.SynthCorpus.materializedScored(s))
-        .withColumn("subject", SparkEntry.fixtureSubject(col("url")))
-      graft.derive.BenchmarkBuilders.benchmarkItemsV2(scored, "url", "text", "subject")
+      v2Items(s)
         .select("url", "problem_id", "type", "difficulty", "domain",
           "difficulty_level", "problem_count")
         .orderBy("problem_id")
     }),
 
     "q37_benchmark_v3" -> ((s, dir) => {
-      val scored = s.read.parquet(graft.fixtures.SynthCorpus.materializedScored(s))
-        .withColumn("subject", SparkEntry.fixtureSubject(col("url")))
-      graft.derive.BenchmarkBuilders.benchmarkItemsV3(scored, "url", "text", "subject")
+      v3Items(s)
         .select("url", "problem_id", "type", "difficulty", "domain",
           "problem_count")
         .orderBy("problem_id")
@@ -363,18 +382,14 @@ object SparkEntry {
     // scored parquet — `issues` is an input column there, so the model-
     // dependent part is data, not recomputation) ----
     "q41_benchmark_v2_dist" -> ((s, dir) => {
-      val scored = s.read.parquet(graft.fixtures.SynthCorpus.materializedScored(s))
-        .withColumn("subject", SparkEntry.fixtureSubject(col("url")))
-      graft.derive.BenchmarkBuilders.benchmarkItemsV2(scored, "url", "text", "subject")
+      v2Items(s)
         .groupBy("type", "difficulty", "difficulty_level")
         .agg(count(lit(1)).as("n"))
         .orderBy("type", "difficulty", "difficulty_level")
     }),
 
     "q42_benchmark_v3_dist" -> ((s, dir) => {
-      val scored = s.read.parquet(graft.fixtures.SynthCorpus.materializedScored(s))
-        .withColumn("subject", SparkEntry.fixtureSubject(col("url")))
-      graft.derive.BenchmarkBuilders.benchmarkItemsV3(scored, "url", "text", "subject")
+      v3Items(s)
         .groupBy("type", "difficulty")
         .agg(count(lit(1)).as("n"))
         .orderBy("type", "difficulty")
@@ -384,23 +399,13 @@ object SparkEntry {
     // reference; rows-only — the explicit batteries use lookaheads, which
     // RE2/DuckDB lacks; parity is golden-tested in RlBuilderSpec against
     // values produced by executing the reference logic itself) ----
-    "q43_rl_training_v2" -> ((s, dir) => {
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-        .withColumn("subject", lit("Physics"))
-        .withColumn("title", lit(BenchmarkTitleFixture))
-      graft.derive.RlBuilder.rlTrainingExamples(corpus, "url", "text",
-        "subject", "title")
-        .orderBy("id")
-    }),
+    "q43_rl_training_v2" -> ((s, dir) =>
+      graft.derive.RlBuilder.rlTrainingExamples(titledCorpus(s), "url", "text",
+        "subject", "title").orderBy("id")),
 
-    "q44_rl_training_v3" -> ((s, dir) => {
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-        .withColumn("subject", lit("Physics"))
-        .withColumn("title", lit(BenchmarkTitleFixture))
-      graft.derive.RlBuilder.rlTrainingExamplesV3(corpus, "url", "text",
-        "subject", "title")
-        .orderBy("id")
-    }),
+    "q44_rl_training_v3" -> ((s, dir) =>
+      graft.derive.RlBuilder.rlTrainingExamplesV3(titledCorpus(s), "url", "text",
+        "subject", "title").orderBy("id")),
 
     // ---- UGPhysics-style builders (EnhancedBenchmarkBuilder /
     // EnhancedTrainingDataBuilder). q45 carries a full DuckDB oracle —
@@ -409,7 +414,7 @@ object SparkEntry {
     // are all recomputed in SQL. q46 is rows-only (lookahead patterns);
     // both are reference-run golden-tested in UgBuildersSpec. ----
     "q45_ug_benchmark" -> ((s, dir) => {
-      val scored = s.read.parquet(graft.fixtures.SynthCorpus.materializedScored(s))
+      val scored = fixture(s, scored = true)
         .withColumn("subject", lit("Quantum Physics"))
         .withColumn("title", lit(BenchmarkTitleFixture))
         .withColumn("abstract", substring(col("text"), 1, 1200))
@@ -420,10 +425,7 @@ object SparkEntry {
     }),
 
     "q46_ug_training" -> ((s, dir) => {
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-        .withColumn("subject", lit("Physics"))
-        .withColumn("title", lit(BenchmarkTitleFixture))
-      graft.derive.UgBuilders.ugTrainingExamples(corpus, "url", "text",
+      graft.derive.UgBuilders.ugTrainingExamples(titledCorpus(s), "url", "text",
         "subject", "title")
         .select(col("id"), col("url"), col("example_type"),
           col("problem_statement"), col("step_count"), col("difficulty"),
@@ -443,38 +445,22 @@ object SparkEntry {
     // stays rows-only (lookahead capture groups aren't RE2-expressible);
     // these rows pin every gate and every battery's firing set. ----
     "q47_rl_v2_gates" -> ((s, dir) => {
-      import graft.derive.RlBuilder
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-      val text = col("text")
-      val pats = RlBuilder.ExplicitPatterns ++
-        RlBuilder.DerivationSeqPatterns ++ RlBuilder.CalculationPatterns
-      corpus.select(col("url") +:
-        RlBuilder.suitableForRlTraining(text).as("suitable") +:
-        RlBuilder.crashGate(text).as("crash") +:
-        pats.zipWithIndex.map { case (p, i) => text.rlike(p).as(s"m$i") }: _*)
-        .orderBy("url")
+      import graft.derive.RlBuilder._
+      gateFlags(s, Seq(suitableForRlTraining(col("text")).as("suitable"),
+          crashGate(col("text")).as("crash")),
+        ExplicitPatterns ++ DerivationSeqPatterns ++ CalculationPatterns)
     }),
 
     "q48_rl_v3_gates" -> ((s, dir) => {
-      import graft.derive.RlBuilder
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-      val text = col("text")
-      val pats = RlBuilder.V3ExplicitPatterns :+ RlBuilder.V3DerivationPattern
-      corpus.select(col("url") +:
-        RlBuilder.suitableForRlTrainingV3(text).as("suitable") +:
-        pats.zipWithIndex.map { case (p, i) => text.rlike(p).as(s"m$i") }: _*)
-        .orderBy("url")
+      import graft.derive.RlBuilder._
+      gateFlags(s, Seq(suitableForRlTrainingV3(col("text")).as("suitable")),
+        V3ExplicitPatterns :+ V3DerivationPattern)
     }),
 
     "q49_ug_deriv_gates" -> ((s, dir) => {
-      import graft.derive.UgBuilders
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-      val text = col("text")
-      corpus.select(col("url") +:
-        UgBuilders.suitableForUgBenchmark(text, col("url")).as("suitable") +:
-        UgBuilders.UgDerivationPatterns.zipWithIndex.map { case (p, i) =>
-          text.rlike(p).as(s"m$i") }: _*)
-        .orderBy("url")
+      import graft.derive.UgBuilders._
+      gateFlags(s, Seq(suitableForUgBenchmark(col("text"), col("url")).as("suitable")),
+        UgDerivationPatterns)
     }),
 
     // ---- training gate + E13 block-battery counts: the oracle-checkable
@@ -483,10 +469,8 @@ object SparkEntry {
     // filters over the same materialized corpus; the fused
     // BlockExtract kernel computes the Spark side) ----
     "q38_training_gate" -> ((s, dir) => {
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-      val fused = graft.derive.BlockExtract.blocksCol(col("text"))
-      corpus
-        .withColumn("__bx", fused)
+      fixture(s)
+        .withColumn("__bx", graft.derive.BlockExtract.blocksCol(col("text")))
         .select(col("url"),
           graft.derive.Derive.suitableForTraining(col("text"), col("url"))
             .as("suitable"),
@@ -503,9 +487,7 @@ object SparkEntry {
     // rows-only (prompt/completion assembly isn't SQL-expressible); this
     // pins the gate, batteries, filters, and classifiers. ----
     "q39_training_dist" -> ((s, dir) => {
-      val corpus = s.read.parquet(graft.fixtures.SynthCorpus.materializedCorpus(s))
-        .withColumn("subject", lit("Physics"))
-      graft.derive.Derive.trainingExamples(corpus, "url", "text", "subject")
+      trainingExamples(s)
         .groupBy("example_type", "difficulty", "reasoning_type")
         .agg(count(lit(1)).as("n"),
           sum(col("step_count").cast("long")).as("sum_steps"))
@@ -610,6 +592,112 @@ object SparkEntry {
           val arr = h.map(_.toString).mkString("[", ", ", "]")
           s"(CASE WHEN list_dot_product(v, $arr) >= 0 THEN ${1 << p} ELSE 0 END)"
       }.mkString(" + ")
+    val vectors = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+    def buckets(numPlanes: Int) =
+      s"b AS (SELECT vec_id, v, (${lshBucketSql(numPlanes)}) AS bucket FROM e)"
+    def cosine(a: String, c: String) =
+      s"""round(list_dot_product($a.v, $c.v) /
+         |      sqrt(list_dot_product($a.v, $a.v) * list_dot_product($c.v, $c.v)), 6) AS cos"""
+        .stripMargin
+    // cosine top-3 per query row `q` over the candidate rows `c` of `from`
+    def cosineTop3(queryCte: String, from: String) =
+      s"""WITH $vectors,
+         |$queryCte,
+         |scored AS (
+         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         |    ${cosine("q", "c")}
+         |  FROM $from),
+         |ranked AS (
+         |  SELECT query_id, neighbor_id, cos,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+         |  FROM scored)
+         |SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= 3
+         |ORDER BY query_id, rk""".stripMargin
+    def bruteTop3(queries: Int) = cosineTop3(
+      s"q AS (SELECT vec_id, v FROM e WHERE vec_id < $queries)",
+      "q JOIN e c ON q.vec_id <> c.vec_id")
+    // q25/q50: cosine pairs within a 6-plane LSH bucket
+    val lshPairCtes =
+      s"""$vectors,
+         |${buckets(6)},
+         |p AS (
+         |  SELECT a.vec_id AS id_a, c.vec_id AS id_b,
+         |    ${cosine("a", "c")}
+         |  FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id)""".stripMargin
+    // min reachable id per vertex of the `pr` pair graph (q50, q52/q53).
+    // UNION, not UNION ALL, so the recursion reaches a fixpoint
+    val reachCtes =
+      """edges AS (SELECT id_a AS src, id_b AS dst FROM pr
+        |          UNION ALL SELECT id_b, id_a FROM pr),
+        |verts AS (SELECT DISTINCT src AS id FROM edges),
+        |reach(id, c) AS (
+        |  SELECT id, id FROM verts
+        |  UNION
+        |  SELECT e2.dst, r.c FROM reach r JOIN edges e2 ON e2.src = r.id)""".stripMargin
+    // Gopher's token lists, trigrams and four signals (q51's formulas),
+    // selected by q51 and by the q52/q53 chain. The tokenizer class is the
+    // EXACT RE2 spelling of Java's (?U)\s (Unicode White_Space: \p{Zs} +
+    // controls + NEL + LS/PS — GopherSpec pins the Spark side incl. the
+    // U+001C non-member), and the symbol class spells out Java's ASCII \s
+    // including \x0B, which RE2's \s lacks
+    val gopherLists =
+      raw"""    list_filter(list_transform(string_split(text, chr(10)),
+           |      x -> trim(x)), x -> length(x) > 0) AS lines,
+           |    list_filter(regexp_split_to_array(lower(text), '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
+           |      x -> length(x) > 0) AS ltok,
+           |    list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
+           |      x -> length(x) > 0) AS tok""".stripMargin
+    val gopherGrams =
+      """    CASE WHEN len(ltok) < 3 THEN CAST([] AS VARCHAR[])
+        |      ELSE list_transform(generate_series(1, len(ltok) - 2),
+        |        i -> ltok[i] || ' ' || ltok[i+1] || ' ' || ltok[i+2]) END AS grams""".stripMargin
+    val gopherSignals =
+      raw"""    CASE WHEN len(lines) = 0 THEN 0.0
+           |      ELSE 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END AS dl,
+           |    CASE WHEN len(grams) = 0 THEN 0.0
+           |      ELSE 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams) END AS dg,
+           |    CASE WHEN len(tok) = 0 THEN 0.0
+           |      ELSE CAST(list_aggregate(list_transform(tok, x -> length(x)), 'sum') AS DOUBLE) / len(tok) END AS mwl,
+           |    CASE WHEN length(text) = 0 THEN 0.0
+           |      ELSE CAST(length(regexp_replace(text, '[[:alnum:]\t\n\x0B\f\r ]', '', 'g')) AS DOUBLE) / length(text) END AS sym""".stripMargin
+    // The builder gates count terms over a lowercase text prefix; a viXra
+    // url lowers a gate's threshold from `other` to `v`
+    val sample = "substr(lower(text), 1, 2000)"
+    def vixra(v: Int, other: Int) =
+      s"(CASE WHEN contains(lower(url), 'vixra') THEN $v ELSE $other END)"
+    // q47–q49: one regexp_matches flag per RE2 existence pattern, m0..mN
+    def existenceCols(patterns: Seq[String]) = patterns.zipWithIndex
+      .map { case (p, i) => s"regexp_matches(text, ${pat(p)}) AS m$i" }
+      .mkString(",\n  ")
+    // q38/q39: the training gate (Derive.suitableForTraining), lines joined
+    // by `and`, and the E13 block batteries' matches of pattern `p` within
+    // the length window whose terms pass _contains_english_physics_terms
+    def trainingGate(and: String) = {
+      import graft.derive.Derive._
+      val en14 = cnt(graft.lang.LangId.EnglishStopwords14, sample)
+      val stepPhys = cnt(TrainingStepIndicators ++ TrainingPhysIndicators, sample)
+      s"length(trim(text)) >= 500$and($en14) >= ${vixra(5, 8)}" +
+        s"$and($stepPhys) >= ${vixra(2, 3)}"
+    }
+    def blockMatches(p: String, lo: Int, hi: Int) = {
+      import graft.derive.Extract._
+      val phys = cnt(EnglishPhysicsTerms, "lower(m)")
+      val vix = cnt(VixraPhysicsTerms, "lower(m)")
+      val en = cnt(CommonEnglish, "lower(m)")
+      s"list_filter(regexp_extract_all(text, ${pat(p)}), m -> length(m) > $lo AND " +
+        s"length(m) < $hi AND ((($phys) >= 1 OR ($vix) >= 2) AND ($en) >= 2))"
+    }
+    // q41/q42: group-1 matches of each pattern, mapped by `mk` and kept
+    // where `pred` holds on `e`, concatenated
+    def battery(patterns: Seq[String], mk: String => String, pred: String): String =
+      patterns.map(p =>
+        s"list_filter(list_transform(regexp_extract_all(text, ${pat(p)}, 1), " +
+          s"x -> ${mk("x")}), e -> $pred)")
+        .mkString("(", " || ", ")")
+    def trimmed(x: String) = s"trim($x)"
+    def eqClean(stripClass: String)(x: String) =
+      s"trim(regexp_replace(regexp_replace($x, '\\s+', ' ', 'g'), " +
+        s"${pat(stripClass)}, '', 'g'))"
     // The curation chain's stage labels (`sel`), shared by q52 (per-doc
     // rows) and q53 (per-stage counts); each appends its final SELECT.
     // Stage nesting is replicated exactly: gopher signals (q51's formulas,
@@ -624,29 +712,15 @@ object SparkEntry {
       raw"""WITH RECURSIVE
       |gtok AS (
       |  SELECT doc_id, text,
-      |    list_filter(list_transform(string_split(text, chr(10)),
-      |      x -> trim(x)), x -> length(x) > 0) AS lines,
-      |    list_filter(regexp_split_to_array(lower(text), '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
-      |      x -> length(x) > 0) AS ltok,
-      |    list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
-      |      x -> length(x) > 0) AS tok
+      |$gopherLists
       |  FROM documents),
       |ggrams AS (
       |  SELECT doc_id, text, lines, ltok, tok,
-      |    CASE WHEN len(ltok) < 3 THEN CAST([] AS VARCHAR[])
-      |      ELSE list_transform(generate_series(1, len(ltok) - 2),
-      |        i -> ltok[i] || ' ' || ltok[i+1] || ' ' || ltok[i+2]) END AS grams
+      |$gopherGrams
       |  FROM gtok),
       |gsig AS (
       |  SELECT doc_id, text,
-      |    CASE WHEN len(lines) = 0 THEN 0.0
-      |      ELSE 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END AS dl,
-      |    CASE WHEN len(grams) = 0 THEN 0.0
-      |      ELSE 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams) END AS dg,
-      |    CASE WHEN len(tok) = 0 THEN 0.0
-      |      ELSE CAST(list_aggregate(list_transform(tok, x -> length(x)), 'sum') AS DOUBLE) / len(tok) END AS mwl,
-      |    CASE WHEN length(text) = 0 THEN 0.0
-      |      ELSE CAST(length(regexp_replace(text, '[[:alnum:]\t\n\x0B\f\r ]', '', 'g')) AS DOUBLE) / length(text) END AS sym,
+      |$gopherSignals,
       |    length(trim(text)) AS lt, len(tok) AS nt
       |  FROM ggrams),
       |gk AS (
@@ -679,13 +753,7 @@ object SparkEntry {
       |  JOIN sz sa ON sa.doc_id = pc.id_a
       |  JOIN sz sb ON sb.doc_id = pc.id_b
       |  WHERE round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) >= 0.8),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-      |          UNION ALL SELECT id_b, id_a FROM pr),
-      |verts AS (SELECT DISTINCT src AS id FROM edges),
-      |reach(id, c) AS (
-      |  SELECT id, id FROM verts
-      |  UNION
-      |  SELECT e2.dst, r.c FROM reach r JOIN edges e2 ON e2.src = r.id),
+      |$reachCtes,
       |comp AS (SELECT id, min(c) AS component FROM reach GROUP BY id),
       |nlos AS (SELECT id FROM comp WHERE id <> component),
       |sel AS (
@@ -787,141 +855,67 @@ object SparkEntry {
           |FROM c JOIN sz sa ON sa.doc_id = c.id_a JOIN sz sb ON sb.doc_id = c.id_b
           |ORDER BY 1, 2""".stripMargin,
 
-      "q23_ann_brute" ->
-        """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          |q AS (SELECT vec_id, v FROM e WHERE vec_id < 5),
-          |scored AS (
-          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    round(list_dot_product(q.v, c.v) /
-          |      sqrt(list_dot_product(q.v, q.v) * list_dot_product(c.v, c.v)), 6) AS cos
-          |  FROM q JOIN e c ON q.vec_id <> c.vec_id),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, cos,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= 3
-          |ORDER BY query_id, rk""".stripMargin,
+      "q23_ann_brute" -> bruteTop3(5),
 
-      "q24_ann_lsh" ->
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |b AS (SELECT vec_id, v, (${lshBucketSql(4)}) AS bucket FROM e),
-           |scored AS (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           |    round(list_dot_product(q.v, c.v) /
-           |      sqrt(list_dot_product(q.v, q.v) * list_dot_product(c.v, c.v)), 6) AS cos
-           |  FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-           |  WHERE q.vec_id < 20),
-           |ranked AS (
-           |  SELECT query_id, neighbor_id, cos,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-           |  FROM scored)
-           |SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= 3
-           |ORDER BY query_id, rk""".stripMargin,
+      "q24_ann_lsh" -> cosineTop3(buckets(4),
+        "b q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id\n  WHERE q.vec_id < 20"),
 
       // q40 oracle: full-probe IVF ≡ exact search (see the query comment) —
       // DuckDB computes brute-force cosine top-3 for the same queries
-      "q40_ann_ivf" ->
-        """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-          |scored AS (
-          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    round(list_dot_product(q.v, c.v) /
-          |      sqrt(list_dot_product(q.v, q.v) * list_dot_product(c.v, c.v)), 6) AS cos
-          |  FROM q JOIN e c ON q.vec_id <> c.vec_id),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, cos,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= 3
-          |ORDER BY query_id, rk""".stripMargin,
+      "q40_ann_ivf" -> bruteTop3(10),
 
       "q25_cos_neardup" ->
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |b AS (SELECT vec_id, v, (${lshBucketSql(6)}) AS bucket FROM e),
-           |p AS (
-           |  SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-           |    round(list_dot_product(a.v, c.v) /
-           |      sqrt(list_dot_product(a.v, a.v) * list_dot_product(c.v, c.v)), 6) AS cos
-           |  FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id)
+        s"""WITH $lshPairCtes
            |SELECT DISTINCT id_a, id_b, cos FROM p WHERE cos >= 0.35
            |ORDER BY id_a, id_b""".stripMargin,
 
-      // transitive closure via recursive CTE: min reachable id per vertex
-      // (UNION, not UNION ALL, so the recursion reaches a fixpoint).
+      // transitive closure via recursive CTE: min reachable id per vertex.
       // Oracle-scale only: reach holds one row per (vertex, reachable id)
       // — O(|component|^2) for a dense cluster, fine at the driver's SFs
       // (largest fixture component ~100 vertices); the Spark side's
       // HashMin+jump loop is the scale path
       "q50_neardup_components" ->
         s"""WITH RECURSIVE
-           |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |b AS (SELECT vec_id, v, (${lshBucketSql(6)}) AS bucket FROM e),
-           |p AS (
-           |  SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-           |    round(list_dot_product(a.v, c.v) /
-           |      sqrt(list_dot_product(a.v, a.v) * list_dot_product(c.v, c.v)), 6) AS cos
-           |  FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id),
+           |$lshPairCtes,
            |pr AS (SELECT DISTINCT id_a, id_b FROM p WHERE cos >= 0.35),
-           |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-           |          UNION ALL SELECT id_b, id_a FROM pr),
-           |verts AS (SELECT DISTINCT src AS id FROM edges),
-           |reach(id, c) AS (
-           |  SELECT id, id FROM verts
-           |  UNION
-           |  SELECT e2.dst, r.c FROM reach r JOIN edges e2 ON e2.src = r.id)
+           |$reachCtes
            |SELECT id, min(c) AS component FROM reach GROUP BY id
            |ORDER BY id""".stripMargin,
 
       // per-row ratios of small integers: IEEE division is identical in
       // both engines, so round(x, 6) is hash-stable (the integer-cents
       // rule is for order-dependent SUMS, not per-row ratios); the keep
-      // rule compares the UNROUNDED values like the Spark side. The
-      // tokenizer class is the EXACT RE2 spelling of Java's (?U)\s
-      // (Unicode White_Space: \p{Zs} + controls + NEL + LS/PS — GopherSpec
-      // pins the Spark side incl. the U+001C non-member), and the symbol
-      // class spells out Java's ASCII \s including \x0B, which RE2's \s
-      // lacks
-      "q51_gopher_stats" ->
-        """WITH g AS (
-          |  SELECT doc_id, text,
-          |    list_filter(list_transform(string_split(text, chr(10)),
-          |      x -> trim(x)), x -> length(x) > 0) AS lines,
-          |    list_filter(regexp_split_to_array(lower(text), '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
-          |      x -> length(x) > 0) AS ltok,
-          |    list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]+'),
-          |      x -> length(x) > 0) AS tok
-          |  FROM documents),
-          |h AS (
-          |  SELECT doc_id, text, lines, ltok, tok,
-          |    CASE WHEN len(ltok) < 3 THEN CAST([] AS VARCHAR[])
-          |      ELSE list_transform(generate_series(1, len(ltok) - 2),
-          |        i -> ltok[i] || ' ' || ltok[i+1] || ' ' || ltok[i+2]) END AS grams
-          |  FROM g),
-          |r AS (
-          |  SELECT doc_id, text, tok,
-          |    CASE WHEN len(lines) = 0 THEN 0.0
-          |      ELSE 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END AS dl,
-          |    CASE WHEN len(grams) = 0 THEN 0.0
-          |      ELSE 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams) END AS dg,
-          |    CASE WHEN len(tok) = 0 THEN 0.0
-          |      ELSE CAST(list_aggregate(list_transform(tok, x -> length(x)), 'sum') AS DOUBLE) / len(tok) END AS mwl,
-          |    CASE WHEN length(text) = 0 THEN 0.0
-          |      ELSE CAST(length(regexp_replace(text, '[[:alnum:]\t\n\x0B\f\r ]', '', 'g')) AS DOUBLE) / length(text) END AS sym,
-          |    CASE WHEN len(tok) = 0 THEN 0.0
-          |      ELSE CAST(len(list_filter(tok, x -> list_contains(
-          |        ['the','and','of','to','a','in','that','is','for','with'],
-          |        lower(x)))) AS DOUBLE) / len(tok) END AS swr
-          |  FROM h)
-          |SELECT doc_id,
-          |  round(dl, 6) AS dup_line_frac,
-          |  round(dg, 6) AS dup_3gram_frac,
-          |  round(mwl, 6) AS mean_word_len,
-          |  round(sym, 6) AS symbol_ratio,
-          |  round(swr, 6) AS stopword_ratio,
-          |  (length(trim(text)) >= 50 AND len(tok) BETWEEN 10 AND 200000
-          |    AND mwl BETWEEN 2.0 AND 12.0 AND sym < 0.30
-          |    AND dl < 0.50 AND dg < 0.80) AS gopher_keep
-          |FROM r ORDER BY doc_id""".stripMargin,
+      // rule compares the UNROUNDED values like the Spark side
+      "q51_gopher_stats" -> {
+        val stopwords =
+          graft.lang.LangId.EnglishStopwords10.map(w => s"'$w'").mkString("[", ",", "]")
+        s"""WITH g AS (
+           |  SELECT doc_id, text,
+           |$gopherLists
+           |  FROM documents),
+           |h AS (
+           |  SELECT doc_id, text, lines, ltok, tok,
+           |$gopherGrams
+           |  FROM g),
+           |r AS (
+           |  SELECT doc_id, text, tok,
+           |$gopherSignals,
+           |    CASE WHEN len(tok) = 0 THEN 0.0
+           |      ELSE CAST(len(list_filter(tok, x -> list_contains(
+           |        $stopwords,
+           |        lower(x)))) AS DOUBLE) / len(tok) END AS swr
+           |  FROM h)
+           |SELECT doc_id,
+           |  round(dl, 6) AS dup_line_frac,
+           |  round(dg, 6) AS dup_3gram_frac,
+           |  round(mwl, 6) AS mean_word_len,
+           |  round(sym, 6) AS symbol_ratio,
+           |  round(swr, 6) AS stopword_ratio,
+           |  (length(trim(text)) >= 50 AND len(tok) BETWEEN 10 AND 200000
+           |    AND mwl BETWEEN 2.0 AND 12.0 AND sym < 0.30
+           |    AND dl < 0.50 AND dg < 0.80) AS gopher_keep
+           |FROM r ORDER BY doc_id""".stripMargin
+      },
 
       // The composed chain end-to-end; kept rows get the full scrub
       // battery.
@@ -988,8 +982,8 @@ object SparkEntry {
            |elig AS (
            |  SELECT url, text FROM c
            |  WHERE length(trim(text)) >= 300
-           |    AND ($enCnt) >= (CASE WHEN contains(lower(url), 'vixra') THEN 2 ELSE 3 END)
-           |    AND ($termCnt) >= (CASE WHEN contains(lower(url), 'vixra') THEN 1 ELSE 2 END))
+           |    AND ($enCnt) >= ${vixra(2, 3)}
+           |    AND ($termCnt) >= ${vixra(1, 2)})
            |SELECT url, '$cleanTitle' AS clean_title,
            |  CAST(1 + (CASE WHEN $eqLen > 100 THEN 1 ELSE 0 END)
            |         + (CASE WHEN $asmLen > 50 THEN 1 ELSE 0 END)
@@ -1006,15 +1000,11 @@ object SparkEntry {
       // proves the rewrite equivalence holds on real data too.
       "q47_rl_v2_gates" -> {
         import graft.derive.RlBuilder
-        val sample = "substr(lower(text), 1, 2000)"
         val probs = cnt(RlBuilder.RlProblemIndicators, sample)
         val reas = cnt(RlBuilder.RlReasoningIndicators, sample)
         val phys = cnt(RlBuilder.RlPhysicsTerms, sample)
-        val ex = (RlBuilder.ExplicitExistence ++
+        val ex = existenceCols(RlBuilder.ExplicitExistence ++
           RlBuilder.DerivationSeqExistence ++ RlBuilder.CalculationExistence)
-          .zipWithIndex
-          .map { case (p, i) => s"regexp_matches(text, ${pat(p)}) AS m$i" }
-          .mkString(",\n  ")
         val crashAnchor =
           anyOf(Seq("calculate", "computing", "to find"), "lower(text)")
         s"""SELECT url,
@@ -1029,10 +1019,7 @@ object SparkEntry {
       "q48_rl_v3_gates" -> {
         import graft.derive.RlBuilder
         val gate = cnt(RlBuilder.V3GateIndicators, "substr(lower(text), 1, 1500)")
-        val ex = (RlBuilder.V3ExplicitExistence ++ RlBuilder.V3DerivationExistence)
-          .zipWithIndex
-          .map { case (p, i) => s"regexp_matches(text, ${pat(p)}) AS m$i" }
-          .mkString(",\n  ")
+        val ex = existenceCols(RlBuilder.V3ExplicitExistence ++ RlBuilder.V3DerivationExistence)
         s"""SELECT url,
            |  (length(trim(text)) >= 800 AND ($gate) >= 3) AS suitable,
            |  $ex
@@ -1041,41 +1028,21 @@ object SparkEntry {
 
       "q49_ug_deriv_gates" -> {
         import graft.derive.UgBuilders
-        val sample = "substr(lower(text), 1, 2000)"
         val gate = s"(${cnt(UgBuilders.UgPhysicsIndicators, sample)} + " +
           s"${cnt(UgBuilders.UgMathIndicators, sample)})"
-        val ex = UgBuilders.UgDerivationExistence.zipWithIndex
-          .map { case (p, i) => s"regexp_matches(text, ${pat(p)}) AS m$i" }
-          .mkString(",\n  ")
         s"""SELECT url,
            |  (length(trim(text)) >= 500 AND $gate >=
-           |   (CASE WHEN contains(lower(url), 'vixra') THEN 2 ELSE 3 END)) AS suitable,
-           |  $ex
+           |   ${vixra(2, 3)}) AS suitable,
+           |  ${existenceCols(UgBuilders.UgDerivationExistence)}
            |FROM read_parquet('$corpusGlob') ORDER BY url""".stripMargin
       },
 
       "q38_training_gate" -> {
-        import graft.derive.{Derive, Extract}
-        // _contains_english_physics_terms over a candidate block `m`
-        val phys = cnt(Extract.EnglishPhysicsTerms, "lower(m)")
-        val vix = cnt(Extract.VixraPhysicsTerms, "lower(m)")
-        val en = cnt(Extract.CommonEnglish, "lower(m)")
-        def batterySql(patterns: Seq[String], lo: Int, hi: Int, cap: Int): String = {
-          val pred =
-            s"length(m) > $lo AND length(m) < $hi AND ((($phys) >= 1 OR ($vix) >= 2) AND ($en) >= 2)"
-          val lists = patterns
-            .map(p => s"len(list_filter(regexp_extract_all(text, ${pat(p)}), m -> $pred))")
-            .mkString(" + ")
-          s"least($lists, $cap)"
-        }
-        val sample = "substr(lower(text), 1, 2000)"
-        val en14 = cnt(graft.lang.LangId.EnglishStopwords14, sample)
-        val stepPhys = cnt(Derive.TrainingStepIndicators ++
-          Derive.TrainingPhysIndicators, sample)
+        import graft.derive.Extract
+        def batterySql(patterns: Seq[String], lo: Int, hi: Int, cap: Int): String =
+          s"least(${patterns.map(p => s"len(${blockMatches(p, lo, hi)})").mkString(" + ")}, $cap)"
         s"""SELECT url,
-           |  (length(trim(text)) >= 500
-           |   AND ($en14) >= (CASE WHEN contains(lower(url), 'vixra') THEN 5 ELSE 8 END)
-           |   AND ($stepPhys) >= (CASE WHEN contains(lower(url), 'vixra') THEN 2 ELSE 3 END))
+           |  (${trainingGate("\n   AND ")})
            |    AS suitable,
            |  CAST(${batterySql(Extract.CompleteDerivationPatterns, 100, 2500, 5)} AS INT) AS n_derivations,
            |  CAST(${batterySql(Extract.WorkedSolutionPatterns, 80, 1800, 5)} AS INT) AS n_solutions,
@@ -1091,14 +1058,13 @@ object SparkEntry {
       // and the >= 2-questions item gate
       "q45_ug_benchmark" -> {
         import graft.derive.UgBuilders._
-        def battery(patterns: Seq[String], minLen: Int) = patterns
+        def longMatches(patterns: Seq[String], minLen: Int) = patterns
           .map(p => s"list_filter(list_transform(regexp_extract_all(text, ${pat(p)}), " +
             s"x -> trim(x)), m -> length(m) > $minLen)")
           .mkString("(", " || ", ")")
-        val eqs = battery(UgEqPatterns, 5)
-        val derivs = battery(UgDerivPatterns, 50)
-        val probs = battery(UgProblemPatterns, 100)
-        val sample = "substr(lower(text), 1, 2000)"
+        val eqs = longMatches(UgEqPatterns, 5)
+        val derivs = longMatches(UgDerivPatterns, 50)
+        val probs = longMatches(UgProblemPatterns, 100)
         val gate = s"(${cnt(UgPhysicsIndicators, sample)} + ${cnt(UgMathIndicators, sample)})"
         // first element among maximal lengths = Python max(key=len)
         def firstLongest(l: String) =
@@ -1114,7 +1080,7 @@ object SparkEntry {
         s"""WITH suit AS (
            |  SELECT url, text, issues FROM read_parquet('$scoredGlob')
            |  WHERE length(trim(text)) >= 500
-           |    AND $gate >= (CASE WHEN contains(lower(url), 'vixra') THEN 2 ELSE 3 END)),
+           |    AND $gate >= ${vixra(2, 3)}),
            |cx AS (
            |  SELECT url, issues, $eqs AS eqs, $derivs AS derivs, $probs AS probs
            |  FROM suit),
@@ -1160,45 +1126,29 @@ object SparkEntry {
       // in SQL over the same scored parquet (issues is an input column)
       "q41_benchmark_v2_dist" -> {
         import graft.derive.BenchmarkBuilders._
-        import graft.extract.Clean
-        // battery: group-1 extraction per pattern → transform → filter
-        def battery(patterns: Seq[String], mk: String => String,
-                    pred: String): String =
-          patterns.map(p =>
-            s"list_filter(list_transform(regexp_extract_all(text, ${pat(p)}, 1), " +
-              s"x -> ${mk("x")}), e -> $pred)")
-            .mkString("(", " || ", ")")
-        val eqClean = (x: String) =>
-          s"trim(regexp_replace(regexp_replace($x, '\\s+', ' ', 'g'), " +
-            s"${pat(Clean.EqStripClass)}, '', 'g'))"
         val meaningfulEq =
           s"(contains(e, '=') AND ${anyOf(graft.derive.Gates.PhysicsVars, "e")} AND " +
             s"${anyOf(graft.derive.Gates.MathOps, "e")} AND length(trim(e)) > 8)"
         val physV2 = s"(${anyOf(V2PhysicsTerms, "lower(e)")} OR ${anyOf(V2MathChars, "e")})"
-        val eqs = battery(V2EqPatterns, eqClean, s"length(e) > 0 AND $meaningfulEq")
-        val derivs = battery(V2DerivPatterns, x => s"trim($x)",
-          s"length(e) > 20 AND $physV2")
-        val scens = battery(V2ScenarioPatterns, x => s"trim($x)",
-          s"length(e) > 30 AND $physV2")
-        val nums = battery(V2NumPatterns, x => s"trim($x)",
+        val eqs = battery(V2EqPatterns, eqClean(graft.extract.Clean.EqStripClass),
+          s"length(e) > 0 AND $meaningfulEq")
+        val derivs = battery(V2DerivPatterns, trimmed, s"length(e) > 20 AND $physV2")
+        val scens = battery(V2ScenarioPatterns, trimmed, s"length(e) > 30 AND $physV2")
+        val nums = battery(V2NumPatterns, trimmed,
           s"regexp_matches(e, '\\d') AND ${anyOf(V2NumContexts, "lower(e)")} AND length(e) > 5")
         val prins = V2PrinciplePatterns.map(p =>
           s"list_transform(regexp_extract_all(text, ${pat(p)}, 1), x -> trim(x))")
           .mkString("(", " || ", ")")
-        val suitSample = "substr(lower(text), 1, 2000)"
-        val dl =
-          s"""CASE WHEN (len(list_filter(eqs, e -> ${anyOf(AdvMathTerms, "lower(e)")}))
-             | + len(list_filter(prins, e -> ${anyOf(AdvPhysTerms, "lower(e)")}))) >= 3
-             |THEN 'advanced'
-             |WHEN (len(list_filter(eqs, e -> ${anyOf(AdvMathTerms, "lower(e)")}))
-             | + len(list_filter(prins, e -> ${anyOf(AdvPhysTerms, "lower(e)")}))) >= 1
-             |THEN 'intermediate' ELSE 'introductory' END"""
-            .stripMargin.replace("\n", " ")
+        // (the double space before `+` is part of the pinned oracle string)
+        val advanced = s"(len(list_filter(eqs, e -> ${anyOf(AdvMathTerms, "lower(e)")}))  + " +
+          s"len(list_filter(prins, e -> ${anyOf(AdvPhysTerms, "lower(e)")})))"
+        val dl = s"CASE WHEN $advanced >= 3 THEN 'advanced' " +
+          s"WHEN $advanced >= 1 THEN 'intermediate' ELSE 'introductory' END"
         s"""WITH suit AS (
            |  SELECT text, issues FROM read_parquet('$scoredGlob')
            |  WHERE length(trim(text)) >= 800
            |    AND ((contains(text, '=') AND len(regexp_extract_all(text, '[A-Za-z]\\s*=')) >= 2)
-           |         OR (${cnt(V2SuitIndicators, suitSample)}) >= 4)),
+           |         OR (${cnt(V2SuitIndicators, sample)}) >= 4)),
            |cx AS (
            |  SELECT issues, $eqs AS eqs, $derivs AS derivs, $scens AS scens,
            |    $nums AS nums, $prins AS prins
@@ -1227,16 +1177,10 @@ object SparkEntry {
       // the issues-conditional scenario difficulty
       "q42_benchmark_v3_dist" -> {
         import graft.derive.BenchmarkBuilders._
-        val eqCleanV3 = (x: String) =>
-          s"trim(regexp_replace(regexp_replace($x, '\\s+', ' ', 'g'), " +
-            s"${pat(EqStripClassV3)}, '', 'g'))"
         val physEqV3 =
           s"(contains(e, '=') AND length(trim(e)) >= 5 AND " +
             s"${anyOf(V3PhysicsVars, "e")} AND ${anyOf(V3MathOps, "e")})"
-        val eqs = V3EqPatterns.map(p =>
-          s"list_filter(list_transform(regexp_extract_all(text, ${pat(p)}, 1), " +
-            s"x -> ${eqCleanV3("x")}), e -> length(e) > 0 AND $physEqV3)")
-          .mkString("(", " || ", ")")
+        val eqs = battery(V3EqPatterns, eqClean(EqStripClassV3), s"length(e) > 0 AND $physEqV3")
         // pairwise (starting_point, result) via zipped group extractions
         val derivs = V3DerivPatterns.map(p =>
           s"list_filter(list_zip(" +
@@ -1244,15 +1188,10 @@ object SparkEntry {
             s"list_transform(regexp_extract_all(text, ${pat(p)}, 2), x -> trim(x))), " +
             s"z -> length(z[1]) > 15 AND length(z[2]) > 10)")
           .mkString("(", " || ", ")")
-        val nums = V3NumPatterns.map(p =>
-          s"list_filter(list_transform(regexp_extract_all(text, ${pat(p)}, 1), " +
-            s"x -> trim(x)), e -> regexp_matches(e, '\\d') AND " +
-            s"${anyOf(V3NumContexts, "lower(e)")} AND length(e) > 4)")
-          .mkString("(", " || ", ")")
-        val scens = V3ScenarioPatterns.map(p =>
-          s"list_filter(list_transform(regexp_extract_all(text, ${pat(p)}, 1), " +
-            s"x -> trim(x)), e -> length(e) > 25 AND ${anyOf(V3PhysicsTerms, "lower(e)")})")
-          .mkString("(", " || ", ")")
+        val nums = battery(V3NumPatterns, trimmed,
+          s"regexp_matches(e, '\\d') AND ${anyOf(V3NumContexts, "lower(e)")} AND length(e) > 4")
+        val scens = battery(V3ScenarioPatterns, trimmed,
+          s"length(e) > 25 AND ${anyOf(V3PhysicsTerms, "lower(e)")}")
         val suitSample = "substr(lower(text), 1, 1500)"
         s"""WITH suit AS (
            |  SELECT text, issues FROM read_parquet('$scoredGlob')
@@ -1290,24 +1229,11 @@ object SparkEntry {
       // Scala constants; corpus is ASCII post-clean so RE2 '\s' ≡ the
       // Spark side's (?U)\s.
       "q39_training_dist" -> {
-        import graft.derive.{Derive, Extract}
-        // -- gate (same as q38) --
-        val sample = "substr(lower(text), 1, 2000)"
-        val en14 = cnt(graft.lang.LangId.EnglishStopwords14, sample)
-        val stepPhys = cnt(Derive.TrainingStepIndicators ++
-          Derive.TrainingPhysIndicators, sample)
-
+        import graft.derive.Extract
         // -- E13 batteries as LISTS (q38 oracles the counts; here we need
         // the block strings themselves) --
-        val phys = cnt(Extract.EnglishPhysicsTerms, "lower(m)")
-        val vix = cnt(Extract.VixraPhysicsTerms, "lower(m)")
-        val en = cnt(Extract.CommonEnglish, "lower(m)")
         def batteryList(patterns: Seq[String], lo: Int, hi: Int): String =
-          patterns.map(p =>
-            s"list_filter(regexp_extract_all(text, ${pat(p)}), " +
-              s"m -> length(m) > $lo AND length(m) < $hi AND " +
-              s"((($phys) >= 1 OR ($vix) >= 2) AND ($en) >= 2))")
-            .mkString("(", " || ", ")")
+          patterns.map(blockMatches(_, lo, hi)).mkString("(", " || ", ")")
         val derList = batteryList(Extract.CompleteDerivationPatterns, 100, 2500)
         val solList = batteryList(Extract.WorkedSolutionPatterns, 80, 1800)
         val prfList = batteryList(Extract.ProofPatterns, 100, 1200)
@@ -1339,16 +1265,9 @@ object SparkEntry {
           s"""CASE WHEN (${cnt(Extract.AdvancedIndicators, lo)}) > 0 THEN 'advanced'
              |WHEN (${cnt(Extract.IntermediateIndicators, lo)}) > 1 THEN 'intermediate'
              |ELSE 'introductory' END""".stripMargin.replace("\n", " ")
-        val reasoningTypeSql =
-          s"""CASE WHEN ${anyOf(Seq("derive", "derivation", "proof", "show that"), lo)}
-             |THEN 'mathematical_derivation'
-             |WHEN ${anyOf(Seq("conservation", "law", "principle", "theorem"), lo)}
-             |THEN 'law_application'
-             |WHEN ${anyOf(Seq("calculate", "find", "determine", "solve"), lo)}
-             |THEN 'problem_solving'
-             |WHEN ${anyOf(Seq("given", "known", "condition"), lo)}
-             |THEN 'knowledge_recall'
-             |ELSE 'reasoning_chain' END""".stripMargin.replace("\n", " ")
+        val reasoningTypeSql = Extract.ReasoningTypeCues
+          .map { case (t, cues) => s"WHEN ${anyOf(cues, lo)} THEN '$t'" }
+          .mkString("CASE ", " ", " ELSE 'reasoning_chain' END")
 
         // -- problem/solution boundary → step_count --
         val solFlagsSql =
@@ -1356,9 +1275,7 @@ object SparkEntry {
 
         s"""WITH suit AS (
            |  SELECT url, text FROM read_parquet('$corpusGlob')
-           |  WHERE length(trim(text)) >= 500
-           |    AND ($en14) >= (CASE WHEN contains(lower(url), 'vixra') THEN 5 ELSE 8 END)
-           |    AND ($stepPhys) >= (CASE WHEN contains(lower(url), 'vixra') THEN 2 ELSE 3 END)),
+           |  WHERE ${trainingGate("\n    AND ")}),
            |blk AS (
            |  SELECT example_type, unnest(blks) AS block FROM (
            |    SELECT 'derivation' AS example_type, list_slice($derList, 1, 3) AS blks FROM suit

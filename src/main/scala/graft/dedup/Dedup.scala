@@ -182,13 +182,13 @@ object Dedup {
     * docs(idCol, textCol) → (id_a, id_b, jaccard) for verified pairs with
     * jaccard >= threshold. Candidate generation: explode band keys, groupBy
     * bucket, pair within bucket (bucket sizes capped at maxBucket). The
-    * verification joins the distinct shingle sets back and computes exact
-    * |∩|/|∪|.
+    * signature has 32 lanes in 8 bands of 4. The verification joins the
+    * distinct shingle sets back and computes exact |∩|/|∪|.
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                   threshold: Double = 0.7, maxBucket: Int = 64,
+                   shingleN: Int = 3, threshold: Double = 0.7, maxBucket: Int = 64,
                    materialize: Boolean = false): DataFrame = {
+    val (numHashes, bands) = (32, 8)
     val rowsPerBand = numHashes / bands
     // the whole path — signatures, band buckets, verification — runs on
     // the 64-bit digest shingles (hashedShingles; round 6): lane hashing
@@ -493,7 +493,6 @@ object Dedup {
     * by definition.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25,
                           collectThreshold: Int = 1 << 20): DataFrame = {
     // Adaptive strategy, same shape as Spark's broadcast-join threshold:
     // the near-dup PAIR graph is usually orders of magnitude smaller
@@ -550,7 +549,7 @@ object Dedup {
       .withColumn("component", col("id")).localCheckpoint()
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < 25) { // jumping converges in O(log diameter) rounds
       val nbrMin = edges
         .join(comp.select(col("id").as("src"), col("component")), "src")
         .groupBy(col("dst").as("id"))

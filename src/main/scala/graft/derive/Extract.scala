@@ -417,8 +417,6 @@ object Extract {
   // boundary = min(2, first index with a solution indicator); defaults per
   // reference when either side is empty.
   // ------------------------------------------------------------------
-  val ProblemIndicators: Seq[String] = Seq(
-    "given", "find", "calculate", "determine", "show", "prove", "consider", "let")
   val SolutionIndicators: Seq[String] = Seq(
     "solution", "answer", "we start", "beginning", "first step", "step 1")
 

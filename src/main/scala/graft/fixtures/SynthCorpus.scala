@@ -273,15 +273,4 @@ object SynthCorpus {
     }
     dir
   }
-
-  /** Write both tables under a directory (partitioned by url-hash bucket —
-    * the layout the north_star mandates for the real corpus).
-    */
-  def write(spark: SparkSession, n: Long, dir: String, partitions: Int = 32): Unit = {
-    docsRaw(spark, n, partitions)
-      .withColumn("bucket", pmod(xxhash64(col("url")), lit(16)))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/docs_raw")
-    labels(spark, n, partitions)
-      .write.mode("overwrite").parquet(s"$dir/docs_labels")
-  }
 }

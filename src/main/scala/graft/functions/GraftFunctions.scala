@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, InheritAnalysisRules,
+  RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -164,7 +165,19 @@ object GraftFunctions {
   private def builder(name: String, f: Column => Column): Seq[Expression] => Expression = {
     args =>
       require(args.size == 1, s"$name takes one argument, got ${args.size}")
-      GraftColumnBridge.expression(f(GraftColumnBridge.column(args.head)))
+      SqlCall(name, args.head,
+        GraftColumnBridge.expression(f(GraftColumnBridge.column(args.head))))
+  }
+
+  /** Names a registered call `name(arg)` in SQL text and column names; the
+    * optimizer swaps it for `replacement`, the library's `StaticInvoke`.
+    */
+  private case class SqlCall(name: String, arg: Expression, replacement: Expression)
+      extends RuntimeReplaceable with InheritAnalysisRules {
+    override def prettyName: String = name
+    override def parameters: Seq[Expression] = Seq(arg)
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(replacement = newChild)
   }
 
   /** SparkSessionExtensions injection point (for spark-submit via

@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes all have the high bit set — they can never equal an ASCII term
   * byte — and its default-locale lowercase stays non-ASCII except for a
   * small enumerable set of code points (U+0130 İ → "i̇", U+212A K → "k",
-  * …). [[MultiContainsMask.lowersToAscii]] enumerates that set once per
+  * …). `SafetySet.lowersToAscii` enumerates that set once per
   * JVM against the *running* JVM's `String.toLowerCase()`, so the set is
   * consistent with Spark's slow path by construction. The scanner skips
   * whole non-ASCII sequences, bailing to the exact
@@ -39,7 +39,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * point, (b) malformed/overlong UTF-8, or (c) a tr/az default locale,
   * where `String.toLowerCase()` maps even ASCII 'I' to 'ı' and the
   * ASCII fold itself would diverge on mixed text
-  * ([[MultiContainsMask.asciiFoldUnsafe]]). Terms with non-ASCII bytes
+  * (`SafetySet.asciiFoldUnsafe`). Terms with non-ASCII bytes
   * route every row through the fallback. MultiContainsSpec
   * property-tests parity on random Unicode including the dangerous set.
   * Terms are capped at 63 so the mask fits a Long with a sentinel-free
@@ -284,11 +284,6 @@ object MultiContainsMask {
   }
 
   private[functions] lazy val safety: SafetySet = new SafetySet
-
-  // Forwarders keep the round-4 call sites/specs stable.
-  private[functions] def lowersToAscii: java.util.BitSet = safety.lowersToAscii
-  private[functions] def leadDanger: Array[Boolean] = safety.leadDanger
-  private[functions] def asciiFoldUnsafe: Boolean = safety.asciiFoldUnsafe
 
   private def computeLowersToAscii(): java.util.BitSet = {
     val bs = new java.util.BitSet(0x110000)

@@ -35,7 +35,7 @@ class DedupSpec extends SparkTestBase {
 
   test("minhash LSH finds exact and near duplicates, not unrelated docs") {
     val pairs = Dedup.minhashPairs(df, "doc_id", "text",
-      shingleN = 3, numHashes = 32, bands = 8, threshold = 0.5)
+      shingleN = 3, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), s"exact dup pair missing: $pairs")
     assert(pairs.contains((1L, 3L)) || pairs.contains((2L, 3L)),
@@ -161,7 +161,7 @@ class DedupSpec extends SparkTestBase {
     val flood = spark.range(0, 40).select(col("id").as("doc_id"),
       lit("identical boilerplate page body repeated words here " * 4).as("text"))
     val pairs = Dedup.minhashPairs(flood, "doc_id", "text",
-      shingleN = 3, numHashes = 32, bands = 8, threshold = 0.0, maxBucket = 8)
+      shingleN = 3, threshold = 0.0, maxBucket = 8)
     // collect() (not count()) — observed metrics live on THIS dataset's QE
     val n = pairs.collect().length
     assert(n == 28, s"expected C(8,2)=28 capped pairs, got $n")

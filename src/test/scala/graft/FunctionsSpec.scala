@@ -79,6 +79,17 @@ class FunctionsSpec extends SparkTestBase {
     assert(df.collect().forall(_.getString(0).startsWith("mail <EMAIL> #")))
   }
 
+  test("an unaliased call names its column after the SQL call") {
+    Seq(("a@b.co", "<p>x</p>".getBytes("UTF-8"))).toDF("text", "html")
+      .createOrReplaceTempView("named_in")
+    val calls = GraftFunctions.Functions.map { case (name, _) =>
+      s"$name(${if (name == "graft_extract_clean") "html" else "text"})"
+    }
+    val df = spark.sql(calls.mkString("SELECT ", ", ", " FROM named_in"))
+    assert(df.columns.toSeq == calls)
+    assert(df.head().getString(0) == "<EMAIL>")
+  }
+
   test("every registered name equals its library Column function, NULL included") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("text").union(Seq(null.asInstanceOf[String], "").toDF("text"))
