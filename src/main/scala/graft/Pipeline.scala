@@ -34,15 +34,21 @@ object Pipeline {
     * (enhanced_paper_analyser.py:145-172): min length 300, English stopword
     * threshold 2 (viXra) / 3 (arXiv), domain-term threshold 1 (viXra) / 2.
     */
-  def eligible(text: Column, url: Column, minLen: Int): Column = {
+  def eligible(text: Column, url: Column, minLen: Int): Column =
+    eligibleOf(text, url, minLen, Heuristics.EligibilitySample.mask(text))
+
+  /** `eligible` over the sample's mask (`Heuristics.EligibilitySample`);
+    * a filter on it goes through `EligibilitySample.filter`.
+    */
+  private[graft] def eligibleOf(text: Column, url: Column, minLen: Int, mask: Column): Column = {
+    val sample = Heuristics.EligibilitySample
     val isVixra = lower(url).contains("vixra")
     val enThreshold = when(isVixra, 2).otherwise(3)
     val termThreshold = when(isVixra, 1).otherwise(2)
-    val sample = Heuristics.lowerPrefix(text, 1000)
     Heuristics.minLength(text, minLen) &&
-      (LangId.englishStopwordCount(text) >= enThreshold) &&
-      ((Heuristics.termCount(sample, Heuristics.PhysicsIndicators) +
-        Heuristics.termCount(sample, Heuristics.VixraIndicators)) >= termThreshold)
+      (sample.count(mask, LangId.EnglishStopwords10) >= enThreshold) &&
+      (sample.count(mask, Heuristics.PhysicsIndicators ++ Heuristics.VixraIndicators) >=
+        termThreshold)
   }
 
   /** E1 + C1: extraction and basic clean — THE byte-identical surface.

@@ -4,7 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rules.Heuristics.{lowerPrefix, termCount}
+import graft.rules.Heuristics.TermSample
 
 import graft.extract.Clean
 
@@ -67,10 +67,12 @@ object BenchmarkBuilders {
     "energy", "force", "field", "particle", "wave", "quantum",
     "equation", "formula", "derivation", "calculation")
 
+  private[graft] val V2SuitSample = new TermSample(2000, V2SuitIndicators)
+
   def suitableForBenchmarkV2(text: Column): Column = {
     val hasEq = text.contains("=") &&
       (size(hits(text, "[A-Za-z]\\s*=", 0)) >= 2)
-    val physCnt = termCount(lowerPrefix(text, 2000), V2SuitIndicators)
+    val physCnt = V2SuitSample.count(V2SuitSample.mask(text), V2SuitIndicators)
     (length(trim(text)) >= 800) && (hasEq || physCnt >= 4)
   }
 
@@ -304,9 +306,11 @@ object BenchmarkBuilders {
   private[graft] val V3SuitTerms = Seq(
     "energy", "force", "field", "particle", "wave", "mass", "equation")
 
+  private[graft] val V3SuitSample = new TermSample(1500, V3SuitTerms)
+
   def suitableForBenchmarkV3(text: Column): Column = {
     val hasEq = text.contains("=") && (size(hits(text, "[A-Za-z]\\s*=", 0)) >= 1)
-    val cnt = termCount(lowerPrefix(text, 1500), V3SuitTerms)
+    val cnt = V3SuitSample.count(V3SuitSample.mask(text), V3SuitTerms)
     (length(trim(text)) >= 600) && (hasEq || cnt >= 3)
   }
 

@@ -33,15 +33,22 @@ object Derive {
     "obtain", "find", "result", "using", "apply", "given", "assume",
     "consider")
 
-  def suitableForTraining(text: Column, url: Column): Column = {
+  /** The training gate's 2,000-code-point sample: 35 terms, one scan. */
+  private[graft] val TrainingSample = new Heuristics.TermSample(2000,
+    LangId.EnglishStopwords14, TrainingStepIndicators, TrainingPhysIndicators)
+
+  def suitableForTraining(text: Column, url: Column): Column =
+    trainingGate(text, url, TrainingSample.mask(text))
+
+  /** `suitableForTraining` over `TrainingSample`'s mask. */
+  private[graft] def trainingGate(text: Column, url: Column, mask: Column): Column = {
     val isVixra = lower(url).contains("vixra")
-    val sample = Heuristics.lowerPrefix(text, 2000)
-    val enCount = Heuristics.termCount(sample, LangId.EnglishStopwords14)
-    val stepCount = Heuristics.termCount(sample, TrainingStepIndicators)
-    val physCount = Heuristics.termCount(sample, TrainingPhysIndicators)
+    val enCount = TrainingSample.count(mask, LangId.EnglishStopwords14)
+    val indicatorCount =
+      TrainingSample.count(mask, TrainingStepIndicators ++ TrainingPhysIndicators)
     (length(trim(text)) >= 500) &&
       (enCount >= when(isVixra, 5).otherwise(8)) &&
-      ((stepCount + physCount) >= when(isVixra, 2).otherwise(3))
+      (indicatorCount >= when(isVixra, 2).otherwise(3))
   }
 
   /** Extract training examples: one row per (doc, block).
@@ -62,8 +69,8 @@ object Derive {
     // behind a ComputeOnce barrier so the battery runs once per row, not
     // once per field reference (CollapseProject would inline it 7x)
     val fusedBlocks = BlockExtract.blocksCol(text)
-    val withBlocks = graft.functions.ComputeOnce(
-      df.filter(suitableForTraining(text, col(urlCol))), "__bx", fusedBlocks)
+    val gated = TrainingSample.filter(df, text)(trainingGate(text, col(urlCol), _))
+    val withBlocks = graft.functions.ComputeOnce(gated, "__bx", fusedBlocks)
       .withColumn("blocks", concat(
         // loop caps per enhanced_paper_analyser.py:692-705 — the find-level
         // caps are 7/7/3 (BlockExtract), the processing loop then takes
@@ -138,8 +145,8 @@ object Derive {
                      subjectCol: String, titleCol: String,
                      abstractCol: String): DataFrame = {
     val text = col(textCol)
-    val base = scored
-      .filter(graft.Pipeline.eligible(text, col(urlCol), 300))
+    val base = Heuristics.EligibilitySample
+      .filter(scored, text)(graft.Pipeline.eligibleOf(text, col(urlCol), 300, _))
       .withColumn("clean_title", Clean.titleClean(col(titleCol)))
       .withColumn("clean_abstract", Clean.abstractTruncate(col(abstractCol)))
       .withColumn("equations", Extract.equations(text))

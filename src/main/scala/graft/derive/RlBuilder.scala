@@ -4,7 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rules.Heuristics.{lowerPrefix, termCount}
+import graft.rules.Heuristics.{termCount, TermSample}
 
 /** The RL-training builder — the third training path of the reference
   * (analysis/enhanced_training_builder.py:23-140), distinct from the
@@ -60,13 +60,17 @@ object RlBuilder {
   val RlPhysicsTerms: Seq[String] = Seq("energy", "force", "field", "mass",
     "equation")
 
-  def suitableForRlTraining(text: Column): Column = {
-    val sample = lowerPrefix(text, 2000)
+  private[graft] val RlSample =
+    new TermSample(2000, RlProblemIndicators, RlReasoningIndicators, RlPhysicsTerms)
+
+  def suitableForRlTraining(text: Column): Column = rlGate(text, RlSample.mask(text))
+
+  /** `suitableForRlTraining` over `RlSample`'s mask. */
+  private def rlGate(text: Column, mask: Column): Column =
     (length(trim(coalesce(text, lit("")))) >= 1000) &&
-      (termCount(sample, RlProblemIndicators) >= 2) &&
-      (termCount(sample, RlReasoningIndicators) >= 3) &&
-      (termCount(sample, RlPhysicsTerms) >= 2)
-  }
+      (RlSample.count(mask, RlProblemIndicators) >= 2) &&
+      (RlSample.count(mask, RlReasoningIndicators) >= 3) &&
+      (RlSample.count(mask, RlPhysicsTerms) >= 2)
 
   // ------------------------------------------------------------------
   // Battery patterns (:47-51, :61-64, :75-78). Python re.DOTALL +
@@ -528,9 +532,11 @@ object RlBuilder {
   val V3GateIndicators: Seq[String] = Seq("problem", "solution", "example",
     "calculate", "find", "derive")
 
+  private[graft] val V3GateSample = new TermSample(1500, V3GateIndicators)
+
   def suitableForRlTrainingV3(text: Column): Column = {
     (length(trim(coalesce(text, lit("")))) >= 800) &&
-      (termCount(lowerPrefix(text, 1500), V3GateIndicators) >= 3)
+      (V3GateSample.count(V3GateSample.mask(text), V3GateIndicators) >= 3)
   }
 
   /** V3 assembly (:446-461, :508-533): cap 2, rl_v3.0 format, standards =
@@ -577,7 +583,7 @@ object RlBuilder {
     // pattern contributes NOTHING in the reference (ValueError → except).
     // Anchor-guarded: both substrings are necessary for a match.
     val withExamples = graft.functions.ComputeOnce(
-      df.filter(suitableForRlTraining(text) && !crashGate(text)), "__ex",
+      RlSample.filter(df, text)(m => rlGate(text, m) && !crashGate(text)), "__ex",
       extractedExamples(text))
       .filter(size(col("__ex")) > 0)
       .select(col(urlCol).as("url"), col(subjectCol).as("subject"),

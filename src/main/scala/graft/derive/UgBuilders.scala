@@ -4,7 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rules.Heuristics.{lowerPrefix, termCount}
+import graft.rules.Heuristics.{termCount, TermSample}
 
 import graft.functions.Let
 
@@ -54,11 +54,12 @@ object UgBuilders {
     "proof", "theorem", "formula", "differential", "integral", "matrix",
     "vector")
 
+  private[graft] val UgSample = new TermSample(2000, UgPhysicsIndicators, UgMathIndicators)
+
   def suitableForUgBenchmark(text: Column, url: Column): Column = {
-    val sample = lowerPrefix(text, 2000)
     val threshold = when(lower(url).contains("vixra"), 2).otherwise(3)
     (length(trim(coalesce(text, lit("")))) >= 500) &&
-      ((termCount(sample, UgPhysicsIndicators) + termCount(sample, UgMathIndicators)) >= threshold)
+      (UgSample.count(UgSample.mask(text), UgPhysicsIndicators ++ UgMathIndicators) >= threshold)
   }
 
   /** _extract_physics_content_structured (:333-377). Equation battery runs
@@ -497,7 +498,7 @@ Focus particularly on the application of: """),
 
     val withBlocks = graft.functions.ComputeOnce(
       graft.functions.ComputeOnce(
-        df.filter(Derive.suitableForTraining(text, col(urlCol))),
+        Derive.TrainingSample.filter(df, text)(Derive.trainingGate(text, col(urlCol), _)),
         "__ugDerivs", ugFindCompleteDerivations(text)),
       "__bx", fusedBlocks)
       .withColumn("blocks", concat(

@@ -3,8 +3,9 @@ package graft.functions
 import java.lang.reflect.Modifier
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, ObjectType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A graft-native kernel call as a Column: Spark's own `StaticInvoke`
@@ -15,7 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * The kernel is a public def on a top-level object (the call goes
   * through the object's static forwarder) that takes and returns
   * Catalyst values: `UTF8String`, `Array[Byte]`, `Int` in; `UTF8String`,
-  * `InternalRow`, `ArrayData` or a primitive out. The method is looked up
+  * `InternalRow`, `ArrayData` or a primitive out. A kernel can also take a
+  * plan-time object, passed as an [[obj]] literal: codegen reads it from
+  * the stage's reference array, so per-row state such as a compiled
+  * automaton is built once per task, not per row. The method is looked up
   * when the Column is built, so a misnamed kernel fails here, and its
   * parameter types become the node's input types, so the analyzer casts
   * a NULL literal (or any castable argument) to what the kernel takes.
@@ -34,6 +38,14 @@ object Native {
   def nullAware(kernel: AnyRef, method: String, dataType: DataType, nullable: Boolean,
                 args: Column*): Column =
     call(kernel, method, dataType, args, propagateNull = false, returnNullable = nullable)
+
+  /** `value` as a literal argument of a kernel parameter of its class.
+    * The value must be serializable (it ships with the plan), and equal
+    * values make equal literals, so equal kernel calls stay one common
+    * subexpression.
+    */
+  def obj(value: java.io.Serializable): Column =
+    GraftColumnBridge.column(Literal(value, ObjectType(value.getClass)))
 
   private def call(kernel: AnyRef, method: String, dataType: DataType, args: Seq[Column],
                    propagateNull: Boolean, returnNullable: Boolean): Column = {
@@ -54,5 +66,6 @@ object Native {
     if (c == classOf[UTF8String]) StringType
     else if (c == classOf[Array[Byte]]) BinaryType
     else if (c == java.lang.Integer.TYPE) IntegerType
+    else if (!c.isPrimitive) ObjectType(c)
     else throw new IllegalArgumentException(s"no Catalyst input type for ${c.getName}")
 }

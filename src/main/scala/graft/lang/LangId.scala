@@ -2,6 +2,7 @@ package graft.lang
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.rules.Heuristics
 
@@ -12,11 +13,11 @@ import graft.rules.Heuristics
   * 1. `englishStopwordCount` — the reference's exact semantics: how many
   *    of the 10 stopwords occur (substring containment, 0/1 each) in
   *    `lower(text[:1000])` (reference: enhanced_paper_analyser.py:152-160).
-  *    It is the shared term-presence count
-  *    (`Heuristics.termCount(Heuristics.lowerPrefix(text, 1000), …)`);
-  *    the 14-word list is the training gate's
-  *    (`Derive.suitableForTraining`, :716-724). Pure Catalyst — stays in
-  *    whole-stage codegen; q10 calls it, so q10's DuckDB oracle checks it.
+  *    It is read off `Heuristics.EligibilitySample`, the one-pass term
+  *    mask `Pipeline.eligible` also counts its indicators from; the
+  *    14-word list is the training gate's (`Derive.suitableForTraining`,
+  *    :716-724). A native call inside whole-stage codegen; q10 calls it,
+  *    so q10's DuckDB oracle checks it.
   *
   * 2. `NgramModel` — a fastText-style hashed char-n-gram linear classifier:
   *    hashed trigram features → per-language weight table → argmax. The
@@ -37,10 +38,12 @@ object LangId {
 
   /** How many of the 10 stopwords occur in `lower(text[:1000])` — the
     * reference's `sum(1 for word in english_words if word in
-    * text_sample)`, through the shared `Heuristics.termCount`.
+    * text_sample)`, read off the eligibility gate's one-pass sample mask.
     */
-  def englishStopwordCount(text: Column): Column =
-    Heuristics.termCount(Heuristics.lowerPrefix(text, 1000), EnglishStopwords10)
+  def englishStopwordCount(text: Column): Column = {
+    val sample = Heuristics.EligibilitySample
+    sample.count(sample.mask(text), EnglishStopwords10)
+  }
 
   /** Plain-Scala mirror of `englishStopwordCount`. */
   def englishStopwordCountStr(text: String): Int =
@@ -161,12 +164,27 @@ object LangId {
   lazy val Shared: NgramModel = buildModel()
 
   /** Apply the model over a DataFrame, predicting per row on the executors.
-    * Adds `langCol` from `textCol`; rows never visit the driver. `spark` is
-    * not used.
+    * Adds `langCol` from `textCol` through the native [[predictUtf8]];
+    * rows never visit the driver. `spark` is not used.
     */
   def withLangNgram(df: DataFrame, textCol: String, langCol: String,
-                    spark: SparkSession): DataFrame = {
-    val predictUdf = udf((t: String) => Shared.predict(t))
-    df.withColumn(langCol, predictUdf(col(textCol)))
+                    spark: SparkSession): DataFrame =
+    df.withColumn(langCol, graft.functions.Native.nullAware(this, "predictUtf8",
+      org.apache.spark.sql.types.StringType, nullable = false, col(textCol)))
+
+  /** The kernel behind `withLangNgram`: `Shared.predict` of the text, "und"
+    * for null. `predict` reads 500 UTF-16 chars, so only the first 500
+    * code points are decoded (at least 500 chars, or the whole text). A
+    * prefix that is not valid UTF-8 could decode differently from the
+    * same bytes inside the whole text, so then the whole text is decoded.
+    */
+  def predictUtf8(text: UTF8String): UTF8String = {
+    val s =
+      if (text == null) null
+      else {
+        val head = text.substringSQL(1, 500)
+        if (head.isValid) head.toString else text.toString
+      }
+    UTF8String.fromString(Shared.predict(s))
   }
 }

@@ -1,6 +1,6 @@
 package graft.rules
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Heuristic quality rules and text statistics (SURVEY.md §2.2, §2.4).
@@ -108,7 +108,10 @@ object Heuristics {
   // `sum(1 for w in terms if w in text.lower()[:n])`. TermCountSpec holds
   // each Column form equal to its mirror.
   // ------------------------------------------------------------------
-  /** `lower(text[:n])`, n counted in code points (Spark `substring`). */
+  /** `lower(text[:n])`, n counted in code points (Spark `substring`).
+    * The Column reference of [[TermSample]]; gates count through the
+    * sample's one-pass mask instead.
+    */
   def lowerPrefix(text: Column, n: Int): Column = lower(substring(text, 1, n))
 
   def lowerPrefixStr(text: String, n: Int): String =
@@ -120,6 +123,48 @@ object Heuristics {
 
   def termCountStr(c: String, terms: Seq[String]): Int =
     if (c == null) 0 else terms.count(c.contains)
+
+  /** The term lists a gate counts over one sample, `lower(text[:n])`.
+    * `mask(text)` is one native scan per row (`graft.functions.TermMask`,
+    * never a lowered copy): a Long whose bits are the distinct terms of
+    * every list that occur in the sample. `count(mask, list)` is
+    * `termCount(lowerPrefix(text, n), list)` read off that mask as
+    * popcounts, so all of a gate's lists share the scan. Subexpression
+    * elimination shares one mask among the conjuncts of a projection; a
+    * filter re-evaluates it per conjunct, so filters over several counts
+    * go through [[filter]]. TermMaskSpec holds the counts equal to the
+    * Column form and to `termCountStr`.
+    */
+  final class TermSample(val n: Int, val lists: Seq[String]*) {
+    private val scanner = graft.functions.TermScanner(lists.flatten.distinct)
+
+    def mask(text: Column): Column =
+      graft.functions.Native.nullAware(graft.functions.TermMask, "scan",
+        org.apache.spark.sql.types.LongType, nullable = false,
+        text, lit(n), graft.functions.Native.obj(scanner))
+
+    /** How many entries of `list` occur in the sample (int; 0 on null
+      * text). An entry listed k times counts k times, as in `termCount`:
+      * layer j holds the terms listed more than j times.
+      */
+    def count(mask: Column, list: Seq[String]): Column = {
+      val times = list.groupBy(identity).view.mapValues(_.size).toMap
+      require(times.keys.forall(scanner.terms.contains), s"terms outside the sample: $list")
+      (1 to times.values.max).map { j =>
+        val bits = times.collect { case (t, k) if k >= j => 1L << scanner.terms.indexOf(t) }
+        bit_count(mask.bitwiseAND(lit(bits.reduce(_ | _))))
+      }.reduce(_ + _)
+    }
+
+    /** `df.filter(gate(mask(text)))` with the mask computed once per row:
+      * it goes behind a ComputeOnce barrier, which the filter cannot be
+      * pushed through.
+      */
+    def filter(df: DataFrame, text: Column)(gate: Column => Column): DataFrame = {
+      val name = s"__terms$n"
+      graft.functions.ComputeOnce(df, name, mask(text)).filter(gate(col(name))).drop(name)
+    }
+  }
 
   // ------------------------------------------------------------------
   // E7/E8 — physics density + content flags (pdf_processor.py:236-249)
@@ -206,8 +251,7 @@ object Heuristics {
 
   // ------------------------------------------------------------------
   // P6 — domain-term indicators (enhanced_paper_analyser.py:163-172),
-  // counted by `termCount` over `lowerPrefix(text, 1000)` in
-  // Pipeline.eligible.
+  // counted over `lower(text[:1000])` in Pipeline.eligible.
   // ------------------------------------------------------------------
   val PhysicsIndicators: Seq[String] = Seq(
     "equation", "theory", "model", "physics", "energy", "force", "field",
@@ -215,6 +259,12 @@ object Heuristics {
   val VixraIndicators: Seq[String] = Seq(
     "gravity", "gravitational", "universe", "cosmic", "space", "time",
     "mass", "particle")
+
+  /** `Pipeline.eligible`'s 1,000-code-point sample: the English stopwords
+    * (`LangId.englishStopwordCount`) and both indicator lists, one scan.
+    */
+  val EligibilitySample = new TermSample(1000,
+    graft.lang.LangId.EnglishStopwords10, PhysicsIndicators, VixraIndicators)
 
   // ------------------------------------------------------------------
   // Gopher/C4-style web-text rules (north_rule additions; SURVEY.md P4-P6

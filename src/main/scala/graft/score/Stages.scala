@@ -66,8 +66,10 @@ object Stages {
     if (words == 0L) 5.0
     else clamp110d(10.0 - math.floor(mathExpr.toDouble / math.max(words, 1L) * 100.0))
 
+  private[graft] val AssumptionSample = new Heuristics.TermSample(5000, AssumptionTerms)
+
   def dimPhysicsAssumptions(text: Column): Column = {
-    val cnt = Heuristics.termCount(Heuristics.lowerPrefix(text, 5000), AssumptionTerms)
+    val cnt = AssumptionSample.count(AssumptionSample.mask(text), AssumptionTerms)
     when(length(trim(text)) === 0, lit(5.0))
       .otherwise(clamp110(lit(10.0) - cnt.cast("double")))
   }
@@ -113,10 +115,16 @@ object Stages {
     "logical consistency concerns",
     "weak literature integration")
 
-  def subtleIssues(me: Column, pa: Column, lc: Column, li: Column): Column =
-    filter(array(Seq(me, pa, lc, li).zip(IssueLabels).map { case (d, l) =>
-      when(d >= IssueThreshold, lit(l)).otherwise(lit(null).cast("string"))
-    }: _*), x => x.isNotNull)
+  def subtleIssues(me: Column, pa: Column, lc: Column, li: Column): Column = {
+    // a concat of one-element or empty arrays compiles inside the fused
+    // span (a `filter` lambda would run interpreted, outside it); the empty
+    // literal's element type keeps the column array<string> with
+    // containsNull, as the reference's filtered array of nullable strings
+    val none = typedLit(Seq.empty[String])
+    concat(Seq(me, pa, lc, li).zip(IssueLabels).map { case (d, l) =>
+      when(d >= IssueThreshold, array(lit(l))).otherwise(none)
+    }: _*)
+  }
 
   def subtleIssuesStr(me: Double, pa: Double, lc: Double, li: Double): Seq[String] =
     Seq(me, pa, lc, li).zip(IssueLabels)
