@@ -2,7 +2,8 @@ package graft.derive
 
 /** Necessary-literal anchor guard for the per-candidate regex batteries
   * inside the fused builder expressions (round-3 verdict item 4; the
-  * Column-level batteries use MultiContainsMask for the same purpose).
+  * Column-level batteries test a whole-text `TermSample` mask for the
+  * same purpose).
   *
   * Each guarded pattern's prefix alternation yields a NECESSARY literal
   * set: if no literal of every group is present in the candidate, the

@@ -4,7 +4,9 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.rules.Heuristics.termCount
+import graft.rules.Heuristics.TermSample
+
+import graft.functions.Let
 
 /** Extraction batteries for the derived datasets (SURVEY.md §2.4 E10–E25).
   *
@@ -181,17 +183,21 @@ object Extract {
     "the", "and", "of", "to", "a", "in", "we", "can", "from", "with",
     "is", "are", "this", "that")
 
+  private[graft] val EnglishPhysicsSample =
+    new TermSample(Int.MaxValue, EnglishPhysicsTerms, VixraPhysicsTerms, CommonEnglish)
+
   /** _contains_english_physics_terms (enhanced_paper_analyser.py:802-818):
     * (>=1 physics term OR >=2 vixra terms) AND >=2 common English words —
-    * substring containment 0/1 counts.
+    * substring containment 0/1 counts over the whole lowered text. The
+    * battery filters call it per match, inside a lambda: the mask is
+    * Let-bound so the three counts share one scan.
     */
-  def containsEnglishPhysicsTerms(c: Column): Column = {
-    val lo = lower(c)
-    val phys = termCount(lo, EnglishPhysicsTerms)
-    val vix = termCount(lo, VixraPhysicsTerms)
-    val en = termCount(lo, CommonEnglish)
-    (phys >= 1 || vix >= 2) && en >= 2
-  }
+  def containsEnglishPhysicsTerms(c: Column): Column =
+    Let(EnglishPhysicsSample.mask(c)) { m =>
+      val s = EnglishPhysicsSample
+      (s.count(m, EnglishPhysicsTerms) >= 1 || s.count(m, VixraPhysicsTerms) >= 2) &&
+        s.count(m, CommonEnglish) >= 2
+    }
 
   val CompleteDerivationPatterns: Seq[String] = Seq(
     "(?si)(?:To derive|To show|To prove|We derive|We show|We calculate|We find).*?(?:Therefore|Thus|Hence|We obtain|This gives|Q\\.E\\.D\\.)[^.]*\\.",
@@ -246,9 +252,9 @@ object Extract {
     "statistical mechanics", "thermodynamics")
 
   def difficulty(c: Column): Column = {
-    val lo = lower(c)
-    val adv = termCount(lo, AdvancedIndicators)
-    val inter = termCount(lo, IntermediateIndicators)
+    val m = ClassifierSample.mask(c)
+    val adv = ClassifierSample.count(m, AdvancedIndicators)
+    val inter = ClassifierSample.count(m, IntermediateIndicators)
     when(adv > 0, "advanced").when(inter > 1, "intermediate").otherwise("introductory")
   }
 
@@ -267,10 +273,17 @@ object Extract {
     "statistical" -> Seq("statistical", "distribution", "probability", "ensemble"),
     "astrophysics" -> Seq("stellar", "galactic", "cosmology", "black hole", "gravity"))
 
+  /** One whole-text sample for the difficulty (E17) and topic (E18)
+    * classifiers, which read the same text side by side: one scan serves
+    * both columns of a projection.
+    */
+  private[graft] val ClassifierSample = new TermSample(Int.MaxValue,
+    AdvancedIndicators +: IntermediateIndicators +: TopicKeywords.map(_._2): _*)
+
   def topic(text: Column, subject: Column): Column = {
-    val lo = lower(text)
+    val m = ClassifierSample.mask(text)
     val scores = TopicKeywords.map { case (t, kws) =>
-      t -> termCount(lo, kws)
+      t -> ClassifierSample.count(m, kws)
     }
     val best = greatest(scores.map(_._2): _*)
     val chain = scores.foldLeft(when(lit(false), lit(""))) { case (acc, (t, s)) =>

@@ -4,7 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.rules.Heuristics.termCount
+import graft.rules.Heuristics.TermSample
 import org.apache.spark.sql.types.StructType
 
 import graft.extract.Clean
@@ -101,21 +101,24 @@ object Gates {
   private[graft] val C9English = Seq(
     "the", "and", "of", "to", "a", "in", "we", "is", "this", "that")
 
+  private[graft] val C9Sample = new TermSample(Int.MaxValue, C9English, C9PhysicsTerms)
+
   def cleanAndValidate(c: Column): Column =
-    // Let-bound: the clean chain is referenced by ~27 contains checks —
-    // without the binding each reference re-runs both regex replaces
-    // (graft.functions.Let scaladoc; measured 50+ s on the RL battery)
+    // Let-bound: the clean chain and its term mask are each referenced
+    // several times — without the binding each reference re-runs both
+    // regex replaces (graft.functions.Let scaladoc; measured 50+ s on the
+    // RL battery) or the scan
     graft.functions.Let(trim(regexp_replace(
       regexp_replace(c, "[^\\w\\s\\.,;:()=+\\-*/\\[\\]{}\\\\α-ωΑ-Ω]", ""),
       "(?U)\\s+", " "))) { cleaned =>
-      val lo = lower(cleaned)
-      val enCount = termCount(lo, C9English)
-      when(c.isNull, lit(null).cast("string"))
-        .when(length(cleaned) < 15, lit(null).cast("string"))
-        .when(!containsAny(lo, C9PhysicsTerms) && !containsAny(cleaned, Extract.MathChars),
-          lit(null).cast("string"))
-        .when(enCount < 2, lit(null).cast("string"))
-        .otherwise(cleaned)
+      graft.functions.Let(C9Sample.mask(cleaned)) { m =>
+        when(c.isNull, lit(null).cast("string"))
+          .when(length(cleaned) < 15, lit(null).cast("string"))
+          .when(C9Sample.count(m, C9PhysicsTerms) === 0 &&
+            !containsAny(cleaned, Extract.MathChars), lit(null).cast("string"))
+          .when(C9Sample.count(m, C9English) < 2, lit(null).cast("string"))
+          .otherwise(cleaned)
+      }
     }
 
   // ------------------------------------------------------------------

@@ -4,7 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rules.Heuristics.{termCount, TermSample}
+import graft.rules.Heuristics.TermSample
 
 /** The RL-training builder — the third training path of the reference
   * (analysis/enhanced_training_builder.py:23-140), distinct from the
@@ -189,12 +189,16 @@ object RlBuilder {
     "matrix", "conservation", "momentum", "electromagnetic",
     "thermodynamic", "wave equation")
 
+  private[graft] val RlDifficultySample =
+    new TermSample(Int.MaxValue, RlAdvancedTerms, RlIntermediateTerms)
+
   def rlDifficulty(problem: Column, steps: Column): Column = {
-    val lo = lower(concat(problem, lit(" "), array_join(steps, " ")))
-    val adv = termCount(lo, RlAdvancedTerms)
-    val inter = termCount(lo, RlIntermediateTerms)
-    when(adv >= 2, "advanced")
-      .when(inter >= 2 || adv >= 1, "intermediate")
+    val m = RlDifficultySample.mask(concat(problem, lit(" "), array_join(steps, " ")))
+    val adv = RlDifficultySample.count(m, RlAdvancedTerms)
+    val inter = RlDifficultySample.count(m, RlIntermediateTerms)
+    // both counts in the outer condition, which always runs: subexpression
+    // elimination then computes the mask once per row
+    when(inter >= 2 || adv >= 1, when(adv >= 2, "advanced").otherwise("intermediate"))
       .otherwise("introductory")
   }
 
@@ -294,10 +298,11 @@ object RlBuilder {
     * when any necessary anchor is absent — the at-scale fast path on
     * anchor-free web text. Structure asserted by AnchorGuardSpec.
     *
-    * The guard itself is a bit test against a Let-bound
-    * MultiContainsMaskExpr — ONE pass over the document finds every
-    * anchor term, replacing the 30+ per-term contains scans that
-    * dominated anchor-free rows once the batteries were skipped.
+    * The guard itself is a bit test (`count(mask, group) > 0` per group)
+    * against a Let-bound whole-text `TermSample` mask — ONE pass over the
+    * document finds every anchor term, replacing the 30+ per-term
+    * contains scans that dominated anchor-free rows once the batteries
+    * were skipped.
     */
   private def guardedZip2(guard: Column, text: Column, p: String): Column =
     when(guard, zip2(hits(text, p, 1), hits(text, p, 2)))
@@ -311,6 +316,8 @@ object RlBuilder {
   private[graft] val V2AnchorTerms: Seq[String] =
     (ExplicitAnchors ++ DerivationSeqAnchors ++ CalculationAnchors)
       .flatten.flatten.distinct
+
+  private[graft] val V2AnchorSample = new TermSample(Int.MaxValue, V2AnchorTerms)
 
   /** _extract_actual_problem_solutions (:42-86) + the caller's caps
     * (:31-37): battery order explicit → derivation → calculation, kept
@@ -338,10 +345,8 @@ object RlBuilder {
 
   private def examplesPlan(text: Column,
                            mk: (String, Seq[Column]) => Column): Column =
-    graft.functions.Let(
-      graft.functions.MultiContainsMask(text, V2AnchorTerms)) { bits =>
-      def guard(a: Seq[Seq[String]]) =
-        graft.functions.MultiContainsMask.allGroups(bits, V2AnchorTerms, a)
+    graft.functions.Let(V2AnchorSample.mask(text)) { m =>
+      def guard(a: Seq[Seq[String]]) = a.map(g => V2AnchorSample.count(m, g) > 0).reduce(_ && _)
       val explicit = ExplicitPatterns.zip(ExplicitAnchors).map { case (p, a) =>
         transform(guardedZip2(guard(a), text, p),
           z => mk("explicit", Seq(z.getField("g1"), z.getField("g2"))))
@@ -383,6 +388,8 @@ object RlBuilder {
   private[graft] val V3QualityPhysicsTerms = Seq("energy", "force", "field", "mass",
     "velocity", "equation")
 
+  private[graft] val V3QualitySample = new TermSample(Int.MaxValue, V3QualityPhysicsTerms)
+
   private def wordCount(c: Column): Column =
     size(filter(split(trim(coalesce(c, lit(""))), "(?U)\\s+"), w => length(w) > 0))
 
@@ -391,8 +398,8 @@ object RlBuilder {
     * over the SOLUTION side only.
     */
   def v3AssessQuality(problem: Column, solution: Column): Column = {
-    val pPhys = termCount(lower(problem), V3QualityPhysicsTerms)
-    val sPhys = termCount(lower(solution), V3QualityPhysicsTerms)
+    val pPhys = V3QualitySample.count(V3QualitySample.mask(problem), V3QualityPhysicsTerms)
+    val sPhys = V3QualitySample.count(V3QualitySample.mask(solution), V3QualityPhysicsTerms)
     val hasMath = containsAny(solution, Seq("=", "+", "-", "*", "/"))
     val pw = wordCount(problem); val sw = wordCount(solution)
     val lengthScore = when(pw.between(10, 100) && sw.between(20, 200), 1.0)
@@ -402,15 +409,19 @@ object RlBuilder {
     (lengthScore + physicsScore + mathScore) / 3.0
   }
 
+  private[graft] val V3AdvancedTerms = Seq("differential", "integral", "quantum", "relativistic")
+  private[graft] val V3IntermediateTerms =
+    Seq("derivative", "vector", "conservation", "electromagnetic")
+  private[graft] val V3DifficultySample =
+    new TermSample(Int.MaxValue, V3AdvancedTerms, V3IntermediateTerms)
+
   /** _assess_difficulty v3 (:605-624): >=1 advanced → advanced;
     * >=1 intermediate → intermediate.
     */
   def v3Difficulty(problem: Column, solution: Column): Column = {
-    val lo = lower(concat(problem, lit(" "), solution))
-    when(termCount(lo, Seq("differential", "integral", "quantum", "relativistic")) >= 1,
-      "advanced")
-      .when(termCount(lo, Seq("derivative", "vector", "conservation", "electromagnetic")) >= 1,
-        "intermediate")
+    val m = V3DifficultySample.mask(concat(problem, lit(" "), solution))
+    when(V3DifficultySample.count(m, V3AdvancedTerms) >= 1, "advanced")
+      .when(V3DifficultySample.count(m, V3IntermediateTerms) >= 1, "intermediate")
       .otherwise("introductory")
   }
 
@@ -473,6 +484,8 @@ object RlBuilder {
   private[graft] val V3AnchorTerms: Seq[String] =
     (V3ExplicitAnchors.flatten ++ V3DerivationAnchors).flatten.distinct
 
+  private[graft] val V3AnchorSample = new TermSample(Int.MaxValue, V3AnchorTerms)
+
   /** Per-candidate processing fused into the `RlExample.v3<Kind>Row`
     * kernels; the Column form stays as v3ExtractedExamplesRef for
     * RlExampleParitySpec.
@@ -511,10 +524,8 @@ object RlBuilder {
 
   private def v3ExamplesPlan(text: Column,
                              mk: (String, Seq[Column]) => Column): Column =
-    graft.functions.Let(
-      graft.functions.MultiContainsMask(text, V3AnchorTerms)) { bits =>
-      def guard(a: Seq[Seq[String]]) =
-        graft.functions.MultiContainsMask.allGroups(bits, V3AnchorTerms, a)
+    graft.functions.Let(V3AnchorSample.mask(text)) { m =>
+      def guard(a: Seq[Seq[String]]) = a.map(g => V3AnchorSample.count(m, g) > 0).reduce(_ && _)
       val explicit = V3ExplicitPatterns.zip(V3ExplicitAnchors).map { case (p, a) =>
         transform(guardedZip2(guard(a), text, p),
           z => mk("explicit", Seq(z.getField("g1"), z.getField("g2"))))

@@ -4,7 +4,7 @@ import DeriveHelpers._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rules.Heuristics.{termCount, TermSample}
+import graft.rules.Heuristics.TermSample
 
 import graft.functions.Let
 
@@ -105,15 +105,17 @@ object UgBuilders {
     Seq(Seq("find", "calculate", "determine", "show"), Seq("given", "where"),
       Seq("solution", "answer", "therefore")))
 
-  /** All word-anchor terms of the UG batteries, for the single-pass
-    * MultiContainsMaskExpr guard (lazy: UgDerivationAnchors is declared
-    * further down the object). The equation battery keeps plain raw-text
-    * contains guards — its anchors are single symbols ($, =, ∇) where a
-    * per-term scan is already one pass.
+  /** All word-anchor terms of the UG batteries, one whole-text sample
+    * whose mask every word guard tests (lazy: UgDerivationAnchors is
+    * declared further down the object). The equation battery keeps plain
+    * raw-text contains guards — its anchors are single symbols ($, =, ∇)
+    * where a per-term scan is already one pass.
     */
   private[graft] lazy val UgWordAnchorTerms: Seq[String] =
     (UgDerivAnchors ++ UgProblemAnchors ++ UgDerivationAnchors)
       .flatten.flatten.distinct
+
+  private[graft] lazy val UgWordAnchorSample = new TermSample(Int.MaxValue, UgWordAnchorTerms)
 
   private def batteryStripped(text: Column,
                               guardFor: Seq[Seq[String]] => Column,
@@ -126,9 +128,8 @@ object UgBuilders {
     }.reduce(concat(_, _))
 
   private def wordGuarded(text: Column)(body: (Seq[Seq[String]] => Column) => Column): Column =
-    Let(graft.functions.MultiContainsMask(text, UgWordAnchorTerms)) { bits =>
-      body(a => graft.functions.MultiContainsMask
-        .allGroups(bits, UgWordAnchorTerms, a))
+    Let(UgWordAnchorSample.mask(text)) { m =>
+      body(a => a.map(g => UgWordAnchorSample.count(m, g) > 0).reduce(_ && _))
     }
 
   def ugEquations(text: Column): Column =
@@ -470,11 +471,14 @@ Focus particularly on the application of: """),
     "maxwell equations", "fourier transform", "differential equation",
     "linear algebra", "calculus", "vector calculus", "complex numbers")
 
+  private[graft] val UgDifficultySample = new TermSample(Int.MaxValue, UgAdvanced, UgIntermediate)
+
   def ugDifficulty(c: Column): Column = {
-    val lo = lower(c)
-    when(termCount(lo, UgAdvanced) >= 2, "advanced")
-      .when(termCount(lo, UgIntermediate) >= 2 || termCount(lo, UgAdvanced) >= 1,
-        "intermediate")
+    val m = UgDifficultySample.mask(c)
+    val adv = UgDifficultySample.count(m, UgAdvanced)
+    val inter = UgDifficultySample.count(m, UgIntermediate)
+    // as RlBuilder.rlDifficulty: one mask per row under subexpression elimination
+    when(inter >= 2 || adv >= 1, when(adv >= 2, "advanced").otherwise("intermediate"))
       .otherwise("introductory")
   }
 

@@ -103,37 +103,33 @@ object Heuristics {
   }
 
   // ------------------------------------------------------------------
-  // Term presence, the count behind every cheap gate
-  // (enhanced_paper_analyser.py:152-172, :716-724):
-  // `sum(1 for w in terms if w in text.lower()[:n])`. TermCountSpec holds
-  // each Column form equal to its mirror.
+  // Term presence, the count behind every cheap gate, difficulty/topic
+  // classifier and builder anchor guard (enhanced_paper_analyser.py:152-172,
+  // :716-724, :968-1019): `sum(1 for w in terms if w in text.lower()[:n])`.
   // ------------------------------------------------------------------
-  /** `lower(text[:n])`, n counted in code points (Spark `substring`).
-    * The Column reference of [[TermSample]]; gates count through the
-    * sample's one-pass mask instead.
-    */
-  def lowerPrefix(text: Column, n: Int): Column = lower(substring(text, 1, n))
-
+  /** `lower(text[:n])`, n counted in code points (Spark `substring`). */
   def lowerPrefixStr(text: String, n: Int): String =
     if (text == null) null else Clean.sparkLower(Clean.sparkSubstr(text, n))
 
-  /** How many of `terms` occur in `c`, each counted 0/1 (int; 0 on null). */
-  def termCount(c: Column, terms: Seq[String]): Column =
-    terms.map(t => when(c.contains(t), 1).otherwise(0)).reduce(_ + _)
-
+  /** How many of `terms` occur in `c`, each counted 0/1 (0 on null). */
   def termCountStr(c: String, terms: Seq[String]): Int =
     if (c == null) 0 else terms.count(c.contains)
 
-  /** The term lists a gate counts over one sample, `lower(text[:n])`.
-    * `mask(text)` is one native scan per row (`graft.functions.TermMask`,
-    * never a lowered copy): a Long whose bits are the distinct terms of
-    * every list that occur in the sample. `count(mask, list)` is
-    * `termCount(lowerPrefix(text, n), list)` read off that mask as
-    * popcounts, so all of a gate's lists share the scan. Subexpression
-    * elimination shares one mask among the conjuncts of a projection; a
-    * filter re-evaluates it per conjunct, so filters over several counts
-    * go through [[filter]]. TermMaskSpec holds the counts equal to the
-    * Column form and to `termCountStr`.
+  /** The term lists a gate counts over one sample, `lower(text[:n])`;
+    * `n = Int.MaxValue` samples the whole text. `mask(text)` is one
+    * native scan per row (`graft.functions.TermMask`, never a lowered
+    * copy): a Long whose bits are the distinct terms of every list that
+    * occur in the sample. `count(mask, list)` reads a list's count off
+    * that mask as popcounts, so all of a gate's lists share the scan, and
+    * `count(mask, group) > 0` is an any-of test. Subexpression
+    * elimination shares one mask among the uses in a projection when two
+    * of them are read unconditionally (a CASE's first condition, both
+    * sides of `||`; see `RlBuilder.rlDifficulty`); a filter
+    * re-evaluates it per conjunct, so filters over several counts go
+    * through [[filter]], and a lambda that reads the mask more than once
+    * binds it with `graft.functions.Let`. TermMaskSpec holds the counts
+    * equal to Spark's own `lower`/`substring`/`contains` and to
+    * `termCountStr`.
     */
   final class TermSample(val n: Int, val lists: Seq[String]*) {
     private val scanner = graft.functions.TermScanner(lists.flatten.distinct)
@@ -144,7 +140,7 @@ object Heuristics {
         text, lit(n), graft.functions.Native.obj(scanner))
 
     /** How many entries of `list` occur in the sample (int; 0 on null
-      * text). An entry listed k times counts k times, as in `termCount`:
+      * text). An entry listed k times counts k times, as in `termCountStr`:
       * layer j holds the terms listed more than j times.
       */
     def count(mask: Column, list: Seq[String]): Column = {

@@ -30,8 +30,8 @@ class AnchorGuardSpec extends SparkTestBase {
   private def unguardedScans(e: Expression, guarded: Boolean): Seq[String] = e match {
     case cw: CaseWhen =>
       // an anchor guard tests literal containment — either per-term
-      // Contains or a bit test against the single-pass
-      // MultiContainsMaskExpr (BitwiseAnd on the mask)
+      // Contains or a bit test against the single-pass whole-text term
+      // mask (BitwiseAnd on the TermSample mask)
       val anchorGuard = cw.branches.exists { case (c, _) =>
         c.exists(x => x.isInstanceOf[Contains] ||
           x.isInstanceOf[org.apache.spark.sql.catalyst.expressions.BitwiseAnd])

@@ -1,22 +1,35 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.functions.{MultiContainsMask, MultiContainsMaskExpr}
+import graft.functions.{TermMask, TermScanner}
 import graft.derive.{RlBuilder, UgBuilders}
+import graft.rules.Heuristics.TermSample
 
-/** MultiContainsMaskExpr must agree bit-for-bit with the Column form
-  * `lower(text).contains(term)` — on ASCII (fast path), on arbitrary
+/** A whole-text term mask (`TermSample(Int.MaxValue, terms)`, the
+  * builder anchor guards' form) must agree bit-for-bit with the Column
+  * form `lower(text).contains(term)` — on ASCII (fast path), on arbitrary
   * Unicode (slow path, exact toLowerCase+contains), and on the real
   * anchor term lists the builders use.
   */
 class MultiContainsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def maskOf(texts: Seq[String], terms: Seq[String]): Seq[Long] =
+  private def maskOf(texts: Seq[String], terms: Seq[String]): Seq[Long] = {
+    val sample = new TermSample(Int.MaxValue, terms)
     texts.toDF("text")
-      .select(MultiContainsMask(col("text"), terms).as("m"))
+      .select(sample.mask(col("text")).as("m"))
       .collect().map(_.getLong(0)).toSeq
+  }
+
+  /** The kernel over one string, as the plan calls it. */
+  private def scan(s: UTF8String, terms: Seq[String]): Long =
+    TermMask.scan(s, Int.MaxValue, TermScanner(terms))
+
+  /** The one-pass scan alone; None means "bail to the exact fallback". */
+  private def fastScan(sc: TermScanner, s: UTF8String): Option[Long] =
+    Some(sc.fastMask(s, Int.MaxValue)).filter(_ >= 0)
 
   private def referenceMask(texts: Seq[String], terms: Seq[String]): Seq[Long] =
     texts.toDF("text").select(
@@ -38,15 +51,11 @@ class MultiContainsSpec extends SparkTestBase {
   }
 
   test("mask equals per-term lower+contains on random unicode (property)") {
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.expressions.Literal
     val terms = Seq("problem", "we have", "=", "therefore", "q.e.d.", "step")
-    // eval-level check against the exact Column semantics
+    // kernel-level check against the exact Column semantics
     // (UTF8String.toLowerCase + UTF8String.contains) — no Spark job per
     // sample, so thousands of cases run fast
-    def exprMask(t: String): Long =
-      MultiContainsMaskExpr(Literal(UTF8String.fromString(t)), terms)
-        .eval(null).asInstanceOf[Long]
+    def exprMask(t: String): Long = scan(UTF8String.fromString(t), terms)
     def refMask(t: String): Long = {
       val lo = UTF8String.fromString(t).toLowerCase
       terms.zipWithIndex.map { case (term, i) =>
@@ -66,13 +75,11 @@ class MultiContainsSpec extends SparkTestBase {
   }
 
   test("fast path fires on mixed-UTF-8 documents and agrees with the fallback") {
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.expressions.Literal
     // the at-scale case the round-3 verdict flagged: real web text is
     // mostly non-ASCII (curly quotes, dashes, CJK, Greek) — the one-pass
     // scan must still fire there, not bail to N-contains
     val terms = Seq("problem", "we have", "therefore", "step", "solution")
-    val expr = MultiContainsMaskExpr(Literal(UTF8String.fromString("")), terms)
+    val sc = TermScanner(terms)
     val mixedDocs = Seq(
       "“PROBLEM” — ünïcödé WE HAVE α = β, therefore… 中文 step",
       "日本語テキスト problem なし solution あり",
@@ -87,17 +94,17 @@ class MultiContainsSpec extends SparkTestBase {
       "wé have é therefore", "stepé step")
     mixedDocs.foreach { d =>
       val s = UTF8String.fromString(d)
-      val fast = expr.fastScan(s)
-      assert(fast != null, s"fast path bailed on: $d")
+      val fast = fastScan(sc, s)
+      assert(fast.isDefined, s"fast path bailed on: $d")
       val lo = s.toLowerCase
       val want = terms.zipWithIndex.map { case (t, i) =>
         if (lo.contains(UTF8String.fromString(t))) 1L << i else 0L
       }.reduce(_ | _)
-      assert(fast.longValue() == want, s"parity on: $d")
+      assert(fast.get == want, s"parity on: $d")
     }
     // the dangerous set must still bail...
     for (bad <- Seq("İstanbul problem", "ĸ problem K", "ſtep problem")
-         if expr.fastScan(UTF8String.fromString(bad)) != null) {
+         if fastScan(sc, UTF8String.fromString(bad)).isDefined) {
       // ...unless this JVM's toLowerCase maps the cp away from ASCII —
       // then it is genuinely safe; parity below still proves it
       val cp = bad.codePoints().filter(_ >= 0x80).findFirst().getAsInt
@@ -107,12 +114,8 @@ class MultiContainsSpec extends SparkTestBase {
   }
 
   test("mask parity over the lowercase-introduces-ASCII code points") {
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.expressions.Literal
     val terms = Seq("problem", "i", "k", "fi", "st", "we have")
-    def exprMask(t: String): Long =
-      MultiContainsMaskExpr(Literal(UTF8String.fromString(t)), terms)
-        .eval(null).asInstanceOf[Long]
+    def exprMask(t: String): Long = scan(UTF8String.fromString(t), terms)
     def refMask(t: String): Long = {
       val lo = UTF8String.fromString(t).toLowerCase
       terms.zipWithIndex.map { case (term, i) =>
@@ -138,16 +141,11 @@ class MultiContainsSpec extends SparkTestBase {
   }
 
   test("malformed UTF-8 routes through the exact fallback") {
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.expressions.Literal
     val terms = Seq("problem", "step")
-    val expr = MultiContainsMaskExpr(
-      Literal(UTF8String.fromString("")), terms)
+    val sc = TermScanner(terms)
     def parity(bytes: Array[Byte]): Unit = {
       val s = UTF8String.fromBytes(bytes)
-      val got = MultiContainsMaskExpr(
-        Literal.create(s, org.apache.spark.sql.types.StringType), terms)
-        .eval(null).asInstanceOf[Long]
+      val got = scan(s, terms)
       val lo = s.toLowerCase
       val want = terms.zipWithIndex.map { case (t, i) =>
         if (lo.contains(UTF8String.fromString(t))) 1L << i else 0L
@@ -168,42 +166,37 @@ class MultiContainsSpec extends SparkTestBase {
     (mustBail ++ parityOnly).foreach(parity)
     // sequences where a misread byte could join a term match MUST bail
     mustBail.foreach { bytes =>
-      assert(expr.fastScan(UTF8String.fromBytes(bytes)) == null)
+      assert(fastScan(sc, UTF8String.fromBytes(bytes)).isEmpty)
     }
   }
 
   test("a default-Locale change after enumeration bails the fast path") {
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.expressions.Literal
     // Spark's toLowerCaseSlow reads Locale.getDefault() per call, so a
     // setDefault AFTER the per-JVM safety tables were enumerated must
     // force the exact fallback (the tables are stale for the new
     // locale). The guard is a reference compare against the Locale
     // captured at enumeration time.
-    val expr = MultiContainsMaskExpr(
-      Literal(UTF8String.fromString("")), Seq("via", "ansatz"))
+    val sc = TermScanner(Seq("via", "ansatz"))
     val doc = UTF8String.fromString("naïve ansatz text") // non-full-ASCII
-    assert(expr.fastScan(doc) != null, "fast path should fire pre-switch")
+    assert(fastScan(sc, doc).isDefined, "fast path should fire pre-switch")
     val orig = java.util.Locale.getDefault
     try {
       java.util.Locale.setDefault(new java.util.Locale("tr", "TR"))
-      assert(expr.fastScan(doc) == null,
+      assert(fastScan(sc, doc).isEmpty,
         "stale safety tables must not be used under a switched locale")
       // and the full eval still equals lower()+contains under tr
-      assert(expr.nullSafeEval(doc).asInstanceOf[Long] == 2L)
+      assert(TermMask.scan(doc, Int.MaxValue, sc) == 2L)
     } finally java.util.Locale.setDefault(orig)
     // restoring the SAME instance re-arms the fast path
-    assert(expr.fastScan(doc) != null)
+    assert(fastScan(sc, doc).isDefined)
   }
 
   test("probe: one-pass scan vs per-term fallback on mixed-UTF-8 docs", ProbeTag) {
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.expressions.Literal
     // the round-3 verdict's at-scale scenario: anchor-free web text that
     // is mostly non-ASCII — previously every such doc fell back to one
     // full-text scan PER TERM; now the mask scans once
     val terms = RlBuilder.V2AnchorTerms
-    val expr = MultiContainsMaskExpr(Literal(UTF8String.fromString("")), terms)
+    val sc = TermScanner(terms)
     val rnd = new scala.util.Random(7)
     val frag = Array("«jüst»", "naïve", "中文片段", "текст", "résumé—",
       "“quoted”", "αβγ", "día", "тест", "ordinary", "words", "café…")
@@ -214,19 +207,19 @@ class MultiContainsSpec extends SparkTestBase {
     assert(nonAscii > 1000, "probe corpus must be non-ASCII-rich")
     // every doc must take the fast path AND agree with the fallback
     docs.foreach { d =>
-      val f = expr.fastScan(d)
-      assert(f != null, "fast path bailed on mixed-UTF-8")
+      val f = fastScan(sc, d)
+      assert(f.isDefined, "fast path bailed on mixed-UTF-8")
       val lo = d.toLowerCase
       val want = terms.zipWithIndex.map { case (t, i) =>
         if (lo.contains(UTF8String.fromString(t))) 1L << i else 0L
       }.reduce(_ | _)
-      assert(f.longValue() == want)
+      assert(f.get == want)
     }
     def minOf3(body: => Unit): Double =
       (1 to 3).map { _ =>
         val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
       }.min
-    val tFast = minOf3(docs.foreach(expr.fastScan))
+    val tFast = minOf3(docs.foreach(sc.fastMask(_, Int.MaxValue)))
     val tSlow = minOf3(docs.foreach { d => // the pre-round-4 behavior
       val lo = d.toLowerCase
       terms.foreach(t => lo.contains(UTF8String.fromString(t)))
@@ -249,14 +242,14 @@ class MultiContainsSpec extends SparkTestBase {
     }
   }
 
-  test("allGroups matches the conjunction-of-disjunctions form") {
-    val terms = RlBuilder.V2AnchorTerms
+  test("any-of per group via count > 0") {
+    val sample = RlBuilder.V2AnchorSample
     val anchors = RlBuilder.ExplicitAnchors.head
     val texts = Seq("problem here solution there", "problem only",
       "solution only", "neither", "Example: e ANSWER: a")
+    val m = sample.mask(col("text"))
     val got = texts.toDF("text").select(
-      MultiContainsMask.allGroups(
-        MultiContainsMask(col("text"), terms), terms, anchors).as("g"))
+      anchors.map(g => sample.count(m, g) > 0).reduce(_ && _).as("g"))
       .collect().map(_.getBoolean(0)).toSeq
     val want = texts.map { t =>
       val lo = t.toLowerCase

@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.unsafe.types.UTF8String
 import graft.derive.{AnchorGuard, RlBuilder, RlExample, UgBuilders, UgExample}
-import graft.functions.MultiContainsMaskExpr
+import graft.functions.TermScanner
 
 /** Non-ASCII anchor/mask re-profile (round-5 verdict watch item 5,
   * carried since round 4): the anchor guards and the one-pass
-  * MultiContains mask were profiled on the ASCII-heavy fixture corpus
+  * whole-text term mask were profiled on the ASCII-heavy fixture corpus
   * only — correctness is machine-checked (AnchorNecessitySpec,
   * MultiContainsSpec), but the WIN SIZE on non-ASCII corpora was
   * unknown. This probe measures, per script class of the deterministic
@@ -16,7 +15,7 @@ import graft.functions.MultiContainsMaskExpr
   *
   *   - anchor-presence rate (fraction of docs where the guard does NOT
   *     skip — i.e. the regex battery still runs), per anchor set;
-  *   - µs/doc of the one-pass MultiContains mask scan;
+  *   - µs/doc of the one-pass whole-text mask scan (`TermScanner`);
   *   - µs/block of the guarded fused batteries (UgExample.metaRow,
   *     solutionSteps; RlExample.reasoningSteps).
   *
@@ -61,12 +60,11 @@ class NonAsciiProfileProbe extends SparkTestBase {
     // ---- one-pass mask scan µs/doc per class ----
     for ((termsName, terms) <- Seq("V2AnchorTerms" -> RlBuilder.V2AnchorTerms,
       "UgWordAnchorTerms" -> UgBuilders.UgWordAnchorTerms)) {
-      val expr = MultiContainsMaskExpr(
-        Literal(UTF8String.fromString("")), terms)
+      val sc = TermScanner(terms)
       val perClass = (0 to 3).map { c =>
         val us = byClass(c).map(UTF8String.fromString)
-        us.foreach { d => assert(expr.fastScan(d) != null, "fast path bailed") }
-        val s = minOf(5)(us.foreach(expr.fastScan))
+        us.foreach { d => assert(sc.fastMask(d, Int.MaxValue) >= 0, "fast path bailed") }
+        val s = minOf(5)(us.foreach(sc.fastMask(_, Int.MaxValue)))
         val bytes = us.map(_.numBytes().toLong).sum / us.length
         f"${ClassNames(c)} ${s * 1e6 / us.length}%6.1f us/doc (${bytes}B)"
       }

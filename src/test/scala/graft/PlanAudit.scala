@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import graft.derive.{RlBuilder, UgBuilders}
+import graft.functions.TermScanner
 
 class PlanAudit extends SparkTestBase {
   import spark.implicits._
@@ -12,6 +15,16 @@ class PlanAudit extends SparkTestBase {
       .toDF("url", "text", "subject", "title").cache()
     def countIn(e: Expression, pred: Expression => Boolean): Int =
       (if (pred(e)) 1 else 0) + e.children.map(countIn(_, pred)).sum
+    // an anchor mask is the term-mask kernel over one of the anchor lists
+    val anchorTerms = Set(RlBuilder.V2AnchorTerms, RlBuilder.V3AnchorTerms,
+      UgBuilders.UgWordAnchorTerms)
+    def isAnchorMask(e: Expression): Boolean = e match {
+      case si: StaticInvoke => si.arguments.exists {
+        case Literal(sc: TermScanner, _) => anchorTerms(sc.terms)
+        case _ => false
+      }
+      case _ => false
+    }
     // maxMasks pins exactly-once evaluation of the per-row anchor mask:
     // CollapseProject inlining a Let-bound mask into N use sites (the
     // round-2 56x battery trap) would show up here as mask nodes > cap
@@ -21,7 +34,7 @@ class PlanAudit extends SparkTestBase {
       var masks = 0; var scans = 0
       plan.foreach { node =>
         node.expressions.foreach { e =>
-          masks += countIn(e, _.isInstanceOf[graft.functions.MultiContainsMaskExpr])
+          masks += countIn(e, isAnchorMask)
           scans += countIn(e, _.getClass.getSimpleName.startsWith("RegExpExtract"))
         }
       }

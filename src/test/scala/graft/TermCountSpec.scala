@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop}
@@ -11,11 +11,26 @@ import graft.lang.LangId
 import graft.rules.Heuristics
 import graft.score.Stages
 
-/** The shared term-presence count against its mirror: the Column form
+/** The Column form of the term-presence count as Spark's own `lower`,
+  * `substring` and `contains`. The library counts through the one-pass
+  * `Heuristics.TermSample` mask instead; these are the reference the
+  * specs hold that mask and the plain-Scala mirrors to.
+  */
+object TermCount {
+
+  /** `lower(text[:n])`, n counted in code points (Spark `substring`). */
+  def lowerPrefix(text: Column, n: Int): Column = lower(substring(text, 1, n))
+
+  /** How many of `terms` occur in `c`, each counted 0/1 (int; 0 on null). */
+  def termCount(c: Column, terms: Seq[String]): Column =
+    terms.map(t => when(c.contains(t), 1).otherwise(0)).reduce(_ + _)
+}
+
+/** The term-presence Column form against its mirror:
   * `termCount(lowerPrefix(text, n), terms)` (or `termCount(lower(text),
   * terms)` where a gate reads the whole text) equals `termCountStr` over
   * `lowerPrefixStr` / `Clean.sparkLower`, for every term list a gate
-  * routes through it, each at the sample length that gate uses.
+  * counts, each at the sample length that gate uses.
   *
   * The generator puts terms across the 1,000 / 1,500 / 2,000 / 5,000
   * code-point cuts behind filler whose last code point before the cut is
@@ -65,8 +80,8 @@ class TermCountSpec extends SparkTestBase {
   private val Cuts = Lists.map(_._3).filter(_ > 0).distinct
 
   private def columnForm(n: Int, terms: Seq[String]) = {
-    val sample = if (n > 0) Heuristics.lowerPrefix(col("t"), n) else lower(col("t"))
-    Heuristics.termCount(sample, terms)
+    val sample = if (n > 0) TermCount.lowerPrefix(col("t"), n) else lower(col("t"))
+    TermCount.termCount(sample, terms)
   }
 
   private def mirror(t: String, n: Int, terms: Seq[String]): Int = {
@@ -166,7 +181,7 @@ class TermCountSpec extends SparkTestBase {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(Row(_)), 2),
       StructType(Seq(StructField("t", StringType))))
-    val got = df.select(Heuristics.termCount(Heuristics.lowerPrefix(col("t"), 1000), terms))
+    val got = df.select(TermCount.termCount(TermCount.lowerPrefix(col("t"), 1000), terms))
       .collect().map(_.getInt(0)).toSeq
     val want = rows.map(mirror(_, 1000, terms))
     assert(got == want)

@@ -10,17 +10,19 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop}
 
-import graft.derive.{BenchmarkBuilders, Derive, RlBuilder, UgBuilders}
+import graft.derive.{BenchmarkBuilders, Derive, Extract, Gates, RlBuilder, UgBuilders}
 import graft.functions.TermScanner
 import graft.rules.Heuristics
 import graft.rules.Heuristics.TermSample
 import graft.score.Stages
 
 /** The one-pass term-mask kernel against the form it replaces: every
-  * gate sample's `count(mask(text), list)` equals
+  * production sample's `count(mask(text), list)` equals
   * `termCount(lowerPrefix(text, n), list)` (run as Spark's own
   * `lower`/`substring`/`contains`) and the plain-Scala `termCountStr`,
-  * for each list a gate counts and for the concatenations the gates sum.
+  * for each list a gate, classifier or anchor guard counts and for the
+  * concatenations the gates sum; whole-text samples (`n = Int.MaxValue`)
+  * included.
   * Below that, the scanner is held to the exact form on bytes a String
   * cannot carry (malformed UTF-8), on the code points whose lowercase
   * holds ASCII, and under a default locale with tailored case rules.
@@ -43,7 +45,27 @@ class TermMaskSpec extends SparkTestBase {
     ("RlBuilder.RlSample", RlBuilder.RlSample, RlBuilder.RlSample.lists),
     ("RlBuilder.V3GateSample", RlBuilder.V3GateSample, RlBuilder.V3GateSample.lists),
     ("UgBuilders.UgSample", UgBuilders.UgSample,
-      Seq(UgBuilders.UgPhysicsIndicators ++ UgBuilders.UgMathIndicators)))
+      Seq(UgBuilders.UgPhysicsIndicators ++ UgBuilders.UgMathIndicators)),
+    ("Extract.EnglishPhysicsSample", Extract.EnglishPhysicsSample,
+      Extract.EnglishPhysicsSample.lists),
+    ("Extract.ClassifierSample", Extract.ClassifierSample, Extract.ClassifierSample.lists),
+    ("Gates.C9Sample", Gates.C9Sample, Gates.C9Sample.lists),
+    ("UgBuilders.UgDifficultySample", UgBuilders.UgDifficultySample,
+      UgBuilders.UgDifficultySample.lists),
+    ("RlBuilder.RlDifficultySample", RlBuilder.RlDifficultySample,
+      RlBuilder.RlDifficultySample.lists),
+    ("RlBuilder.V3QualitySample", RlBuilder.V3QualitySample, RlBuilder.V3QualitySample.lists),
+    ("RlBuilder.V3DifficultySample", RlBuilder.V3DifficultySample,
+      RlBuilder.V3DifficultySample.lists),
+    // the anchor guards count each group (any-of: count > 0)
+    ("RlBuilder.V2AnchorSample", RlBuilder.V2AnchorSample,
+      (RlBuilder.ExplicitAnchors ++ RlBuilder.DerivationSeqAnchors ++
+        RlBuilder.CalculationAnchors).flatten.distinct),
+    ("RlBuilder.V3AnchorSample", RlBuilder.V3AnchorSample,
+      (RlBuilder.V3ExplicitAnchors.flatten ++ RlBuilder.V3DerivationAnchors).distinct),
+    ("UgBuilders.UgWordAnchorSample", UgBuilders.UgWordAnchorSample,
+      (UgBuilders.UgDerivAnchors ++ UgBuilders.UgProblemAnchors ++
+        UgBuilders.UgDerivationAnchors).flatten.distinct))
 
   private val Astral = "😀"
   private val Filler = IndexedSeq("0", " ", "α", "中", Astral, "-", "\n",
@@ -73,9 +95,11 @@ class TermMaskSpec extends SparkTestBase {
     2 -> Gen.zip(Gen.choose(1, 12), Gen.choose(0, 9)).map { case (k, o) => filler(k, o) }))
     .map(_.mkString(" "))
 
-  /** A term whose first `j` code points fall inside an `n`-point sample. */
+  /** A term whose first `j` code points fall inside an `n`-point sample
+    * (finite `n` only: a whole-text sample has no cut).
+    */
   private val straddle: Gen[String] = for {
-    n <- Gen.oneOf(Samples.map(_._2.n).distinct)
+    n <- Gen.oneOf(Samples.map(_._2.n).filter(_ != Int.MaxValue).distinct)
     t <- term
     j <- Gen.choose(0, t.length + 1)
     o <- Gen.choose(0, 9)
@@ -90,7 +114,7 @@ class TermMaskSpec extends SparkTestBase {
     val cases = for ((name, s, lists) <- Samples; list <- lists) yield (name, s, list)
     val cols = cases.flatMap { case (_, s, list) =>
       Seq(s.count(s.mask(col("t")), list),
-        Heuristics.termCount(Heuristics.lowerPrefix(col("t"), s.n), list))
+        TermCount.termCount(TermCount.lowerPrefix(col("t"), s.n), list))
     }
     val hits = Array.fill(cases.length)(0)
     var bad = Seq.empty[String]
