@@ -8,7 +8,7 @@ package graft.derive
   * Each guarded pattern's prefix alternation yields a NECESSARY literal
   * set: if no literal of every group is present in the candidate, the
   * regex cannot match and the scan is skipped. Profiled on the UG
-  * chain's own gated population (UgProfileProbe): two of the six step
+  * chain's own gated population (NOTES.md, round 4): two of the six step
   * patterns' literals occur in 0% of candidate blocks — they always
   * scanned, never matched; guarding cut metaRow ~30% (608 → 423
   * µs/block).

@@ -488,13 +488,8 @@ Focus particularly on the application of: """),
     * enhanced steps (>= 2), enhanced difficulty, parent topic/prereqs/
     * concepts (crash (b) repair), E20 reasoning type.
     */
-  /** The chain prefix shared with UgProfileProbe: gate → derivation/
-    * solution/proof blocks → per-block derivation clean (len ≥ 100).
-    * Columns: url, subject, title, b(example_type, block), cleaned.
-    */
-  private[graft] def ugCleanedBlocks(df: DataFrame, urlCol: String,
-                                     textCol: String, subjectCol: String,
-                                     titleCol: String): DataFrame = {
+  def ugTrainingExamples(df: DataFrame, urlCol: String, textCol: String,
+                         subjectCol: String, titleCol: String): DataFrame = {
     val text = col(textCol)
     val fusedBlocks = BlockExtract.blocksCol(text)
     val blockStruct: (Column, String) => Column = (arr, typ) =>
@@ -513,14 +508,10 @@ Focus particularly on the application of: """),
       .select(col(urlCol).as("url"), col(subjectCol).as("subject"),
         col(titleCol).as("title"), explode(col("blocks")).as("b"))
 
-    graft.functions.ComputeOnce(withBlocks, "cleaned",
+    val withCleaned = graft.functions.ComputeOnce(withBlocks, "cleaned",
       UgExample.derivationCleanCol(col("b.block")))
       .filter(length(col("cleaned")) >= 100)
-  }
 
-  def ugTrainingExamples(df: DataFrame, urlCol: String, textCol: String,
-                         subjectCol: String, titleCol: String): DataFrame = {
-    val withCleaned = ugCleanedBlocks(df, urlCol, textCol, subjectCol, titleCol)
     // the whole per-block metadata stage fused into one compiled pass
     // (UgExample.metaCol; Column forms remain the q45/q49 oracle surface
     // and the UgExampleParitySpec reference)

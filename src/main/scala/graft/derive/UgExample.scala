@@ -100,7 +100,7 @@ object UgExample {
   // ---- anchor guards for the per-candidate regex batteries ---------
   // (see AnchorGuard for the necessary-literal argument and the
   // profile numbers; step1/step6 literals occur in 0% of gated blocks,
-  // step3 66%, stmt1 54% — UgProfileProbe)
+  // step3 66%, stmt1 54% — NOTES.md, round 4)
 
   import AnchorGuard.{anchored, asciiLower}
 

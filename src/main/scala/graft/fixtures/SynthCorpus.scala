@@ -143,53 +143,6 @@ object SynthCorpus {
     sb.toString.take(targetLen + 200) // bounded; boundary lens stay exact-ish
   }
 
-  // ---- mixed-script corpus (probe-only; round-5 verdict watch item:
-  // non-ASCII anchor/mask re-profile). NOT read by Bench/Verify or any
-  // declared query — bodyFor/docsRaw are the frozen bench fixture. ----
-  private val CyrWords: Array[String] = Array(
-    "энергия", "масса", "скорость", "уравнение", "частица", "поле",
-    "теория", "квант", "волна", "решение", "задача", "метод", "сила",
-    "давление", "температура", "которая", "между", "после")
-  private val CjkWords: Array[String] = Array(
-    "能量", "质量", "速度", "方程", "粒子", "场论", "量子", "波动",
-    "理论", "问题", "解答", "方法", "作用力", "压强", "温度", "之间")
-  private val Lat1Words: Array[String] = Array(
-    "énergie", "también", "función", "masa", "vitesse", "équation",
-    "partícula", "champ", "théorie", "quantité", "onde", "résolution",
-    "après", "física", "presión", "señal", "être", "größe")
-
-  /** Deterministic mixed-script body: per-doc script class 0=ASCII
-    * English (with bodyFor's derivation/solution plant flavor), 1=
-    * Cyrillic, 2=CJK, 3=Latin-1-accented (25% each, seeded stream
-    * independent of bodyFor). Returns (scriptClass, body).
-    */
-  def mixedScriptBody(i: Long): (Int, String) = {
-    val rnd = rng(Seed * 53, i)
-    val cls = rnd.nextInt(4)
-    val targetLen = 400 + rnd.nextInt(1200)
-    val sb = new StringBuilder
-    var sentenceLen = 0
-    while (sb.length < targetLen) {
-      val w = cls match {
-        case 0 =>
-          val p = rnd.nextDouble()
-          if (p < 0.03)
-            "Using the force equation and the field terms we obtain the velocity"
-          else if (p < 0.05)
-            "Problem: calculate the energy. Solution: We have E = m c^2"
-          else EnWords(rnd.nextInt(EnWords.length))
-        case 1 => CyrWords(rnd.nextInt(CyrWords.length))
-        case 2 => CjkWords(rnd.nextInt(CjkWords.length))
-        case _ => Lat1Words(rnd.nextInt(Lat1Words.length))
-      }
-      sb.append(w)
-      sentenceLen += 1
-      if (sentenceLen >= 8 + rnd.nextInt(10)) { sb.append(". "); sentenceLen = 0 }
-      else sb.append(' ')
-    }
-    (cls, sb.toString.take(targetLen + 100))
-  }
-
   /** Deterministic HTML wrapper (FIXTURES.md §2 "HTML wrapper"). */
   def htmlFor(i: Long, body: String): String = {
     val rnd = rng(Seed * 31, i)

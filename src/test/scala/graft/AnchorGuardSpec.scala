@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Contains, Expression}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{array, col, lit, size, sum}
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Contains, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import graft.derive.{RlBuilder, UgBuilders}
+import graft.functions.TermScanner
 
 /** Asserts the anchor-guard STRUCTURE of the builder batteries: every
   * heavy regex scan (`regexp_extract_all`) must sit inside the branch
@@ -97,5 +100,52 @@ class AnchorGuardSpec extends SparkTestBase {
     assert(unguardedBatteryScans(
       regexp_extract_all(col("text"), lit(p), lit(1)),
       RlBuilder.ExplicitPatterns) === Seq(p))
+  }
+
+  test("each builder's optimized plan holds exactly one anchor-mask node") {
+    import spark.implicits._
+    val corpus = Seq.fill(3)("Problem: p Solution: s Given g. We derive d Therefore t")
+      .zipWithIndex.map { case (t, i) => (s"http://h/$i", t, "Physics", "T") }
+      .toDF("url", "text", "subject", "title")
+      .cache() // a LocalRelation would be folded away by ConvertToLocalRelation
+    // an anchor mask is the term-mask kernel over one of the anchor lists
+    val anchorTerms = Set(RlBuilder.V2AnchorTerms, RlBuilder.V3AnchorTerms,
+      UgBuilders.UgWordAnchorTerms)
+    def maskNodes(df: DataFrame): Int =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions).map(_.collect {
+        case si: StaticInvoke if si.arguments.exists {
+          case Literal(sc: TermScanner, _) => anchorTerms(sc.terms)
+          case _ => false
+        } => si
+      }.size).sum
+    // CollapseProject inlining the Let-bound mask into its use sites (the
+    // round-2 56x battery trap) would show up here as more than one node
+    val plans = Seq(
+      "rlTrainingExamples" ->
+        RlBuilder.rlTrainingExamples(corpus, "url", "text", "subject", "title"),
+      "rlTrainingExamplesV3" ->
+        RlBuilder.rlTrainingExamplesV3(corpus, "url", "text", "subject", "title"),
+      "ugTrainingExamples" ->
+        UgBuilders.ugTrainingExamples(corpus, "url", "text", "subject", "title"),
+      "ugBenchmarkItems" -> UgBuilders.ugBenchmarkItems(
+        corpus.withColumn("issues", array(lit("i1")))
+          .withColumn("sophistication", lit(5.0))
+          .withColumn("recommendation", lit("R"))
+          .withColumn("overall_score", lit(0.5))
+          .withColumn("abstract", col("text")),
+        "url", "text", "subject", "title", "abstract"))
+    for ((name, df) <- plans)
+      assert(maskNodes(df) == 1, s"$name: anchor mask nodes")
+    corpus.unpersist()
+  }
+
+  test("anchor-free text yields no RL examples") {
+    import spark.implicits._
+    val neutral = ("the cat sat on the mat and the dog barked at the moon " +
+      "while rain fell over the quiet town square at dusk ") * 60 // ~6 KB
+    val n = Seq.fill(20)(neutral).toDF("text")
+      .select(sum(size(RlBuilder.extractedExamples(col("text")))))
+      .head().getLong(0)
+    assert(n == 0)
   }
 }

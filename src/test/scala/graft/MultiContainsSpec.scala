@@ -191,20 +191,20 @@ class MultiContainsSpec extends SparkTestBase {
     assert(fastScan(sc, doc).isDefined)
   }
 
-  test("probe: one-pass scan vs per-term fallback on mixed-UTF-8 docs", ProbeTag) {
+  test("fast path fires on every doc of a non-ASCII-rich anchor-free corpus") {
     // the round-3 verdict's at-scale scenario: anchor-free web text that
-    // is mostly non-ASCII — previously every such doc fell back to one
-    // full-text scan PER TERM; now the mask scans once
+    // is mostly non-ASCII must still take the one-pass scan, not fall
+    // back to one full-text scan per term
     val terms = RlBuilder.V2AnchorTerms
     val sc = TermScanner(terms)
     val rnd = new scala.util.Random(7)
     val frag = Array("«jüst»", "naïve", "中文片段", "текст", "résumé—",
       "“quoted”", "αβγ", "día", "тест", "ordinary", "words", "café…")
-    val docs = Array.fill(200)(
+    val docs = Array.fill(50)(
       UTF8String.fromString(
         Array.fill(6000)(frag(rnd.nextInt(frag.length))).mkString(" ")))
     val nonAscii = docs.head.toString.count(_ >= 0x80)
-    assert(nonAscii > 1000, "probe corpus must be non-ASCII-rich")
+    assert(nonAscii > 1000, "corpus must be non-ASCII-rich")
     // every doc must take the fast path AND agree with the fallback
     docs.foreach { d =>
       val f = fastScan(sc, d)
@@ -215,19 +215,6 @@ class MultiContainsSpec extends SparkTestBase {
       }.reduce(_ | _)
       assert(f.get == want)
     }
-    def minOf3(body: => Unit): Double =
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }.min
-    val tFast = minOf3(docs.foreach(sc.fastMask(_, Int.MaxValue)))
-    val tSlow = minOf3(docs.foreach { d => // the pre-round-4 behavior
-      val lo = d.toLowerCase
-      terms.foreach(t => lo.contains(UTF8String.fromString(t)))
-    })
-    info(f"one-pass mask:      ${tFast * 1e6 / docs.length}%8.1f us/doc (${terms.length} terms, ${docs.head.numBytes()} B docs)")
-    info(f"lower+N-contains:   ${tSlow * 1e6 / docs.length}%8.1f us/doc (the old non-ASCII fallback)")
-    info(f"speedup:            ${tSlow / tFast}%8.1fx on mixed-UTF-8 anchor-free docs")
-    assert(tFast < tSlow, "one-pass scan should beat per-term scans")
   }
 
   test("all-terms-found early exit returns the full mask") {

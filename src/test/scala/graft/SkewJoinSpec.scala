@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class SkewJoinSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("AQE splits the oversized-host join partition (skew=true)", ProbeTag) {
+  test("AQE splits the oversized-host join partition (skew=true)") {
     val conf = spark.conf
     val keys = Seq(
       "spark.sql.adaptive.enabled",
