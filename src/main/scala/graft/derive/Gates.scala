@@ -5,12 +5,9 @@ import DeriveHelpers._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.rules.Heuristics.TermSample
-import org.apache.spark.sql.types.StructType
-
-import graft.extract.Clean
 
 /** The remaining predicate / cleaning / scalar operators from SURVEY.md §2
-  * not covered by Extract: P9/P10/P12/P14, C7/C9/C11/C12, E9/E14/E19/E27.
+  * not covered by Extract: P9/P14, C7/C9, E14/E19, and P10's unit list.
   * Pure Catalyst throughout.
   */
 object Gates {
@@ -32,25 +29,13 @@ object Gates {
       (length(trim(eq)) > 8)
 
   // ------------------------------------------------------------------
-  // P10 — meaningful-numerical predicate
-  // (enhanced_benchmark_builder.py:422-440): a digit, a physics unit or
-  // context word, length > 5.
+  // P10 — physics unit / context words of the meaningful-numerical
+  // predicate (enhanced_benchmark_builder.py:422-440); the v2 numerical
+  // battery (BenchmarkBuilders.v2Numericals) applies it.
   // ------------------------------------------------------------------
   val PhysicsUnits: Seq[String] = Seq(
     "m", "kg", "s", "hz", "ev", "k", "pa", "n", "j", "w", "v", "a", "t",
     "wavelength", "frequency", "energy", "mass", "velocity", "temperature")
-
-  def isMeaningfulNumerical(v: Column): Column =
-    v.rlike("\\d") &&
-      containsAny(lower(v), PhysicsUnits) &&
-      (length(trim(v)) > 5)
-
-  // ------------------------------------------------------------------
-  // P12 — benchmark eligibility (enhanced_paper_analyser.py:1569):
-  // subtle_issues nonempty OR overall_score >= 0.3.
-  // ------------------------------------------------------------------
-  def benchmarkEligible(issues: Column, overallScore: Column): Column =
-    (size(issues) > 0) || (overallScore >= 0.3)
 
   // ------------------------------------------------------------------
   // P14 — has_content (enhanced_analyzer_integration2.py:137-139):
@@ -122,54 +107,6 @@ object Gates {
     }
 
   // ------------------------------------------------------------------
-  // C11 — Nougat markdown clean (analysis/pdf_processor.py:404-420).
-  // ------------------------------------------------------------------
-  def nougatMarkdownClean(c: Column): Column = {
-    var s = regexp_replace(c, "(?m)^#+\\s*", "")
-    s = regexp_replace(s, "\\*\\*(.*?)\\*\\*", "$1")
-    s = regexp_replace(s, "\\*(.*?)\\*", "$1")
-    s = regexp_replace(s, "`(.*?)`", "$1")
-    s = regexp_replace(s, "\\|[^\n]*\\|", "")
-    s = regexp_replace(s, "[\\-\\|:]+\n", "")
-    s = regexp_replace(s, "\n(?U)\\s*\n(?U)\\s*\n+", "\n\n")
-    regexp_replace(s, "[ \\t]+", " ")
-  }
-
-  // ------------------------------------------------------------------
-  // C12 — LaTeX normalize (analysis/pdf_processor.py:422-437).
-  // ------------------------------------------------------------------
-  def latexNormalize(c: Column): Column = {
-    var s = regexp_replace(c, "\\$([^$]+)\\$", " \\$$1\\$ ")
-    s = regexp_replace(s, "\\$\\$([^$]+)\\$\\$", "\n\\$\\$$1\\$\\$\n")
-    s = regexp_replace(s, "(?s)\\\\begin\\{equation\\}(.*?)\\\\end\\{equation\\}",
-      "\n\\\\begin{equation}$1\\\\end{equation}\n")
-    regexp_replace(s, "(?s)\\\\begin\\{align\\}(.*?)\\\\end\\{align\\}",
-      "\n\\\\begin{align}$1\\\\end{align}\n")
-  }
-
-  // ------------------------------------------------------------------
-  // E9 — latex_quality_score (analysis/pdf_processor.py:613-632):
-  // min(1, indicators / (len/1000) / 10) over an 8-pattern battery.
-  // ------------------------------------------------------------------
-  val LatexIndicators: Seq[String] = Seq(
-    "(?s)\\\\frac\\{[^}]+\\}\\{[^}]+\\}",
-    "(?s)\\\\int\\s*.*?d[a-z]",
-    "(?s)\\\\sum\\s*.*?",
-    "\\\\partial", "\\\\nabla",
-    "\\\\alpha", "\\\\beta", "\\\\gamma",
-    "(?s)\\\\begin\\{.*?\\}",
-    "(?s)\\$.*?\\$")
-
-  def latexQualityScore(c: Column): Column = {
-    val total = LatexIndicators
-      .map(p => size(regexp_extract_all(c, lit(p), lit(0))).cast("double"))
-      .reduce(_ + _)
-    when(length(c) > 0,
-      least(lit(1.0), total / (length(c).cast("double") / 1000.0) / 10.0))
-      .otherwise(lit(0.0))
-  }
-
-  // ------------------------------------------------------------------
   // E14 — advanced problem/solution split
   // (enhanced_paper_analyser.py:619-639): first separator match wins, split
   // at match END; fallback = midpoint.
@@ -209,16 +146,5 @@ object Gates {
       .when(containsAny(lo, Seq("relativity", "gravity", "cosmol")), "relativity")
       .when(containsAny(lo, Seq("optics", "photon", "light")), "optics")
       .otherwise("general_physics")
-  }
-
-  // ------------------------------------------------------------------
-  // E27 — robust model-JSON parsing (analysis/classifier.py:142-171):
-  // strip ```json fences, locate the {...} span, parse, default fields.
-  // ------------------------------------------------------------------
-  def parseModelJson(c: Column, schema: StructType): Column = {
-    val unfenced = regexp_replace(
-      regexp_replace(c, "(?s)^\\s*```(?:json)?", ""), "(?s)```\\s*$", "")
-    val span = regexp_extract(unfenced, "(?s)(\\{.*\\})", 1)
-    from_json(span, schema)
   }
 }

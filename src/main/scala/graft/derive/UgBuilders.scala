@@ -132,17 +132,6 @@ object UgBuilders {
       body(a => a.map(g => UgWordAnchorSample.count(m, g) > 0).reduce(_ && _))
     }
 
-  def ugEquations(text: Column): Column =
-    batteryStripped(text,
-      a => a.map(g => containsAny(text, g)).reduce(_ && _),
-      UgEqPatterns, UgEqAnchors, 5)
-  def ugDerivations(text: Column): Column =
-    wordGuarded(text)(g =>
-      batteryStripped(text, g, UgDerivPatterns, UgDerivAnchors, 50))
-  def ugProblemSolutions(text: Column): Column =
-    wordGuarded(text)(g =>
-      batteryStripped(text, g, UgProblemPatterns, UgProblemAnchors, 100))
-
   /** The four UGPhysics question builders (:379-612) as (qtype, question)
     * structs (null when a builder declines). Templates are verbatim.
     */
@@ -251,9 +240,8 @@ Focus particularly on the application of: """),
                        subjectCol: String, titleCol: String,
                        abstractCol: String): DataFrame = {
     val text = col(textCol)
-    // one anchor-mask scan per row shared by the deriv/problem batteries
-    // (the standalone ugDerivations/ugProblemSolutions each bind their
-    // own — correct but one redundant pass when used together)
+    // the deriv and problem batteries share one anchor-mask scan per row;
+    // the equation battery's symbol anchors are raw-text contains tests
     val content = wordGuarded(text) { g =>
       struct(
         batteryStripped(text,

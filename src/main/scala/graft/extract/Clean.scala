@@ -26,7 +26,6 @@ object Clean {
   // ---- shared pattern constants (reference file:line in comments) ----
   private[graft] val WsRun = "(?U)\\s+" // python \s+ (unicode)
   private[graft] val NonAscii = "[^\\x00-\\x7F]+" // pdf_processor.py:71
-  private[graft] val SpaceTabRun = "[ \\t]+" // pdf_processor.py:187
 
   /** Mirror of Spark's `lower()` (`UTF8String.toLowerCase`, spark-unsafe
     * 4.1.2): full-ASCII input byte-folds A-Z locale-independently;
@@ -122,84 +121,6 @@ object Clean {
     UTF8String.fromString(basicCleanFastStr(u.toString))
 
   // ---------------------------------------------------------------------
-  // C2 — enhanced clean (reference: analysis/pdf_processor.py:138-168)
-  // ligatures; Greek->names; space around [=+-*/]; \s+ collapse; then the
-  // boilerplate line filter (which, after the \s+ collapse, sees a single
-  // line — a reference quirk reproduced faithfully).
-  // ---------------------------------------------------------------------
-  private val GreekMap = Seq(
-    "α" -> "alpha", "β" -> "beta", "γ" -> "gamma",
-    "Δ" -> "Delta", "∇" -> "nabla", "∂" -> "partial"
-  )
-
-  def enhancedClean(c: Column): Column = {
-    var s = regexp_replace(regexp_replace(c, "ﬁ", "fi"), "ﬂ", "fl")
-    GreekMap.foreach { case (g, n) => s = regexp_replace(s, g, n) }
-    s = regexp_replace(s, "([=+\\-*/])", " $1 ")
-    s = regexp_replace(s, WsRun, " ")
-    // boilerplate line filter (P7, pdf_processor.py:154-168)
-    boilerplateFilter(s)
-  }
-
-  def enhancedCleanStr(t: String): String = {
-    if (t == null || t.isEmpty) return ""
-    var s = t.replace("ﬁ", "fi").replace("ﬂ", "fl")
-    GreekMap.foreach { case (g, n) => s = s.replace(g, n) }
-    s = s.replaceAll("([=+\\-*/])", " $1 ")
-    s = s.replaceAll(WsRun, " ")
-    boilerplateFilterStr(s)
-  }
-
-  // P7 — boilerplate line filter (pdf_processor.py:154-168): drop lines that
-  // are page numbers ^\d+$, "Page \d+" prefixes, short arXiv:/viXra: header
-  // lines, or shorter than 3 chars after strip; re-join with '\n'.
-  def boilerplateFilter(c: Column): Column =
-    array_join(
-      filter(
-        transform(split(c, "\n"), l => trim(l)),
-        l => !(length(l) < 3 ||
-          l.rlike("^\\d+$") ||
-          l.rlike("^Page \\d+") ||
-          (l.contains("arXiv:") && length(l) < 50) ||
-          (l.contains("viXra:") && length(l) < 50))
-      ),
-      "\n"
-    )
-
-  def boilerplateFilterStr(t: String): String =
-    t.split("\n", -1).map(_.trim).filterNot { l =>
-      l.length < 3 ||
-      l.matches("\\d+") ||
-      l.matches("^Page \\d+.*") ||
-      (l.contains("arXiv:") && l.length < 50) ||
-      (l.contains("viXra:") && l.length < 50)
-    }.mkString("\n")
-
-  // ---------------------------------------------------------------------
-  // C3 — post-process (reference: analysis/pdf_processor.py:170-190)
-  // ---------------------------------------------------------------------
-  def postProcess(c: Column): Column = {
-    var s = regexp_replace(c, "\\.([A-Z])", ". $1")
-    s = regexp_replace(s, "([a-z])([A-Z])", "$1 $2")
-    s = regexp_replace(s, "\\$([^$]+)\\$", " \\$$1\\$ ")
-    s = regexp_replace(s, "\n(?U)\\s*\n", "\n\n")
-    s = regexp_replace(s, SpaceTabRun, " ")
-    s = regexp_replace(s, "\n\n\n+", "\n\n")
-    trim(s)
-  }
-
-  def postProcessStr(t: String): String = {
-    if (t == null || t.isEmpty) return ""
-    var s = t.replaceAll("\\.([A-Z])", ". $1")
-    s = s.replaceAll("([a-z])([A-Z])", "$1 $2")
-    s = s.replaceAll("\\$([^$]+)\\$", " \\$$1\\$ ")
-    s = s.replaceAll("\n(?U)\\s*\n", "\n\n")
-    s = s.replaceAll(SpaceTabRun, " ")
-    s = s.replaceAll("\n\n\n+", "\n\n")
-    s.trim
-  }
-
-  // ---------------------------------------------------------------------
   // C4 — title scrub (reference: enhanced_paper_analyser.py:174-192)
   // ---------------------------------------------------------------------
   val TitleDefault = "Physics paper (title not clearly specified)"
@@ -251,43 +172,6 @@ object Clean {
     if (t == null) null
     else if (t.length > 1000) t.substring(0, 1000) + "..."
     else t
-
-  // ---------------------------------------------------------------------
-  // C14 — OCR formatting fixes (analysis/pdf_processor.py:439-455):
-  // sentence-boundary spacing, camelCase split, ligature + greek spellouts,
-  // whitespace normalization. Part of the enhanced-OCR text path.
-  // ---------------------------------------------------------------------
-  def fixFormattingIssues(c: Column): Column = {
-    var s = regexp_replace(c, "\\.([A-Z])", ". $1")
-    s = regexp_replace(s, "([a-z])([A-Z])", "$1 $2")
-    for ((from, to) <- Seq("ﬁ" -> "fi", "ﬂ" -> "fl", "α" -> "alpha",
-      "β" -> "beta", "γ" -> "gamma", "Δ" -> "Delta", "∇" -> "nabla",
-      "∂" -> "partial"))
-      s = regexp_replace(s, from, to)
-    s = regexp_replace(s, "[ \\t]+", " ")
-    regexp_replace(s, "\n\n\n+", "\n\n")
-  }
-
-  // ---------------------------------------------------------------------
-  // C15 — fallback-extraction clean (analysis/pdf_processor.py:508-530).
-  // Reference quirks reproduced exactly: the leading `\s+` collapse
-  // removes every newline BEFORE the per-line filter, so the "loop" sees
-  // ONE line — a whole text starting with "Page <n>", an all-digit text,
-  // or a short arXiv:/viXra: stamp cleans to EMPTY; and the ligature
-  // replace is dead code (non-ASCII already stripped), kept for fidelity.
-  // ---------------------------------------------------------------------
-  def fallbackClean(c: Column): Column = {
-    var s = regexp_replace(coalesce(c, lit("")), WsRun, " ")
-    s = regexp_replace(s, "[^\\x00-\\x7F]+", "")
-    s = regexp_replace(regexp_replace(s, "ﬁ", "fi"), "ﬂ", "fl")
-    graft.functions.Let(trim(s)) { line =>
-      when(length(line) < 3 ||
-        line.rlike("^\\d+$") || line.rlike("^Page \\d+") ||
-        (line.contains("arXiv:") && length(line) < 50) ||
-        (line.contains("viXra:") && length(line) < 50), lit(""))
-        .otherwise(line)
-    }
-  }
 
   // ---------------------------------------------------------------------
   // C6 — training-text clean (reference: enhanced_paper_analyser.py:895-916)

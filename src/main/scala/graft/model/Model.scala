@@ -17,59 +17,3 @@ final case class WebDoc(
     text: String,
     lang: String
 )
-
-/** Per-document text statistics (reference: analysis/pdf_processor.py:75-89
-  * basic, :192-250 enhanced). Modeled as a fixed struct (not a map) so
-  * Catalyst can prune columns (SURVEY.md §1.3).
-  */
-final case class TextStats(
-    word_count: Long,
-    char_count: Long,
-    math_expressions: Long,
-    reference_count: Long,
-    avg_sentence_length: Double,
-    physics_terms: Long,
-    math_terms: Long,
-    physics_density: Double,
-    equation_count: Long,
-    has_substantial_physics: Boolean,
-    has_mathematical_content: Boolean
-)
-
-/** Stage-2 scores — the reference keeps a Dict[str,float] with exactly four
-  * fixed keys (reference: prompts/classifier_prompts.py:98-103, defaults 5 on
-  * parse failure at analysis/classifier.py:229-238). Fixed struct for
-  * columnar pruning.
-  */
-final case class Stage2Scores(
-    mathematical_errors: Double,
-    physics_assumptions: Double,
-    logical_consistency: Double,
-    literature_integration: Double
-)
-
-/** Quality assessment output (reference: models/paper.py:21-32). */
-final case class Assessment(
-    url: String,
-    overall_score: Double,
-    stage1_pass: Boolean,
-    stage2: Stage2Scores,
-    recommendation: String,
-    sophistication: Double,
-    keep: Boolean
-)
-
-/** A fully scored + scrubbed document row — the `docs_scored` table shape. */
-final case class ScoredDoc(
-    url: String,
-    warc_ts: Timestamp,
-    text: String,
-    scrubbed_text: String,
-    lang: String,
-    sophistication: Double,
-    stage1_pass: Boolean,
-    avg_stage2: Double,
-    recommendation: String,
-    overall_score: Double,
-    keep: Boolean
-)

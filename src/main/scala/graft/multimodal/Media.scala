@@ -1,12 +1,12 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Multimodal column plumbing (builder-prompt mandate): image/audio/video
-  * as opaque `binary` columns with typed metadata, plus batched
-  * decode/feature-extract/resize/frame-sample operators.
+/** Multimodal column plumbing: image/audio/video as opaque `binary`
+  * columns with typed metadata, plus a batched decode/feature-extract
+  * operator.
   *
   * The image/audio codec libraries are NOT in this container, so the decode
   * step is a clearly-marked DETERMINISTIC STUB (`stubDecode`) — the
@@ -21,20 +21,6 @@ import org.apache.spark.sql.types._
   * target spark.sql.files.maxPartitionBytes rather than row counts.
   */
 object Media {
-
-  /** Typed metadata for an opaque media blob. */
-  val MediaMetaSchema: StructType = StructType(Seq(
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true),
-    StructField("codec", StringType, nullable = true)))
-
-  /** Canonical media-table schema: id + blob + typed meta. */
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("bytes", BinaryType, nullable = true),
-    StructField("meta", MediaMetaSchema, nullable = false)))
 
   val FeatureDim = 16
 
@@ -57,21 +43,6 @@ object Media {
     hist
   }
 
-  /** STUB RESIZE — deterministic byte down-sampling standing in for an
-    * image resize; preserves the (bytes → bytes) contract.
-    */
-  def stubResize(bytes: Array[Byte], factor: Int): Array[Byte] = {
-    if (bytes == null || factor <= 1) return bytes
-    bytes.indices.collect { case i if i % factor == 0 => bytes(i) }.toArray
-  }
-
-  /** STUB FRAME SAMPLE — every k-th fixed-size window as a "frame". */
-  def stubFrameSample(bytes: Array[Byte], frameSize: Int, every: Int): Seq[Array[Byte]] = {
-    if (bytes == null || bytes.length < frameSize) return Seq.empty
-    (0 until bytes.length - frameSize by frameSize * every)
-      .map(off => bytes.slice(off, off + frameSize))
-  }
-
   /** Batched feature extraction: one mapPartitions pass adds a
     * `features: array<float>` column from `bytesCol`. The decode is invoked
     * per row but all per-batch setup is amortized — the exact shape a real
@@ -88,15 +59,6 @@ object Media {
       }
     }(Encoders.row(outSchema))
   }
-
-  /** Pure-Catalyst metadata derivation for blobs: size + deterministic
-    * content hash (no decode needed — stays in codegen).
-    */
-  def blobStats(bytesCol: Column): Column =
-    struct(
-      length(bytesCol).as("n_bytes"),
-      xxhash64(bytesCol).as("content_hash"),
-      md5(bytesCol).as("content_md5"))
 
   /** Build a deterministic media table from any binary column (used by
     * tests and the driver query — the documents' html wrapper bytes stand

@@ -5,11 +5,11 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused single-pass Gopher/C4 signal battery — the native form of
-  * `Heuristics.gopherStatsHof` (the Let-bound Column composition, kept as
-  * the reference surface).
+/** Fused single-pass Gopher/C4 signal battery — the native form of the
+  * individual Heuristics Column functions (`dupLineFraction` …
+  * `gopherKeep`), which stay as its reference surface.
   *
-  * Round-6 measurement: the Let-bound HOF form still pays interpreted
+  * Round-6 measurement: the Let-bound HOF form it replaced paid interpreted
   * lambda evaluation per line/token/n-gram (transform + filter + aggregate
   * + concat_ws per position) — ~0.23 ms/doc on 300-char docs, the
   * second-largest term in the q51/q52/q53 paths after shingling. This

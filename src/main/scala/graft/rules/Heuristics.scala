@@ -188,7 +188,8 @@ object Heuristics {
     EquationPatterns.map(patternCountStr(t, _)).sum
 
   // ------------------------------------------------------------------
-  // Full TextStats struct in one withColumn (SURVEY.md §1.3).
+  // The per-document text-statistics struct in one withColumn
+  // (SURVEY.md §1.3).
   // ------------------------------------------------------------------
   def textStats(c: Column): Column = {
     val wc = wordCount(c)
@@ -279,9 +280,9 @@ object Heuristics {
   def stopwordRatio(c: Column): Column =
     stopwordRatioOf(tokensOrEmpty(c, lowered = false))
 
-  // ---- Gopher signal building blocks — ONE body each, used by both
-  // the individual Column functions and the fused gopherStats, so the
-  // two surfaces cannot drift (GopherSpec pins field identity anyway).
+  // ---- Gopher signal building blocks of the individual Column
+  // functions below — the reference GopherSpec holds the native
+  // gopherStats to, field for field.
 
   /** Non-empty space-trimmed lines. */
   private def nonEmptyLines(c: Column): Column =
@@ -321,10 +322,15 @@ object Heuristics {
 
   /** Duplicate word-n-gram fraction over whitespace tokens (Gopher
     * repetition rule). Pure higher-order expressions: build n-grams with
-    * transform over index sequence, compare distinct vs total.
+    * transform over index sequence, compare distinct vs total. The
+    * lowered tokens are Let-bound: wordNgrams reads them inside its
+    * transform lambda, where an unbound tokenizer re-runs at every
+    * n-gram position (quadratic in the row's token count).
     */
   def dupNgramFraction(c: Column, n: Int): Column =
-    dupFraction(wordNgrams(tokensOrEmpty(c, lowered = true), n))
+    graft.functions.Let(tokensOrEmpty(c, lowered = true)) { toks =>
+      dupFraction(wordNgrams(toks, n))
+    }
 
   /** Mean word length (Gopher: keep 3..10). */
   def meanWordLength(c: Column): Column =
@@ -348,10 +354,11 @@ object Heuristics {
     * values equal the individual functions UP TO `round(_, 6)` — the
     * ratio fields are rounded for oracle hash stability, the standalone
     * Columns are not (GopherSpec proves field-for-field equality against
-    * the Column functions AND against the Let-bound HOF composition
-    * below; `gopher_keep` compares the UNROUNDED values, so the keep bit
-    * is exactly `gopherKeep`). Consume behind a ComputeOnce barrier so
-    * the struct is computed once, not per field reference. Never null:
+    * the Column functions above, for n = 2 and 3, on null, edge, fuzz
+    * and SynthCorpus text; `gopher_keep` compares the UNROUNDED values,
+    * so the keep bit is exactly `gopherKeep`). Consume behind a
+    * ComputeOnce barrier so the struct is computed once, not per field
+    * reference. Never null:
     * null text maps to the Column form's field-level three-valued-logic
     * image.
     */
@@ -359,52 +366,5 @@ object Heuristics {
     require(n > 0, s"n must be positive, got $n")
     graft.functions.Native.nullAware(GopherStats, "computeRow",
       GopherStats.outSchema(n), nullable = false, c, lit(n))
-  }
-
-  /** The Let-bound pure-Catalyst composition (kept as the parity-test
-    * reference surface for the native expression). The naive
-    * composition above is correct but CollapseProject inlines the
-    * tokenizer into every reference (~20 copies of the token array per
-    * row in q51's original plan — the round-2 trap); here the line,
-    * token, and n-gram arrays are Let-bound once and every ratio reads
-    * the binding.
-    */
-  def gopherStatsHof(c: Column, n: Int = 3): Column = {
-    import graft.functions.Let
-    Let(nonEmptyLines(c)) { lines =>
-      Let(tokensOrEmpty(c, lowered = false)) { tok =>
-        // the lowered tokens MUST be Let-bound before the n-gram builder:
-        // wordNgrams references its token column ~3n times and
-        // CollapseProject would inline (re-evaluate) the tokenizer at
-        // every reference (measured: q51 0.5 → 11.7 s when this binding
-        // was dropped in a refactor)
-        Let(tokensOrEmpty(c, lowered = true)) { ltok =>
-        Let(wordNgrams(ltok, n)) { grams =>
-          // scalar bindings: each ratio is referenced twice (field +
-          // keep rule) — bind once so e.g. the symbol regexp runs once
-          Let(struct(
-            dupFraction(lines).as("dl"),
-            dupFraction(grams).as("dg"),
-            meanWordLenOf(tok).as("mwl"),
-            symbolRatio(c).as("sym"),
-            stopwordRatioOf(tok).as("sw"),
-            size(tok).cast("long").as("wc"))) { v =>
-            val keep = minLength(c, 50) &&
-              v.getField("wc").between(10, 200000) &&
-              v.getField("mwl").between(2.0, 12.0) &&
-              v.getField("sym") < 0.30 &&
-              v.getField("dl") < 0.50 && v.getField("dg") < 0.80
-            struct(
-              round(v.getField("dl"), 6).as("dup_line_frac"),
-              round(v.getField("dg"), 6).as(s"dup_${n}gram_frac"),
-              round(v.getField("mwl"), 6).as("mean_word_len"),
-              round(v.getField("sym"), 6).as("symbol_ratio"),
-              round(v.getField("sw"), 6).as("stopword_ratio"),
-              keep.as("gopher_keep"))
-          }
-        }
-        }
-      }
-    }
   }
 }

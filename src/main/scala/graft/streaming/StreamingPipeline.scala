@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured Streaming face of the quality filter.
   *
@@ -13,10 +12,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * unbounded `readStream` source (StreamingSpec proves micro-batches ≡
   * batch); this module holds only what needs a streaming-native form.
   *
-  * Provided: the curation chain's streaming face, watermarked
-  * per-window keep-rate aggregation (the monitoring stream a production
-  * filter runs next to the main sink), streaming exact dedup and
-  * per-domain running state.
+  * Provided: the curation chain's streaming face and the streaming exact
+  * dedup it runs.
   */
 object StreamingPipeline {
 
@@ -71,24 +68,11 @@ object StreamingPipeline {
     near.withColumn("scrubbed", graft.scrub.PiiScrub.scrub(text))
   }
 
-  /** Windowed keep-rate monitoring: 1-minute tumbling windows on warc_ts
-    * with a 2-minute watermark — late crawl records beyond the watermark are
-    * dropped, state is bounded (north-star driver-light requirement).
-    */
-  def keepRateByWindow(scored: DataFrame): DataFrame =
-    scored
-      .withWatermark("warc_ts", "2 minutes")
-      .groupBy(window(col("warc_ts"), "1 minute"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-        avg(col("overall_score")).as("avg_score"))
-
   // ------------------------------------------------------------------
   // Streaming exact dedup — the stream face of Dedup.exactSurvivors.
   // ------------------------------------------------------------------
 
-  /** Canonical path: Spark's own streaming `dropDuplicates` over the
+  /** Spark's own streaming `dropDuplicates` over the
     * 128-bit content key (state-store-backed, the built-in operator is
     * exactly this job — preference (a) of the custom-op ladder). Pass a
     * watermark column name to bound state: keys older than the watermark
@@ -96,8 +80,7 @@ object StreamingPipeline {
     * (re-crawls beyond the horizon are re-admitted).
     *
     * Within a micro-batch the kept row is the first encountered —
-    * arrival-order-dependent. For deterministic min-id survivors use
-    * `streamingExactDedupMinId`.
+    * arrival-order-dependent.
     */
   def streamingDedup(docs: DataFrame, textCol: String,
                      watermarkCol: Option[String] = None,
@@ -108,72 +91,5 @@ object StreamingPipeline {
         .dropDuplicates("dup_key", ts)
       case None => keyed.dropDuplicates("dup_key")
     }
-  }
-
-  final case class DedupSurvivor(dup_key: String, id: Long)
-
-  /** Deterministic variant: one boolean of state per content key; emits
-    * (key, min id in the FIRST micro-batch containing the key). When
-    * arrival order respects id order, this equals the batch
-    * `Dedup.exactSurvivors` keeper exactly (StreamingDedupSpec); across
-    * arbitrary arrival orders the survivor is the earliest-arrival batch's
-    * min id — the honest streaming semantics (a stream cannot retro-swap
-    * an already-emitted survivor).
-    */
-  def streamingExactDedupMinId(docs: DataFrame, idCol: String,
-                               textCol: String): org.apache.spark.sql.Dataset[DedupSurvivor] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(md5(col(textCol).cast("binary")).as("dup_key"),
-        col(idCol).cast("long").as("id"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[Boolean]) => {
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            Iterator.single(DedupSurvivor(key, rows.map(_._2).min))
-          }
-        })
-  }
-
-  // ------------------------------------------------------------------
-  // Custom state: per-domain running keep statistics via
-  // flatMapGroupsWithState (the KeyValueGroupedDataset state-store path —
-  // what a production filter uses for per-host rate limiting / quota).
-  // ------------------------------------------------------------------
-
-  final case class DomainState(nDocs: Long, nKept: Long)
-  final case class DomainUpdate(domain: String, n_docs: Long, n_kept: Long,
-                                keep_rate: Double)
-
-  /** Emit a cumulative per-domain update on every micro-batch. State is one
-    * tiny struct per domain — bounded by domain cardinality, not rows.
-    */
-  def domainRunningStats(scored: DataFrame): org.apache.spark.sql.Dataset[DomainUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val spark = scored.sparkSession
-    import spark.implicits._
-    scored
-      .select(
-        coalesce(parse_url(col("url"), lit("HOST")), lit("unknown")).as("domain"),
-        col("keep"))
-      .as[(String, Boolean)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (domain: String, rows: Iterator[(String, Boolean)],
-         state: GroupState[DomainState]) => {
-          val prev = state.getOption.getOrElse(DomainState(0L, 0L))
-          var n = prev.nDocs
-          var k = prev.nKept
-          rows.foreach { case (_, keep) => n += 1; if (keep) k += 1 }
-          state.update(DomainState(n, k))
-          Iterator.single(DomainUpdate(domain, n, k,
-            if (n == 0) 0.0 else k.toDouble / n))
-        })
   }
 }

@@ -54,18 +54,26 @@ class AnchorGuardSpec extends SparkTestBase {
       self ++ other.children.flatMap(unguardedScans(_, guarded))
   }
 
+  /** Unguarded battery scans in every node of the analyzed and the
+    * optimized plan: the authored shape AND the post-optimizer shape — the
+    * optimizer (CollapseProject, SimplifyConditionals,
+    * PushFoldableIntoBranches) must not have hoisted a battery scan out of
+    * its guard branch.
+    */
+  private def unguardedPlanScans(df: DataFrame, batteries: Seq[String]): Seq[String] =
+    Seq(df.queryExecution.analyzed, df.queryExecution.optimizedPlan)
+      .flatMap(_.flatMap(_.expressions))
+      .flatMap(unguardedScans(_, guarded = false))
+      .filter(batteries.contains)
+
   private def unguardedBatteryScans(c: org.apache.spark.sql.Column,
                                     batteries: Seq[String]): Seq[String] = {
     import spark.implicits._
-    val df = Seq("x").toDF("text").withColumn("subject", lit("Physics"))
-      .select(c.as("out"))
-    // both the authored shape AND the post-optimizer shape: the optimizer
-    // (CollapseProject, SimplifyConditionals, PushFoldableIntoBranches)
-    // must not have hoisted a battery scan out of its guard branch
-    (df.queryExecution.analyzed.expressions ++
-      df.queryExecution.optimizedPlan.expressions)
-      .flatMap(unguardedScans(_, guarded = false))
-      .filter(batteries.contains)
+    // cached: over a LocalRelation, ConvertToLocalRelation evaluates the
+    // projection and the optimized plan would hold no scan to check
+    val row = Seq("x").toDF("text").withColumn("subject", lit("Physics")).cache()
+    try unguardedPlanScans(row.select(c.as("out")), batteries)
+    finally row.unpersist()
   }
 
   test("v2 RL battery scans are all anchor-guarded") {
@@ -82,14 +90,29 @@ class AnchorGuardSpec extends SparkTestBase {
   }
 
   test("UG benchmark battery scans are all anchor-guarded") {
+    import spark.implicits._
     val batteries = UgBuilders.UgEqPatterns ++ UgBuilders.UgDerivPatterns ++
       UgBuilders.UgProblemPatterns ++ UgBuilders.UgDerivationPatterns
-    assert(unguardedBatteryScans(
-      UgBuilders.ugEquations(col("text")), batteries) === Seq.empty)
-    assert(unguardedBatteryScans(
-      UgBuilders.ugDerivations(col("text")), batteries) === Seq.empty)
-    assert(unguardedBatteryScans(
-      UgBuilders.ugProblemSolutions(col("text")), batteries) === Seq.empty)
+    val row = Seq(("http://h/0", "x", "Physics", "T", "x", Seq("i1"), 5.0, "R", 0.5))
+      .toDF("url", "text", "subject", "title", "abstract", "issues",
+        "sophistication", "recommendation", "overall_score")
+      // cached: over a LocalRelation the optimizer would evaluate the
+      // suitability filter on this row and prune the plan to nothing
+      .cache()
+    val items = UgBuilders.ugBenchmarkItems(row,
+      "url", "text", "subject", "title", "abstract")
+    // non-vacuity: both plans still hold every benchmark battery scan
+    val benchmarkBatteries = UgBuilders.UgEqPatterns ++
+      UgBuilders.UgDerivPatterns ++ UgBuilders.UgProblemPatterns
+    for (plan <- Seq(items.queryExecution.analyzed, items.queryExecution.optimizedPlan)) {
+      val scanned = plan.flatMap(_.expressions).flatMap(_.collect {
+        case e if e.getClass.getSimpleName.startsWith("RegExpExtract") =>
+          e.children.collect { case Literal(v, _) if v != null => v.toString }
+      }).flatten.toSet
+      assert(benchmarkBatteries.filterNot(scanned) === Seq.empty)
+    }
+    assert(unguardedPlanScans(items, batteries) === Seq.empty)
+    row.unpersist()
     assert(unguardedBatteryScans(
       UgBuilders.ugFindCompleteDerivations(col("text")), batteries) === Seq.empty)
   }
@@ -97,9 +120,10 @@ class AnchorGuardSpec extends SparkTestBase {
   test("the traversal itself detects an unguarded scan (sanity)") {
     import org.apache.spark.sql.functions.regexp_extract_all
     val p = RlBuilder.ExplicitPatterns.head
+    // once in the analyzed plan, once in the optimized plan
     assert(unguardedBatteryScans(
       regexp_extract_all(col("text"), lit(p), lit(1)),
-      RlBuilder.ExplicitPatterns) === Seq(p))
+      RlBuilder.ExplicitPatterns) === Seq(p, p))
   }
 
   test("each builder's optimized plan holds exactly one anchor-mask node") {

@@ -39,40 +39,6 @@ class CleanSpec extends SparkTestBase {
       assert(runCol(Clean.basicClean, in) == Clean.basicCleanStr(in), s"<$in>")
   }
 
-  // C2 — analysis/pdf_processor.py:138-168
-  test("C2 enhancedClean: greek, operator spacing, whitespace, line filter") {
-    // α→alpha, = gets spaces, whitespace collapses, then single-line filter
-    val in = "x=α+1"
-    // ops spaced: "x = α + 1" → greek first: x=alpha+1 → " = " and " + ":
-    // greek replaced BEFORE operator spacing (reference order :146-151)
-    val want = "x = alpha + 1"
-    assert(Clean.enhancedCleanStr(in) == want)
-    assert(runCol(Clean.enhancedClean, in) == want)
-    // boilerplate single-line quirk: a standalone page number line survives
-    // C2 only if the \s+ collapse merged it into a long line (reference quirk)
-    assert(Clean.enhancedCleanStr("42") == "") // pure digits line dropped
-    assert(Clean.enhancedCleanStr("ab") == "") // <3 chars dropped
-  }
-
-  test("P7 boilerplateFilter drops page numbers / headers (pdf_processor.py:154-168)") {
-    val in = "Real content line here\n42\nPage 13\narXiv: 1234.5678\nmore content text"
-    val want = "Real content line here\nmore content text"
-    assert(Clean.boilerplateFilterStr(in) == want)
-    assert(runCol(Clean.boilerplateFilter, in) == want)
-    // arXiv line >= 50 chars survives
-    val long = "arXiv: " + "x" * 50
-    assert(Clean.boilerplateFilterStr(s"abc\n$long") == s"abc\n$long")
-  }
-
-  // C3 — analysis/pdf_processor.py:170-190
-  test("C3 postProcess: sentence boundaries, camel split, $eq$ spacing") {
-    assert(Clean.postProcessStr("end.Next") == "end. Next")
-    assert(Clean.postProcessStr("aB") == "a B")
-    assert(Clean.postProcessStr("x$E=mc^2$y") == "x $E=mc^2$ y")
-    for (in <- Seq("end.Next", "aB", "x$E=mc^2$y", "a\n \nb", "a\n\n\n\nb"))
-      assert(runCol(Clean.postProcess, in) == Clean.postProcessStr(in), s"<$in>")
-  }
-
   // C4 — enhanced_paper_analyser.py:174-192
   test("C4 titleClean: admin notes, page counts, short default") {
     assert(Clean.titleCleanStr("3 Pages. A Grand Unified Theory of Everything")
@@ -91,26 +57,6 @@ class CleanSpec extends SparkTestBase {
     assert(Clean.abstractTruncateStr(long) == "a" * 1000 + "...")
     assert(Clean.abstractTruncateStr("short") == "short")
     assert(runCol(Clean.abstractTruncate, long) == "a" * 1000 + "...")
-  }
-
-  // C14 — pdf_processor.py:439-455 (expected values from executing the
-  // reference function)
-  test("C14 fixFormattingIssues: boundaries, camelCase, greek spellouts") {
-    assert(runCol(Clean.fixFormattingIssues, "end.Start aB ∂x α and Δy") ==
-      "end. Start a B partialx alpha and Deltay")
-    assert(runCol(Clean.fixFormattingIssues, "a\t\t b\n\n\n\nc") == "a b\n\nc")
-  }
-
-  // C15 — pdf_processor.py:508-530 (quirks pinned by executing the
-  // reference: whole-text line filter after newline collapse; dead
-  // ligature replace after the ASCII strip)
-  test("C15 fallbackClean: single-line quirk and skip conditions") {
-    assert(runCol(Clean.fallbackClean, "Page 3 of the document about energy") == "")
-    assert(runCol(Clean.fallbackClean, "  normal text with  spaces\nand ﬁ ligature lines ") ==
-      "normal text with spaces and  ligature lines")
-    assert(runCol(Clean.fallbackClean, "42") == "")
-    assert(runCol(Clean.fallbackClean, "arXiv: 1234.5678 short") == "")
-    assert(runCol(Clean.fallbackClean, "x") == "")
   }
 
   // C6 — enhanced_paper_analyser.py:895-916

@@ -38,42 +38,58 @@ class GopherSpec extends SparkTestBase {
     assert(one("", Heuristics.meanWordLength(col("text"))) == 0.0)
   }
 
-  test("gopherStats struct equals the individual Column functions field-for-field") {
-    val texts = Seq(
-      "a\na\nb", "x y X Y x", "ab cdef", "", "   ", "only two",
-      "the and of to a in that is for with more words here now ok",
-      ("the model predicts that energy is conserved in a closed system " +
-        "and we can derive the relation for momentum with care ") * 3,
-      Array.fill(20)("spam spam spam spam line").mkString("\n"),
-      "@#$%^&*(){}[]<>~`|" * 20, "ünïcödé wörds ünïcödé wörds over here")
-    val df = texts.toDF("text")
-    val fused = graft.functions.ComputeOnce(df, "g",
-      Heuristics.gopherStats(col("text")))
-      .select(col("g.dup_line_frac"), col("g.dup_3gram_frac"),
-        col("g.mean_word_len"), col("g.symbol_ratio"),
-        col("g.stopword_ratio"), col("g.gopher_keep")).collect()
+  private val natural = ("the model predicts that energy is conserved in a closed system " +
+    "and we can derive the relation for momentum with care ") * 3
+
+  /** Asserts every field of `gopherStats(text, n)` equals the matching
+    * individual Column function (ratios rounded as the struct rounds them).
+    */
+  private def assertStructEqualsColumns(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
     val t = col("text")
-    val plain = df.select(
-      round(Heuristics.dupLineFraction(t), 6),
-      round(Heuristics.dupNgramFraction(t, 3), 6),
-      round(Heuristics.meanWordLength(t), 6),
-      round(Heuristics.symbolRatio(t), 6),
-      round(Heuristics.stopwordRatio(t), 6),
-      Heuristics.gopherKeep(t)).collect()
-    fused.zip(plain).zip(texts).foreach { case ((f, p), txt) =>
-      assert(f == p, s"mismatch on <${txt.take(40)}>")
+    // gopherKeep fixes n = 3; at n = 2 the same conjunction is built here
+    val keep =
+      if (n == 3) Heuristics.gopherKeep(t)
+      else Heuristics.minLength(t, 50) &&
+        Heuristics.wordCount(t).between(10, 200000) &&
+        Heuristics.meanWordLength(t).between(2.0, 12.0) &&
+        Heuristics.symbolRatio(t) < 0.30 &&
+        Heuristics.dupLineFraction(t) < 0.50 &&
+        Heuristics.dupNgramFraction(t, n) < 0.80
+    val rows = graft.functions.ComputeOnce(df, "g", Heuristics.gopherStats(t, n))
+      .select(t, col("g.*"),
+        round(Heuristics.dupLineFraction(t), 6),
+        round(Heuristics.dupNgramFraction(t, n), 6),
+        round(Heuristics.meanWordLength(t), 6),
+        round(Heuristics.symbolRatio(t), 6),
+        round(Heuristics.stopwordRatio(t), 6),
+        keep).collect()
+    rows.foreach { r =>
+      (1 to 6).foreach { i =>
+        assert(r.get(i) == r.get(i + 6),
+          s"n=$n field ${i - 1} on <${String.valueOf(r.get(0)).take(40)}>: " +
+            s"struct=${r.get(i)} column=${r.get(i + 6)}")
+      }
     }
   }
 
+  test("gopherStats struct equals the individual Column functions field-for-field") {
+    val shapes = Seq(
+      "a\na\nb", "x y X Y x", "ab cdef", "", "   ", "only two",
+      "the and of to a in that is for with more words here now ok", natural,
+      Array.fill(20)("spam spam spam spam line").mkString("\n"),
+      "@#$%^&*(){}[]<>~`|" * 20, "ünïcödé wörds ünïcödé wörds over here")
+    assertStructEqualsColumns(shapes.toDF("text"), 3)
+  }
+
+  // The individual Column functions are the Let-bound higher-order-function
+  // composition the native kernel is held to.
   test("native gopherStats ≡ the Let-bound HOF composition (incl. null/fuzz)") {
-    val rnd = new scala.util.Random(41)
     val edge = Seq(
       null.asInstanceOf[String], "", "   ", "\n", " \n \n", "a\r\nb\r\na\r",
       " lead nbsp token　ideographic", "ab c d",
       "ünïcödé Wörds ÜNÏCÖDÉ wörds ß İ", "x y X Y x",
-      "line one\nline one\n  line one  \nline two",
-      ("the model predicts that energy is conserved in a closed system " +
-        "and we can derive the relation for momentum with care ") * 3)
+      "line one\nline one\n  line one  \nline two", natural)
+    val rnd = new scala.util.Random(41)
     val fuzz = (0 until 150).map { _ =>
       val alphabet = "ab .\n\té$= X\r"
       (0 until rnd.nextInt(120)).map(_ =>
@@ -82,19 +98,8 @@ class GopherSpec extends SparkTestBase {
     val corpus = graft.fixtures.SynthCorpus.docsRaw(spark, 150, 4).toDF()
       .withColumn("text", graft.extract.Clean.basicClean(
         graft.extract.HtmlText.extractCol(col("html")))).select("text")
-    import spark.implicits._
-    for (n <- Seq(2, 3); df <- Seq((edge ++ fuzz).toDF("text"), corpus)) {
-      val rows = graft.functions.ComputeOnce(
-        graft.functions.ComputeOnce(df, "nat", Heuristics.gopherStats(col("text"), n)),
-        "hof", Heuristics.gopherStatsHof(col("text"), n))
-        .select(col("nat.*"), col("hof.*")).collect()
-      rows.foreach { r =>
-        (0 until 6).foreach { i =>
-          assert(r.get(i) == r.get(i + 6),
-            s"n=$n field $i: native=${r.get(i)} hof=${r.get(i + 6)}")
-        }
-      }
-    }
+    for (n <- Seq(2, 3); df <- Seq((edge ++ fuzz).toDF("text"), corpus))
+      assertStructEqualsColumns(df, n)
     // codegen: the expression must not split the span
     val plan = spark.range(3).select(Heuristics.gopherStats(
       concat(lit("tok "), col("id").cast("string"))).as("g"))

@@ -1,12 +1,10 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import graft.streaming.StreamingPipeline
 
 /** Streaming exact dedup must keep one row per content key across
-  * micro-batch boundaries (state store), and the min-id variant must equal
-  * the batch `Dedup.exactSurvivors` keeper under id-ordered arrival.
+  * micro-batch boundaries (state store).
   */
 class StreamingDedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -31,26 +29,5 @@ class StreamingDedupSpec extends SparkTestBase {
     val rows = spark.table("dedup_stream").collect()
     assert(rows.length == 3) // one survivor per distinct text
     assert(rows.map(_.getAs[String]("dup_key")).distinct.length == 3)
-  }
-
-  test("min-id stateful variant equals batch exactSurvivors keepers") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    stream.addData(batch1)
-    stream.addData(batch2)
-    val out = StreamingPipeline.streamingExactDedupMinId(
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text")
-    val q = out.writeStream.format("memory")
-      .queryName("dedup_minid_stream").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("dedup_minid_stream").collect()
-      .map(r => r.getAs[String]("dup_key") -> r.getAs[Long]("id")).toMap
-
-    val batchDf = (batch1 ++ batch2).toDF("doc_id", "text")
-    val batch = graft.dedup.Dedup.exactSurvivors(batchDf, "doc_id", "text")
-      .select(md5(col("text").cast("binary")).as("dup_key"), col("doc_id"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(streamed == batch,
-      s"streamed $streamed\nbatch $batch")
   }
 }
