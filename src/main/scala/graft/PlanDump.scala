@@ -2,7 +2,9 @@ package graft
 
 /** Dump `.explain("formatted")` for every declared query to a directory
   * (round-6 deliverable: plans/r06/<query>_{before,after}.txt). Not part of
-  * the driver contract.
+  * the driver contract. The tokens that differ between two runs of one
+  * commit are masked ([[masked]]), so a before/after pair diffs to the
+  * plan change alone.
   *
   *   SPARK_GRAFT_PLAN_DIR=plans/r06 SPARK_GRAFT_PLAN_SUFFIX=_before \
   *     sbt -batch "runMain graft.PlanDump"
@@ -26,8 +28,8 @@ object PlanDump {
           // NOTE: plans with driver-side precomputation (components
           // union-find, IVF Lloyd) EXECUTE those jobs during construction.
           val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val txt = masked(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
           val w = new java.io.PrintWriter(s"$outDir/$name$suffix.txt")
           try w.write(txt) finally w.close()
           println(s"[plan] wrote $name$suffix (${txt.length} chars)")
@@ -38,4 +40,14 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** `plan` with its run-dependent tokens masked: expression ids (`#12`),
+    * exchange ids (`[plan_id=7]`), RDD ids (`MapPartitionsRDD[31]`) and
+    * JVM lambda identities (`$$Lambda$3894/0x…@3392d69b`).
+    */
+  private def masked(plan: String): String =
+    plan.replaceAll("#\\d+", "#N")
+      .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=N]")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("\\$\\$Lambda[$\\w/]*@[0-9a-f]+", "\\$\\$Lambda")
 }

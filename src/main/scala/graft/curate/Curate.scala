@@ -1,6 +1,8 @@
 package graft.curate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Pipeline
 import graft.dedup.Dedup
@@ -17,7 +19,8 @@ import graft.scrub.PiiScrub
   *      (`Heuristics.gopherStats` behind a ComputeOnce barrier): zero
   *      shuffles, whole-stage codegen, drops degenerate text before
   *      anything pays a shuffle for it.
-  *   2. Exact dedup           — `Dedup.exactLosers`: min id per md5
+  *   2. Exact dedup           — `Dedup.exactLosers`' aggregate over the
+  *      fingerprint the gopher pass carries: min id per md5
   *      fingerprint, map-side-combinable; the shuffles move (id,
   *      fingerprint) rows, never the document text.
   *   3. Near-dup dedup        — candidate pairs over the exact-dedup
@@ -40,6 +43,29 @@ import graft.scrub.PiiScrub
   * are only gopher survivors — each stage shrinks the input of the next,
   * strictly cheaper → more expensive. Model scoring composes after the
   * chain via [[full]] (survivors only reach the perplexity model).
+  *
+  * One pass over the documents computes every per-document value the
+  * chain needs — the gopher keep bit, the md5 fingerprint and (when
+  * materialized) the hashed-shingle digests of kept rows — and every
+  * later stage moves keys only. Loser lists within the driver budget
+  * (`collectThreshold`) are read to the driver by one bounded `take`
+  * and joined as LocalRelations (an empty list's join is pruned); no
+  * action only sizes a list. A warm [[full]] call (minhash,
+  * `materialize = true`) runs:
+  *   - one eager localCheckpoint of the gophered document rows — the
+  *     chain's only checkpoint of document rows. It keeps `text`: the
+  *     survivors' scrub and scorer read it, and a text-free checkpoint
+  *     would re-run html extraction for them;
+  *   - stage 2's action: the shuffle map stages of the id count and of
+  *     the fingerprint aggregate and join, then one `take`, in one task,
+  *     that reads the repeated ids (rejected) and the exact losers (a
+  *     list over the budget reads the repeated ids in a second `take`);
+  *   - pair generation's shuffle map stages, then one `take` that fills
+  *     the pair checkpoint (union-find on the driver);
+  *   - one broadcast per join against a non-empty loser list;
+  *   - the caller's action over the scored survivors.
+  * On curbench `curate_dense` (1,200 docs, no duplicates, so no
+  * broadcast) that is 11 jobs.
   *
   * Scale notes: by default the gopher stage recomputes on each
   * downstream reference rather than materializing the corpus (narrow
@@ -65,40 +91,55 @@ object Curate {
   val MinJaccard = 0.8
   val MaxDf = 10000
 
+  /** MinHash band buckets are capped at this many documents. */
+  private val MaxBucket = 64
+
   /** Columns the chain adds while labeling rows; input may not carry them. */
   val ReservedColumns =
-    Seq("stage", "scrubbed", "__keep", "__stage", "__fp", "__keeper", "__n", "__g")
+    Seq("stage", "scrubbed", "__keep", "__stage", "__fp", "__sh", "__keeper", "__n", "__g")
 
   /** Shared chain plumbing: gopher-annotated frame + the loser list.
     *
     * Only keys move between the stages: each loser list (the exact
     * losers, then exact ∪ near) is a key-only `(idCol, stage)` frame
-    * held once by [[keyList]], so while the lists fit the driver budget
-    * no exchange of the chain carries the document text.
+    * computed once, so while the lists fit the driver budget no exchange
+    * of the chain carries the document text.
     *
     * @return (gophered, losers): `gophered` is `docs` plus a `__keep`
-    *         gopher-keep boolean; `losers` is (idCol, stage) for
-    *         every document dropped by stage 2 or 3 — stage 2 losers
+    *         gopher-keep boolean, the `__fp` fingerprint and (when
+    *         materialized) the `__sh` digests; `losers` is (idCol, stage)
+    *         for every document dropped by stage 2 or 3 — stage 2 losers
     *         never feed stage 3's pair generation.
     */
   private def chain(docs: DataFrame, idCol: String, textCol: String,
                     collectThreshold: Int, materialize: Boolean,
                     strategy: String): (DataFrame, DataFrame) = {
     Dedup.requireFree(docs, ReservedColumns)
-    // every stage labels and joins by id alone, so a repeated id would put
-    // one loser label on each row sharing it (key-only: parquet reads the
-    // id column alone)
-    docs.select(idCol).groupBy(idCol).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).limit(1).collect().foreach { r =>
-        throw new IllegalArgumentException(s"id column '$idCol' is not unique: " +
-          s"value '${r.get(0)}' occurs ${r.getLong(1)} times; deduplicate by it first")
-      }
+    val pairsOf: DataFrame => DataFrame = strategy match {
+      // exhaustive prefix-filtered all-pairs: every J ≥ t pair found —
+      // the DuckDB-oracled configuration (q52). Output is inherently
+      // quadratic in near-dup CLUSTER size, so this is the
+      // sparse-duplication / oracle regime.
+      case "exact" => Dedup.ngramDigestPairs(_, MinJaccard, MaxDf)
+      // web-scale regime (what production crawl dedup runs): MinHash
+      // band buckets propose candidates (bucket sizes capped and
+      // observable — boilerplate mega-clusters stay near-linear), each
+      // candidate exactly verified. Recall < 1 by construction: a missed
+      // pair keeps an extra document (the safe direction).
+      case "minhash" => Dedup.minhashDigestPairs(_, MinJaccard, MaxBucket)
+      case other =>
+        throw new IllegalArgumentException(
+          s"unknown near-dup strategy '$other' (exact | minhash)")
+    }
     val id = col(idCol)
     val text = col(textCol)
-    // one tokenizer pass per row (Let-bound inside gopherStats) behind a
-    // Generate barrier — without it CollapseProject re-inlines the
-    // tokenizer per field reference (the round-2 trap); only the keep
-    // bit is carried forward (the signal fields are q51's surface)
+    // one pass computes every per-document value the chain needs: the
+    // gopher keep bit, the exact-dedup fingerprint and, when
+    // materialized, the shingle digests of kept rows.
+    // gopher: one tokenizer pass per row (Let-bound inside gopherStats)
+    // behind a Generate barrier — without it CollapseProject re-inlines
+    // the tokenizer per field reference (the round-2 trap); only the keep
+    // bit is carried forward (the signal fields are q51's surface).
     // null text ⇒ gopher-dropped, not silently kept: every gopher signal
     // is null on null input, so an un-coalesced keep bit would three-
     // valued-logic its way past BOTH the drop branch and the loser join
@@ -106,86 +147,118 @@ object Curate {
     val gophered0 = ComputeOnce(docs, "__g", Heuristics.gopherStats(text))
       .withColumn("__keep", coalesce(col("__g.gopher_keep"), lit(false)))
       .drop("__g")
-    // materialize: the chain references this frame from several branches
-    // (exact-dedup aggregate, pair generation, final labeling) — each
-    // re-runs the upstream scan + extraction + gopher pass (~8 s per
-    // evaluation on the 20k-doc raw corpus). When the working set fits
-    // executor storage (corpus ≪ memory), one eager localCheckpoint
-    // replaces ~4 re-evaluations; at true 100-TB scale leave false —
-    // recomputing a narrow scan beats writing a corpus-sized
-    // intermediate (blocks are freed by ContextCleaner when the frame
-    // is GC'd).
-    val gophered = if (materialize) gophered0.localCheckpoint() else gophered0
+      .withColumn("__fp", Dedup.fingerprint(text))
+    // materialize: the chain reads this frame from several branches
+    // (id check, exact-dedup aggregate and join, pair candidates and
+    // verification, final labeling) — each would re-run the upstream
+    // scan + extraction + gopher pass. When the working set fits executor
+    // storage (corpus ≪ memory), one eager localCheckpoint — the chain's
+    // only checkpoint of document rows — replaces those re-evaluations,
+    // and it carries the digests (`__sh`, behind their own Generate
+    // barrier) so pair generation reads them instead of re-shingling. At
+    // true 100-TB scale leave false — recomputing a narrow scan beats
+    // writing a corpus-sized intermediate — and the digests are computed
+    // at the pair step over exact survivors only (a carried Generate
+    // would run the shingle kernel again in every later pass over the
+    // frame). Blocks are freed by ContextCleaner when the frame is GC'd.
+    val gophered =
+      if (materialize) ComputeOnce(gophered0, "__sh",
+        when(col("__keep"), Dedup.hashedShingles(text, ShingleN))).localCheckpoint()
+      else gophered0
     val gopherKept = gophered.filter(col("__keep"))
 
-    // stage 2: exact dedup — Dedup's loser operator (map-side-combinable
-    // min-id per fingerprint; shuffles (id, fingerprint) only, never the
-    // text). Its null-text sentinel makes stage 2 correct on its own:
-    // today stage 1 already drops null text (gopher signals are null ⇒
-    // keep=false), but stage 2 must not depend on stage 1's ordering.
-    val (exactLosers, exactLosersSide) = keyList(
-      Dedup.exactLosers(gopherKept, idCol, textCol)
-        .select(id, lit(StageExactDup).as("stage")), collectThreshold)
+    // stage 2: exact dedup — Dedup's loser operator over the carried
+    // fingerprint (map-side-combinable min-id per fingerprint; shuffles
+    // (id, fingerprint) only, never the text). The fingerprint's null-text
+    // sentinel makes stage 2 correct on its own: today stage 1 already
+    // drops null text, but stage 2 must not depend on stage 1's ordering.
+    val exactKeys = Dedup.fingerprintLosers(gopherKept.select(id, col("__fp")), idCol)
+      .select(id, lit(StageExactDup).as("stage"))
+    // Every stage labels and joins by id alone, so a repeated id would put
+    // one loser label on each row sharing it: the repeated ids are checked
+    // in the action that reads the exact losers (key-only; over `docs`,
+    // unmaterialized, parquet reads the id column alone).
+    val repeatedIds = (if (materialize) gophered else docs)
+      .groupBy(id).agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > 1)
+    val exactRows = exactLoserRows(repeatedIds, exactKeys, idCol, collectThreshold)
+    val spark = docs.sparkSession
+    // a list held on the driver is a LocalRelation (an empty one lets the
+    // optimizer prune its join); a longer one is a lazy local checkpoint:
+    // its first reader stores its blocks, so later joins read them
+    // instead of re-running the dedup plan
+    val exactLosers = exactRows
+      .map(rows => spark.createDataFrame(rows.asJava, exactKeys.schema))
+      .getOrElse(exactKeys.localCheckpoint(eager = false))
 
-    // stage 3 input: exact-dedup survivors, text column pruned to what
-    // pair generation needs
-    val exactKept = gopherKept.select(id, text)
-      .join(exactLosersSide, Seq(idCol), "left_anti")
-    val pairs = strategy match {
-      case "exact" =>
-        // exhaustive prefix-filtered all-pairs: every J ≥ t pair found —
-        // the DuckDB-oracled configuration (q52). Output is inherently
-        // quadratic in near-dup CLUSTER size, so this is the
-        // sparse-duplication / oracle regime.
-        Dedup.ngramJaccardPairs(exactKept, idCol, textCol,
-          n = ShingleN, minJaccard = MinJaccard, maxDf = MaxDf,
-          materialize = materialize)
-      case "minhash" =>
-        // web-scale regime (what production crawl dedup runs): MinHash
-        // band buckets propose candidates (bucket sizes capped and
-        // observable — boilerplate mega-clusters stay near-linear),
-        // each candidate exactly verified. Recall < 1 by construction:
-        // a missed pair keeps an extra document (the safe direction).
-        Dedup.minhashPairs(exactKept, idCol, textCol,
-          shingleN = ShingleN, threshold = MinJaccard,
-          materialize = materialize)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown near-dup strategy '$other' (exact | minhash)")
-    }
+    // stage 3 input: exact-dedup survivors as an (id, sh) digest frame.
+    // A driver-held list joins with a broadcast hint (its size estimate
+    // alone broadcasts only the shorter lists): the join then runs in the
+    // probe side's own partitions and never shuffles the document text (a
+    // shuffled join moves the full-width frame, and AQE may coalesce that
+    // shuffle, the scorer after it included, into one task). A hint on
+    // anything but a join side (a union) is dropped with a warning, so
+    // only join sides carry one.
+    val exactKept = gopherKept.join(
+      if (exactRows.isDefined) broadcast(exactLosers) else exactLosers,
+      Seq(idCol), "left_anti")
+    val digests =
+      if (materialize) exactKept.select(id.as("id"), col("__sh").as("sh"))
+      else Dedup.digestFrame(exactKept, idCol, textCol, ShingleN)
     val nearLosers = Dedup
-      .connectedComponents(pairs, "id_a", "id_b",
+      .connectedComponents(pairsOf(digests), "id_a", "id_b",
         collectThreshold = collectThreshold)
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol), lit(StageNearDup).as("stage"))
 
     // disjoint by construction: near-dup pairs are generated among exact
-    // KEEPERS only, so no id carries two loser labels
-    (gophered, keyList(exactLosers.unionByName(nearLosers), collectThreshold)._2)
+    // KEEPERS only, so no id carries two loser labels. On the driver path
+    // the components are a LocalRelation, so reading the near losers runs
+    // no job, and both lists join as one broadcast LocalRelation.
+    val onDriver = exactRows.flatMap { exact =>
+      val rows = exact ++ nearLosers.take(upTo(collectThreshold - exact.length))
+      if (rows.length <= collectThreshold) Some(rows) else None
+    }
+    val losers = onDriver
+      .map(rows => broadcast(spark.createDataFrame(rows.asJava, exactKeys.schema)))
+      .getOrElse(exactLosers.unionByName(nearLosers).localCheckpoint(eager = false))
+    (gophered, losers)
   }
 
-  /** A key-only loser list, computed once: a lazy local checkpoint whose
-    * first reader stores its blocks, so every later join reads them
-    * instead of re-running the dedup plan.
+  /** Stage 2's action: one bounded `take(collectThreshold + 1)`, in one
+    * task, over the repeated ids (`__n`, their count, set) and the exact
+    * losers (`__n` null) both checks the ids and reads a loser list within
+    * `collectThreshold` rows to the driver. It assumes no order of the
+    * rows: when the take does not read the whole union (it stops at its
+    * bound, or the threshold is 0 and it is not run), the list stays
+    * distributed and the repeated ids are read on their own.
     *
-    * @return (held, joinSide): `held` for any use but a join; `joinSide`
-    *         for a join. When the list has at most `collectThreshold`
-    *         rows (one `count` both sizes and stores it), `joinSide` is
-    *         hinted to broadcast: a join against it then runs in the probe
-    *         side's own partitions and never shuffles the document text (a
-    *         shuffled labeling join moves the full-width frame, and AQE may
-    *         coalesce that shuffle — the scorer after it included — into one
-    *         task). Above the threshold (or at 0) the planner's shuffled
-    *         join stays: the 100-TB path, with no count. A hint anywhere
-    *         but a join side (a union) is dropped with a warning, so
-    *         `held` carries none. Blocks are freed by the ContextCleaner
-    *         when the frame is GC'd.
+    * @return the exact-loser rows (idCol, stage) when the list has at most
+    *         `collectThreshold` rows, else None
     */
-  private def keyList(list: DataFrame, collectThreshold: Int): (DataFrame, DataFrame) = {
-    val held = list.localCheckpoint(eager = false)
-    val small = collectThreshold > 0 && held.count() <= collectThreshold
-    (held, if (small) broadcast(held) else held)
+  private def exactLoserRows(repeatedIds: DataFrame, exactKeys: DataFrame, idCol: String,
+                             collectThreshold: Int): Option[Seq[Row]] = {
+    val n = upTo(collectThreshold)
+    val rows =
+      if (collectThreshold <= 0) Array.empty[Row]
+      else repeatedIds.select(col(idCol), lit(null).cast("string").as("stage"), col("__n"))
+        .unionByName(exactKeys.withColumn("__n", lit(null).cast("long")))
+        .coalesce(1).take(n)
+    val complete = collectThreshold > 0 && rows.length < n
+    val (repeated, losers) = rows.partition(!_.isNullAt(2))
+    repeated.headOption
+      .orElse(if (complete) None else repeatedIds.take(1).headOption)
+      .foreach { r =>
+        throw new IllegalArgumentException(s"id column '$idCol' is not unique: " +
+          s"value '${r.get(0)}' occurs ${r.getAs[Long]("__n")} times; deduplicate by it first")
+      }
+    if (complete) Some(losers.toSeq.map(r => Row(r.get(0), r.get(1)))) else None
   }
+
+  /** The rows a bounded `take` reads to learn whether a list has at most
+    * `n` rows.
+    */
+  private def upTo(n: Int): Int = math.min(n.toLong + 1, Int.MaxValue).toInt
 
   /** The auditable per-document decision log: ONE row per input document
     * with `stage` ∈ {gopher, exact_dup, near_dup, kept} naming the stage
@@ -203,9 +276,10 @@ object Curate {
     * @param collectThreshold the chain's driver budget, in rows (also for
     *        [[curated]] and [[full]]): the near-dup pair graph is union-
     *        found on the driver when it has at most this many edges, and
-    *        a loser list is broadcast to its joins when it has at most
-    *        this many rows. Above it (or at 0) both stay distributed: the
-    *        HashMin loop and shuffled joins.
+    *        a loser list is read to the driver and broadcast to its joins
+    *        when it has at most this many rows. Above it (or at 0) both
+    *        stay distributed: the HashMin loop, a lazily checkpointed
+    *        list and shuffled joins.
     */
   def curationLog(docs: DataFrame, idCol: String, textCol: String,
                   collectThreshold: Int = 1 << 20,
@@ -242,7 +316,7 @@ object Curate {
     val (gophered, losers) = chain(docs, idCol, textCol,
       collectThreshold, materialize, strategy)
     gophered.filter(col("__keep"))
-      .drop("__keep")
+      .drop("__keep", "__fp", "__sh")
       .join(losers, Seq(idCol), "left_anti")
       .withColumn("scrubbed", PiiScrub.scrub(col(textCol)))
   }

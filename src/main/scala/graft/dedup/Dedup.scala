@@ -48,7 +48,7 @@ object Dedup {
     * equi-join — without it a null-text row could never be labeled a
     * duplicate; no collision: real digests are exactly 32 hex chars).
     */
-  private def fingerprint(text: Column): Column =
+  private[graft] def fingerprint(text: Column): Column =
     when(text.isNull, lit("__graft_null_text__"))
       .otherwise(md5(text.cast("binary"))).as("__fp")
 
@@ -69,8 +69,15 @@ object Dedup {
     */
   def exactLosers(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     requireFree(df, Seq("__fp", "__keeper", "__n"))
+    fingerprintLosers(df.select(col(idCol), fingerprint(col(textCol))), idCol)
+  }
+
+  /** [[exactLosers]] over a frame that already carries the fingerprint:
+    * `fps` is (idCol, `__fp`); the curation chain computes `__fp` in its
+    * gopher pass.
+    */
+  private[graft] def fingerprintLosers(fps: DataFrame, idCol: String): DataFrame = {
     val id = col(idCol)
-    val fps = df.select(id, fingerprint(col(textCol)))
     val dupGroups = fps.groupBy("__fp")
       .agg(min(id).as("__keeper"), count(lit(1)).as("__n"))
       .filter(col("__n") > 1)
@@ -162,18 +169,23 @@ object Dedup {
     * barrier: `sh` has several references (size filter, signature or
     * postings explode, verify joins) — as a plain projection alias
     * CollapseProject would re-run the shingle builder at every reference
-    * (the q52 regression, round 5). materialize (execution-only knob,
-    * same contract as Curate's): the frame feeds the candidate pass AND
-    * both verify joins; when it fits executor storage one eager
-    * localCheckpoint replaces those re-evaluations of scan + shingling.
-    * At true 100-TB scale leave false (recomputing a narrow scan beats
-    * writing a corpus-sized intermediate).
+    * (the q52 regression, round 5).
     */
-  private def digestFrame(df: DataFrame, idCol: String, textCol: String,
-                          n: Int, materialize: Boolean): DataFrame = {
-    val toks = graft.functions.ComputeOnce(
+  private[graft] def digestFrame(df: DataFrame, idCol: String, textCol: String,
+                                 n: Int): DataFrame =
+    graft.functions.ComputeOnce(
       df.select(col(idCol).as("id"), col(textCol)),
       "sh", hashedShingles(col(textCol), n)).select("id", "sh")
+
+  /** materialize (execution-only knob, same contract as Curate's): the
+    * digest frame feeds the candidate pass AND both verify joins; when it
+    * fits executor storage one eager localCheckpoint replaces those
+    * re-evaluations of scan + shingling. At true 100-TB scale leave false
+    * (recomputing a narrow scan beats writing a corpus-sized intermediate).
+    */
+  private def digests(df: DataFrame, idCol: String, textCol: String,
+                      n: Int, materialize: Boolean): DataFrame = {
+    val toks = digestFrame(df, idCol, textCol, n)
     if (materialize) toks.localCheckpoint() else toks
   }
 
@@ -187,7 +199,15 @@ object Dedup {
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, threshold: Double = 0.7, maxBucket: Int = 64,
-                   materialize: Boolean = false): DataFrame = {
+                   materialize: Boolean = false): DataFrame =
+    minhashDigestPairs(digests(df, idCol, textCol, shingleN, materialize),
+      threshold, maxBucket)
+
+  /** [[minhashPairs]] over an (id, sh) digest frame ([[digestFrame]]'s
+    * shape; the curation chain carries `sh` in its gopher checkpoint).
+    */
+  private[graft] def minhashDigestPairs(toks: DataFrame, threshold: Double,
+                                        maxBucket: Int): DataFrame = {
     val (numHashes, bands) = (32, 8)
     val rowsPerBand = numHashes / bands
     // the whole path — signatures, band buckets, verification — runs on
@@ -198,7 +218,6 @@ object Dedup {
     // verification, recall < 1); digests never leave the query. `sig`
     // sits behind its own Generate barrier: the band exploder is its
     // second reference.
-    val toks = digestFrame(df, idCol, textCol, shingleN, materialize)
     val withSig = graft.functions.ComputeOnce(
       toks.filter(size(col("sh")) > 0),
       "sig", minhashSignature(col("sh"), numHashes))
@@ -320,8 +339,12 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 1, minJaccard: Double = 0.0,
                         maxDf: Int = 10000,
-                        materialize: Boolean = false): DataFrame = {
-    val toks = digestFrame(df, idCol, textCol, n, materialize)
+                        materialize: Boolean = false): DataFrame =
+    ngramDigestPairs(digests(df, idCol, textCol, n, materialize), minJaccard, maxDf)
+
+  /** [[ngramJaccardPairs]] over an (id, sh) digest frame. */
+  private[graft] def ngramDigestPairs(toks: DataFrame, minJaccard: Double,
+                                      maxDf: Int): DataFrame = {
     if (minJaccard > 0.0) return prefixFilteredPairs(toks, minJaccard, maxDf)
     val sizes = toks.select(col("id"), size(col("sh")).as("sz"))
     val wTok = org.apache.spark.sql.expressions.Window.partitionBy("tok")
@@ -502,9 +525,11 @@ object Dedup {
     // broadcast side), one collect + union-find with path compression
     // beats 10+ iterative Spark jobs outright. The (expensive — LSH
     // window + self-join) pair plan is evaluated exactly ONCE on every
-    // path: the cleaned pair frame is eagerly `localCheckpoint`ed up
-    // front, the driver-path probe reads those blocks, and the
-    // distributed `edges` frame is built from the same blocks. (Round 4
+    // path: the cleaned pair frame is a lazy `localCheckpoint` (with AQE
+    // its shuffle stages run when it is built), the driver-path probe's
+    // `take` computes and stores the partitions it reads, a later reader
+    // the rest, so the distributed `edges` frame is built from the same
+    // shuffle output and blocks. (Round 4
     // probed with a bare `take`, whose work was thrown away whenever
     // the graph overflowed the threshold — the >1M-edge path then
     // re-ran pair generation from scratch.) The driver path is gated to
@@ -522,7 +547,7 @@ object Dedup {
     val cleanPairs = pairs
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol), col(bCol))
-      .localCheckpoint() // eager: pair generation runs once, on all paths
+      .localCheckpoint(eager = false) // pair generation runs once, on all paths
     def releasePairs(): Unit =
       org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(cleanPairs)
     val driverPathOk = idType == pairs.schema(bCol).dataType && (idType match {
@@ -534,7 +559,7 @@ object Dedup {
       val probeN =
         if (collectThreshold >= Int.MaxValue - 1) Int.MaxValue
         else collectThreshold + 1
-      val sample = cleanPairs.take(probeN) // reads checkpoint blocks
+      val sample = cleanPairs.take(probeN)
       if (sample.length <= collectThreshold) {
         releasePairs()
         return unionFindComponents(sample, idType, pairs.sparkSession)
@@ -640,13 +665,13 @@ object Dedup {
       val r = find(v)
       if (!label.contains(r) || sparkLt(v, label(r))) label(r) = v
     }
-    val out = parent.keys.toSeq.map(v =>
-      org.apache.spark.sql.Row(v, label(find(v))))
+    val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size)
+    parent.keys.foreach(v => out.add(org.apache.spark.sql.Row(v, label(find(v)))))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", idType),
       org.apache.spark.sql.types.StructField("component", idType)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out,
-        math.max(1, spark.sparkContext.defaultParallelism)), schema)
+    // a LocalRelation: a filter or projection over it folds at planning,
+    // and collecting it runs no job
+    spark.createDataFrame(out, schema)
   }
 }

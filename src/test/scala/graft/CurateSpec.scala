@@ -1,12 +1,19 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.curate.Curate
+import graft.dedup.Dedup
 
 /** The composed curation chain: stage attribution on planted documents,
   * cheap-first ORDER semantics (a gopher-dropped document never enters
@@ -25,15 +32,15 @@ class CurateSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       case e: ShuffleExchangeLike if e.output.exists(_.name == "text") => e
     }
 
-  /** Executed plans (as strings) of every query that finishes while
-    * `body` runs — including the chain's own checkpoint and count queries.
+  /** (action name, query) of every query that finishes while `body` runs
+    * — including the chain's own checkpoint and take queries.
     */
-  private def plansOfEveryQuery[T](body: => T): (T, Seq[String]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private def queriesOf[T](body: => T): (T, Seq[(String, QueryExecution)]) = {
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
                              durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        queries.add(funcName -> qe)
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
@@ -42,9 +49,91 @@ class CurateSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     try {
       val out = body
       org.apache.spark.ListenerDrain(spark.sparkContext)
-      (out, plans.toArray(Array.empty[String]).toSeq)
+      (out, queries.toArray(Array.empty[(String, QueryExecution)]).toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** Executed plans (as strings) of every query that finishes while
+    * `body` runs — including the chain's own checkpoint queries.
+    */
+  private def plansOfEveryQuery[T](body: => T): (T, Seq[String]) = {
+    val (out, queries) = queriesOf(body)
+    (out, queries.map(_._2.executedPlan.toString))
+  }
+
+  /** The number of Spark jobs `body` starts, counted in a job group of its
+    * own.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"curate-spec-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try {
+      val out = body
+      org.apache.spark.ListenerDrain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Calls of the shingle kernel (`HashedShingles.compute`) in each row
+    * pass of an executed plan: a pass is the operators between two
+    * exchanges (a union's branches are passes of their own rows).
+    */
+  private def shingleCallsPerPass(plan: SparkPlan): Seq[Int] = {
+    def calls(p: SparkPlan): Int = p.expressions.map(_.collect {
+      case s: StaticInvoke if s.staticObject.getName == "graft.dedup.HashedShingles" => 1
+    }.sum).sum
+    def boundary(p: SparkPlan): Boolean = p match {
+      case _: Exchange | _: QueryStageExec | _: ReusedExchangeExec => true
+      case _ => false
+    }
+    def pass(p: SparkPlan): Int = calls(p) + (p match {
+      case u: UnionExec => (0 +: u.children.filterNot(boundary).map(pass)).max
+      case _ => p.children.filterNot(boundary).map(pass).sum
+    })
+    val top = plan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    // a final adaptive plan's top is its result stage
+    val result = top match {
+      case s: QueryStageExec => s.plan
+      case p => p
+    }
+    pass(result) +: collect(plan) { case e: Exchange => e.child }.map(pass)
+  }
+
+  /** `docs` (by default the planted corpus) as raw crawl rows in a
+    * parquet directory (the shape `Curate.full` reads), for the duration
+    * of `body`.
+    */
+  private def withRawParquet[T](body: String => T): T = withRawParquet(corpus)(body)
+
+  private def withRawParquet[T](docs: DataFrame)(body: String => T): T = {
+    val dir = Files.createTempDirectory("graft-curate").toFile
+    try {
+      rawOf(docs).write.parquet(s"$dir/raw")
+      body(s"$dir/raw")
+    } finally FileUtils.deleteDirectory(dir)
+  }
+
+  /** `docs` html-wrapped the way the flagship wraps the driver's table. */
+  private def rawOf(docs: DataFrame): DataFrame = docs.select(
+    concat(lit("https://t.example.org/doc/"), col("doc_id")).as("url"),
+    to_timestamp(lit("2026-01-01 00:00:00")).as("warc_ts"),
+    encode(concat(lit("<html><head><title>t</title></head><body><p>"),
+      col("text"), lit("</p></body></html>")), "UTF-8").as("html"))
 
   /** ~40 natural-looking words with a seeded shuffle — passes every
     * gopher gate and shares no 3-gram run with other seeds' docs.
@@ -140,12 +229,7 @@ class CurateSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("full(): the model scores ONLY chain survivors") {
     // html-wrap the planted corpus the same way the flagship does
-    val raw = corpus.select(
-      concat(lit("https://t.example.org/doc/"), col("doc_id")).as("url"),
-      to_timestamp(lit("2026-01-01 00:00:00")).as("warc_ts"),
-      encode(concat(lit("<html><head><title>t</title></head><body><p>"),
-        col("text"), lit("</p></body></html>")), "UTF-8").as("html"))
-    val scored = Curate.full(raw, spark)
+    val scored = Curate.full(rawOf(corpus), spark)
     val urls = scored.select("url").as[String].collect().toSet
     val keptIds = log.collect { case (id, (s, _)) if s == Curate.StageKept => id }
     assert(urls == keptIds.map(id => s"https://t.example.org/doc/$id").toSet)
@@ -285,5 +369,115 @@ class CurateSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       concat(lit("https://t.example.org/doc/"), col("doc_id")).as("url"),
       encode(col("text"), "UTF-8").as("html"))
     rejects(Curate.full(raw, spark).collect(), "url", "https://t.example.org/doc/1000")
+  }
+
+  test("a repeated id fails fast on every chain configuration") {
+    // the id check reads the same bounded action as the exact-loser list;
+    // the fixture has exact losers too (1000 and 4 copy 0's text), so a
+    // check that stopped at the first rows it read could see only losers
+    import graft.fixtures.SynthCorpus.bodyFor
+    val docs = Seq((0L, bodyFor(0)), (1000L, bodyFor(0)), (1000L, bodyFor(1)),
+      (2L, bodyFor(2)), (4L, bodyFor(0)), (5L, bodyFor(2))).toDF("doc_id", "text")
+    withRawParquet(docs) { path =>
+      val raw = spark.read.parquet(path)
+      val faces: Seq[(String, (String, Int, Boolean) => DataFrame, String, String)] = Seq(
+        ("curationLog", (st, t, m) => Curate.curationLog(docs, "doc_id", "text",
+          collectThreshold = t, materialize = m, strategy = st), "doc_id", "1000"),
+        ("curated", (st, t, m) => Curate.curated(docs, "doc_id", "text",
+          collectThreshold = t, materialize = m, strategy = st), "doc_id", "1000"),
+        ("full", (st, t, m) => Curate.full(raw, spark,
+          collectThreshold = t, materialize = m, strategy = st), "url",
+          "https://t.example.org/doc/1000"))
+      for {
+        (face, run, column, value) <- faces
+        strategy <- Seq("exact", "minhash")
+        materialize <- Seq(true, false)
+        threshold <- Seq(1 << 20, 1, 0) // default, overflowing, distributed
+      } {
+        val where = s"$face/$strategy/materialize=$materialize/threshold=$threshold"
+        val err = withClue(where)(intercept[IllegalArgumentException](
+          run(strategy, threshold, materialize).collect()))
+        assert(err.getMessage.contains(s"'$column'") &&
+          err.getMessage.contains(s"'$value'") && err.getMessage.contains("2 times"),
+          s"$where: ${err.getMessage}")
+      }
+      // above 1,000 shuffle partitions a shuffle read reports no preferred
+      // location while a file split does, so coalesce(1) may read the exact
+      // losers before the repeated ids: the check must not depend on the
+      // order the stage-2 action reads its rows in
+      val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", "1001")
+      try {
+        for {
+          (face, run, column, value) <- faces
+          materialize <- Seq(true, false)
+          threshold <- Seq(1 << 20, 2)
+        } {
+          val where = s"$face/materialize=$materialize/threshold=$threshold/1001 partitions"
+          val err = withClue(where)(intercept[IllegalArgumentException](
+            run("exact", threshold, materialize).collect()))
+          assert(err.getMessage.contains(s"'$column'") && err.getMessage.contains(s"'$value'"),
+            s"$where: ${err.getMessage}")
+        }
+      } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    }
+  }
+
+  test("a warm Curate.full runs within its job budget and checkpoints its rows once") {
+    withRawParquet { raw =>
+      def run(): Array[org.apache.spark.sql.Row] =
+        Curate.full(spark.read.parquet(raw), spark, strategy = "minhash",
+          materialize = true).collect()
+      val cold = run() // the first call compiles and plans; the budget is for warm calls
+      val ((warm, queries), jobs) = jobsOf(queriesOf(run()))
+      assert(warm.length == cold.length && warm.length == 4, s"${warm.length} survivors")
+      // parquet footer read, the document checkpoint, exact dedup + id
+      // check (three shuffle map stages and one take), the exact-loser
+      // broadcast, pair generation (four shuffle map stages and one take
+      // that fills the pair checkpoint), the loser broadcast and the scorer
+      info(s"$jobs jobs; queries: ${queries.map(_._1).mkString(", ")}")
+      assert(jobs <= 14, s"$jobs jobs; queries: ${queries.map(_._1).mkString(", ")}")
+      // one checkpoint of document rows: the only one carrying the text
+      val rowCheckpoints = queries.filter { case (name, qe) =>
+        name == "localCheckpoint" && qe.analyzed.output.exists(_.name == "text")
+      }
+      assert(rowCheckpoints.length == 1,
+        s"document-frame checkpoints: ${rowCheckpoints.map(_._2.analyzed.output)}")
+      // no action only sizes a loser list
+      assert(!queries.exists(_._1 == "count"), queries.map(_._1))
+    }
+    // driver-path components are a LocalRelation: the chain reads its near
+    // losers without a job
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+    val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
+    assert(comps.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      comps.queryExecution.analyzed.toString)
+    val (labels, readJobs) = jobsOf(comps.filter(col("id") =!= col("component")).collect())
+    assert(labels.length == 3 && readJobs == 0, s"${labels.length} losers, $readJobs jobs")
+  }
+
+  test("the shingle kernel runs at most once per row pass of every chain plan") {
+    // a digest carried as a plain projection is re-inlined at each of its
+    // references (size filter, signature, verify), the q52 regression the
+    // Generate barriers prevent; unmaterialized, every reference re-reads
+    // the input, so this guards each pass of every plan the chain runs
+    withRawParquet { raw =>
+      for (strategy <- Seq("exact", "minhash"); materialize <- Seq(false, true)) {
+        val where = s"$strategy/materialize=$materialize"
+        val (rows, queries) = queriesOf(Curate.full(spark.read.parquet(raw), spark,
+          strategy = strategy, materialize = materialize).collect())
+        assert(rows.length == 4, where)
+        val perPass = queries.flatMap(q => shingleCallsPerPass(q._2.executedPlan))
+        assert(perPass.sum > 0, s"$where: no plan ran the shingle kernel")
+        assert(perPass.forall(_ <= 1), s"$where: calls per pass $perPass\n" +
+          queries.map(_._2.executedPlan.toString).filter(_.contains("HashedShingles"))
+            .mkString("\n----\n").take(8000))
+      }
+    }
+    // the carried digest column is reserved, like every chain column
+    val err = intercept[IllegalArgumentException] {
+      Curate.curationLog(corpus.withColumn("__sh", lit(1)), "doc_id", "text")
+    }
+    assert(err.getMessage.contains("'__sh'"), err.getMessage)
   }
 }
